@@ -15,6 +15,7 @@ consumer sees the same bigint epoch-microsecond timeline either way.
 from __future__ import annotations
 
 import os
+import warnings
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -92,6 +93,20 @@ def _spread_min_bytes() -> int:
     return int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", str(256 * 1024)))
 
 
+def _parquet_files(path: str) -> list[str]:
+    if os.path.isdir(path):
+        return [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
+    return [path]
+
+
+def _warn_footer(path: str, exc: Exception) -> None:
+    warnings.warn(
+        f"unreadable parquet footer {path}: {exc}; assuming a huge table",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+
+
 def _parquet_layout(path: str) -> tuple[int, int]:
     """(total row groups, total bytes) for a parquet file or directory —
     footer metadata only, cached (the testdata is immutable)."""
@@ -100,22 +115,14 @@ def _parquet_layout(path: str) -> tuple[int, int]:
         return hit
     import pyarrow.parquet as pq
 
-    files = (
-        [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        ]
-        if os.path.isdir(path)
-        else [path]
-    )
     groups = 0
     nbytes = 0
-    for f in files:
+    for f in _parquet_files(path):
         try:
             groups += pq.ParquetFile(f).metadata.num_row_groups
             nbytes += os.path.getsize(f)
-        except Exception:  # non-local / unreadable: let Spark's scan decide
+        except Exception as exc:  # non-local / unreadable: let Spark's scan decide
+            _warn_footer(f, exc)
             return (1 << 30, 1 << 60)
     _rg_cache[path] = (groups, nbytes)
     return groups, nbytes
@@ -132,25 +139,13 @@ def table_rows(sf_dir: str, name: str) -> int:
     hit = _rg_cache.get(key)
     if hit is not None:
         return hit[0]
-    files = (
-        [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
-        if os.path.isdir(path)
-        else [path]
-    )
     try:
-        rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:  # unreadable footer: assume big (the at-scale default)
+        rows = sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
+    except Exception as exc:  # unreadable footer: assume big (the at-scale default)
+        _warn_footer(path, exc)
         rows = 1 << 60
     _rg_cache[key] = (rows, 0)
     return rows
-
-
-def table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk bytes of one table from footer/stat metadata only (cached) —
-    for scale-adaptive operator knobs (e.g. broadcast-vs-shuffle gates)
-    that must not run a Spark job to decide."""
-    _, nbytes = _parquet_layout(os.path.join(sf_dir, f"{name}.parquet"))
-    return nbytes
 
 
 def scan_parallelism(spark: SparkSession) -> int:

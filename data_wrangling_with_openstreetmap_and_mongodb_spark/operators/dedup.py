@@ -23,8 +23,6 @@ Scale design (the 100 TB story):
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
@@ -246,41 +244,6 @@ def exact_substring_dedup(
 
 
 # ---------------------------------------------------------------------------
-# Scale-adaptive join-strategy gates (r16, guide §3.1: pick the strategy
-# deliberately).  Both helpers decide from CALLER-SUPPLIED footer metadata
-# (bytes / row counts — no Spark job), so the catalog queries inherit the
-# fast broadcast plan at bench scale while the same code self-disables at
-# 100 TB, exactly like the r15 scan-spread gate.
-# ---------------------------------------------------------------------------
-def shingle_df_rank_auto(input_bytes: int | None) -> str:
-    """``df_rank`` for :func:`prefix_candidates`: ``"broadcast"`` when the
-    corpus is small enough that its shingle VOCABULARY (≤ total tokens ≈
-    input bytes / ~6, ×~40 B per freq row) fits the broadcast budget,
-    ``"shuffle"`` otherwise (the only correct choice when the vocabulary
-    itself is shuffle-scale).  Gate: on-disk corpus bytes ≤
-    ``SPARK_GRAFT_SHINGLE_DF_BROADCAST_MAX_BYTES`` (default 32 MiB ≈ a few
-    hundred MB of broadcast hash relation, conservative)."""
-    thr = int(
-        os.environ.get(
-            "SPARK_GRAFT_SHINGLE_DF_BROADCAST_MAX_BYTES", str(32 * 1024 * 1024)
-        )
-    )
-    if input_bytes is not None and 0 < input_bytes <= thr:
-        return "broadcast"
-    return "shuffle"
-
-
-def band_join_broadcast_ok(n_rows: int | None, bands: int = 16) -> bool:
-    """Whether one side of a band-bucket candidate join may broadcast:
-    n_rows × bands (id, band, bucket) rows ≈ 24 B each must fit the
-    broadcast budget.  Gate: ``n_rows ≤ SPARK_GRAFT_BAND_BROADCAST_MAX_ROWS``
-    (default 200_000 documents → ~3.2 M band rows ≈ tens of MB built).
-    ``None`` (unknown size) always shuffles — the at-scale-safe default."""
-    thr = int(os.environ.get("SPARK_GRAFT_BAND_BROADCAST_MAX_ROWS", "200000"))
-    return n_rows is not None and 0 < n_rows <= thr
-
-
-# ---------------------------------------------------------------------------
 # N-gram Jaccard (blocked self-join — exact similarity, scalable blocking)
 # ---------------------------------------------------------------------------
 def _shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
@@ -336,9 +299,7 @@ def _shingle_arrays(rows: DataFrame) -> DataFrame:
     return rows.groupBy("id").agg(F.collect_list("shingle").alias("sh"))
 
 
-def prefix_candidates(
-    ex: DataFrame, threshold: float, df_rank: str = "shuffle"
-) -> DataFrame:
+def prefix_candidates(ex: DataFrame, threshold: float) -> DataFrame:
     """PPJoin-style candidate pairs ``(id_a, id_b)`` from distinct shingle
     rows ``(id, n_sh, shingle)``: block only on each document's
     ⌊(1−t)·|s|⌋+1 globally-RAREST shingles.
@@ -350,26 +311,13 @@ def prefix_candidates(
     most common shingle (asserted under a planted 50%-stop-shingle corpus in
     tests/test_dedup_similarity.py).
 
-    ``df_rank`` picks how the document-frequency table reaches the rank
-    window (VERDICT r3 ask #3):
-
-    - ``"shuffle"`` (default): plain equi-join — the big shingle table
-      exchanges by shingle, then again by id for the rank window.  The only
-      correct choice when the corpus VOCABULARY itself is too large to
-      broadcast (the 100 TB posture).
-    - ``"broadcast"``: the vocabulary-sized df aggregate broadcasts into
-      the join, so the shingle table keeps its cached id-partitioning all
-      the way into the rank window — zero big-table exchanges before the
-      candidate self-join (whose one exchange both sides reuse).  Measured
-      at sf0.1: 2.67s → 1.74s median (n=5) on the catalog corpus, and the
-      warm-up outlier disappears.  Pick this whenever distinct-shingle
-      count × ~40 B fits the broadcast budget.
+    The document-frequency table is a vocabulary-sized aggregate, so the
+    planner broadcasts it into the rank join whenever it fits the session's
+    ``autoBroadcastJoinThreshold`` (64 MiB, session.py): the shingle table
+    then keeps its id-partitioning all the way into the rank window.  A
+    vocabulary too large for that budget falls back to a shuffle join.
     """
     freq = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_cnt"))
-    if df_rank == "broadcast":
-        freq = F.broadcast(freq)
-    elif df_rank != "shuffle":
-        raise ValueError(f"unknown df_rank strategy: {df_rank!r}")
     w = Window.partitionBy("id").orderBy(F.asc("df_cnt"), F.asc("shingle"))
     # Sound prefix bound: J(a,b) ≥ t implies overlap ≥ ceil(t·|x|) on each
     # side, so a shared shingle must appear within the first
@@ -427,7 +375,6 @@ def ngram_jaccard_pairs(
     id_col: str,
     n: int = 3,
     threshold: float = 0.8,
-    df_rank: str = "shuffle",
 ) -> DataFrame:
     """All pairs (a, b), a<b, with shingle-set Jaccard ≥ threshold — exact.
 
@@ -450,7 +397,7 @@ def ngram_jaccard_pairs(
     implementations do.
     """
     ex = _shingle_rows(df, text_col, id_col, n).persist()
-    cand = prefix_candidates(ex, threshold, df_rank=df_rank)
+    cand = prefix_candidates(ex, threshold)
     arrays = _shingle_arrays(ex)
     sha = arrays.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     shb = arrays.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
@@ -586,7 +533,6 @@ def minhash_lsh_pairs(
     n: int = 3,
     threshold: float = 0.8,
     seed: int = 42,
-    band_join: str = "shuffle",
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash LSH, verified with exact
     shingle Jaccard.  ``(id_a, id_b, est_jaccard, jaccard)``.
@@ -596,13 +542,6 @@ def minhash_lsh_pairs(
     Signatures use the md5-based engine-agnostic hash family, so the whole
     pipeline — including which candidate pairs the bands surface — is
     reproducible by the DuckDB oracle.
-
-    ``band_join="broadcast"`` (r16, guide §3.1) broadcasts one side of the
-    band-bucket self-join: both sides read the PERSISTED signature table,
-    so the build side is a cache read + band hash, and the two
-    (band, bucket) hash exchanges disappear.  Output-identical; only pick
-    it when n_docs × bands fits the broadcast budget (the caller gates via
-    :func:`band_join_broadcast_ok` on footer row counts).
     """
     # Shared JVM-native shingle rows (see _shingle_rows), consumed by the
     # signature aggregation and (as arrays) both verification sides —
@@ -614,11 +553,8 @@ def minhash_lsh_pairs(
         shingle_rows, num_hashes, bands, seed
     )
 
-    if band_join not in ("shuffle", "broadcast"):
-        raise ValueError(f"unknown band_join strategy: {band_join!r}")
     a = band_rows.alias("a")
-    b = F.broadcast(band_rows) if band_join == "broadcast" else band_rows
-    b = b.alias("b")
+    b = band_rows.alias("b")
     cand = (
         a.join(
             b,
@@ -693,17 +629,10 @@ def minhash_probe_index(
     n: int = 3,
     threshold: float = 0.8,
     seed: int = 42,
-    band_join: str = "shuffle",
 ) -> DataFrame:
     """Incremental near-dup detection: new documents probed against a
     prebuilt :func:`minhash_band_index` — ``(new_id, corpus_id,
     est_jaccard)`` for signature-estimated Jaccard ≥ ``threshold``.
-
-    ``band_join="broadcast"`` (r16, guide §3.1) broadcasts the PROBE side
-    (the increment's band rows — the small side by construction: a daily
-    increment is a fraction of the corpus), so the big index never
-    shuffles by (band, bucket).  Output-identical; gate on the increment's
-    row count via :func:`band_join_broadcast_ok`.
 
     The production shape of dedup at corpus scale: the corpus is indexed
     ONCE; each increment computes its own signatures (linear in the
@@ -717,13 +646,10 @@ def minhash_probe_index(
     Same engine-agnostic hash family as :func:`minhash_lsh_pairs`, so the
     whole probe — candidates and estimates — SQL-oracles exactly.
     """
-    if band_join not in ("shuffle", "broadcast"):
-        raise ValueError(f"unknown band_join strategy: {band_join!r}")
     shingle_rows = _shingle_rows(new_df, text_col, id_col, n).persist()
     with_sig, band_rows = _sig_and_bands(shingle_rows, num_hashes, bands, seed)
-    probe_side = F.broadcast(band_rows) if band_join == "broadcast" else band_rows
     cand = (
-        probe_side.alias("p")
+        band_rows.alias("p")
         .join(
             index.select(
                 F.col("id").alias("corpus_id"), "band", "bucket", "sig"
@@ -856,7 +782,6 @@ def simhash_near_pairs(
     id_col: str,
     max_hamming: int = 3,
     key_chunks: int = 1,
-    block_join: str = "shuffle",
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ max_hamming — EXACT with
     respect to the signature: pigeonhole blocking has recall 1 (any pair
@@ -886,8 +811,6 @@ def simhash_near_pairs(
     # persisted: one (id, simhash) row per document, read by both sides of
     # the chunk self-join — without it the 60-buffer vote aggregation runs
     # twice (same structural-reuse rationale as minhash_lsh_pairs)
-    if block_join not in ("shuffle", "broadcast"):
-        raise ValueError(f"unknown block_join strategy: {block_join!r}")
     sh = simhash(df, text_col, id_col).persist()
     with_chunks = sh.select(
         "id",
@@ -897,11 +820,7 @@ def simhash_near_pairs(
         ).alias("ck"),
     ).select("id", "simhash", F.col("ck.block").alias("chunk"), F.col("ck.key").alias("key"))
     a = with_chunks.alias("a")
-    # "broadcast" (r16, guide §3.1): both sides read the persisted (id,
-    # simhash) table, so broadcasting one side replaces the two (chunk,
-    # key) hash exchanges with a cache-read build — output-identical; the
-    # caller gates on footer row counts (band_join_broadcast_ok)
-    b = (F.broadcast(with_chunks) if block_join == "broadcast" else with_chunks).alias("b")
+    b = with_chunks.alias("b")
     return (
         a.join(
             b,

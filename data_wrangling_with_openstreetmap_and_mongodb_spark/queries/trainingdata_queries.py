@@ -13,7 +13,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import load_table
+from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import load_table, table_rows
 from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import (
     davg,
     davg_sql,
@@ -55,27 +55,6 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.queries.registry import
 
 _SQL_TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
 _SQL_LTOKS = "list_filter(string_split(lower(text), ' '), x -> x <> '')"
-
-_ROWCOUNT_CACHE: dict[tuple[str, str], int] = {}
-
-
-def _parquet_row_count(sf_dir: str, table: str) -> int:
-    """Row count from parquet footer metadata (pyarrow, driver-side file
-    read) — the 'reuse catalog stats' path: no Spark job, cached per table.
-    On a real deployment this is a metastore / Delta-log statistics lookup."""
-    key = (sf_dir, table)
-    if key not in _ROWCOUNT_CACHE:
-        import glob
-        import os
-
-        import pyarrow.parquet as pq
-
-        path = os.path.join(sf_dir, f"{table}.parquet")
-        files = [path] if os.path.isfile(path) else sorted(
-            glob.glob(os.path.join(path, "*.parquet"))
-        )
-        _ROWCOUNT_CACHE[key] = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    return _ROWCOUNT_CACHE[key]
 
 
 def _sql_stop_list(lang: str) -> str:
@@ -400,31 +379,20 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Trigram shingles: the corpus vocabulary is tiny, so bigrams appear in "
     "hundreds of documents each and block nothing, while trigrams have "
     "single-digit document frequency — blocking quality is a data property, "
-    "measured, not assumed.  df_rank='broadcast' for the same reason: the "
-    "measured vocabulary fits the broadcast budget, so the df table "
-    "broadcasts into the rank join and the shingle table keeps its cached "
-    "id-partitioning into the rank window (sf0.1: 2.67s → 1.74s median, "
-    "r3 ask #3); a vocabulary too big to broadcast uses the default "
-    "shuffle strategy instead.  Rotated out of the driver window in r9 "
-    "(VERDICT r8 ask #8 standing rule: this pairs front-end is a strict "
-    "subset of dedup_near_clusters' compiler path; slot given to "
-    "streaming_asof_enrich_status); still in the local parity gate.",
+    "measured, not assumed.  The df table broadcasts into the rank join "
+    "through the session's 64 MiB autoBroadcastJoinThreshold, so the "
+    "shingle table keeps its id-partitioning into the rank window; a "
+    "vocabulary too big to broadcast shuffles instead.  Rotated out of the "
+    "driver window in r9 (VERDICT r8 ask #8 standing rule: this pairs "
+    "front-end is a strict subset of dedup_near_clusters' compiler path; "
+    "slot given to streaming_asof_enrich_status); still in the local "
+    "parity gate.",
     tags=("dedup", "join"),
     driver_visible=False,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import table_bytes
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
-        shingle_df_rank_auto,
-    )
-
     d = load_table(spark, sf_dir, "documents")
-    # r16: the broadcast pick is now footer-gated (scale-adaptive) instead
-    # of hard-coded — same plan at every bench SF, shuffle at 100 TB
-    return ngram_jaccard_pairs(
-        d, "text", "doc_id", n=3, threshold=0.8,
-        df_rank=shingle_df_rank_auto(table_bytes(sf_dir, "documents")),
-    )
+    return ngram_jaccard_pairs(d, "text", "doc_id", n=3, threshold=0.8)
 
 
 # Shared SQL fragment: the trigram shingle set, identical to the Spark
@@ -503,10 +471,6 @@ def _minhash_oracle_sql(
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    # r16: band_join="broadcast" was built and A/B-measured a WASH here
-    # (off 2.74s / on 2.72s median, tools/r16_dedup_ab.py) — the band-key
-    # exchanges are tiny next to the signature aggregation, so the default
-    # shuffle (the only at-scale-correct strategy) stays.
     return minhash_lsh_pairs(d, "text", "doc_id", num_hashes=64, bands=16, n=3, threshold=0.8)
 
 
@@ -550,9 +514,6 @@ def _simhash_oracle_sql(max_hamming: int) -> str:
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    # r16: block_join="broadcast" measured 0.89x (slightly NEGATIVE,
-    # tools/r16_dedup_ab.py) — the vote aggregation dominates, so the
-    # shuffle default stays.
     return simhash_near_pairs(d, "text", "doc_id", max_hamming=3)
 
 
@@ -573,8 +534,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_simhash_k2(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    # r16: same measured-neutral block_join outcome as dedup_simhash — the
-    # shuffle default stays (tools/r16_dedup_ab.py: 1.02x, noise)
     return simhash_near_pairs(d, "text", "doc_id", max_hamming=3, key_chunks=2)
 
 
@@ -607,7 +566,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         "vec_id",
         threshold=0.3,
-        n_rows=_parquet_row_count(sf_dir, "embeddings"),
+        n_rows=table_rows(sf_dir, "embeddings"),
     )
 
 
@@ -1665,6 +1624,18 @@ def _pagerank_oracle_sql(iters: int, damping: float) -> str:
     """
 
 
+# supplier_customer_pagerank gates, decided from footer row counts:
+# - checkpoint the derived edge table once when re-deriving the
+#   lineitem⋈orders join 3× costs more than one barrier (PLANS.md
+#   §pagerank-edge-materialization: 1.44× at 600k edge rows, inverted at
+#   60k).  Edge rows == lineitem rows before the distinct.
+# - broadcast the node-sized rank/degree/contribution frames while the node
+#   set (suppliers + customers) fits the broadcast budget.  The checkpointed
+#   edges carry no size statistics, so AQE cannot make this call itself.
+PAGERANK_MATERIALIZE_MIN_EDGES = 300_000
+PAGERANK_BROADCAST_MAX_NODES = 10_000_000
+
+
 @register(
     "supplier_customer_pagerank",
     oracle=_pagerank_oracle_sql(iters=3, damping=0.85),
@@ -1680,9 +1651,6 @@ def _pagerank_oracle_sql(iters: int, damping: float) -> str:
     driver_visible=False,
 )
 def supplier_customer_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import table_rows
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import pagerank
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -1691,29 +1659,12 @@ def supplier_customer_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(1000000) + F.col("l_suppkey")).alias("src"),
         F.col("o_custkey").alias("dst"),
     )
-    # r15: apply the operator's own measured recipe (PLANS.md
-    # §pagerank-edge-materialization) scale-adaptively — checkpoint the
-    # derived edge table once when it is big enough that re-deriving the
-    # lineitem⋈orders join 3× costs more than one barrier (probe: 1.44×
-    # at 600k edge rows, INVERTED at 60k; crossover between).  Edge rows
-    # == lineitem rows pre-distinct, read from the parquet footer.
-    min_edges = int(
-        os.environ.get("SPARK_GRAFT_PAGERANK_MATERIALIZE_MIN_EDGES", "300000")
-    )
-    pre = table_rows(sf_dir, "lineitem") >= min_edges
-    # r16 (guide §3.1): node-sized frames (ranks/degrees/contributions —
-    # bounded by suppliers + customers) broadcast into the per-iteration
-    # joins when the node set fits the budget; footer-gated so a 100 TB
-    # node set keeps the shuffle plan.  Values identical (dsum is
-    # order-independent); plan evidence in plans/r16.
-    max_nodes = int(
-        os.environ.get("SPARK_GRAFT_PAGERANK_BROADCAST_MAX_NODES", "10000000")
-    )
+    pre = table_rows(sf_dir, "lineitem") >= PAGERANK_MATERIALIZE_MIN_EDGES
     n_nodes = table_rows(sf_dir, "supplier") + table_rows(sf_dir, "customer")
     return pagerank(
         edges, "src", "dst", iters=3, damping=0.85,
         pre_materialized=pre, checkpoint_mode="local",
-        rank_broadcast=n_nodes <= max_nodes,
+        rank_broadcast=n_nodes <= PAGERANK_BROADCAST_MAX_NODES,
     )
 
 
@@ -2014,22 +1965,12 @@ def stratified_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver_visible=False,
 )
 def dedup_near_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import table_bytes
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
-        shingle_df_rank_auto,
-    )
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import (
         dedup_clusters,
     )
 
     d = load_table(spark, sf_dir, "documents")
-    # r16 (VERDICT r15 ask #4): the candidate generation inherits
-    # dedup_ngram_jaccard's measured df-broadcast pick, footer-gated —
-    # the CC collapse was paying the un-broadcast pairs front-end
-    pairs = ngram_jaccard_pairs(
-        d, "text", "doc_id", n=3, threshold=0.8,
-        df_rank=shingle_df_rank_auto(table_bytes(sf_dir, "documents")),
-    )
+    pairs = ngram_jaccard_pairs(d, "text", "doc_id", n=3, threshold=0.8)
     return dedup_clusters(d, pairs, "doc_id").select(
         F.col("id").alias("doc_id"), "cluster", "is_canonical"
     )
@@ -2710,9 +2651,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = d.filter(F.col("doc_id") % 5 != 0)
     increment = d.filter(F.col("doc_id") % 5 == 0)
     index = minhash_band_index(corpus, "text", "doc_id")
-    # r16: probe-side band_join="broadcast" was built and A/B-measured a
-    # wash (3.67s / 3.65s median, tools/r16_dedup_ab.py) — the signature
-    # pipelines dominate, so the shuffle default stays.
     return minhash_probe_index(increment, index, "text", "doc_id", threshold=0.8)
 
 
@@ -3262,21 +3200,12 @@ def lc_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "graph", "iterative"),
 )
 def dedup_keep_best_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import table_bytes
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
-        shingle_df_rank_auto,
-    )
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import (
         dedup_keep_best,
     )
 
     d = load_table(spark, sf_dir, "documents")
-    # r16 (VERDICT r15 ask #4): footer-gated df-broadcast candidate
-    # generation, same rationale as dedup_near_clusters
-    pairs = ngram_jaccard_pairs(
-        d, "text", "doc_id", n=3, threshold=0.8,
-        df_rank=shingle_df_rank_auto(table_bytes(sf_dir, "documents")),
-    )
+    pairs = ngram_jaccard_pairs(d, "text", "doc_id", n=3, threshold=0.8)
     # method="doubling": measured on THIS query's 10x edge replica (r13,
     # PLANS.md §cc-knobs-10x) — doubling 3.3s vs frontier 6.6s median —
     # and EXACTLY neutral at sf0.1 (r14 A/B, n=5 alternating: 4.554 vs

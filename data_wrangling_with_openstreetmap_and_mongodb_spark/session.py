@@ -9,6 +9,7 @@ and Arrow keeps any unavoidable Python boundary vectorized.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -19,6 +20,9 @@ from pyspark.sql import SparkSession
 # nanosecond longs); catalog.ts_micros adapts to whichever encoding arrives.
 # session.timeZone pinned UTC: TIMESTAMP_NTZ→TIMESTAMP casts and epoch
 # extraction must be wall-clock-identity regardless of host timezone.
+# autoBroadcastJoinThreshold at 64 MiB: vocabulary- and node-sized
+# aggregates (e.g. the shingle document-frequency table) broadcast into
+# their joins on every session, not only on sessions get_spark built.
 _RUNTIME_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
@@ -28,16 +32,26 @@ _RUNTIME_CONFS = {
     # runtime-settable: keeps toPandas/createDataFrame vectorized on sessions
     # we did not build (the verification driver's plain session)
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
 }
+# Results shift silently without these two, so failing to set them is fatal.
+_CRITICAL_CONFS = frozenset(
+    {"spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone"}
+)
 
 
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs this engine relies on to an existing session."""
+    """Apply runtime-settable confs this engine relies on to an existing session.
+
+    A conf the host refuses raises for the correctness-critical keys and
+    warns for the rest (those only cost speed)."""
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - conf locked by the host
-            pass
+        except Exception as exc:
+            if k in _CRITICAL_CONFS:
+                raise RuntimeError(f"cannot set {k}={v}: {exc}") from exc
+            warnings.warn(f"cannot set {k}={v}: {exc}", RuntimeWarning, stacklevel=2)
     return spark
 
 
@@ -58,7 +72,6 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -70,17 +70,6 @@ def exact_pairs(docs):
     return {(r["id_a"], r["id_b"]): r["jaccard"] for r in rows}
 
 
-def test_broadcast_df_rank_identical_pairs(docs, exact_pairs):
-    """df_rank='broadcast' is a pure physical-strategy change: identical
-    (pair, jaccard) output to the shuffle default, with the df table
-    broadcast in the plan."""
-    out = ngram_jaccard_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.8, df_rank="broadcast"
-    )
-    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
-    assert got == exact_pairs
-
-
 def test_testdata_has_planted_near_dups(exact_pairs):
     # the synthetic corpus plants near-duplicate docs; the exact operator
     # must surface them (guards against a silently-empty dedup pipeline)

@@ -295,11 +295,15 @@ class TestPagerankAdaptiveMaterialization:
         supplier_customer_pagerank (footer-row crossover, PLANS.md
         §pagerank-edge-materialization) must not change a single value:
         force BOTH branches on the same data and compare exactly."""
-        from data_wrangling_with_openstreetmap_and_mongodb_spark.queries import QUERIES
+        from data_wrangling_with_openstreetmap_and_mongodb_spark.queries import (
+            QUERIES,
+            trainingdata_queries,
+        )
 
         fn = QUERIES["supplier_customer_pagerank"].fn
-        monkeypatch.setenv("SPARK_GRAFT_PAGERANK_MATERIALIZE_MIN_EDGES", str(1 << 60))
+        gate = "PAGERANK_MATERIALIZE_MIN_EDGES"
+        monkeypatch.setattr(trainingdata_queries, gate, 1 << 60)
         base = {(r["id"], r["pr"]) for r in fn(spark, sf_dir).collect()}
-        monkeypatch.setenv("SPARK_GRAFT_PAGERANK_MATERIALIZE_MIN_EDGES", "0")
+        monkeypatch.setattr(trainingdata_queries, gate, 0)
         mat = {(r["id"], r["pr"]) for r in fn(spark, sf_dir).collect()}
         assert mat == base

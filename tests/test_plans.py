@@ -558,8 +558,7 @@ class TestRound10Plans:
 
 
 class TestRound16Plans:
-    """r16 pins: scan-rebalance opt-in containment and the dedup-family
-    broadcast gates."""
+    """r16 pins: scan-rebalance opt-in containment."""
 
     # The complete opt-in set: queries whose plan may carry the r15
     # round-robin scan rebalance or an explicit keyless repartition
@@ -585,63 +584,6 @@ class TestRound16Plans:
     # the non-opted zero-RoundRobin sweep lives in
     # TestScanShapes::test_full_catalog_plan_invariants (one plan pass for
     # all catalog-wide invariants — pytest-budget consolidation)
-
-    def test_ngram_df_broadcast_gate(self, spark, sf_dir, monkeypatch):
-        """The footer-gated df-rank broadcast: ON at gate-passing sizes
-        (freq table broadcasts into the rank join), OFF when the env knob
-        zeroes the budget (shuffle plan, no broadcast of freq)."""
-        from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
-            shingle_df_rank_auto,
-        )
-
-        assert shingle_df_rank_auto(1024) == "broadcast"
-        assert shingle_df_rank_auto(None) == "shuffle"
-        assert shingle_df_rank_auto(1 << 40) == "shuffle"
-        monkeypatch.setenv("SPARK_GRAFT_SHINGLE_DF_BROADCAST_MAX_BYTES", "0")
-        assert shingle_df_rank_auto(1024) == "shuffle"
-
-    def test_band_broadcast_gate(self, monkeypatch):
-        from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
-            band_join_broadcast_ok,
-        )
-
-        assert band_join_broadcast_ok(5000)
-        assert not band_join_broadcast_ok(None)
-        assert not band_join_broadcast_ok(10_000_000)
-        monkeypatch.setenv("SPARK_GRAFT_BAND_BROADCAST_MAX_ROWS", "0")
-        assert not band_join_broadcast_ok(5000)
-
-    def test_minhash_band_broadcast_is_output_identical(self, spark, sf_dir):
-        """Both band_join strategies must emit the same pair set (the gate
-        only changes the join strategy, never the candidates)."""
-        from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import load_table
-        from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
-            minhash_lsh_pairs,
-        )
-
-        d = load_table(spark, sf_dir, "documents")
-        rows = lambda bj: sorted(  # noqa: E731
-            tuple(r)
-            for r in minhash_lsh_pairs(
-                d, "text", "doc_id", band_join=bj
-            ).collect()
-        )
-        assert rows("broadcast") == rows("shuffle")
-
-    def test_simhash_block_broadcast_is_output_identical(self, spark, sf_dir):
-        from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import load_table
-        from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
-            simhash_near_pairs,
-        )
-
-        d = load_table(spark, sf_dir, "documents")
-        rows = lambda bj: sorted(  # noqa: E731
-            tuple(r)
-            for r in simhash_near_pairs(
-                d, "text", "doc_id", max_hamming=3, block_join=bj
-            ).collect()
-        )
-        assert rows("broadcast") == rows("shuffle")
 
 
 class TestRound13Plans:

@@ -8,12 +8,12 @@ CURRENT tree (VERDICT r15 ask #2: every committed plan dump must be
 reproducible from HEAD — the 14 stale r15 "after" dumps were generated on
 the rejected blanket-spread tree; plans/r16 supersedes them).
 
-"before"/"after" here bracket the r16 changes: "before" disables the r16
-opt-in knobs via their env switches so the r15-shaped plan is reproducible
-from the same tree; "after" uses the shipped defaults.  Queries whose
-construction executes jobs (streaming rows, $merge/$out materializations,
-iterative loops, trained-index builds) still work — construction cost is
-paid, the plan written is the returned DataFrame's.
+The suffix only labels the output file: both arms dump the plans of the
+current tree, so a before/after pair brackets a change by running the tool
+once on each checkout.  Queries whose construction executes jobs
+(streaming rows, $merge/$out materializations, iterative loops,
+trained-index builds) still work — construction cost is paid, the plan
+written is the returned DataFrame's.
 """
 
 from __future__ import annotations
@@ -59,22 +59,10 @@ PICKS = [
     "ds_graph_reachable_orders",
 ]
 
-# env knobs that gate r16 optimizations: name -> value that turns the
-# optimization OFF (reproducing the r15 plan shape from this tree)
-R16_OFF_SWITCHES = {
-    "SPARK_GRAFT_SHINGLE_DF_BROADCAST_MAX_BYTES": "0",
-    "SPARK_GRAFT_BAND_BROADCAST_MAX_ROWS": "0",
-    "SPARK_GRAFT_PAGERANK_BROADCAST_MAX_NODES": "0",
-    "SPARK_GRAFT_GRAPHLOOKUP_BROADCAST_MAX_ROWS": "0",
-}
-
 
 def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:] or PICKS
-    if suffix == "before":
-        for k, v in R16_OFF_SWITCHES.items():
-            os.environ[k] = v
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
     from data_wrangling_with_openstreetmap_and_mongodb_spark.queries import QUERIES
