@@ -3,9 +3,12 @@
 One DataFrame per collection, mirroring the reference's "named collection"
 data model (SURVEY.md §1.1) with typed columns instead of dynamic BSON.
 
-Scale notes: all loads are plain ``spark.read.parquet`` so Catalyst keeps
-predicate pushdown / column pruning / partition pruning; nothing is cached or
-collected here.  The ``events`` table's timestamps are exposed both raw
+Scale notes: all loads are plain parquet scans so Catalyst keeps predicate
+pushdown / column pruning / partition pruning, and no DataFrame or row is
+cached or collected here.  What is cached is per-path table METADATA (the
+Spark-inferred schema and the footer layout/row count, see "table metadata"
+below), validated against the files' stamp on every access, so a warm load
+starts no Spark job.  The ``events`` table's timestamps are exposed both raw
 (``ts``) and as derived, cheap-to-compute columns; :func:`ts_micros` is the
 one place that knows the physical encoding (the driver has shipped ``ts``
 both as parquet TIMESTAMP(NANOS)-as-long and as TIMESTAMP(MICROS)), so every
@@ -16,10 +19,11 @@ from __future__ import annotations
 
 import os
 import warnings
+from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 from data_wrangling_with_openstreetmap_and_mongodb_spark.session import ensure_runtime_confs
 
@@ -71,19 +75,8 @@ MICROS_PER_DAY = 86_400_000_000
 # groups (>= cores), so no shuffle is added — the rebalance fires precisely
 # on unsplittable inputs, where it is the documented fix.  Both knobs are
 # env-parameterised; the byte floor keeps dimension tables exchange-free.
-_rg_cache: dict[str, tuple[int, int]] = {}  # path -> (row_groups, bytes); footer metadata only
-
-
-def invalidate_table_meta(path: str) -> None:
-    """Drop cached footer metadata for ``path`` (and its ``rows::`` key).
-
-    The testdata-is-immutable assumption behind ``_rg_cache`` does not hold
-    for docstore write targets: ``$merge``/``$out`` overwrite parquet paths
-    in-place, so a later ``load_table(spread=True)`` or ``table_rows`` on a
-    rewritten path would gate on stale row-group/byte counts (ADVICE r15).
-    The write paths call this after every overwrite."""
-    _rg_cache.pop(path, None)
-    _rg_cache.pop(f"rows::{path}", None)
+# The gate's row-group and byte counts come from the table-metadata record
+# below, so they follow every rewrite of the path.
 
 
 def _spread_min_bytes() -> int:
@@ -93,59 +86,126 @@ def _spread_min_bytes() -> int:
     return int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", str(256 * 1024)))
 
 
+# --- table metadata ----------------------------------------------------------
+# ``spark.read.parquet(path)`` infers the schema with a one-task Spark job on
+# every call (85-115 ms on local[2], 4-core host); with the schema passed
+# in, the same load starts no job.  So each parquet path keeps one record:
+# the Spark-inferred schema plus the footer counts (row groups, bytes,
+# rows), each filled lazily on first use.  The record is valid while the path's file stamp — the sorted
+# (file, size, mtime_ns) of its parquet files — is unchanged; any rewrite
+# ($merge/$out targets, a probe swapping a table in place) changes the stamp
+# and replaces the record, so writers need not invalidate anything.  The
+# schema is additionally tied to the session confs that change what parquet
+# inference returns for the same files.  Paths that cannot be stat'ed
+# (non-local filesystems) are never cached, and neither is the "huge"
+# fallback of an unreadable footer, so a later good read is seen.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+
+@dataclass
+class _TableMeta:
+    # Each slot is set by ONE assignment of an immutable value, so
+    # concurrent callers can at worst repeat a read, never mix two.
+    stamp: tuple[tuple[str, int, int], ...] | None
+    schema: tuple[tuple[str, ...], StructType] | None = None  # (inference confs, schema)
+    footer: tuple[int, int, int] | None = None  # (row groups, bytes, rows)
+
+
+_table_meta: dict[str, _TableMeta] = {}
+
+
 def _parquet_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
-    return [path]
+    """The parquet data files under ``path`` (itself, when it is a file),
+    skipping the ``_``/``.``-prefixed entries Spark's file listing skips."""
+    if not os.path.isdir(path):
+        return [path]
+    found = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        found += [
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+    return found
 
 
-def _warn_footer(path: str, exc: Exception) -> None:
-    warnings.warn(
-        f"unreadable parquet footer {path}: {exc}; assuming a huge table",
-        RuntimeWarning,
-        stacklevel=3,
-    )
+def _meta(path: str) -> _TableMeta:
+    """The record for ``path``, replaced when its file stamp changed."""
+    try:
+        stamp = tuple(
+            sorted(
+                (f, st.st_size, st.st_mtime_ns)
+                for f in _parquet_files(path)
+                for st in [os.stat(f)]
+            )
+        )
+    except OSError:
+        stamp = None
+    meta = _table_meta.get(path)
+    if meta is None or meta.stamp != stamp:
+        meta = _TableMeta(stamp)
+        if stamp is not None:
+            _table_meta[path] = meta
+    return meta
+
+
+def table_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers under ``spark``'s
+    current confs, inferred once per file stamp and inference-conf set."""
+    meta = _meta(path)
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    cached = meta.schema
+    if cached is None or cached[0] != confs:
+        cached = meta.schema = (confs, spark.read.parquet(path).schema)
+    return cached[1]
+
+
+def _footer(path: str) -> tuple[int, int, int]:
+    """(row groups, bytes, rows) summed over the path's parquet footers
+    (pyarrow reads, no Spark job).  An unreadable footer warns and yields
+    "huge" counts, which are not stored."""
+    meta = _meta(path)
+    if meta.footer is None:
+        import pyarrow.parquet as pq
+
+        groups = nbytes = rows = 0
+        for f in _parquet_files(path):
+            try:
+                md = pq.ParquetFile(f).metadata
+                nbytes += os.path.getsize(f)
+            except Exception as exc:  # non-local / unreadable: let Spark's scan decide
+                warnings.warn(
+                    f"unreadable parquet footer {f}: {exc}; assuming a huge table",
+                    RuntimeWarning,
+                    stacklevel=3,
+                )
+                return 1 << 30, 1 << 60, 1 << 60
+            groups += md.num_row_groups
+            rows += md.num_rows
+        meta.footer = (groups, nbytes, rows)
+    return meta.footer
 
 
 def _parquet_layout(path: str) -> tuple[int, int]:
     """(total row groups, total bytes) for a parquet file or directory —
-    footer metadata only, cached (the testdata is immutable)."""
-    hit = _rg_cache.get(path)
-    if hit is not None:
-        return hit
-    import pyarrow.parquet as pq
-
-    groups = 0
-    nbytes = 0
-    for f in _parquet_files(path):
-        try:
-            groups += pq.ParquetFile(f).metadata.num_row_groups
-            nbytes += os.path.getsize(f)
-        except Exception as exc:  # non-local / unreadable: let Spark's scan decide
-            _warn_footer(f, exc)
-            return (1 << 30, 1 << 60)
-    _rg_cache[path] = (groups, nbytes)
-    return groups, nbytes
+    footer metadata only."""
+    return _footer(path)[:2]
 
 
 def table_rows(sf_dir: str, name: str) -> int:
-    """Row count of one table from parquet footer metadata only (cached) —
-    for scale-adaptive operator knobs (e.g. materialize-vs-rederive
-    crossovers) that must not run a Spark job to decide."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    key = f"rows::{path}"
-    hit = _rg_cache.get(key)
-    if hit is not None:
-        return hit[0]
-    try:
-        rows = sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
-    except Exception as exc:  # unreadable footer: assume big (the at-scale default)
-        _warn_footer(path, exc)
-        rows = 1 << 60
-    _rg_cache[key] = (rows, 0)
-    return rows
+    """Row count of one table from parquet footer metadata only — for
+    scale-adaptive operator knobs (e.g. materialize-vs-rederive crossovers)
+    that must not run a Spark job to decide.  An unreadable footer means
+    "assume big" (the at-scale default)."""
+    return _footer(os.path.join(sf_dir, f"{name}.parquet"))[2]
 
 
 def scan_parallelism(spark: SparkSession) -> int:
@@ -159,15 +219,16 @@ def load_table(
 ) -> DataFrame:
     """Load one named table from an ``sf*`` directory.
 
-    Plain ``spark.read.parquet``; with ``spread=True`` (opt-in for
-    Python-heavy consumers — see the scan-parallelism note above) an
-    unsplittable (row_groups < cores), non-dimension-sized table is
-    round-robin rebalanced so the expensive downstream stage uses the
-    whole machine.
+    A parquet scan with the path's recorded schema: no inference job once
+    warm, and each call still gets fresh attribute IDs, so self-joins stay
+    safe.  With ``spread=True`` (opt-in for Python-heavy consumers — see
+    the scan-parallelism note above) an unsplittable (row_groups < cores),
+    non-dimension-sized table is round-robin rebalanced so the expensive
+    downstream stage uses the whole machine.
     """
     ensure_runtime_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df = spark.read.schema(table_schema(spark, path)).parquet(path)
     if spread:
         target = scan_parallelism(spark)
         groups, nbytes = _parquet_layout(path)

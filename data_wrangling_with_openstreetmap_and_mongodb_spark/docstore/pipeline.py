@@ -21,9 +21,6 @@ from pyspark.sql import types as T
 from data_wrangling_with_openstreetmap_and_mongodb_spark.docstore.expressions import (
     ExpressionCompiler,
 )
-from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import (
-    invalidate_table_meta as _invalidate_table_meta,
-)
 from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import davg, dsum
 from data_wrangling_with_openstreetmap_and_mongodb_spark.docstore.find import (
     FindCompiler,
@@ -2437,7 +2434,6 @@ def _apply_merge(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
             materialized.write.mode("overwrite").parquet(into)
         finally:
             materialized.unpersist()
-    _invalidate_table_meta(into)
     return spark.read.parquet(into)
 
 
@@ -2824,7 +2820,6 @@ def aggregate(df: DataFrame, pipeline: list[dict[str, Any]]) -> DataFrame:
             # this writes and returns the materialized table — the one
             # action-bearing stage, by definition
             out.write.mode("overwrite").parquet(str(spec))
-            _invalidate_table_meta(str(spec))
             out = out.sparkSession.read.parquet(str(spec))
         elif op == "$setWindowFields":
             out = _apply_set_window_fields(out, spec)

@@ -1630,10 +1630,10 @@ def streaming_asof_enrich_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = stream_events(spark, sf_dir)
     ev = ev.select("event_id", "user_id", ts_micros(ev).alias("__evt"))
     tmp = tempfile.mkdtemp(prefix="asof_enrich_")
-    run_streaming_asof_enrich(
+    written = run_streaming_asof_enrich(
         ev, dim, f"{tmp}/out", f"{tmp}/ckpt", "user_id", "__evt", "status_asof"
     )
-    return spark.read.parquet(f"{tmp}/out").select(
+    return spark.read.schema(written).parquet(f"{tmp}/out").select(
         "event_id", "user_id", "status_asof"
     )
 

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 
 def asof_enrich_against_scd2(
@@ -69,16 +70,17 @@ def run_streaming_asof_enrich(
     key_col: str,
     ts_col: str,
     value_field: str = "dim_value",
-) -> None:
+) -> StructType | None:
     """Drive the enrichment to completion (availableNow), appending enriched
-    events to ``out_path`` parquet."""
+    events to ``out_path`` parquet.  Returns the schema of the frames it
+    wrote (None when no micro-batch ran), so the output reads back without
+    a schema-inference job."""
+    written: list[StructType] = []
 
     def enrich_batch(batch: DataFrame, batch_id: int) -> None:
-        (
-            asof_enrich_against_scd2(batch, scd2, key_col, ts_col, value_field)
-            .write.mode("append")
-            .parquet(out_path)
-        )
+        enriched = asof_enrich_against_scd2(batch, scd2, key_col, ts_col, value_field)
+        enriched.write.mode("append").parquet(out_path)
+        written[:] = [enriched.schema]
 
     (
         events_stream.writeStream.foreachBatch(enrich_batch)
@@ -87,3 +89,4 @@ def run_streaming_asof_enrich(
         .start()
         .awaitTermination()
     )
+    return written[0] if written else None

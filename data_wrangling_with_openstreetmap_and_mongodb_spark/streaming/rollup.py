@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import (
     MICROS_PER_HOUR,
+    table_schema,
     ts_micros,
 )
 from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import dsum
@@ -31,16 +32,17 @@ _sink_counter = itertools.count()
 
 
 def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """File-stream over ``<sf_dir>/<table>.parquet`` (schema pinned from a
-    batch peek — streaming sources require an explicit schema).  Handles
+    """File-stream over ``<sf_dir>/<table>.parquet`` (schema from the
+    catalog's table-metadata record — streaming sources require an explicit
+    schema, and a warm record supplies it without a Spark job).  Handles
     both layouts: a single parquet FILE (the driver testdata shape — the
     file-stream source wants a directory basePath, so stream the parent
     with a glob filter) and a parquet DIRECTORY of part files (any
     Spark-written table, e.g. the derived scale sets)."""
     import os
 
-    path = f"{sf_dir}/{table}.parquet"
-    schema = spark.read.parquet(path).schema
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    schema = table_schema(spark, path)
     if os.path.isdir(path):
         return spark.readStream.schema(schema).parquet(path)
     return (

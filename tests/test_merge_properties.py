@@ -314,39 +314,40 @@ def test_merge_staged_mode_matches_local(spark, tmp_path_factory, monkeypatch):
     """r16 (ADVICE r15): the durability-aware materialization — staged
     sibling write vs localCheckpoint — must be value-identical; only the
     write path differs.  Also pins that the staged sibling dir is cleaned
-    up and that the footer-metadata cache is invalidated on overwrite."""
+    up and that footer metadata read from the target before the merge does
+    not outlive the overwrite."""
     import os as _os
 
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import _rg_cache
+    from data_wrangling_with_openstreetmap_and_mongodb_spark import catalog
 
     monkeypatch.setenv("SPARK_GRAFT_MERGE_MATERIALIZE", "local")
     _, cols_a, got_a = _run_merge(spark, tmp_path_factory, {"whenMatched": "replace"})
     monkeypatch.setenv("SPARK_GRAFT_MERGE_MATERIALIZE", "staged")
-    # footer cache invalidation (ADVICE r15): stale pre-merge metadata for
-    # the target path must not survive the overwrite
-    seeded = {}
 
-    def _spy_run(tail):
-        base = tmp_path_factory.mktemp("merge_fuzz")
-        path = _os.path.join(str(base), "t")
-        _rg_cache[path] = (999, 999)  # stale entry a pre-merge read left
-        seeded["path"] = path
-        spec = {"into": path, "on": "k", **tail}
-        spark.createDataFrame(
-            [tuple(d[c] for c in TARGET_COLS) for d in TARGET], TARGET_SCHEMA
-        ).write.parquet(path)
-        src = spark.createDataFrame(
-            [tuple(d[c] for c in SOURCE_COLS) for d in SOURCE], SOURCE_SCHEMA
-        )
-        out = aggregate(src, [{"$merge": spec}])
-        rows = [r.asDict() for r in out.collect()]
-        cols = out.columns
-        return cols, sorted((tuple(r[c] for c in cols) for r in rows), key=repr)
-
-    cols_b, got_b = _spy_run({"whenMatched": "replace"})
+    base = str(tmp_path_factory.mktemp("merge_fuzz"))
+    path = _os.path.join(base, "t.parquet")
+    spark.createDataFrame(
+        [tuple(d[c] for c in TARGET_COLS) for d in TARGET], TARGET_SCHEMA
+    ).write.parquet(path)
+    # a read of the target's metadata before the merge (what a gate such as
+    # load_table(spread=True) or a table_rows crossover would do)
+    assert catalog.table_rows(base, "t") == len(TARGET)
+    src = spark.createDataFrame(
+        [tuple(d[c] for c in SOURCE_COLS) for d in SOURCE], SOURCE_SCHEMA
+    )
+    out = aggregate(src, [{"$merge": {"into": path, "on": "k", "whenMatched": "replace"}}])
+    cols_b = out.columns
+    got_b = sorted((tuple(r[c] for c in cols_b) for r in out.collect()), key=repr)
     assert cols_a == cols_b and got_a == got_b
-    assert not _os.path.exists(seeded["path"].rstrip("/") + "__merge_tmp")
-    assert seeded["path"] not in _rg_cache
+    assert not _os.path.exists(path + "__merge_tmp")
+
+    # the metadata now describes the merged table, not the pre-merge one
+    assert len(got_b) != len(TARGET)  # else a stale count would go unseen
+    assert catalog.table_rows(base, "t") == len(got_b)
+    files = [
+        _os.path.join(path, f) for f in _os.listdir(path) if f.endswith(".parquet")
+    ]
+    assert catalog._parquet_layout(path)[1] == sum(_os.path.getsize(f) for f in files)
 
 
 def test_merge_fail_modes_reference_agrees(spark, tmp_path_factory):
