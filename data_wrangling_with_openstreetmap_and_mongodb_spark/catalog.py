@@ -208,12 +208,6 @@ def table_rows(sf_dir: str, name: str) -> int:
     return _footer(os.path.join(sf_dir, f"{name}.parquet"))[2]
 
 
-def scan_parallelism(spark: SparkSession) -> int:
-    """Target scan parallelism: env override, else the scheduler's."""
-    v = os.environ.get("SPARK_GRAFT_SCAN_PARALLELISM")
-    return int(v) if v else spark.sparkContext.defaultParallelism
-
-
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, *, spread: bool = False
 ) -> DataFrame:
@@ -230,7 +224,7 @@ def load_table(
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.schema(table_schema(spark, path)).parquet(path)
     if spread:
-        target = scan_parallelism(spark)
+        target = spark.sparkContext.defaultParallelism
         groups, nbytes = _parquet_layout(path)
         if groups < target and nbytes >= _spread_min_bytes():
             df = df.repartition(target)

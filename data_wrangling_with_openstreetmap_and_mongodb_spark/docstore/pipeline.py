@@ -2184,6 +2184,34 @@ def _compile_merge_pipeline(
     return overrides
 
 
+def _merge_materialize_mode(spark) -> str:
+    """How ``$merge`` materializes its result before overwriting the target,
+    by the durability available.  r15 (guide §6) replaced the staged-sibling
+    rewrite (a SECOND full parquet write + read of the whole table) with an
+    eager checkpoint; r16 (ADVICE r15) made the choice DURABILITY-AWARE,
+    because between checkpoint and overwrite the checkpoint blocks are the
+    ONLY copy of the merged table while mode('overwrite') truncates the
+    target:
+
+    - a configured checkpoint dir → ``"reliable"`` ``checkpoint()``
+      (DFS-backed blocks survive executor loss — the cluster-safe fast
+      path);
+    - ``local[*]`` master → ``"local"`` ``localCheckpoint()``
+      (executor-local blocks; driver==executor here, so a "lost executor"
+      is a lost job anyway);
+    - otherwise (a real cluster without a checkpoint dir) → ``"staged"``,
+      the sibling write: slower (one extra full write+read) but the
+      sibling parquet is durable, so a failed overwrite cannot destroy the
+      only copy.
+    """
+    sc = spark.sparkContext
+    if sc.getCheckpointDir() is not None:
+        return "reliable"
+    if sc.master.startswith("local"):
+        return "local"
+    return "staged"
+
+
 def _apply_merge(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     """$merge: upsert the pipeline result into an existing parquet table —
     Mongo's incremental-materialization stage (the engine's collections are
@@ -2385,35 +2413,10 @@ def _apply_merge(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     ):
         raise ValueError(f"unsupported whenNotMatched: {when_not_matched!r}")
     # The merged result reads `into`, so it cannot overwrite `into` in one
-    # job.  r15 (guide §6) replaced the staged-sibling rewrite (a SECOND
-    # full parquet write + read of the whole table) with an eager
-    # checkpoint; r16 (ADVICE r15) makes the materialization DURABILITY-
-    # AWARE, because between checkpoint and overwrite the checkpoint blocks
-    # are the ONLY copy of the merged table while mode('overwrite')
-    # truncates the target:
-    #
-    # - a configured checkpoint dir → reliable ``checkpoint()`` (DFS-backed
-    #   blocks survive executor loss — the cluster-safe fast path);
-    # - ``local[*]`` master → ``localCheckpoint()`` (executor-local blocks;
-    #   driver==executor here, so a "lost executor" is a lost job anyway);
-    # - otherwise (a real cluster without a checkpoint dir) → the staged
-    #   sibling write: slower (one extra full write+read) but the sibling
-    #   parquet is durable, so a failed overwrite cannot destroy the only
-    #   copy.  Override with SPARK_GRAFT_MERGE_MATERIALIZE=local|reliable|
-    #   staged.
-    # Any raise_error guard above fires during the materialization job,
-    # before the target is touched, in every mode.
-    import os as _os
-
-    mode = _os.environ.get("SPARK_GRAFT_MERGE_MATERIALIZE", "auto")
-    if mode == "auto":
-        sc = spark.sparkContext
-        if sc.getCheckpointDir() is not None:
-            mode = "reliable"
-        elif sc.master.startswith("local"):
-            mode = "local"
-        else:
-            mode = "staged"
+    # job: it is materialized first (see _merge_materialize_mode).  Any
+    # raise_error guard above fires during the materialization job, before
+    # the target is touched, in every mode.
+    mode = _merge_materialize_mode(spark)
     if mode == "staged":
         staged_path = into.rstrip("/") + "__merge_tmp"
         result.write.mode("overwrite").parquet(staged_path)
@@ -2424,12 +2427,8 @@ def _apply_merge(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     else:
         if mode == "reliable":
             materialized = result.checkpoint(eager=True)
-        elif mode == "local":
-            materialized = result.localCheckpoint(eager=True)
         else:
-            raise ValueError(
-                f"unknown SPARK_GRAFT_MERGE_MATERIALIZE mode: {mode!r}"
-            )
+            materialized = result.localCheckpoint(eager=True)
         try:
             materialized.write.mode("overwrite").parquet(into)
         finally:

@@ -29,8 +29,12 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal im
 )
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.upsert import merge_update
 from data_wrangling_with_openstreetmap_and_mongodb_spark.queries.registry import register
+from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.drive import (
+    run_available_now,
+)
 from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.rollup import (
-    run_streaming_hourly_rollup,
+    hourly_rollup_plan,
+    stream_events,
 )
 from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.sessionize import (
     sessionize_batch,
@@ -1390,16 +1394,52 @@ def multimodal_mp3_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _decode_through_stream(payloads: DataFrame, n_docs: int, fmt: str) -> DataFrame:
+    """Write ``payloads`` once as a pinned number of parquet files and
+    decode them through a file stream of about four micro-batches.
+
+    The file count is min(32, n_docs): an empty round-robin partition
+    writes NO parquet file, so a flat repartition(32) would silently yield
+    fewer files and micro-batches below 32 docs (ADVICE r15).  With
+    maxFilesPerTrigger = n_files // 4 there are ~4 micro-batches whenever
+    >= 4 files exist — constant across scale (the 10x-probe lesson) — and
+    each decodes its files in parallel (r15, guide §2.5: the decode stage
+    inherits the micro-batch's file-split parallelism; a real landing zone
+    sizes maxFilesPerTrigger for bytes, not 1).  The payload directory
+    lives only for the write and the drive: the drive returns
+    checkpointed frames."""
+    import tempfile
+
+    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
+        PAYLOAD_SCHEMA,
+    )
+    from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.media_decode import (
+        streaming_media_features,
+    )
+
+    n_files = max(1, min(32, n_docs))
+    with tempfile.TemporaryDirectory(prefix="stream_media_row_") as pdir:
+        payloads.repartition(n_files).write.mode("append").parquet(pdir)
+        stream = (
+            payloads.sparkSession.readStream.schema(PAYLOAD_SCHEMA)
+            .option("maxFilesPerTrigger", max(1, n_files // 4))
+            .parquet(pdir)
+        )
+        return run_available_now(
+            stream, lambda batch: streaming_media_features(batch, fmt)
+        )
+
+
 @register(
     "streaming_media_decode",
     oracle=_PNG_DECODE_ORACLE,
-    doc="STREAMING multimodal decode (streaming/media_decode.py, r13 runner "
+    doc="STREAMING multimodal decode (streaming/media_decode.py, r13 "
     "— VERDICT r13 ask #6 gives it the catalog row the other nine "
     "streaming families already hold): the SAME closed-form PNG payloads "
     "as multimodal_png_decode, written as 32 parquet files and "
     "replayed through readStream with maxFilesPerTrigger=8 (forcing a "
     "pinned 4 micro-batches, 8-way-parallel decode within each — r15) "
-    "into the stateless scan→mapInPandas→sink "
+    "into the stateless per-micro-batch scan→mapInPandas "
     "decode; the oracle is the BATCH row's SQL, so a hash match proves "
     "chunk framing, CRC verification, inflate and unfilter are "
     "micro-batch-invariant end to end.  At 100 TB the payload directory "
@@ -1409,42 +1449,17 @@ def multimodal_mp3_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "multimodal", "codec"),
 )
 def streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
         synthesize_png_payloads,
     )
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.media_decode import (
-        run_streaming_media_decode,
-    )
 
     d = load_table(spark, sf_dir, "documents", spread=True)
-    payloads = synthesize_png_payloads(d)
-    root = tempfile.mkdtemp(prefix="stream_media_row_")
-    pdir, out, ckpt = f"{root}/payloads", f"{root}/out", f"{root}/ckpt"
-    # ONE write of exactly 32 files; maxFilesPerTrigger=8 keeps the SAME
-    # pinned 4 micro-batches (chunking-invariance is still exercised, batch
-    # count still constant across scale — the 10x-probe lesson) while each
-    # micro-batch now decodes 8 files in parallel instead of serially off
-    # one file (r15, guide §2.5: the decode stage inherits the micro-batch's
-    # file-split parallelism; a real landing zone sizes maxFilesPerTrigger
-    # for bytes, not 1).  The pre-r15 shape was TWO doc_id%2-filtered
+    # ONE write of the payloads (the pre-r15 shape was TWO doc_id%2-filtered
     # writes — the filter cannot push below the opaque synthesize stage, so
-    # every payload was encoded twice and half of each pass thrown away.
-    # file count pinned to min(32, n_docs): an empty round-robin partition
-    # writes NO parquet file, so at doc counts < 32 a flat repartition(32)
-    # would silently produce fewer files and fewer micro-batches than the
-    # pinned 4 (ADVICE r15).  Deriving the trigger size from the actual
-    # file count keeps ~4 micro-batches whenever >= 4 files exist; at the
-    # driver SFs (>= 500 docs) this is byte-identical to the r15 shape
-    # (32 files, maxFilesPerTrigger=8).
-    n_files = max(1, min(32, table_rows(sf_dir, "documents")))
-    payloads.repartition(n_files).write.mode("append").parquet(pdir)
-    run_streaming_media_decode(
-        spark, pdir, out, ckpt, fmt="image/png",
-        max_files_per_trigger=max(1, n_files // 4),
+    # every payload was encoded twice and half of each pass thrown away)
+    feats = _decode_through_stream(
+        synthesize_png_payloads(d), table_rows(sf_dir, "documents"), "image/png"
     )
-    feats = spark.read.parquet(out)
     return feats.select(
         "doc_id", "png_type", "width", "height", "n_channels", "n_samples",
         quantize6(F.col("mean_c0")).alias("mean_c0"),
@@ -1465,8 +1480,8 @@ def streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with maxFilesPerTrigger=8 (a constant FOUR micro-batches — file "
     "count pinned by repartition exactly as the PNG row, so batch count "
     "does not scale with input partitions; 8-way-parallel decode within "
-    "each batch, r15) into the stateless "
-    "scan→mapInPandas→sink decode; the oracle is the BATCH row's G.711 "
+    "each batch, r15) into the stateless per-micro-batch "
+    "scan→mapInPandas decode; the oracle is the BATCH row's G.711 "
     "SQL, so a hash match proves RIFF walking, segment-table expansion "
     "and rms/peak accumulation are micro-batch-invariant end to end.  "
     "At 100 TB the payload directory is the landing zone and "
@@ -1476,33 +1491,15 @@ def streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "multimodal", "codec"),
 )
 def streaming_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
         synthesize_g711_payloads,
     )
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.media_decode import (
-        run_streaming_media_decode,
-    )
 
     d = load_table(spark, sf_dir, "documents")
-    payloads = synthesize_g711_payloads(d)
-    root = tempfile.mkdtemp(prefix="stream_wav_row_")
-    pdir, out, ckpt = f"{root}/payloads", f"{root}/out", f"{root}/ckpt"
-    # constant file count (ONE write of exactly 32 files) -> exactly 4
-    # micro-batches at maxFilesPerTrigger=8, invariant across input
-    # partitioning (the PNG row's batch-count pin), with 8-way parallel
-    # decode inside each micro-batch and payloads encoded ONCE (r15 — same
-    # single-write + rebalance rationale as the PNG row)
-    # same doc-count-derived file pin as the PNG row (ADVICE r15: empty
-    # partitions write no file, so a flat 32 under-produces below 32 docs)
-    n_files = max(1, min(32, table_rows(sf_dir, "documents")))
-    payloads.repartition(n_files).write.mode("append").parquet(pdir)
-    run_streaming_media_decode(
-        spark, pdir, out, ckpt, fmt="audio/wav",
-        max_files_per_trigger=max(1, n_files // 4),
+    # same single write and doc-count-derived file pin as the PNG row
+    feats = _decode_through_stream(
+        synthesize_g711_payloads(d), table_rows(sf_dir, "documents"), "audio/wav"
     )
-    feats = spark.read.parquet(out)
     return feats.select(
         "doc_id",
         F.when(F.col("doc_id") % 2 == 0, F.lit("mulaw"))
@@ -1566,7 +1563,9 @@ def multimodal_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver_visible=False,
 )
 def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_streaming_hourly_rollup(spark, sf_dir)
+    return run_available_now(
+        hourly_rollup_plan(stream_events(spark, sf_dir)), output_mode="complete"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1610,15 +1609,12 @@ def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver_visible=False,
 )
 def streaming_asof_enrich_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.upsert import (
         scd2_from_changes,
     )
     from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.asof_enrich import (
-        run_streaming_asof_enrich,
+        asof_enrich_against_scd2,
     )
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.rollup import stream_events
 
     changes = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("user_id"),
@@ -1629,13 +1625,13 @@ def streaming_asof_enrich_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = scd2_from_changes(changes, "user_id", "__t", "o_orderstatus", "o_orderkey")
     ev = stream_events(spark, sf_dir)
     ev = ev.select("event_id", "user_id", ts_micros(ev).alias("__evt"))
-    tmp = tempfile.mkdtemp(prefix="asof_enrich_")
-    written = run_streaming_asof_enrich(
-        ev, dim, f"{tmp}/out", f"{tmp}/ckpt", "user_id", "__evt", "status_asof"
+    enriched = run_available_now(
+        ev,
+        lambda batch: asof_enrich_against_scd2(
+            batch, dim, "user_id", "__evt", "status_asof"
+        ),
     )
-    return spark.read.schema(written).parquet(f"{tmp}/out").select(
-        "event_id", "user_id", "status_asof"
-    )
+    return enriched.select("event_id", "user_id", "status_asof")
 
 
 # ---------------------------------------------------------------------------
@@ -1707,6 +1703,15 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 _OHLC_BUCKET_US = 15 * 60 * 1_000_000  # 15-minute bars
 
 
+def _stream_events_utc(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """File-stream over the events table: ``cols`` plus the event time as a
+    ``ts_utc`` timestamp.  ts_micros handles BOTH testdata ts encodings
+    (bigint nanos / native timestamp); a bare cast would read bigint nanos
+    as SECONDS."""
+    ev = stream_events(spark, sf_dir)
+    return ev.select(*cols, F.timestamp_micros(ts_micros(ev)).alias("ts_utc"))
+
+
 def _ohlc_oracle() -> str:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.events import (
         ohlc_resample_sql,
@@ -1760,10 +1765,35 @@ def events_ohlc_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_ohlc_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.ohlc import (
-        run_streaming_ohlc,
+        streaming_ohlc,
     )
 
-    return run_streaming_ohlc(spark, sf_dir, _OHLC_BUCKET_US)
+    # complete mode + no watermark: a bounded catch-up run wants every bar,
+    # including the trailing ones a watermark would still hold open at
+    # end-of-stream; min_by/max_by/quantized-sum state is micro-batch-order
+    # independent, so the bars are bit-identical to batch
+    bars = run_available_now(
+        streaming_ohlc(
+            _stream_events_utc(spark, sf_dir, "event_id", "value"),
+            f"{_OHLC_BUCKET_US // 1_000_000} seconds",
+            allowed_lateness=None,
+        ),
+        output_mode="complete",
+    )
+    # window starts are epoch-aligned (F.window anchors at the epoch), so
+    # bucket = unix_micros(window_start) / bucket_us reproduces the batch
+    # resampler's floor(ts/bucket) key exactly
+    return bars.select(
+        (F.unix_micros(F.col("window_start")) / F.lit(_OHLC_BUCKET_US))
+        .cast("long")
+        .alias("bucket"),
+        "n_events",
+        "open_v",
+        "high_v",
+        "low_v",
+        "close_v",
+        "volume",
+    )
 
 
 @register(
@@ -1792,10 +1822,25 @@ def streaming_ohlc_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_pair_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.join import (
-        run_streaming_pair_events,
+        stream_stream_interval_join,
     )
 
-    return run_streaming_pair_events(spark, sf_dir, band_minutes=30)
+    ev = _stream_events_utc(spark, sf_dir, "event_id", "user_id")
+    joined = stream_stream_interval_join(
+        ev, ev, on="user_id", left_time="ts_utc", right_time="ts_utc",
+        band="30 minutes",
+    )
+    # append mode: a joined pair is emitted exactly once, when matched, and
+    # never retracted — so the union over micro-batches equals the batch join
+    return run_available_now(
+        joined.filter(F.col("l_event_id") < F.col("r_event_id")).select(
+            F.col("l_event_id").alias("id_a"),
+            F.col("r_event_id").alias("id_b"),
+            (
+                F.unix_micros(F.col("r_ts_utc")) - F.unix_micros(F.col("l_ts_utc"))
+            ).alias("delta_us"),
+        )
+    )
 
 
 _RETENTION_PERIOD_US = 7 * 24 * 3600 * 1_000_000  # weekly cohorts
@@ -1919,14 +1964,11 @@ def etl_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the sink writes one container per partition; spread the Python-side
     # deflate encode across the scheduler's parallelism (r15: was a fixed
     # .repartition(8) — the cap serialized 3/4 of the encode on local[32]
-    # and under-splits on a bigger cluster; scan_parallelism is the same
-    # env-overridable, core-count-adaptive target the codec spread uses)
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import (
-        scan_parallelism,
-    )
-
+    # and under-splits on a bigger cluster; the scheduler's default
+    # parallelism is the same core-count-adaptive target the codec spread
+    # uses)
     write_avro(
-        orders.repartition(scan_parallelism(spark)),
+        orders.repartition(spark.sparkContext.defaultParallelism),
         base, codec="deflate", block_rows=1024,
     )
     back = read_avro(spark, base, split_bytes=64 << 10)

@@ -6,9 +6,9 @@ The production shape of stream-side dimension lookup: the dimension
 historizes ONCE as a plain SCD2 table (one row per value episode,
 ``valid_to`` exclusive and NULL on the open episode, incrementally
 maintainable as a batch job); arriving event micro-batches each join
-against a snapshot of it inside ``foreachBatch`` — the
-``streaming/dedup_probe.py`` pattern.  ``foreachBatch`` rather than a
-stream-stream join because the dimension is a static, incrementally-
+against a snapshot of it inside ``foreachBatch`` (``streaming/drive.py``
+with this module's join as the batch operator).  ``foreachBatch`` rather
+than a stream-stream join because the dimension is a static, incrementally-
 maintained table, not a stream: Structured Streaming's stream-stream join
 cannot express "latest row at or before event time" without watermark-
 bounded buffering of the whole dimension history, while the SCD2 interval
@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StructType
 
 
 def asof_enrich_against_scd2(
@@ -46,8 +45,8 @@ def asof_enrich_against_scd2(
     """Enrich ``events`` with ``value_field`` = the SCD2 ``value`` whose
     ``[valid_from, valid_to)`` episode contains ``events.ts_col`` for the
     matching key (null when the event predates every episode or the key is
-    unknown).  Pure batch logic — reused per micro-batch by
-    :func:`run_streaming_asof_enrich` and directly testable."""
+    unknown).  Pure batch logic — applied per micro-batch by
+    ``streaming.drive.run_available_now`` and directly testable."""
     d = scd2.select(
         F.col("key").alias("__k"),
         F.col("value").alias(value_field),
@@ -61,32 +60,3 @@ def asof_enrich_against_scd2(
     )
     return events.join(d, cond, "left").drop("__k", "__vf", "__vt")
 
-
-def run_streaming_asof_enrich(
-    events_stream: DataFrame,
-    scd2: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    key_col: str,
-    ts_col: str,
-    value_field: str = "dim_value",
-) -> StructType | None:
-    """Drive the enrichment to completion (availableNow), appending enriched
-    events to ``out_path`` parquet.  Returns the schema of the frames it
-    wrote (None when no micro-batch ran), so the output reads back without
-    a schema-inference job."""
-    written: list[StructType] = []
-
-    def enrich_batch(batch: DataFrame, batch_id: int) -> None:
-        enriched = asof_enrich_against_scd2(batch, scd2, key_col, ts_col, value_field)
-        enriched.write.mode("append").parquet(out_path)
-        written[:] = [enriched.schema]
-
-    (
-        events_stream.writeStream.foreachBatch(enrich_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return written[0] if written else None

@@ -6,7 +6,8 @@ itself (one hash-agg, linear in the batch), and the running grid updates by
 cell-wise sum against the persisted grid table — ≤ depth·width rows of
 state, REGARDLESS of stream length.  No per-key state ever accumulates in
 the streaming query; the grid table IS the state, managed as a plain
-parquet table the same way the MinHash band index is (dedup_probe.py).
+parquet table the same way the MinHash band index is (probed per
+micro-batch by ``minhash_probe_index``).
 
 ``foreachBatch`` rather than a native streaming aggregation because the
 update is a read-modify-write of a tiny table, and the batch operator —

@@ -20,8 +20,6 @@ semantics don't change between modes, only liveness and state accounting.
 
 from __future__ import annotations
 
-import itertools
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -60,83 +58,3 @@ def stream_stream_interval_join(
     )
     return l.join(r, cond, "inner")
 
-
-_pair_sink_counter = itertools.count()
-
-
-def run_streaming_pair_events(
-    spark,
-    sf_dir: str,
-    band_minutes: int = 30,
-    state_partitions: int = 8,
-) -> DataFrame:
-    """Drive the stream-stream interval SELF-join over the events table
-    (real file-stream replay, availableNow trigger, append mode) and return
-    the distinct same-user event pairs within ±band — value-identical to
-    the batch ``operators/asof.py::interval_join`` on the same parquet, so
-    the driver row's oracle is the quadratic batch SQL.
-
-    This is the scale-critical streaming surface: BOTH sides watermarked
-    AND a closed time band, the mandatory pair that lets Spark evict
-    buffered rows once the other watermark passes ``ts + band`` — state is
-    O(band × per-key rate), not O(stream).  Append mode: a joined pair is
-    emitted exactly once, when matched, and never retracted — so the sink
-    union over micro-batches equals the batch join regardless of how the
-    file source splits the replay.
-
-    ``state_partitions`` sizes the join's state store like the rollup
-    runner (per-user buffered rows, thousands of keys — not the batch
-    shuffle default).
-
-    Sink: parquet files (the asof-enrich runner's pattern), NOT the memory
-    sink — the pair output scales with corpus size (unlike the ohlc/rollup
-    aggregates), and a memory sink buffers every row in the driver JVM for
-    the session's lifetime, so repeated bench/parity invocations would pile
-    up full pair sets in driver heap (caught in the r11 review).
-    """
-    import tempfile
-
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import ts_micros
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.rollup import (
-        stream_events,
-    )
-
-    tmp = tempfile.mkdtemp(prefix=f"pair_events_{next(_pair_sink_counter)}_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        ev = stream_events(spark, sf_dir)
-        # ts_micros handles BOTH testdata ts encodings (bigint nanos /
-        # native timestamp); a bare cast would read bigint nanos as SECONDS
-        ev = ev.select(
-            "event_id",
-            "user_id",
-            F.timestamp_micros(ts_micros(ev)).alias("ts_utc"),
-        )
-        joined = stream_stream_interval_join(
-            ev,
-            ev,
-            on="user_id",
-            left_time="ts_utc",
-            right_time="ts_utc",
-            band=f"{band_minutes} minutes",
-        )
-        pairs = joined.filter(F.col("l_event_id") < F.col("r_event_id")).select(
-            F.col("l_event_id").alias("id_a"),
-            F.col("r_event_id").alias("id_b"),
-            (
-                F.unix_micros(F.col("r_ts_utc")) - F.unix_micros(F.col("l_ts_utc"))
-            ).alias("delta_us"),
-        )
-        q = (
-            pairs.writeStream.format("parquet")
-            .option("path", f"{tmp}/out")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.read.parquet(f"{tmp}/out")

@@ -2,29 +2,28 @@
 out — the ingest shape of a production media pipeline (new shards of
 image/audio bytes arriving continuously, decoded once on arrival).
 
-Unlike the foreachBatch runners (which wrap batch JOINS against static
-tables), decode is a STATELESS Arrow-batched map — so the batch extractors
-(``operators/multimodal.py``) apply to a ``readStream`` DataFrame
-completely unchanged and the query needs no aggregation state, no
-watermark, and no foreachBatch: Structured Streaming's own incremental
-file listing is the only streaming machinery involved.  That makes the
-stream/batch equivalence test (tests/test_streaming_media.py) exact: the
-same rows, bit for bit, however the input is chunked into micro-batches.
+Decode is a STATELESS Arrow-batched map, so the batch extractors
+(``operators/multimodal.py``) are the batch operator handed to
+``streaming/drive.py`` unchanged: each micro-batch of payload rows decodes
+exactly as the batch path would, with no aggregation state and no
+watermark — Structured Streaming's incremental file listing is the only
+streaming machinery involved.  That makes the stream/batch equivalence
+test (tests/test_streaming_media.py) exact: the same rows, bit for bit,
+however the input is chunked into micro-batches.
 
 At 100 TB: the payload directory is the landing zone; ``maxFilesPerTrigger``
 bounds micro-batch size (decode cost is linear in bytes, so batch sizing
 is pure throughput/latency tuning); the decoded feature table appends
-partitioned by arrival date.  Binary payloads never shuffle — the plan is
-scan → mapInPandas → sink, the same map-only shape plan-pinned for the
-batch path in tests/test_plans.py::TestRound13Plans.
+partitioned by arrival date.  Binary payloads never shuffle — each
+micro-batch runs scan → mapInPandas, the same map-only shape plan-pinned
+for the batch path in tests/test_plans.py::TestRound13Plans.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
-    PAYLOAD_SCHEMA,
     extract_gif_frames,
     extract_jpeg_features,
     extract_media_features,
@@ -45,38 +44,15 @@ _EXTRACTORS = {
 }
 
 
-def streaming_media_features(payload_stream: DataFrame, fmt: str) -> DataFrame:
-    """Apply the format's batch feature extractor to a streaming payload
-    DataFrame — stateless, so the streaming plan is scan → mapInPandas."""
+def streaming_media_features(payloads: DataFrame, fmt: str) -> DataFrame:
+    """Apply the format's batch feature extractor to payload rows — a
+    micro-batch, a batch table or a streaming frame alike, since the
+    extractor is a stateless scan → mapInPandas."""
     try:
-        return _EXTRACTORS[fmt](payload_stream)
+        return _EXTRACTORS[fmt](payloads)
     except KeyError:
         raise NotImplementedError(
             f"no streaming extractor for {fmt!r} "
             f"(have {sorted(_EXTRACTORS)})"
         ) from None
 
-
-def run_streaming_media_decode(
-    spark: SparkSession,
-    payload_dir: str,
-    out_path: str,
-    checkpoint_path: str,
-    fmt: str = "image/jpeg",
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Drive decode to completion (availableNow) over a payload parquet
-    directory, appending feature rows to ``out_path``."""
-    reader = spark.readStream.schema(PAYLOAD_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(payload_dir)
-    (
-        streaming_media_features(stream, fmt)
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )

@@ -12,8 +12,6 @@ any count/sum — no flatMapGroupsWithState needed for OHLC.
 
 from __future__ import annotations
 
-import itertools
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -68,76 +66,5 @@ def streaming_ohlc(
             "close_v",
             "volume",
         )
-    )
-
-
-_ohlc_sink_counter = itertools.count()
-
-
-def run_streaming_ohlc(
-    spark,
-    sf_dir: str,
-    bucket_us: int = 15 * 60 * 1_000_000,
-    state_partitions: int = 8,
-) -> DataFrame:
-    """Drive the streaming OHLC bars to completion over the events table
-    (availableNow trigger, complete mode) and return the final bars keyed
-    by the batch resampler's integer ``bucket`` — value-identical to
-    ``operators/events.py::ohlc_resample`` over the same parquet (the
-    driver row's oracle IS the batch SQL).
-
-    Complete mode + no watermark: a bounded catch-up run wants every bar,
-    including the trailing ones a watermark would still hold open at
-    end-of-stream; min_by/max_by/quantized-sum state is micro-batch-order
-    independent, so the bars are bit-identical to batch no matter how the
-    file source splits the replay.  ``state_partitions`` sizes the state
-    store like the rollup runner (bar-count cardinality, not the batch
-    shuffle default).
-    """
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import ts_micros
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.rollup import (
-        stream_events,
-    )
-
-    if bucket_us % 1_000_000:
-        raise ValueError("bucket_us must be whole seconds for F.window")
-    name = f"ohlc_sink_{next(_ohlc_sink_counter)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        ev = stream_events(spark, sf_dir)
-        # ts_micros handles BOTH testdata ts encodings (bigint nanos / native
-        # timestamp); a bare cast would read bigint nanos as SECONDS
-        ev = ev.select(
-            F.timestamp_micros(ts_micros(ev)).alias("ts_utc"),
-            "event_id",
-            "value",
-        )
-        bars = streaming_ohlc(
-            ev, f"{bucket_us // 1_000_000} seconds", allowed_lateness=None
-        )
-        q = (
-            bars.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    # window starts are epoch-aligned (F.window anchors at the epoch), so
-    # bucket = unix_micros(window_start) / bucket_us reproduces the batch
-    # resampler's floor(ts/bucket) key exactly
-    return spark.table(name).select(
-        (F.unix_micros(F.col("window_start")) / F.lit(bucket_us))
-        .cast("long")
-        .alias("bucket"),
-        "n_events",
-        "open_v",
-        "high_v",
-        "low_v",
-        "close_v",
-        "volume",
     )
 

@@ -2,10 +2,10 @@
 
 The reference is batch-only, but the engine exposes its time-bucketed rollup
 as a real Structured Streaming job: ``readStream`` over the events parquet →
-stateful streaming aggregation → memory sink, driven to completion with an
-``availableNow`` trigger.  The same logical plan serves a live stream — swap
-the source for Kafka/files-in-arrival and the trigger for a processing-time
-cadence; the aggregation state, output mode, and sink contract are already
+stateful streaming aggregation in complete mode, driven to completion with
+an ``availableNow`` trigger by ``streaming/drive.py``.  The same logical
+plan serves a live stream — swap the source for Kafka/files-in-arrival and
+the trigger for a processing-time cadence; the aggregation state, output mode, and sink contract are already
 streaming-native.
 
 Determinism: the aggregate uses the engine's exact quantized sum
@@ -16,8 +16,6 @@ streaming partial aggregation is just another summation order.
 
 from __future__ import annotations
 
-import itertools
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,8 +25,6 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import (
     ts_micros,
 )
 from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import dsum
-
-_sink_counter = itertools.count()
 
 
 def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -59,7 +55,11 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def hourly_rollup_plan(events: DataFrame) -> DataFrame:
     """The streaming aggregation: integer hour bucket × event_type →
-    count + exact sum.  Identical logical shape to the batch rollup."""
+    count + exact sum.  Identical logical shape to the batch rollup.
+
+    Driven in ``complete`` mode: every trigger emits the full aggregation
+    state — the right mode for a bounded catch-up run and for dashboards;
+    an unbounded deployment would add a watermark + append mode."""
     return (
         events.withColumn("ts_us", ts_micros(events))
         .withColumn("epoch_hour", F.expr(f"ts_us div {MICROS_PER_HOUR}"))
@@ -67,39 +67,3 @@ def hourly_rollup_plan(events: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"), dsum("value").alias("sum_value"))
     )
 
-
-def run_streaming_hourly_rollup(
-    spark: SparkSession, sf_dir: str, state_partitions: int = 8
-) -> DataFrame:
-    """Drive the streaming rollup to completion (availableNow) and return the
-    final result as a DataFrame.
-
-    ``complete`` output mode: every trigger emits full aggregation state —
-    the right mode for a bounded catch-up run and for dashboards; an
-    unbounded deployment would add a watermark + append mode.
-
-    ``state_partitions`` sizes the streaming state store: each state
-    partition carries an HDFS-backed provider with snapshot/maintenance
-    overhead, so it should track the AGGREGATE's key cardinality (a few
-    thousand hour×type groups here), not the batch shuffle default —
-    measured on local[32]: 64 state partitions run 2–9 s erratic (provider
-    maintenance dominates), 8 run a stable ~1 s.  The conf only takes
-    effect at stream start, so it is set for the query and restored after
-    (state partitioning is fixed for a streaming query's lifetime anyway).
-    """
-    name = f"hourly_rollup_sink_{next(_sink_counter)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            hourly_rollup_plan(stream_events(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)

@@ -42,7 +42,7 @@ def test_plain_session_gets_broadcast_threshold_and_df_broadcast(spark, sf_dir):
     assert df_broadcast.search(plan), plan[:3000]
 
 
-def test_engine_reads_exactly_four_env_knobs():
+def test_engine_reads_exactly_two_env_knobs():
     """Every SPARK_GRAFT_* string literal in the package source.  Adding an
     engine knob means editing this set."""
     root = pathlib.Path(pkg.__file__).parent
@@ -58,8 +58,6 @@ def test_engine_reads_exactly_four_env_knobs():
     assert found == {
         "SPARK_GRAFT_CPUS",
         "SPARK_GRAFT_SPREAD_MIN_BYTES",
-        "SPARK_GRAFT_SCAN_PARALLELISM",
-        "SPARK_GRAFT_MERGE_MATERIALIZE",
     }
 
 

@@ -18,8 +18,12 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.upsert import
 from data_wrangling_with_openstreetmap_and_mongodb_spark.queries.relational import (
     hourly_event_rollup,
 )
+from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.drive import (
+    run_available_now,
+)
 from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.rollup import (
-    run_streaming_hourly_rollup,
+    hourly_rollup_plan,
+    stream_events,
 )
 
 
@@ -132,7 +136,9 @@ class TestMultimodal:
 
 class TestStreamingRollup:
     def test_stream_matches_batch(self, spark, sf_dir):
-        stream = run_streaming_hourly_rollup(spark, sf_dir)
+        stream = run_available_now(
+            hourly_rollup_plan(stream_events(spark, sf_dir)), output_mode="complete"
+        )
         batch = hourly_event_rollup(spark, sf_dir)
         cols = ["epoch_hour", "event_type", "cnt", "sum_value"]
         srows = sorted(tuple(r[c] for c in cols) for r in stream.collect())

@@ -319,10 +319,11 @@ def test_merge_staged_mode_matches_local(spark, tmp_path_factory, monkeypatch):
     import os as _os
 
     from data_wrangling_with_openstreetmap_and_mongodb_spark import catalog
+    from data_wrangling_with_openstreetmap_and_mongodb_spark.docstore import pipeline
 
-    monkeypatch.setenv("SPARK_GRAFT_MERGE_MATERIALIZE", "local")
+    monkeypatch.setattr(pipeline, "_merge_materialize_mode", lambda spark: "local")
     _, cols_a, got_a = _run_merge(spark, tmp_path_factory, {"whenMatched": "replace"})
-    monkeypatch.setenv("SPARK_GRAFT_MERGE_MATERIALIZE", "staged")
+    monkeypatch.setattr(pipeline, "_merge_materialize_mode", lambda spark: "staged")
 
     base = str(tmp_path_factory.mktemp("merge_fuzz"))
     path = _os.path.join(base, "t.parquet")

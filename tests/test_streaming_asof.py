@@ -16,7 +16,9 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.upsert import
 )
 from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.asof_enrich import (
     asof_enrich_against_scd2,
-    run_streaming_asof_enrich,
+)
+from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.drive import (
+    run_available_now,
 )
 
 
@@ -65,15 +67,12 @@ def test_stream_enrich_equals_batch_asof(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    out = tmp_path / "enriched"
-    run_streaming_asof_enrich(
-        stream, dim, str(out), str(tmp_path / "ckpt"), "user", "ts", "status_asof"
+    enriched = run_available_now(
+        stream,
+        lambda batch: asof_enrich_against_scd2(batch, dim, "user", "ts", "status_asof"),
     )
 
-    got = {
-        (r["event_id"], r["status_asof"])
-        for r in spark.read.parquet(str(out)).collect()
-    }
+    got = {(r["event_id"], r["status_asof"]) for r in enriched.collect()}
     events = spark.createDataFrame(rows, "event_id long, user long, ts long")
     want = {
         (r["event_id"], r["status"])

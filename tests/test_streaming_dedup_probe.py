@@ -9,8 +9,8 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import 
     minhash_band_index,
     minhash_probe_index,
 )
-from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.dedup_probe import (
-    run_streaming_dedup_probe,
+from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.drive import (
+    run_available_now,
 )
 
 def _doc(i: int) -> str:
@@ -53,15 +53,12 @@ def test_stream_probe_equals_batch_probe(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    out = tmp_path / "matches"
-    run_streaming_dedup_probe(
-        stream, index, str(out), str(tmp_path / "ckpt"), threshold=0.9
+    matches = run_available_now(
+        stream,
+        lambda batch: minhash_probe_index(batch, index, "text", "doc_id", threshold=0.9),
     )
 
-    got = {
-        (r["new_id"], r["corpus_id"], r["est_jaccard"])
-        for r in spark.read.parquet(str(out)).collect()
-    }
+    got = {(r["new_id"], r["corpus_id"], r["est_jaccard"]) for r in matches.collect()}
     batch_inc = spark.createDataFrame(rows, "doc_id long, text string")
     want = {
         (r["new_id"], r["corpus_id"], r["est_jaccard"])

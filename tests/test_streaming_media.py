@@ -1,5 +1,6 @@
-"""Stream/batch equivalence for the streaming multimodal decode runner:
-decode is a stateless Arrow map, so the streaming output must equal the
+"""Stream/batch equivalence for streaming multimodal decode (the batch
+extractor applied per micro-batch by the availableNow drive): decode is a
+stateless Arrow map, so the streaming output must equal the
 batch extractor's rows EXACTLY regardless of micro-batch chunking."""
 
 from __future__ import annotations
@@ -8,18 +9,30 @@ import pytest
 
 from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import load_table
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
+    PAYLOAD_SCHEMA,
     extract_jpeg_features,
     synthesize_gif_payloads,
     synthesize_jpeg_payloads,
 )
+from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.drive import (
+    run_available_now,
+)
 from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.media_decode import (
-    run_streaming_media_decode,
     streaming_media_features,
 )
 
 
 def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def _decode(spark, pdir, fmt, max_files_per_trigger=None):
+    reader = spark.readStream.schema(PAYLOAD_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return run_available_now(
+        reader.parquet(pdir), lambda batch: streaming_media_features(batch, fmt)
+    )
 
 
 def test_streaming_jpeg_decode_equals_batch(spark, sf_dir, tmp_path):
@@ -30,15 +43,7 @@ def test_streaming_jpeg_decode_equals_batch(spark, sf_dir, tmp_path):
     pdir = str(tmp_path / "payloads")
     payloads.filter("doc_id % 2 = 0").write.mode("append").parquet(pdir)
     payloads.filter("doc_id % 2 = 1").write.mode("append").parquet(pdir)
-    run_streaming_media_decode(
-        spark,
-        pdir,
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        fmt="image/jpeg",
-        max_files_per_trigger=1,
-    )
-    got = spark.read.parquet(str(tmp_path / "out"))
+    got = _decode(spark, pdir, "image/jpeg", max_files_per_trigger=1)
     want = extract_jpeg_features(spark.read.parquet(pdir))
     cols = ["doc_id", "jpeg_type", "width", "height", "n_samples",
             "mean_c0", "mean_luma"]
@@ -52,11 +57,7 @@ def test_streaming_gif_one_to_many_rows(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents").limit(20)
     pdir = str(tmp_path / "payloads")
     synthesize_gif_payloads(docs).write.mode("overwrite").parquet(pdir)
-    run_streaming_media_decode(
-        spark, pdir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
-        fmt="image/gif",
-    )
-    got = spark.read.parquet(str(tmp_path / "out"))
+    got = _decode(spark, pdir, "image/gif")
     # frames per doc = 1 + doc_id % 3 (the _gif_plan contract)
     per_doc = {r["doc_id"]: r["n"] for r in
                got.groupBy("doc_id").count().withColumnRenamed("count", "n").collect()}
@@ -85,11 +86,7 @@ def test_streaming_wav_decode_equals_batch(spark, sf_dir, tmp_path):
     pdir = str(tmp_path / "payloads")
     payloads.filter("doc_id % 2 = 0").write.mode("append").parquet(pdir)
     payloads.filter("doc_id % 2 = 1").write.mode("append").parquet(pdir)
-    run_streaming_media_decode(
-        spark, pdir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
-        fmt="audio/wav", max_files_per_trigger=1,
-    )
-    got = spark.read.parquet(str(tmp_path / "out"))
+    got = _decode(spark, pdir, "audio/wav", max_files_per_trigger=1)
     want = extract_media_features(spark.read.parquet(pdir))
     cols = [c for c in want.columns]
     assert _rows(got, cols) == _rows(want, cols)
@@ -132,11 +129,7 @@ def test_streaming_mp3_headers_equals_batch(spark, sf_dir, tmp_path):
     pdir = str(tmp_path / "payloads")
     payloads.filter("doc_id % 2 = 0").write.mode("append").parquet(pdir)
     payloads.filter("doc_id % 2 = 1").write.mode("append").parquet(pdir)
-    run_streaming_media_decode(
-        spark, pdir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
-        fmt="audio/mpeg", max_files_per_trigger=1,
-    )
-    got = spark.read.parquet(str(tmp_path / "out"))
+    got = _decode(spark, pdir, "audio/mpeg", max_files_per_trigger=1)
     want = extract_mp3_features(spark.read.parquet(pdir))
     cols = want.columns
     assert _rows(got, cols) == _rows(want, cols)

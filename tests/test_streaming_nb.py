@@ -9,8 +9,8 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.classify impo
     nb_predict,
     nb_train,
 )
-from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.nb_stream import (
-    run_streaming_nb_scoring,
+from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.drive import (
+    run_available_now,
 )
 
 
@@ -53,15 +53,12 @@ def test_stream_scoring_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    out = tmp_path / "scored"
-    run_streaming_nb_scoring(
-        stream, priors, lik, str(out), str(tmp_path / "ckpt"), num_buckets=256
+    scored = run_available_now(
+        stream,
+        lambda batch: nb_predict(batch, priors, lik, "text", "doc_id", num_buckets=256),
     )
 
-    got = {
-        (r["id"], r["predicted"], r["score"])
-        for r in spark.read.parquet(str(out)).collect()
-    }
+    got = {(r["id"], r["predicted"], r["score"]) for r in scored.collect()}
     batch = spark.createDataFrame(rows, "doc_id long, text string")
     want = {
         (r["id"], r["predicted"], r["score"])
