@@ -7,6 +7,13 @@ Fixtures are self-authored minimal inputs mirroring the reference's fixture
 
 from __future__ import annotations
 
+import json
+import os
+import pathlib
+import subprocess
+import sys
+import textwrap
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -129,6 +136,43 @@ class TestOsmSource:
     def test_element_tag_counts(self, osm_raw):
         # mapparser.py:29-36 golden-dict style
         counts = {r["element_type"]: r["cnt"] for r in element_tag_counts(osm_raw).collect()}
+        assert counts == {"node": 4, "way": 2, "relation": 1}
+
+    def test_workers_import_engine_outside_repo_cwd(self, tmp_path):
+        """A driver whose cwd is not the repo root and whose PYTHONPATH is
+        unset still parses: get_spark puts the package root on the worker
+        path, ahead of any worker path extra_conf passes, so the parse
+        closure's engine code imports in the worker."""
+        osm = tmp_path / "example.osm"
+        osm.write_text(OSM_XML)
+        root = pathlib.Path(__file__).resolve().parents[1]
+        script = textwrap.dedent(
+            f"""
+            import json, sys
+            sys.path.insert(0, {str(root)!r})
+            from data_wrangling_with_openstreetmap_and_mongodb_spark.session import get_spark
+            from data_wrangling_with_openstreetmap_and_mongodb_spark.sources import (
+                element_tag_counts, read_osm_elements,
+            )
+            spark = get_spark(
+                "outside-cwd", master="local[1]",
+                extra_conf={{"spark.executorEnv.PYTHONPATH": "extra"}},
+            )
+            rows = element_tag_counts(read_osm_elements(spark, {str(osm)!r})).collect()
+            worker_path = spark.conf.get("spark.executorEnv.PYTHONPATH")
+            print(json.dumps([worker_path, {{r["element_type"]: r["cnt"] for r in rows}}]))
+            spark.stop()
+            """
+        )
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        env["SPARK_DRIVER_MEMORY"] = "1g"
+        done = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+        )
+        assert done.returncode == 0, done.stderr[-3000:]
+        worker_path, counts = json.loads(done.stdout.strip().splitlines()[-1])
+        assert worker_path == os.pathsep.join([str(root), "extra"])
         assert counts == {"node": 4, "way": 2, "relation": 1}
 
     def test_tag_key_classes(self, osm_raw):
