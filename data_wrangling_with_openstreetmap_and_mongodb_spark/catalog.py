@@ -73,17 +73,15 @@ MICROS_PER_DAY = 86_400_000_000
 #
 # At 100 TB the gate self-disables: real tables have thousands of row
 # groups (>= cores), so no shuffle is added — the rebalance fires precisely
-# on unsplittable inputs, where it is the documented fix.  Both knobs are
-# env-parameterised; the byte floor keeps dimension tables exchange-free.
-# The gate's row-group and byte counts come from the table-metadata record
-# below, so they follow every rewrite of the path.
+# on unsplittable inputs, where it is the documented fix.  The byte floor
+# below keeps dimension tables exchange-free.  The gate's row-group and
+# byte counts come from the table-metadata record below, so they follow
+# every rewrite of the path.
 
-
-def _spread_min_bytes() -> int:
-    """Dimension-size floor for the scan rebalance (read per call so the
-    test suite can force the spread on at tiny SFs — the parity gate must
-    exercise the same plan shape the driver's larger SFs produce)."""
-    return int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", str(256 * 1024)))
+# Dimension-size floor for the scan rebalance.  ``load_table`` reads it per
+# call, so the test suite can patch it to force the spread on at tiny SFs:
+# the parity gate must exercise the plan shape larger SFs produce.
+SPREAD_MIN_BYTES = 256 * 1024
 
 
 # --- table metadata ----------------------------------------------------------
@@ -226,7 +224,7 @@ def load_table(
     if spread:
         target = spark.sparkContext.defaultParallelism
         groups, nbytes = _parquet_layout(path)
-        if groups < target and nbytes >= _spread_min_bytes():
+        if groups < target and nbytes >= SPREAD_MIN_BYTES:
             df = df.repartition(target)
     return df
 

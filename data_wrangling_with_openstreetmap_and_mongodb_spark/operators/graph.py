@@ -30,6 +30,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+# Min-label propagation rounds composed per materialization + driver
+# convergence check.  A sync costs a checkpoint job and a barrier; an extra
+# round deepens lineage and may be wasted past the fixpoint.  On the 10×
+# keep-best edge shape, cadence 2 was within noise of 4 and both beat 1
+# (PLANS.md §cc-knobs-10x, commit cd542ca).
+ROUNDS_PER_SYNC = 2
+
 
 def _truncate(df: DataFrame, mode: str, eager: bool = True) -> DataFrame:
     """Cut lineage per ``mode``:
@@ -65,7 +72,6 @@ def connected_components(
     checkpoint_mode: str = "local",
     method: str = "frontier",
     stats: dict | None = None,
-    rounds_per_sync: int = 2,
 ) -> DataFrame:
     """``(id, component)`` for every vertex in ``edges``; ``component`` is
     the minimum vertex id in the connected component (deterministic).
@@ -92,22 +98,9 @@ def connected_components(
     Non-convergence within ``max_iters`` now RAISES (was: silently returned
     partial labels — a correctness hazard for high-diameter graphs).
     ``stats`` (optional dict) receives ``rounds`` (sync count),
-    ``propagations`` (min-label passes: rounds_per_sync/sync), and ``jumps``
-    (pointer jumps: 1/sync in doubling mode, else 0) for measurement
-    harnesses — per-sync shuffle work is ``propagations + jumps``.
-
-    ``rounds_per_sync`` (r13 — the sync-cadence knob, the CC analogue of
-    pagerank's ``checkpoint_every``): propagation rounds composed between
-    each materialization + driver convergence check.  Each sync costs a
-    checkpoint job and a scheduling barrier; each extra composed round
-    deepens lineage and may be wasted past the fixpoint.  Default 2 (the
-    r7-r12 behavior).  Checking only the LAST composed round's change flag
-    stays sound at any cadence: propagation is deterministic and monotone,
-    so one change-free round means fixpoint regardless of what earlier
-    rounds did.  Measured on the 10× keep-best shape (diameter ≤ 5,
-    PLANS.md §cc-knobs-10x): cadence 2 is within noise of 4 and both beat
-    1 — syncs are ~15%% of wall there, so the knob matters more on a real
-    cluster's slower checkpoint path than on local[32].
+    ``propagations`` (min-label passes: ``ROUNDS_PER_SYNC`` per sync), and
+    ``jumps`` (pointer jumps: 1/sync in doubling mode, else 0) for
+    measurement harnesses — per-sync shuffle work is ``propagations + jumps``.
     """
     if method not in ("frontier", "doubling"):
         raise ValueError(f"unknown method: {method!r} (frontier/doubling)")
@@ -161,16 +154,13 @@ def connected_components(
             ),
         )
 
-    # rounds_per_sync propagation rounds per materialization+convergence
-    # check (default 2): each driver sync (checkpoint job + count) costs a
-    # scheduling barrier, and near-dup clusters have tiny diameters —
-    # composing rounds usually converges in ONE sync instead of several.
-    # Checking only the LAST composed round's change flag is sound:
-    # propagation is deterministic and monotone, so a round with zero
-    # changes means fixpoint regardless of what the rounds before it did
-    # (in doubling mode the jump's change flag OR-folds in, so a jump-only
+    # Near-dup clusters have tiny diameters, so composing rounds usually
+    # converges in ONE sync.  Checking only the LAST composed round's change
+    # flag is sound: propagation is deterministic and monotone, so a round
+    # with zero changes means fixpoint whatever the rounds before it did (in
+    # doubling mode the jump's change flag OR-folds in, so a jump-only
     # improvement also keeps the loop alive).
-    per = max(1, rounds_per_sync)
+    per = ROUNDS_PER_SYNC
     rounds = 0
     converged = False
     for _ in range((max_iters + per - 1) // per):
@@ -188,7 +178,7 @@ def connected_components(
             break
     if stats is not None:
         stats["rounds"] = rounds
-        # per-sync shuffle passes: rounds_per_sync min-label propagations,
+        # per-sync shuffle passes: ROUNDS_PER_SYNC min-label propagations,
         # plus one pointer-jump join in doubling mode (r10, ADVICE r9 — the
         # probe harness compares per-sync work across methods, so the jump
         # pass must count)
@@ -213,7 +203,6 @@ def dedup_clusters(
     checkpoint_mode: str = "local",
     method: str = "frontier",
     max_iters: int = 20,
-    rounds_per_sync: int = 2,
 ) -> DataFrame:
     """Cluster assignment + canonical pick over a corpus and its near-dup
     pairs: ``(id, cluster, is_canonical)``.
@@ -223,8 +212,7 @@ def dedup_clusters(
     across runs — the property retries and incremental reruns need).
     """
     comp = connected_components(
-        pairs, src_col, dst_col, max_iters, checkpoint_mode, method,
-        rounds_per_sync=rounds_per_sync,
+        pairs, src_col, dst_col, max_iters, checkpoint_mode, method
     )
     ids = df.select(F.col(id_col).alias("id"))
     joined = ids.join(comp, "id", "left").select(
@@ -243,7 +231,6 @@ def dedup_keep_best(
     checkpoint_mode: str = "local",
     method: str = "frontier",
     max_iters: int = 20,
-    rounds_per_sync: int = 2,
 ) -> DataFrame:
     """:func:`dedup_clusters` with a QUALITY-aware canonical pick:
     ``(id, cluster, is_canonical)`` where each cluster's survivor is its
@@ -258,8 +245,7 @@ def dedup_keep_best(
     keep stable cluster identities even as better members arrive.
     """
     comp = connected_components(
-        pairs, src_col, dst_col, max_iters, checkpoint_mode, method,
-        rounds_per_sync=rounds_per_sync,
+        pairs, src_col, dst_col, max_iters, checkpoint_mode, method
     )
     ids = df.select(F.col(id_col).alias("id"), F.col(quality_col).alias("__q"))
     clustered = ids.join(comp, "id", "left").select(
@@ -329,10 +315,9 @@ def pagerank(
     materialized edges through id-keyed shuffles instead of re-deriving
     the upstream edge pipeline (e.g. a lineitem⋈orders join) ``iters``
     times.  Values are identical (trajectory oracle holds; asserted in the
-    probe before timing).  Measured, not asserted —
-    tools/pagerank_materialize_probe.py → PLANS.md
-    §pagerank-edge-materialization: on the catalog query's lineitem⋈orders
-    derivation, 1.44× faster at sf0.1 (600k edge rows) and 1.30× at 10×
+    probe before timing).  Measured, not asserted — PLANS.md
+    §pagerank-edge-materialization (commit 29f8e24): on the catalog
+    query's lineitem⋈orders derivation, 1.44× faster at sf0.1 (600k edge rows) and 1.30× at 10×
     (6M rows) — unlike a ``.persist()`` of the tiny node/rank frames
     (measured 2.4× SLOWER, see below), one lineage cut on the BULKY
     derived table is a win at every tested scale, and the margin grows

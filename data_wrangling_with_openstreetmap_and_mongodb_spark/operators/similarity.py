@@ -194,8 +194,8 @@ def _assign_to_centroids(
 
 # Above this many centroids the HOF expression path loses: the broadcast
 # nested-loop join evaluates an INTERPRETED fold per (row, centroid) pair,
-# so assignment cost is n·k·dim outside codegen.  Measured (r13,
-# tools/semdedup_scale_probe.py, 20k×64d rows): k=80 assignment via the
+# so assignment cost is n·k·dim outside codegen.  Measured (r13, PLANS.md
+# §semdedup-cell-scaling, commit 64b4863, 20k×64d rows): k=80 assignment via the
 # expression path pushed SemDeDup to 24.7s where the k=8 run took 9.6s —
 # the "scaled cells" configuration was LOSING to the pinned one until
 # assignment went vectorized.  The packed path moves the same arithmetic
@@ -936,8 +936,7 @@ def auto_n_centroids(n_rows: int, target_cell: int = 250) -> int:
     cosine is O(cell²), so cells must NOT grow with the corpus.  Callers at
     scale should derive ``n_centroids`` from this (train k-means at that k)
     rather than inherit a fixed count from an oracle-pinned configuration.
-    Measured (r13, tools/semdedup_scale_probe.py → PLANS.md
-    §semdedup-cell-scaling): 10× corpus at the pinned 8 cells = 6.6× wall
+    Measured (r13, PLANS.md §semdedup-cell-scaling, commit 64b4863): 10× corpus at the pinned 8 cells = 6.6× wall
     (super-linear, cells grew 10×); at the scaled 80 cells = 0.95× wall
     (flat — constant cells, 10× more of them, parallel slack absorbs it)."""
     return max(8, int(n_rows) // max(1, int(target_cell)))
@@ -989,8 +988,8 @@ def semantic_dedup_pairs(
 
     Scale rule: ``n_centroids`` must grow ∝ corpus so cells stay
     constant-size (:func:`auto_n_centroids`); the catalog row pins 8 cells
-    only for oracle reproducibility.  Measured (r13,
-    tools/semdedup_scale_probe.py, 2k → 20k vectors): pinned 8 cells → 6.6×
+    only for oracle reproducibility.  Measured (r13, PLANS.md
+    §semdedup-cell-scaling, commit 64b4863, 2k → 20k vectors): pinned 8 cells → 6.6×
     wall at 10× data; scaled 80 cells → 0.95× (flat).  ``sub_blocks`` is the
     orthogonal knob for a single hot cell the centroid layout can't split.
     """

@@ -47,7 +47,6 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.sources.osm import (
     element_tag_counts,
     process_map,
     read_osm_elements,
-    read_osm_elements_split,
     shape_elements,
     tag_key_class_counts,
 )
@@ -78,7 +77,6 @@ __all__ = [
     "read_json",
     "read_orc",
     "read_osm_elements",
-    "read_osm_elements_split",
     "read_xls",
     "read_xlsx",
     "read_xml_rows",

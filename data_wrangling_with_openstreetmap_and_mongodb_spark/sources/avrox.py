@@ -11,7 +11,8 @@ module implements the PUBLIC Avro 1.11 container spec directly:
 
 **Scale design.**  Reading is split-parallel exactly like Hadoop's Avro
 input format: the driver reads only the tiny header; the file then splits
-into byte ranges, and each task seeks to its range and scans forward for
+into byte ranges, one task per range (the fan-out in ``ranges.py``, shared
+with the OSM reader), and each task seeks to its range and scans forward for
 the sync marker to find its first block boundary (a block is owned by the
 task whose range contains the block's *preceding* sync marker, so every
 block is decoded exactly once).  Decoding runs in ``mapInPandas`` —
@@ -46,6 +47,11 @@ from typing import Any, Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from data_wrangling_with_openstreetmap_and_mongodb_spark.sources.ranges import (
+    file_ranges,
+    map_ranges,
+)
 
 _MAGIC = b"Obj\x01"
 _EPOCH_DATE_ORD = 719163  # datetime.date(1970, 1, 1).toordinal()
@@ -459,7 +465,6 @@ def read_avro(
     if not files:
         raise ValueError(f"no .avro files at {path!r}")
     schema_json: str | None = None
-    splits = []
     for fp in files:
         with open(fp, "rb") as f:
             meta, _, _ = _parse_header(f)
@@ -471,57 +476,43 @@ def read_avro(
                 schema_json = sj
             elif json.loads(sj) != json.loads(schema_json):
                 raise ValueError(f"schema mismatch across files: {fp}")
-        size = os.path.getsize(fp)
-        for s in range(0, max(size, 1), split_bytes):
-            splits.append((fp, s, min(s + split_bytes, size)))
     spark_schema = _avro_to_spark(json.loads(schema_json), {}, union_mode=general_unions)
     if not isinstance(spark_schema, T.StructType):
         raise ValueError("top-level Avro schema must be a record")
-    sdf = spark.createDataFrame(splits, "path string, start long, end long")
-    if len(splits) > 1:
-        sdf = sdf.repartition(len(splits))
-    sj_bc = schema_json
+    cols = [f.name for f in spark_schema.fields]
 
-    def decode_splits(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decoder = _make_decoder(json.loads(sj_bc), {}, union_mode=general_unions)
-        cols = [f.name for f in spark_schema.fields]
-        for pdf in batches:
-            for fp, start, end in pdf.itertuples(index=False):
-                with open(fp, "rb") as f:
-                    meta, sync, header_len = _parse_header(f)
-                    codec = meta.get("avro.codec", b"null").decode()
-                    filesize = os.path.getsize(fp)
-                    # ownership: this split decodes blocks whose PRECEDING
-                    # sync marker starts in [start, end)
-                    if start == 0:
-                        q = header_len - 16
-                    else:
-                        q = _scan_sync(f, start, sync, filesize)
-                    while q is not None and q < end and q + 16 < filesize:
-                        pos = q + 16
-                        f.seek(pos)
-                        head = f.read(20)  # two varints: count, size
-                        mv = memoryview(head)
-                        count, p = _read_long(mv, 0)
-                        size, p = _read_long(mv, p)
-                        f.seek(pos + p)
-                        data = f.read(size)
-                        if codec == "deflate":
-                            data = zlib.decompress(data, -15)
-                        dmv = memoryview(data)
-                        rows = []
-                        dp = 0
-                        for _ in range(count):
-                            row, dp = decoder(dmv, dp)
-                            rows.append(row)
-                        if rows:
-                            yield pd.DataFrame.from_records(rows, columns=cols)
-                        q = pos + p + size  # next sync sits right here
-                        f.seek(q)
-                        if f.read(16) != sync:
-                            raise ValueError(f"corrupt Avro block in {fp} @ {q}")
+    def decode_range(fp: str, start: int, end: int, filesize: int) -> Iterator[pd.DataFrame]:
+        decoder = _make_decoder(json.loads(schema_json), {}, union_mode=general_unions)
+        with open(fp, "rb") as f:
+            meta, sync, header_len = _parse_header(f)
+            codec = meta.get("avro.codec", b"null").decode()
+            # ownership: this range decodes blocks whose PRECEDING
+            # sync marker starts in [start, end)
+            q = header_len - 16 if start == 0 else _scan_sync(f, start, sync, filesize)
+            while q is not None and q < end and q + 16 < filesize:
+                pos = q + 16
+                f.seek(pos)
+                mv = memoryview(f.read(20))  # two varints: count, size
+                count, p = _read_long(mv, 0)
+                size, p = _read_long(mv, p)
+                f.seek(pos + p)
+                data = f.read(size)
+                if codec == "deflate":
+                    data = zlib.decompress(data, -15)
+                dmv = memoryview(data)
+                rows = []
+                dp = 0
+                for _ in range(count):
+                    row, dp = decoder(dmv, dp)
+                    rows.append(row)
+                if rows:
+                    yield pd.DataFrame.from_records(rows, columns=cols)
+                q = pos + p + size  # next sync sits right here
+                f.seek(q)
+                if f.read(16) != sync:
+                    raise ValueError(f"corrupt Avro block in {fp} @ {q}")
 
-    return sdf.mapInPandas(decode_splits, schema=spark_schema)
+    return map_ranges(spark, file_ranges(files, split_bytes), decode_range, spark_schema)
 
 
 # ---------------------------------------------------------------- writing

@@ -4,20 +4,21 @@ The reference streams OSM XML with ``ET.iterparse`` and shapes each element
 into a JSON document (``/root/reference/data.py:96-151``, ``README.md:572-706``).
 Here the same pipeline is Spark-native and two-phase:
 
-1. **Parse** (:func:`read_osm_elements`): files load via the ``binaryFile``
-   source — one task per file, distributed by Spark's file listing — and each
-   task runs a constant-memory ``iterparse`` over its file, emitting one raw
-   row per element: ``(element_type, attrs map, tags map, node_refs array)``.
-   Python is unavoidable here (there is no JVM OSM parser in-box), so the
-   boundary is Arrow-batched ``mapInPandas``, never row-at-a-time.
+1. **Parse** (:func:`read_osm_elements`): each file is cut into
+   ``OSM_SPLIT_BYTES`` byte ranges, one task each (``ranges.py``, shared
+   with the Avro reader).  A task re-aligns its range to element boundaries
+   (``<node``/``<way``/``<relation`` open self-contained subtrees, the
+   contract osmosis/osmium split on) and runs a constant-memory
+   ``iterparse`` over the fragment, emitting one raw row per element:
+   ``(element_type, attrs map, tags map, node_refs array)``.  Python is
+   unavoidable here (there is no JVM OSM parser in-box), so the boundary is
+   Arrow-batched ``mapInPandas``, never row-at-a-time.
 
-   Scale note: parallelism = number of files.  OSM planet dumps ship as one
-   huge file; at the 100 TB design point you pre-split by element boundary
-   (``<node``/``<way``/``<relation`` are self-contained subtrees, so any
-   byte-range split that is re-aligned to the next element-open tag parses
-   independently — the same contract osmosis/osmium use).  The shaping phase
-   below is pure Column algebra and is indifferent to how parsing was
-   parallelized.
+   Scale note: parallelism = bytes / ``OSM_SPLIT_BYTES`` (64 MiB), so a
+   planet dump shipped as one huge file still spreads over many tasks,
+   while the reference's full ~51 MB extract is one task and a
+   single-partition plan whose audits need no shuffle.  The shaping phase
+   below is pure Column algebra, indifferent to how parsing was split.
 
 2. **Shape** (:func:`shape_elements`): the reference's ``shape_element`` rules
    (``data.py:96-135``) as native expressions — no Python per row:
@@ -39,9 +40,13 @@ Here the same pipeline is Spark-native and two-phase:
 
 from __future__ import annotations
 
+import glob
+import os
+import re
 from collections.abc import Iterator
 from typing import Any
 
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,6 +54,10 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.cleaning impo
     PROBLEMCHARS_RE,
     classify_key,
     clean_street_name,
+)
+from data_wrangling_with_openstreetmap_and_mongodb_spark.sources.ranges import (
+    file_ranges,
+    map_ranges,
 )
 
 # data.py:93
@@ -84,109 +93,72 @@ def _iterparse_rows(content: bytes) -> Iterator[dict[str, Any]]:
             elem.clear()
 
 
-def read_osm_elements(spark: SparkSession, path: str) -> DataFrame:
-    """Parse OSM XML file(s) at ``path`` (glob ok) into raw element rows."""
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = list(_iterparse_rows(bytes(content)))
-                if rows:
-                    yield pd.DataFrame(rows)
-
-    return files.mapInPandas(parse, schema=RAW_ELEMENT_SCHEMA)
-
-
 # Top-level OSM element-open tags.  `<nd` (way child) shares a prefix with
 # `<node`, so the match requires a following delimiter; XML escapes `<` in
 # text/attributes, so a raw byte match cannot false-positive inside content.
-_ELEMENT_OPEN_RE = rb"<(node|way|relation)[ \t\r\n/>]"
+_ELEMENT_OPEN = re.compile(rb"<(node|way|relation)[ \t\r\n/>]")
+
+# Bytes per parse task.  The reference's full extract (~51 MB) stays one
+# range; larger files fan out.
+OSM_SPLIT_BYTES = 64 << 20
 
 
-def _read_fragment(path: str, start: int, end: int, size: int) -> bytes:
+def _read_fragment(path: str, start: int, end: int) -> bytes:
     """Read the byte-range [start, end) of an OSM file, re-aligned to element
     boundaries: the fragment contains exactly the top-level elements whose
     opening ``<`` lies in [start, end).  An element straddling ``end`` is
     completed by reading past the range; one straddling ``start`` is skipped
-    (the previous split owns it).  Constant memory: range + one element."""
-    import re
-
+    (the previous range owns it).  Constant memory: range + one element."""
     with open(path, "rb") as f:
         f.seek(start)
         buf = f.read(end - start)
-        # Extend until the first element-open at/after `end` (the crop point);
-        # everything before it — including an element that STARTED before
-        # `end` — belongs to this split.
-        crop = None
-        search_from = len(buf)
-        while crop is None:
-            m = re.search(_ELEMENT_OPEN_RE, buf[search_from:])
-            if m:
-                crop = search_from + m.start()
-                break
-            chunk = f.read(1 << 20)
+        # Extend to the first element-open at/after `end` (the crop point):
+        # everything before it, including an element that STARTED before
+        # `end`, belongs to this range.  Each new chunk re-scans a small
+        # overlap so a tag straddling the chunk edge still matches.
+        scan_from = len(buf)
+        while (crop := _ELEMENT_OPEN.search(buf, scan_from)) is None:
+            chunk = f.read(1 << 16)
             if not chunk:
-                crop = len(buf)
                 break
-            # re-scan a small overlap so a tag straddling the chunk edge
-            # still matches ("<nod" + "e id=...")
-            search_from = max(len(buf) - 16, end - start)
+            scan_from = max(len(buf) - 16, end - start)
             buf += chunk
-    frag = buf[:crop]
-    # Crop the head to the first element-open in-range (skips the xml
-    # declaration + <osm> header on split 0, and any partial element owned
-    # by the previous split otherwise).
-    m = re.search(_ELEMENT_OPEN_RE, frag)
-    if not m:
+    stop = crop.start() if crop else len(buf)
+    # The head starts at the first element-open in range: this skips the XML
+    # declaration and <osm> header in range 0, and otherwise the tail of an
+    # element the previous range owns.
+    head = _ELEMENT_OPEN.search(buf, 0, stop)
+    if head is None:
         return b""
-    frag = frag[m.start() :]
-    if end >= size:
-        tail = frag.rfind(b"</osm>")
-        if tail != -1:
-            frag = frag[:tail]
+    frag = buf[head.start() : stop]
+    # A fragment that ran to EOF carries the file's trailer, whether or not
+    # its range was the last one (it owns the last element either way).
+    if crop is None and (tail := frag.rfind(b"</osm>")) != -1:
+        frag = frag[:tail]
     return frag
 
 
-def read_osm_elements_split(
-    spark: SparkSession, path: str, split_bytes: int = 64 << 20
-) -> DataFrame:
-    """Byte-range-parallel parse of ONE large OSM file (the planet-dump
-    shape: a single 100 GB+ XML file that ``binaryFile`` would hand to a
-    single task).
+def _parse_range(path: str, start: int, end: int, size: int) -> Iterator[pd.DataFrame]:
+    """The raw element rows of one byte range, as one pandas frame."""
+    frag = _read_fragment(path, start, end)
+    rows = list(_iterparse_rows(b"<osm>" + frag + b"</osm>")) if frag else []
+    if rows:
+        yield pd.DataFrame(rows)
 
-    The file splits into ⌈size/split_bytes⌉ ranges; each task range-reads its
-    slice directly (shared filesystem / object-store range GET — the same
-    access pattern as a parquet split), re-aligns to element-open boundaries
-    (:func:`_read_fragment` — the contract osmosis/osmium use), and streams
-    the fragment through the same ``iterparse`` as the whole-file path.
-    Output is row-identical to :func:`read_osm_elements` (asserted in
-    tests/test_sources.py).
-    """
-    import math
-    import os
 
-    import pandas as pd
+def read_osm_elements(spark: SparkSession, path: str) -> DataFrame:
+    """Parse the OSM XML file at ``path``, or every file matching the glob,
+    in sorted order, into raw element rows.  Raises if nothing matches.
 
-    size = os.path.getsize(path)
-    nsplits = max(1, math.ceil(size / split_bytes))
-    ranges = spark.range(nsplits).repartition(nsplits)
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for i in pdf["id"]:
-                start = int(i) * split_bytes
-                end = min(start + split_bytes, size)
-                frag = _read_fragment(path, start, end, size)
-                if not frag:
-                    continue
-                rows = list(_iterparse_rows(b"<osm>" + frag + b"</osm>"))
-                if rows:
-                    yield pd.DataFrame(rows)
-
-    return ranges.mapInPandas(parse, schema=RAW_ELEMENT_SCHEMA)
+    One task per ``OSM_SPLIT_BYTES`` range of each file (module docstring).
+    Fragments drop the file's XML declaration, so the input must be UTF-8,
+    the only encoding the OSM format uses."""
+    files = [f for f in sorted(glob.glob(path)) if os.path.isfile(f)]
+    if not files:
+        raise FileNotFoundError(f"no OSM file matches {path!r}")
+    return map_ranges(
+        spark, file_ranges(files, OSM_SPLIT_BYTES), _parse_range, RAW_ELEMENT_SCHEMA
+    )
 
 
 def element_tag_counts(raw: DataFrame) -> DataFrame:

@@ -42,7 +42,7 @@ def test_plain_session_gets_broadcast_threshold_and_df_broadcast(spark, sf_dir):
     assert df_broadcast.search(plan), plan[:3000]
 
 
-def test_engine_reads_exactly_two_env_knobs():
+def test_engine_reads_exactly_one_env_knob():
     """Every SPARK_GRAFT_* string literal in the package source.  Adding an
     engine knob means editing this set."""
     root = pathlib.Path(pkg.__file__).parent
@@ -55,10 +55,7 @@ def test_engine_reads_exactly_two_env_knobs():
                 and re.fullmatch(r"SPARK_GRAFT_[A-Z0-9_]+", node.value)
             ):
                 found.add(node.value)
-    assert found == {
-        "SPARK_GRAFT_CPUS",
-        "SPARK_GRAFT_SPREAD_MIN_BYTES",
-    }
+    assert found == {"SPARK_GRAFT_CPUS"}
 
 
 class _LockedConf:

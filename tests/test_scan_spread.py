@@ -15,17 +15,15 @@ import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
+from data_wrangling_with_openstreetmap_and_mongodb_spark import catalog
 from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import load_table
-
-DEFAULTS = {"SPARK_GRAFT_SPREAD_MIN_BYTES": str(256 * 1024)}
 
 
 @pytest.fixture()
 def prod_gate(monkeypatch):
     """Run with the production byte floor (the suite-wide conftest forces
     the spread on; gating behaviour needs the shipped default)."""
-    for k, v in DEFAULTS.items():
-        monkeypatch.setenv(k, v)
+    monkeypatch.setattr(catalog, "SPREAD_MIN_BYTES", 256 * 1024)
 
 
 def _write(tmp_path, name: str, n_rows: int, row_group_size: int | None = None):
@@ -95,7 +93,7 @@ def test_pushdown_and_pruning_survive_the_spread(spark, tmp_path, prod_gate):
 
 def test_env_floor_override(spark, tmp_path, monkeypatch):
     _write(tmp_path, "tiny", 50)
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MIN_BYTES", "1")
+    monkeypatch.setattr(catalog, "SPREAD_MIN_BYTES", 1)
     df = load_table(spark, str(tmp_path), "tiny", spread=True)
     assert _scan_partitions(df) == spark.sparkContext.defaultParallelism
 

@@ -26,7 +26,6 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.sources import (
     read_csv_with_prologue,
     read_json,
     read_osm_elements,
-    read_osm_elements_split,
     read_xml_rows,
     scrape_options,
     scrape_tables,
@@ -37,6 +36,8 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.sources import (
     write_jsonl,
     write_pipe_csv,
 )
+from data_wrangling_with_openstreetmap_and_mongodb_spark.sources import osm
+from data_wrangling_with_openstreetmap_and_mongodb_spark.sources.ranges import file_ranges
 
 OSM_XML = """<?xml version="1.0" encoding="UTF-8"?>
 <osm version="0.6" generator="test">
@@ -86,6 +87,27 @@ OSM_XML = """<?xml version="1.0" encoding="UTF-8"?>
 """
 
 
+def _big_osm(tmp_path, copies: int) -> pathlib.Path:
+    """One OSM file holding ``copies`` repeats of OSM_XML's elements."""
+    inner = OSM_XML.split(">", 2)[2].rsplit("</osm>", 1)[0]
+    p = tmp_path / "big.osm"
+    p.write_text(
+        '<?xml version="1.0" encoding="UTF-8"?>\n<osm version="0.6">'
+        + inner * copies
+        + "</osm>\n"
+    )
+    return p
+
+
+def _element_key(r):
+    return (
+        r["element_type"],
+        tuple(sorted(r["attrs"].items())),
+        tuple(sorted(r["tags"].items())),
+        tuple(r["node_refs"] if r["node_refs"] is not None else []),
+    )
+
+
 @pytest.fixture(scope="module")
 def osm_raw(spark, tmp_path_factory):
     p = tmp_path_factory.mktemp("osm") / "example.osm"
@@ -98,40 +120,64 @@ def osm_shaped(osm_raw):
     return shape_elements(osm_raw).cache()
 
 
+def test_ranges_reassemble_whole_file_parse(tmp_path):
+    """Spark-free: for any range size, the per-range rows concatenated in
+    range order are the whole-file parse, in order.  Small sizes cut
+    mid-tag and mid-element, and leave the last element to a range that
+    is not the last one but reads on to EOF and so meets the trailer."""
+    p = _big_osm(tmp_path, 12)
+    size = p.stat().st_size
+    whole = [_element_key(r) for r in osm._iterparse_rows(p.read_bytes())]
+    assert len(whole) == 7 * 12
+    for split_bytes in (17, 64, 100, 200, 257, 4096, size // 2, size, size + 1):
+        got = [
+            _element_key(r)
+            for rng in file_ranges([str(p)], split_bytes)
+            for pdf in osm._parse_range(*rng)
+            for r in pdf.to_dict("records")
+        ]
+        assert got == whole, split_bytes
+
+
 class TestOsmSource:
-    @pytest.mark.slow  # 52 s big-file sweep; the per-split parse tests below
-    # cover the same alignment logic at default budget
-    def test_byte_split_parse_identical(self, spark, tmp_path):
-        # One big file parsed whole (binaryFile, 1 task) vs byte-range-split
-        # (element-aligned fragments) must produce identical element rows —
-        # including split sizes that land mid-tag and mid-element.
-        inner = OSM_XML.split(">", 2)[2].rsplit("</osm>", 1)[0]
-        big = (
-            '<?xml version="1.0" encoding="UTF-8"?>\n<osm version="0.6">'
-            + inner * 120
-            + "</osm>"
-        )
-        p = tmp_path / "big.osm"
-        p.write_text(big)
-
-        def key(r):
-            return (
-                r["element_type"],
-                tuple(sorted(r["attrs"].items())),
-                tuple(sorted(r["tags"].items())),
-                tuple(r["node_refs"] or []),
-            )
-
-        whole = sorted(key(r) for r in read_osm_elements(spark, str(p)).collect())
+    @pytest.mark.slow  # ~800 one-range tasks at the 257-byte size
+    def test_byte_split_parse_identical(self, spark, tmp_path, monkeypatch):
+        # One big file read as one range vs many element-aligned ranges must
+        # produce identical element rows, including range sizes that land
+        # mid-tag and mid-element.
+        p = _big_osm(tmp_path, 120)
+        whole = sorted(_element_key(r) for r in read_osm_elements(spark, str(p)).collect())
         assert len(whole) == 7 * 120
         for split_bytes in (257, 4096):
+            monkeypatch.setattr(osm, "OSM_SPLIT_BYTES", split_bytes)
             split = sorted(
-                key(r)
-                for r in read_osm_elements_split(
-                    spark, str(p), split_bytes=split_bytes
-                ).collect()
+                _element_key(r) for r in read_osm_elements(spark, str(p)).collect()
             )
             assert split == whole
+
+    def test_glob_reads_every_matching_file(self, spark, tmp_path):
+        (tmp_path / "a.osm").write_text(OSM_XML)
+        (tmp_path / "b.osm").write_text(OSM_XML.replace('id="', 'id="9'))
+        rows = read_osm_elements(spark, str(tmp_path / "*.osm")).collect()
+        ids = sorted(r["attrs"]["id"] for r in rows)
+        one = ["1001", "1002", "1003", "1004", "2001", "2002", "3001"]
+        assert ids == sorted(one + ["9" + i for i in one])
+
+    def test_no_matching_file_raises(self, spark, tmp_path):
+        with pytest.raises(FileNotFoundError, match="no OSM file matches"):
+            read_osm_elements(spark, str(tmp_path / "*.osm"))
+
+    def test_one_range_audit_needs_no_exchange(self, spark, tmp_path):
+        # A file below OSM_SPLIT_BYTES is one range, one partition: the
+        # audit's aggregate runs in the parse stage, with no shuffle.
+        p = tmp_path / "example.osm"
+        p.write_text(OSM_XML)
+        counts = element_tag_counts(read_osm_elements(spark, str(p)))
+        plan = counts._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert {r["element_type"]: r["cnt"] for r in counts.collect()} == {
+            "node": 4, "way": 2, "relation": 1,
+        }
 
     def test_element_tag_counts(self, osm_raw):
         # mapparser.py:29-36 golden-dict style
