@@ -2,8 +2,12 @@
 
 A training-data engine at the 100 TB point carries image/audio/video as
 ``binary`` columns with a typed metadata struct, decoding only inside
-Arrow-batched Python (``mapInPandas``) so bytes never round-trip through JVM
-row objects one at a time.
+Arrow-batched Python so bytes never round-trip through JVM row objects one
+at a time.  Every per-document stage here — payload synthesis
+(:func:`synthesize_payloads` over a per-format plan), decode, feature
+extraction, resize/resample, frame extraction — is a per-row function
+handed to :func:`~data_wrangling_with_openstreetmap_and_mongodb_spark.rowmap.map_rows`
+(Project → MapInPandas, map-only).
 
 Two decode tiers:
 
@@ -42,11 +46,13 @@ input, same plumbing as a real corpus.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable
 
 import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from data_wrangling_with_openstreetmap_and_mongodb_spark.rowmap import map_rows
 
 PAYLOAD_SCHEMA = (
     "doc_id long, payload binary, "
@@ -1107,71 +1113,21 @@ def sample_frames(with_payload: DataFrame, frame_bytes: int = FRAME_BYTES) -> Da
     """Frame sampling over binary payloads: one output row per fixed-size
     frame — the video/audio 'decode → per-frame feature' shape, with the
     codec stubbed to byte-slicing + fingerprint.  Demonstrates the 1→N
-    Arrow-batched mapInPandas contract a real frame extractor uses."""
+    :func:`map_rows` contract a real frame extractor uses."""
     import hashlib
 
-    import pandas as pd
+    def frames(doc_id, payload):
+        b = bytes(payload)
+        for i in range(0, max(len(b), 1), frame_bytes):
+            chunk = b[i : i + frame_bytes]
+            yield {
+                "doc_id": doc_id,
+                "frame_id": i // frame_bytes,
+                "frame_bytes": len(chunk),
+                "frame_md5": hashlib.md5(chunk).hexdigest(),
+            }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                for i in range(0, max(len(b), 1), frame_bytes):
-                    chunk = b[i : i + frame_bytes]
-                    out.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_id": i // frame_bytes,
-                            "frame_bytes": len(chunk),
-                            "frame_md5": hashlib.md5(chunk).hexdigest(),
-                        }
-                    )
-            if out:
-                yield pd.DataFrame(out)
-
-    return with_payload.mapInPandas(run, schema=FRAME_INDEX_SCHEMA)
-
-
-RESIZED_SCHEMA = (
-    "doc_id long, payload binary, "
-    "meta struct<format:string, n_bytes:long>, resized_md5 string"
-)
-
-
-def resize_payloads(with_payload: DataFrame, target_bytes: int = 128) -> DataFrame:
-    """Resize/transcode stub over binary payloads: emits a new payload of
-    exactly ``target_bytes`` (truncate or zero-pad — the deterministic fake
-    standing in for an image resize/audio resample) plus its fingerprint.
-
-    The Spark-side contract is the real thing a codec-backed resize uses:
-    binary in → binary out through Arrow batches, metadata struct updated to
-    the post-transform size, 1→1 row mapping.  Swap ``_fake_resize`` for a
-    PIL/ffmpeg call and nothing else changes."""
-    import hashlib
-
-    import pandas as pd
-
-    def _fake_resize(b: bytes) -> bytes:
-        return b[:target_bytes].ljust(target_bytes, b"\x00")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload, meta in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
-                resized = _fake_resize(bytes(payload))
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": resized,
-                        "meta": {"format": meta["format"], "n_bytes": len(resized)},
-                        "resized_md5": hashlib.md5(resized).hexdigest(),
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    return with_payload.mapInPandas(run, schema=RESIZED_SCHEMA)
+    return map_rows(with_payload, ["doc_id", "payload"], frames, FRAME_INDEX_SCHEMA)
 
 
 def extract_features(with_payload: DataFrame) -> DataFrame:
@@ -1180,19 +1136,13 @@ def extract_features(with_payload: DataFrame) -> DataFrame:
     The decode loop sees pandas batches of raw bytes — exactly the shape a
     real image/audio featurizer needs (decode → ndarray → model) — and emits
     typed columns."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload, meta in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
-                d = decode_payload(bytes(payload), meta["format"])
-                d["doc_id"] = doc_id
-                out.append(d)
-            if out:
-                yield pd.DataFrame(out)
+    def features(doc_id, payload, meta):
+        d = decode_payload(bytes(payload), meta["format"])
+        d["doc_id"] = doc_id
+        return [d]
 
-    return with_payload.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_rows(with_payload, ["doc_id", "payload", "meta"], features, FEATURE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1210,7 +1160,7 @@ MEDIA_FEATURE_SCHEMA = (
 )
 
 
-def _media_plan(doc_id: int) -> dict:
+def _media_plan(doc_id: int) -> tuple[str, bytes]:
     """Closed-form media spec per doc: even ids carry a BMP whose pixel i
     (row-major, top-down) is ``R=(d+i)%256, G=(d+2i)%256, B=(d+3i)%256``
     over a ``(5+d%4) × (3+d%3)`` canvas (widths 5-8 exercise every row-pad
@@ -1224,72 +1174,45 @@ def _media_plan(doc_id: int) -> dict:
         px = np.stack(
             [(d + i) % 256, (d + 2 * i) % 256, (d + 3 * i) % 256], axis=-1
         ).astype(np.uint8).reshape(h, w, 3)
-        return {"fmt": "image/bmp", "payload": encode_bmp(px)}
+        return "image/bmp", encode_bmp(px)
     ch, rate, frames = 1 + d % 2, 8000 + (d % 3) * 4000, 30 + d % 7
     i = np.arange(frames * ch, dtype=np.int64)
     samples = ((d * 11 + i * 17) % 2048 - 1024).astype(np.int16)
-    return {"fmt": "audio/wav", "payload": encode_wav(rate, ch, samples)}
+    return "audio/wav", encode_wav(rate, ch, samples)
 
 
-def synthesize_media_payloads(docs: DataFrame) -> DataFrame:
-    """Attach a REAL encoded media payload (BMP or WAV per :func:`_media_plan`)
-    to each document — Arrow-batched, map-only, partition-preserving."""
-    import pandas as pd
+def synthesize_payloads(
+    docs: DataFrame, plan: Callable[[int], tuple[str, bytes]]
+) -> DataFrame:
+    """Attach a REAL encoded payload to each document: ``plan(doc_id)``
+    returns its ``(format, payload)`` — :func:`_media_plan`,
+    :func:`_g711_plan`, :func:`_png_plan`, :func:`_png_variant_plan`,
+    :func:`_palette_png_plan`, :func:`_gif_plan`, :func:`_jpeg_plan`,
+    :func:`_jpeg12_plan`.  Map-only, partition-preserving."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                m = _media_plan(doc_id)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": m["payload"],
-                        "meta": {"format": m["fmt"], "n_bytes": len(m["payload"])},
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
+    def payload(doc_id):
+        fmt, b = plan(doc_id)
+        return [
+            {"doc_id": doc_id, "payload": b, "meta": {"format": fmt, "n_bytes": len(b)}}
+        ]
 
-    return docs.select("doc_id").mapInPandas(run, schema=PAYLOAD_SCHEMA)
+    return map_rows(docs, ["doc_id"], payload, PAYLOAD_SCHEMA)
 
 
-def _g711_plan(doc_id: int) -> bytes:
+def _g711_plan(doc_id: int) -> tuple[str, bytes]:
     """Closed-form G.711 WAV per doc (the `multimodal_wav_g711` formula):
     companded byte ``b_i = (7d + 13i) % 256``, even docs μ-law / odd A-law,
     ``1 + d%2`` channels, ``(30 + d%7) * ch`` interleaved samples, 8 kHz,
-    wrapped in a real fmt-7/6 RIFF container."""
+    wrapped in a real fmt-7/6 RIFF container.  Format ``audio/wav``, so
+    the payload routes through :func:`decode_wav` in both the batch
+    extractor and the streaming media-decode runner."""
     d = int(doc_id)
     ch = 1 + d % 2
     n = (30 + d % 7) * ch
     i = np.arange(n, dtype=np.int64)
     raw = ((d * 7 + i * 13) % 256).astype(np.uint8).tobytes()
-    return encode_wav_g711(8000, ch, raw, "mulaw" if d % 2 == 0 else "alaw")
-
-
-def synthesize_g711_payloads(docs: DataFrame) -> DataFrame:
-    """Attach a REAL G.711 WAV payload (per :func:`_g711_plan`) to each
-    document — Arrow-batched, map-only, partition-preserving.  Format tag
-    ``audio/wav`` so the payload routes through :func:`decode_wav` in both
-    the batch extractor and the streaming media-decode runner."""
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                payload = _g711_plan(doc_id)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": payload,
-                        "meta": {"format": "audio/wav", "n_bytes": len(payload)},
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    return docs.select("doc_id").mapInPandas(run, schema=PAYLOAD_SCHEMA)
+    law = "mulaw" if d % 2 == 0 else "alaw"
+    return "audio/wav", encode_wav_g711(8000, ch, raw, law)
 
 
 def resize_bmp(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
@@ -1305,31 +1228,24 @@ def resize_bmp(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
 def resize_bmp_payloads(
     with_payload: DataFrame, out_w: int = 4, out_h: int = 3
 ) -> DataFrame:
-    """REAL image resize over BMP payloads (supersedes the byte-level
-    ``resize_payloads`` fake for images): decode → nearest-neighbor sample
-    → re-encode, all inside Arrow batches.  Rows whose format is not
+    """REAL image resize over BMP payloads: decode → nearest-neighbor
+    sample → re-encode, all inside Arrow batches.  Rows whose format is not
     ``image/bmp`` are dropped (a real pipeline branches by modality before
     a resize stage).  1→1 map-only — no shuffle, partitioning inherited."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload, meta in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
-                if meta["format"] != "image/bmp":
-                    continue
-                resized = encode_bmp(resize_bmp(decode_bmp(bytes(payload)), out_w, out_h))
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": resized,
-                        "meta": {"format": "image/bmp", "n_bytes": len(resized)},
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
+    def resize(doc_id, payload, meta):
+        if meta["format"] != "image/bmp":
+            return
+        resized = encode_bmp(resize_bmp(decode_bmp(bytes(payload)), out_w, out_h))
+        yield {
+            "doc_id": doc_id,
+            "payload": resized,
+            "meta": {"format": "image/bmp", "n_bytes": len(resized)},
+        }
 
-    return with_payload.mapInPandas(run, schema=PAYLOAD_SCHEMA)
+    return map_rows(
+        with_payload, ["doc_id", "payload", "meta"], resize, PAYLOAD_SCHEMA
+    )
 
 
 def resample_wav(
@@ -1349,29 +1265,23 @@ def resample_wav_payloads(with_payload: DataFrame, out_rate: int = 8000) -> Data
     """REAL audio resample over WAV payloads: decode → NN frame map →
     re-encode at ``out_rate`` (``out_frames = ⌊frames·out_rate/in_rate⌋``).
     Non-WAV rows drop (modality branch).  1→1 map-only, no shuffle."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload, meta in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
-                if meta["format"] != "audio/wav":
-                    continue
-                rate, ch, s = decode_wav(bytes(payload))
-                frames = len(s) // ch
-                out_frames = (frames * out_rate) // rate
-                res = encode_wav(out_rate, ch, resample_wav(s, ch, frames, out_frames))
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": res,
-                        "meta": {"format": "audio/wav", "n_bytes": len(res)},
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
+    def resample(doc_id, payload, meta):
+        if meta["format"] != "audio/wav":
+            return
+        rate, ch, s = decode_wav(bytes(payload))
+        frames = len(s) // ch
+        out_frames = (frames * out_rate) // rate
+        res = encode_wav(out_rate, ch, resample_wav(s, ch, frames, out_frames))
+        yield {
+            "doc_id": doc_id,
+            "payload": res,
+            "meta": {"format": "audio/wav", "n_bytes": len(res)},
+        }
 
-    return with_payload.mapInPandas(run, schema=PAYLOAD_SCHEMA)
+    return map_rows(
+        with_payload, ["doc_id", "payload", "meta"], resample, PAYLOAD_SCHEMA
+    )
 
 
 def extract_media_features(with_payload: DataFrame) -> DataFrame:
@@ -1381,46 +1291,42 @@ def extract_media_features(with_payload: DataFrame) -> DataFrame:
     exactly-represented integers, so any engine recomputing the same
     formula lands on the bit-identical double (no summation-order drift).
     Luma mixes the channel means: ``0.299·r̄ + 0.587·ḡ + 0.114·b̄``."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload, meta in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
-                d = decode_payload(bytes(payload), meta["format"])
-                row = {
-                    "doc_id": doc_id, "fmt": meta["format"],
-                    "width": None, "height": None, "n_channels": None,
-                    "sample_rate": None, "n_samples": None,
-                    "mean_luma": None, "first_luma": None, "mean_r": None,
-                    "rms": None, "peak": None,
-                }
-                if d["kind"] == "image":
-                    px = d["pixels"].astype(np.int64)
-                    h, w, _ = px.shape
-                    n = w * h
-                    sr, sg, sb = (int(px[:, :, c].sum()) for c in range(3))
-                    r0, g0, b0 = (int(v) for v in px[0, 0])
-                    row.update(
-                        width=w, height=h, n_channels=3, n_samples=n,
-                        mean_luma=0.299 * (sr / n) + 0.587 * (sg / n) + 0.114 * (sb / n),
-                        first_luma=0.299 * r0 + 0.587 * g0 + 0.114 * b0,
-                        mean_r=sr / n,
-                    )
-                else:
-                    s = d["samples"].astype(np.int64)
-                    ns = len(s)
-                    row.update(
-                        n_channels=d["n_channels"], sample_rate=d["sample_rate"],
-                        n_samples=ns,
-                        rms=float(np.sqrt(int((s * s).sum()) / ns)),
-                        peak=int(np.abs(s).max()),
-                    )
-                out.append(row)
-            if out:
-                yield pd.DataFrame(out)
+    def features(doc_id, payload, meta):
+        d = decode_payload(bytes(payload), meta["format"])
+        row = {
+            "doc_id": doc_id, "fmt": meta["format"],
+            "width": None, "height": None, "n_channels": None,
+            "sample_rate": None, "n_samples": None,
+            "mean_luma": None, "first_luma": None, "mean_r": None,
+            "rms": None, "peak": None,
+        }
+        if d["kind"] == "image":
+            px = d["pixels"].astype(np.int64)
+            h, w, _ = px.shape
+            n = w * h
+            sr, sg, sb = (int(px[:, :, c].sum()) for c in range(3))
+            r0, g0, b0 = (int(v) for v in px[0, 0])
+            row.update(
+                width=w, height=h, n_channels=3, n_samples=n,
+                mean_luma=0.299 * (sr / n) + 0.587 * (sg / n) + 0.114 * (sb / n),
+                first_luma=0.299 * r0 + 0.587 * g0 + 0.114 * b0,
+                mean_r=sr / n,
+            )
+        else:
+            s = d["samples"].astype(np.int64)
+            ns = len(s)
+            row.update(
+                n_channels=d["n_channels"], sample_rate=d["sample_rate"],
+                n_samples=ns,
+                rms=float(np.sqrt(int((s * s).sum()) / ns)),
+                peak=int(np.abs(s).max()),
+            )
+        yield row
 
-    return with_payload.mapInPandas(run, schema=MEDIA_FEATURE_SCHEMA)
+    return map_rows(
+        with_payload, ["doc_id", "payload", "meta"], features, MEDIA_FEATURE_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1439,7 +1345,7 @@ PNG_FEATURE_SCHEMA = (
 _PNG_KIND = {0: "grey", 1: "rgb", 2: "rgba", 3: "grey_alpha"}
 
 
-def _png_plan(doc_id: int) -> bytes:
+def _png_plan(doc_id: int) -> tuple[str, bytes]:
     """Closed-form PNG spec per doc: color type cycles grey/RGB/RGBA with
     ``doc_id % 3`` over a ``(5+d%4) × (3+d%3)`` canvas (widths 5-8, heights
     3-5).  Pixel ``i`` (row-major, top-down): grey ``v=(d+7i)%256``; RGB
@@ -1458,33 +1364,10 @@ def _png_plan(doc_id: int) -> bytes:
         if kind == 2:
             planes.append((d + 5 * i) % 256)
         px = np.stack(planes, axis=-1).astype(np.uint8).reshape(h, w, len(planes))
-    return encode_png(px, row_filters=[(d + y) % 5 for y in range(h)])
+    return "image/png", encode_png(px, row_filters=[(d + y) % 5 for y in range(h)])
 
 
-def synthesize_png_payloads(docs: DataFrame) -> DataFrame:
-    """Attach a REAL encoded PNG payload (per :func:`_png_plan`) to each
-    document — Arrow-batched, map-only, partition-preserving."""
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                payload = _png_plan(doc_id)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": payload,
-                        "meta": {"format": "image/png", "n_bytes": len(payload)},
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    return docs.select("doc_id").mapInPandas(run, schema=PAYLOAD_SCHEMA)
-
-
-def _png_variant_plan(doc_id: int) -> bytes:
+def _png_variant_plan(doc_id: int) -> tuple[str, bytes]:
     """Closed-form spec for the r13 decode paths born row-less (VERDICT r13
     ask #5): variant cycles with ``doc_id % 4`` —
 
@@ -1509,47 +1392,23 @@ def _png_variant_plan(doc_id: int) -> bytes:
             [(d + 11 * i) % 256, (d + 23 * i) % 256, (d + 31 * i) % 256],
             axis=-1,
         ).astype(np.uint8).reshape(h, w, 3)
-        return encode_png(px, interlace=True)
+        return "image/png", encode_png(px, interlace=True)
     if v == 1:
         w, h = 6 + d % 4, 5 + d % 3
         i = np.arange(w * h, dtype=np.int64)
         px = ((257 * d + 101 * i) % 65536).astype(np.uint16).reshape(h, w)
-        return encode_png(px, depth=16, row_filters=[(d + y) % 5 for y in range(h)])
+        return "image/png", encode_png(px, depth=16, row_filters=[(d + y) % 5 for y in range(h)])
     if v == 2:
         w, h = 7 + d % 5, 6 + d % 3
         i = np.arange(w * h, dtype=np.int64)
         px = ((d + i) % 16).astype(np.uint8).reshape(h, w)
-        return encode_png(px, depth=4, row_filters=[(d + y) % 5 for y in range(h)])
+        return "image/png", encode_png(px, depth=4, row_filters=[(d + y) % 5 for y in range(h)])
     w, h = 5 + d % 4, 4 + d % 3
     i = np.arange(w * h, dtype=np.int64)
     px = np.stack([(d + 7 * i) % 256, (d + 13 * i) % 256], axis=-1).astype(
         np.uint8
     ).reshape(h, w, 2)
-    return encode_png(px, row_filters=[(d + y) % 5 for y in range(h)])
-
-
-def synthesize_png_variant_payloads(docs: DataFrame) -> DataFrame:
-    """Attach a REAL depth/interlace-variant PNG payload (per
-    :func:`_png_variant_plan`) to each document — Arrow-batched, map-only,
-    partition-preserving."""
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                payload = _png_variant_plan(doc_id)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": payload,
-                        "meta": {"format": "image/png", "n_bytes": len(payload)},
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    return docs.select("doc_id").mapInPandas(run, schema=PAYLOAD_SCHEMA)
+    return "image/png", encode_png(px, row_filters=[(d + y) % 5 for y in range(h)])
 
 
 def extract_png_features(with_payload: DataFrame) -> DataFrame:
@@ -1558,48 +1417,44 @@ def extract_png_features(with_payload: DataFrame) -> DataFrame:
     contract as :func:`extract_media_features`.  ``mean_luma`` is the
     0.299/0.587/0.114 mix for RGB(A) and the grey mean for greyscale (a grey
     pixel's luma is itself); ``mean_alpha`` is NULL unless RGBA."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload, meta in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
-                d = decode_payload(bytes(payload), meta["format"])
-                px = d["pixels"].astype(np.int64)
-                ch = 1 if px.ndim == 2 else px.shape[-1]
-                h, w = d["height"], d["width"]
-                n = w * h
-                row = {
-                    "doc_id": doc_id,
-                    "png_type": _PNG_KIND[{1: 0, 2: 3, 3: 1, 4: 2}[ch]],
-                    "width": w, "height": h, "n_channels": ch, "n_samples": n,
-                    "mean_c0": None, "mean_luma": None, "mean_alpha": None,
-                }
-                if ch == 1:
-                    s0 = int(px.sum())
-                    row.update(mean_c0=s0 / n, mean_luma=s0 / n)
-                elif ch == 2:  # grey + alpha (color type 4, r13)
-                    s0 = int(px[:, :, 0].sum())
-                    row.update(
-                        mean_c0=s0 / n, mean_luma=s0 / n,
-                        mean_alpha=int(px[:, :, 1].sum()) / n,
-                    )
-                else:
-                    sr, sg, sb = (int(px[:, :, c].sum()) for c in range(3))
-                    row.update(
-                        mean_c0=sr / n,
-                        mean_luma=0.299 * (sr / n) + 0.587 * (sg / n) + 0.114 * (sb / n),
-                    )
-                    if ch == 4:
-                        row.update(mean_alpha=int(px[:, :, 3].sum()) / n)
-                out.append(row)
-            if out:
-                yield pd.DataFrame(out)
+    def features(doc_id, payload, meta):
+        d = decode_payload(bytes(payload), meta["format"])
+        px = d["pixels"].astype(np.int64)
+        ch = 1 if px.ndim == 2 else px.shape[-1]
+        h, w = d["height"], d["width"]
+        n = w * h
+        row = {
+            "doc_id": doc_id,
+            "png_type": _PNG_KIND[{1: 0, 2: 3, 3: 1, 4: 2}[ch]],
+            "width": w, "height": h, "n_channels": ch, "n_samples": n,
+            "mean_c0": None, "mean_luma": None, "mean_alpha": None,
+        }
+        if ch == 1:
+            s0 = int(px.sum())
+            row.update(mean_c0=s0 / n, mean_luma=s0 / n)
+        elif ch == 2:  # grey + alpha (color type 4, r13)
+            s0 = int(px[:, :, 0].sum())
+            row.update(
+                mean_c0=s0 / n, mean_luma=s0 / n,
+                mean_alpha=int(px[:, :, 1].sum()) / n,
+            )
+        else:
+            sr, sg, sb = (int(px[:, :, c].sum()) for c in range(3))
+            row.update(
+                mean_c0=sr / n,
+                mean_luma=0.299 * (sr / n) + 0.587 * (sg / n) + 0.114 * (sb / n),
+            )
+            if ch == 4:
+                row.update(mean_alpha=int(px[:, :, 3].sum()) / n)
+        yield row
 
-    return with_payload.mapInPandas(run, schema=PNG_FEATURE_SCHEMA)
+    return map_rows(
+        with_payload, ["doc_id", "payload", "meta"], features, PNG_FEATURE_SCHEMA
+    )
 
 
-def _palette_png_plan(doc_id: int) -> bytes:
+def _palette_png_plan(doc_id: int) -> tuple[str, bytes]:
     """Closed-form palette PNG per doc: an 8-entry palette with entry ``j``
     = ``((d+37j)%256, (d+59j)%256, (d+83j)%256)``, index map ``(d+i)%8``
     over the usual ``(5+d%4) × (3+d%3)`` canvas, row ``y`` filtered with
@@ -1614,30 +1469,9 @@ def _palette_png_plan(doc_id: int) -> bytes:
     ).astype(np.uint8)
     idx = ((d + np.arange(w * h, dtype=np.int64)) % 8).astype(np.uint8).reshape(h, w)
     trns = bytes(int((d + 11 * k) % 256) for k in range(4)) if d % 2 else None
-    return encode_palette_png(idx, plte, trns=trns, row_filters=[(d + y) % 5 for y in range(h)])
-
-
-def synthesize_palette_png_payloads(docs: DataFrame) -> DataFrame:
-    """Attach a REAL palette PNG payload (per :func:`_palette_png_plan`) to
-    each document — Arrow-batched, map-only, partition-preserving."""
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                payload = _palette_png_plan(doc_id)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": payload,
-                        "meta": {"format": "image/png", "n_bytes": len(payload)},
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    return docs.select("doc_id").mapInPandas(run, schema=PAYLOAD_SCHEMA)
+    return "image/png", encode_palette_png(
+        idx, plte, trns=trns, row_filters=[(d + y) % 5 for y in range(h)]
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1971,7 +1805,7 @@ GIF_FRAME_SCHEMA = (
 )
 
 
-def _gif_plan(doc_id: int) -> bytes:
+def _gif_plan(doc_id: int) -> tuple[str, bytes]:
     """Closed-form multi-frame GIF per doc: ``1 + d%3`` frames on the usual
     ``(5+d%4) × (3+d%3)`` canvas, 16-entry palette
     ``j → ((d+29j)%256, (d+53j)%256, (d+71j)%256)``, frame ``f`` pixel ``i``
@@ -1987,30 +1821,9 @@ def _gif_plan(doc_id: int) -> bytes:
         ((d + f + i) % 16).astype(np.uint8).reshape(h, w)
         for f in range(1 + d % 3)
     ]
-    return encode_gif(frames, plte, delays_cs=[4 + f for f in range(len(frames))])
-
-
-def synthesize_gif_payloads(docs: DataFrame) -> DataFrame:
-    """Attach a REAL multi-frame GIF payload (per :func:`_gif_plan`) to each
-    document — Arrow-batched, map-only, partition-preserving."""
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                payload = _gif_plan(doc_id)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": payload,
-                        "meta": {"format": "image/gif", "n_bytes": len(payload)},
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    return docs.select("doc_id").mapInPandas(run, schema=PAYLOAD_SCHEMA)
+    return "image/gif", encode_gif(
+        frames, plte, delays_cs=[4 + f for f in range(len(frames))]
+    )
 
 
 def extract_gif_frames(with_payload: DataFrame) -> DataFrame:
@@ -2019,34 +1832,28 @@ def extract_gif_frames(with_payload: DataFrame) -> DataFrame:
     codec, superseding :func:`sample_frames`' byte-slicing stand-in for
     this format.  Features are exact integer sums divided once, the
     bit-reproducible contract shared with the other codec extractors."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload, meta in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
-                if meta["format"] != "image/gif":
-                    continue
-                frames, delays = decode_gif(bytes(payload))
-                for fi, (px, delay) in enumerate(zip(frames, delays)):
-                    px = px.astype(np.int64)
-                    h, w, _ = px.shape
-                    n = w * h
-                    sr, sg, sb = (int(px[:, :, c].sum()) for c in range(3))
-                    out.append(
-                        {
-                            "doc_id": doc_id, "frame_id": fi,
-                            "delay_cs": delay, "width": w, "height": h,
-                            "n_samples": n,
-                            "mean_c0": sr / n,
-                            "mean_luma": 0.299 * (sr / n) + 0.587 * (sg / n)
-                            + 0.114 * (sb / n),
-                        }
-                    )
-            if out:
-                yield pd.DataFrame(out)
+    def per_frame(doc_id, payload, meta):
+        if meta["format"] != "image/gif":
+            return
+        frames, delays = decode_gif(bytes(payload))
+        for fi, (px, delay) in enumerate(zip(frames, delays)):
+            px = px.astype(np.int64)
+            h, w, _ = px.shape
+            n = w * h
+            sr, sg, sb = (int(px[:, :, c].sum()) for c in range(3))
+            yield {
+                "doc_id": doc_id, "frame_id": fi,
+                "delay_cs": delay, "width": w, "height": h,
+                "n_samples": n,
+                "mean_c0": sr / n,
+                "mean_luma": 0.299 * (sr / n) + 0.587 * (sg / n)
+                + 0.114 * (sb / n),
+            }
 
-    return with_payload.mapInPandas(run, schema=GIF_FRAME_SCHEMA)
+    return map_rows(
+        with_payload, ["doc_id", "payload", "meta"], per_frame, GIF_FRAME_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3244,7 +3051,7 @@ JPEG_FEATURE_SCHEMA = (
 )
 
 
-def _jpeg_plan(doc_id: int) -> bytes:
+def _jpeg_plan(doc_id: int) -> tuple[str, bytes]:
     """Closed-form JPEG per doc: a ``(1+d%2) x (1+d%3)`` grid of constant
     8x8 blocks (canvas 8-16 x 8-24).  Even docs are grayscale BASELINE
     (SOF0) with block ``k`` (row-major) value ``(d+17k)%256``; odd docs are
@@ -3262,15 +3069,15 @@ def _jpeg_plan(doc_id: int) -> bytes:
     yv = ((d + 17 * k) % 256).astype(np.uint8)
     up = np.repeat(np.repeat(yv, 8, axis=0), 8, axis=1)
     if d % 2 == 0:
-        return encode_jpeg(up)
+        return "image/jpeg", encode_jpeg(up)
     cbv = np.repeat(np.repeat(((d + 31 * k) % 256).astype(np.uint8), 8, 0), 8, 1)
     crv = np.repeat(np.repeat(((d + 47 * k) % 256).astype(np.uint8), 8, 0), 8, 1)
-    return encode_jpeg(
+    return "image/jpeg", encode_jpeg(
         np.stack([up, cbv, crv], axis=-1), ycbcr=True, progressive=True
     )
 
 
-def _jpeg12_plan(doc_id: int) -> bytes:
+def _jpeg12_plan(doc_id: int) -> tuple[str, bytes]:
     """Closed-form 12-BIT JPEG per doc (r14, extended sequential SOF1): the
     same constant-block grid as :func:`_jpeg_plan` but with 12-bit sample
     formulas — even docs greyscale ``(d+17k)%4096``, odd docs 4:4:4 YCbCr
@@ -3284,59 +3091,12 @@ def _jpeg12_plan(doc_id: int) -> bytes:
     yv = ((d + 17 * k) % 4096).astype(np.uint16)
     up = np.repeat(np.repeat(yv, 8, axis=0), 8, axis=1)
     if d % 2 == 0:
-        return encode_jpeg(up, precision=12)
+        return "image/jpeg", encode_jpeg(up, precision=12)
     cbv = np.repeat(np.repeat(((d + 31 * k) % 4096).astype(np.uint16), 8, 0), 8, 1)
     crv = np.repeat(np.repeat(((d + 47 * k) % 4096).astype(np.uint16), 8, 0), 8, 1)
-    return encode_jpeg(
+    return "image/jpeg", encode_jpeg(
         np.stack([up, cbv, crv], axis=-1), ycbcr=True, precision=12
     )
-
-
-def synthesize_jpeg12_payloads(docs: DataFrame) -> DataFrame:
-    """Attach a REAL 12-bit extended-sequential JPEG payload (per
-    :func:`_jpeg12_plan`) to each document — Arrow-batched, map-only,
-    partition-preserving."""
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                payload = _jpeg12_plan(doc_id)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": payload,
-                        "meta": {"format": "image/jpeg", "n_bytes": len(payload)},
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    return docs.select("doc_id").mapInPandas(run, schema=PAYLOAD_SCHEMA)
-
-
-def synthesize_jpeg_payloads(docs: DataFrame) -> DataFrame:
-    """Attach a REAL baseline JPEG payload (per :func:`_jpeg_plan`) to each
-    document — Arrow-batched, map-only, partition-preserving."""
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                payload = _jpeg_plan(doc_id)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": payload,
-                        "meta": {"format": "image/jpeg", "n_bytes": len(payload)},
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    return docs.select("doc_id").mapInPandas(run, schema=PAYLOAD_SCHEMA)
 
 
 MP3_FEATURE_SCHEMA = (
@@ -3352,28 +3112,20 @@ def extract_mp3_features(with_payload: DataFrame) -> DataFrame:
     landing zone filters on: frame counts, exact duration, average
     bitrate, VBR flag.  Arrow-batched, map-only — the streaming media
     runner dispatches ``audio/mpeg`` here (r14)."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_mp3_headers(bytes(payload))
-                out.append(
-                    {
-                        "doc_id": doc_id, "version": m["version"],
-                        "layer": m["layer"], "sample_rate": m["sample_rate"],
-                        "n_channels": m["n_channels"],
-                        "n_frames": m["n_frames"], "n_samples": m["n_samples"],
-                        "duration_s": m["duration_s"],
-                        "avg_bitrate_kbps": m["avg_bitrate_kbps"],
-                        "is_vbr": m["is_vbr"], "n_bytes": m["n_bytes"],
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
+    def features(doc_id, payload):
+        m = decode_mp3_headers(bytes(payload))
+        yield {
+            "doc_id": doc_id, "version": m["version"],
+            "layer": m["layer"], "sample_rate": m["sample_rate"],
+            "n_channels": m["n_channels"],
+            "n_frames": m["n_frames"], "n_samples": m["n_samples"],
+            "duration_s": m["duration_s"],
+            "avg_bitrate_kbps": m["avg_bitrate_kbps"],
+            "is_vbr": m["is_vbr"], "n_bytes": m["n_bytes"],
+        }
 
-    return with_payload.mapInPandas(run, schema=MP3_FEATURE_SCHEMA)
+    return map_rows(with_payload, ["doc_id", "payload"], features, MP3_FEATURE_SCHEMA)
 
 
 def extract_jpeg_features(with_payload: DataFrame) -> DataFrame:
@@ -3381,38 +3133,30 @@ def extract_jpeg_features(with_payload: DataFrame) -> DataFrame:
     sums divided once — the bit-reproducible contract shared with the other
     codec extractors.  ``mean_c0`` is the R-channel (or gray) mean,
     ``mean_luma`` the 0.299/0.587/0.114 mix (gray = itself)."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["meta"]
-            ):
-                if meta["format"] != "image/jpeg":
-                    continue
-                px = decode_jpeg(bytes(payload)).astype(np.int64)
-                gray = px.ndim == 2
-                h, w = px.shape[:2]
-                n = w * h
-                if gray:
-                    s0 = int(px.sum())
-                    mean_c0 = mean_luma = s0 / n
-                else:
-                    sr, sg, sb = (int(px[:, :, c].sum()) for c in range(3))
-                    mean_c0 = sr / n
-                    mean_luma = (
-                        0.299 * (sr / n) + 0.587 * (sg / n) + 0.114 * (sb / n)
-                    )
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "jpeg_type": "gray" if gray else "ycbcr",
-                        "width": w, "height": h, "n_samples": n,
-                        "mean_c0": mean_c0, "mean_luma": mean_luma,
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
+    def features(doc_id, payload, meta):
+        if meta["format"] != "image/jpeg":
+            return
+        px = decode_jpeg(bytes(payload)).astype(np.int64)
+        gray = px.ndim == 2
+        h, w = px.shape[:2]
+        n = w * h
+        if gray:
+            s0 = int(px.sum())
+            mean_c0 = mean_luma = s0 / n
+        else:
+            sr, sg, sb = (int(px[:, :, c].sum()) for c in range(3))
+            mean_c0 = sr / n
+            mean_luma = (
+                0.299 * (sr / n) + 0.587 * (sg / n) + 0.114 * (sb / n)
+            )
+        yield {
+            "doc_id": doc_id,
+            "jpeg_type": "gray" if gray else "ycbcr",
+            "width": w, "height": h, "n_samples": n,
+            "mean_c0": mean_c0, "mean_luma": mean_luma,
+        }
 
-    return with_payload.mapInPandas(run, schema=JPEG_FEATURE_SCHEMA)
+    return map_rows(
+        with_payload, ["doc_id", "payload", "meta"], features, JPEG_FEATURE_SCHEMA
+    )

@@ -28,7 +28,6 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.queries.registry import
     "r1-r10; cleaning family stays visible via type_audit_events, agg "
     "shapes via pricing_summary); still oracle-gated at sf0.01.",
     tags=("cleaning", "agg"),
-    driver_visible=False,
 )
 def clean_enum_part_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part")
@@ -66,7 +65,6 @@ def clean_enum_part_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="C19/A12 type audit: unpivot → classify → set-agg (03/audit.py:37-59)"
     "  Evicted from the driver window in the r12 rotation (driver-green r1-r11); still oracle-gated at sf0.01.",
     tags=("cleaning", "audit"),
-    driver_visible=False,
 )
 def type_audit_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -108,7 +106,6 @@ def type_audit_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     "classify+set-agg path shared with type_audit_events; slot given to "
     "shuffled_shard_manifest); still in the local parity gate.",
     tags=("cleaning", "audit", "profile"),
-    driver_visible=False,
 )
 def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")

@@ -33,7 +33,6 @@ def _coll(spark: SparkSession, sf_dir: str, name: str) -> DocumentCollection:
     "filter+project shape covered by ds_elem_match/events_with_large_k; slot "
     "given to ds_lookup_group); still in the local parity gate.",
     tags=("docstore", "filter"),
-    driver_visible=False,
 )
 def ds_find_machinery_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "customer").find(
@@ -57,7 +56,6 @@ def ds_find_machinery_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shape covered by top_event_types; slot given to "
     "events_time_weighted_avg); still in the local parity gate.",
     tags=("docstore", "agg", "topk"),
-    driver_visible=False,
 )
 def ds_top_clickers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "events").aggregate(
@@ -85,7 +83,6 @@ def ds_top_clickers(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="$group accumulators $sum/$avg/$min/$max (05/avg_city_pop_for_indian_regions.py:39-43)"
     "  Evicted from the driver window in the r11 second wave (driver-green through r10; global-agg shape covered by pricing_summary and ds_facet_summary); still oracle-gated at sf0.01.",
     tags=("docstore", "agg"),
-    driver_visible=False,
 )
 def ds_value_stats_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "events").aggregate(
@@ -121,7 +118,6 @@ def ds_value_stats_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="$project computed + $unwind + $group + $sort/$limit (05/region_cities.py:27-37)"
     "  Evicted from the driver window in the r11 second wave (driver-green through r10; the $unwind stage keeps its pipeline fuzz tiers and sf0.01 gate); still oracle-gated at sf0.01.",
     tags=("docstore", "explode", "topk"),
-    driver_visible=False,
 )
 def ds_unwind_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "documents").aggregate(
@@ -156,7 +152,6 @@ def ds_unwind_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(statuses_per_priority, pii_redaction_audit) and this query stays in the "
     "local sf0.01 parity gate.",
     tags=("docstore", "project"),
-    driver_visible=False,
 )
 def ds_cond_price_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "orders").aggregate(
@@ -204,7 +199,6 @@ def ds_cond_price_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ds_find_machinery_customers/ds_elem_match; this query stays in the "
     "local sf0.01 parity gate.",
     tags=("docstore", "filter", "regex"),
-    driver_visible=False,
 )
 def ds_regex_find(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "part").find(
@@ -225,7 +219,6 @@ def ds_regex_find(spark: SparkSession, sf_dir: str) -> DataFrame:
     "r1-r10; filter family stays visible via events_with_large_k); still "
     "oracle-gated at sf0.01.",
     tags=("docstore", "filter", "array"),
-    driver_visible=False,
 )
 def ds_elem_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "embeddings").find(
@@ -246,7 +239,6 @@ def ds_elem_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     "from the driver window (r3): its operators are covered by ds_top_clickers "
     "+ the T1 sort/limit oracles; the slot goes to a distinct operator family.",
     tags=("docstore", "topk", "paging"),
-    driver_visible=False,
 )
 def ds_sort_skip_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "orders").aggregate(
@@ -269,7 +261,6 @@ def ds_sort_skip_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="compound $group _id doc (05/avg_population.py:37-39)",
     tags=("docstore", "agg"),
-    driver_visible=False,
 )
 def ds_compound_group_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "orders").aggregate(
@@ -305,7 +296,6 @@ def ds_compound_group_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     "first driver row, carrying the r10 tie/null boundary semantics)."
     "  Evicted from the driver window in the r13 rotation (driver-green r11-r12; bucket family covered by ds_bucket_auto_exact (visible)); still oracle-gated at sf0.01.",
     tags=("docstore", "agg", "bucket"),
-    driver_visible=False,
 )
 def ds_bucket_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "customer").aggregate(
@@ -350,7 +340,6 @@ def ds_bucket_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     "first driver row)."
     "  Evicted from the driver window in the r13 rotation (driver-green r11-r12; expr/HOF shapes covered by ds_regex_extract (in) and ds_window_ema (visible)); still oracle-gated at sf0.01.",
     tags=("docstore", "expr", "hof"),
-    driver_visible=False,
 )
 def ds_expr_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "embeddings").aggregate(
@@ -680,7 +669,6 @@ def ds_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     "first independent correctness row."
     "  Evicted from the driver window in the r13 rotation (driver-green r10-r12; window family re-rowed by ds_window_running (in this round)); still oracle-gated at sf0.01.",
     tags=("docstore", "window"),
-    driver_visible=False,
 )
 def ds_window_time_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "events").aggregate(
@@ -795,7 +783,6 @@ def ds_window_month_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     "calendar-unit spine path)."
     "  Evicted from the driver window in the r13 rotation (driver-green r11-r12; calendar-spine shape covered by events_gap_interpolated (visible)); still oracle-gated at sf0.01.",
     tags=("docstore", "densify"),
-    driver_visible=False,
 )
 def ds_densify_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "orders").aggregate(
@@ -1004,7 +991,6 @@ def ds_bucket_auto_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "r10: the $facet family's first independent correctness row."
     "  Evicted from the driver window in the r13 rotation (driver-green r10-r12; bucket family covered by ds_bucket_auto_exact (visible)); still oracle-gated at sf0.01.",
     tags=("docstore", "reshape", "agg"),
-    driver_visible=False,
 )
 def ds_facet_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "orders").aggregate(
@@ -1070,7 +1056,6 @@ def ds_facet_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "independent correctness row (action-bearing stages)."
     "  Evicted from the driver window in the r13 rotation (driver-green r10-r12; docstore mutation family re-rowed by ds_update_many (in)); still oracle-gated at sf0.01.",
     tags=("docstore", "upsert"),
-    driver_visible=False,
 )
 def ds_merge_pipeline_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
@@ -1195,7 +1180,6 @@ def ds_densify_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(events_gap_filled_locf covers the LOCF shape)."
     "  Evicted from the driver window in the r13 rotation (driver-green r10-r12; spine+fill covered by events_gap_interpolated (visible)); still oracle-gated at sf0.01.",
     tags=("docstore", "window", "resample"),
-    driver_visible=False,
 )
 def ds_fill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import quantize6
@@ -1335,7 +1319,6 @@ GRAPHLOOKUP_BROADCAST_MAX_ROWS = 10_000_000
     "rotated out in exchange."
     "  Evicted from the driver window in the r12 rotation (driver-green r5-r11; graph family keeps supplier_customer_pagerank); still oracle-gated at sf0.01.",
     tags=("docstore", "graph", "iterative"),
-    driver_visible=False,
 )
 def ds_graph_reachable_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1554,7 +1537,6 @@ def ds_lookup_proj_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     "driver row — the detagg-quantized trapezoid/derivative paths)."
     "  Evicted from the driver window in the r13 rotation (driver-green r11-r12; range-frame rate family covered by events_trailing_avg_1h (visible)); still oracle-gated at sf0.01.",
     tags=("docstore", "window", "rate"),
-    driver_visible=False,
 )
 def ds_window_integral(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "events").aggregate(
@@ -1607,7 +1589,6 @@ def ds_window_integral(spark: SparkSession, sf_dir: str) -> DataFrame:
     "  Rotated INTO the driver window in r12 (VERDICT r11 ask #1: never-driver-verified residual burn-down; the gate-only note above is historical)."
     "  Evicted from the driver window in the r14 rotation (driver-green r12-r13; window family keeps ds_window_running visible + ds_window_month_range (in)); still oracle-gated at sf0.01.",
     tags=("docstore", "window", "rate", "pandas-udf"),
-    driver_visible=False,
 )
 def ds_window_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "events").aggregate(
@@ -1664,7 +1645,6 @@ def ds_window_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     "here, the IVF family keeps ann_ivfpq_topk)."
     "  Evicted from the driver window in the r13 rotation (driver-green r10-r12; Atlas facade family re-rowed by ds_atlas_search (in)); still oracle-gated at sf0.01.",
     tags=("docstore", "similarity", "topk"),
-    driver_visible=False,
 )
 def ds_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.queries.trainingdata_queries import (
@@ -1757,7 +1737,6 @@ def ds_atlas_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "freshly fuzz-hardened in r10)."
     "  Evicted from the driver window in the r13 rotation (driver-green r11-r12; doc-tree recursion keeps its sf0.01 gate + property tier); still oracle-gated at sf0.01.",
     tags=("docstore", "redact", "project"),
-    driver_visible=False,
 )
 def ds_redact_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
@@ -1879,7 +1858,6 @@ def ds_regex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(the dates/expr families' first driver row)."
     "  Evicted from the driver window in the r13 rotation (driver-green r11-r12; date-expr shapes covered by events_ohlc_15min (in) and the expr gate); still oracle-gated at sf0.01.",
     tags=("docstore", "expr", "dates"),
-    driver_visible=False,
 )
 def ds_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _coll(spark, sf_dir, "orders").aggregate(
@@ -1971,7 +1949,6 @@ def ds_text_find(spark: SparkSession, sf_dir: str) -> DataFrame:
     "$topN + running $median) gets its own independent correctness row."
     "  Evicted from the driver window in the r13 rotation (driver-green r10-r12; N-ary ranked-pick shape re-rowed by ds_minmax_topn (in)); still oracle-gated at sf0.01.",
     tags=("docstore", "window"),
-    driver_visible=False,
 )
 def ds_window_topn_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.docstore.pipeline import aggregate
@@ -2079,7 +2056,6 @@ def ds_lookup_uncorrelated(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pinned in test_plans.py."
     "  Evicted from the driver window in the r13 rotation (driver-green r9-r12; correlated-$lookup family re-rowed by ds_lookup_topn (in)); still oracle-gated at sf0.01.",
     tags=("docstore", "join", "agg"),
-    driver_visible=False,
 )
 def ds_lookup_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.docstore.pipeline import aggregate

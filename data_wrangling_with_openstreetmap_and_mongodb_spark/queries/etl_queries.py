@@ -21,14 +21,16 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import
     quantize6_sql,
 )
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
+    _media_plan,
     extract_features,
     extract_media_features,
     sample_frames,
-    synthesize_media_payloads,
+    synthesize_payloads,
     with_binary_payload,
 )
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.upsert import merge_update
 from data_wrangling_with_openstreetmap_and_mongodb_spark.queries.registry import register
+from data_wrangling_with_openstreetmap_and_mongodb_spark.rowmap import map_rows
 from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.drive import (
     run_available_now,
 )
@@ -65,7 +67,6 @@ SESSION_GAP_US = 12 * 3600 * 1_000_000  # 12 h, ~median inter-event gap ×1.6
     doc="find_one+set+save upsert loop as broadcast left-join + coalesce (04/update.py:56-76)"
     "  Evicted from the driver window in the r11 second wave (driver-green through r10; upsert family covered by ds_merge_pipeline_apply and scd2_incremental_state); still oracle-gated at sf0.01.",
     tags=("join", "upsert"),
-    driver_visible=False,
 )
 def upsert_supplier_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier")
@@ -104,7 +105,6 @@ def upsert_supplier_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     "difference; slot given to streaming_nb_score_confusion); still in the "
     "local parity gate.",
     tags=("agg", "argmax"),
-    driver_visible=False,
 )
 def extreme_value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -141,7 +141,6 @@ def extreme_value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="column-wise wide→long aggregation via unpivot (01/excel_csv.py:34-44; A11)"
     "  Evicted from the driver window in the r11 second wave (driver-green through r10; hash-agg shape covered by pricing_summary; the unpivot keeps its gate); still oracle-gated at sf0.01.",
     tags=("agg", "unpivot"),
-    driver_visible=False,
 )
 def lineitem_measure_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no spread(): the unpivot+agg arithmetic is lighter than the extra
@@ -184,7 +183,6 @@ def lineitem_measure_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "family's driver-visible row is now multimodal_media_decode, which "
     "exercises the REAL BMP/WAV codecs instead of the fake.",
     tags=("multimodal", "pandas-udf"),
-    driver_visible=False,
 )
 def multimodal_payload_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -267,11 +265,10 @@ _WAV_S = "(((doc_id*11 + i*17) % 2048) - 1024)"
     "multimodal_payload_features (fake-codec variant, now gate-only)."
     "  Evicted from the driver window in the r12 rotation (driver-green r5-r11; codec family row is now multimodal_png_decode); still oracle-gated at sf0.01.",
     tags=("multimodal", "pandas-udf", "codec"),
-    driver_visible=False,
 )
 def multimodal_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    feats = extract_media_features(synthesize_media_payloads(d))
+    feats = extract_media_features(synthesize_payloads(d, _media_plan))
     return feats.select(
         "doc_id", "fmt", "width", "height", "n_channels", "sample_rate",
         "n_samples",
@@ -360,12 +357,12 @@ _PNG_DECODE_ORACLE = f"""
 )
 def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
+        _png_plan,
         extract_png_features,
-        synthesize_png_payloads,
     )
 
     d = load_table(spark, sf_dir, "documents", spread=True)
-    feats = extract_png_features(synthesize_png_payloads(d))
+    feats = extract_png_features(synthesize_payloads(d, _png_plan))
     return feats.select(
         "doc_id", "png_type", "width", "height", "n_channels", "n_samples",
         quantize6(F.col("mean_c0")).alias("mean_c0"),
@@ -424,16 +421,15 @@ _PLT_A = f"(CASE WHEN {_PLT_J} < 4 THEN (doc_id + 11*{_PLT_J}) % 256 ELSE 255 EN
     "table symbolically.  Map-only.  Driver-visible since the r13 rotation (VERDICT r12 ask #1: never-driver-verified residual burn-down)."
     "  Evicted from the driver window in the r14 second wave (driver-green r13; the PNG family keeps multimodal_png_decode + multimodal_png_variants + streaming_media_decode visible, and the PLTE/tRNS expansion stays golden-anchored in pytest) to seat multimodal_jpeg_lossless_decode, NEW r14 and driver-visible from birth; still oracle-gated at sf0.01.",
     tags=("multimodal", "pandas-udf", "codec"),
-    driver_visible=False,
 )
 def multimodal_palette_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
+        _palette_png_plan,
         extract_png_features,
-        synthesize_palette_png_payloads,
     )
 
     d = load_table(spark, sf_dir, "documents", spread=True)
-    feats = extract_png_features(synthesize_palette_png_payloads(d))
+    feats = extract_png_features(synthesize_payloads(d, _palette_png_plan))
     return feats.select(
         "doc_id", "png_type", "width", "height", "n_channels", "n_samples",
         quantize6(F.col("mean_c0")).alias("mean_c0"),
@@ -494,12 +490,12 @@ _GIF_B = f"((doc_id + 71*{_GIF_J}) % 256)"
 )
 def multimodal_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
+        _gif_plan,
         extract_gif_frames,
-        synthesize_gif_payloads,
     )
 
     d = load_table(spark, sf_dir, "documents", spread=True)
-    frames = extract_gif_frames(synthesize_gif_payloads(d))
+    frames = extract_gif_frames(synthesize_payloads(d, _gif_plan))
     return frames.select(
         "doc_id", "frame_id", "delay_cs", "width", "height", "n_samples",
         quantize6(F.col("mean_c0")).alias("mean_c0"),
@@ -569,45 +565,31 @@ _WAV_G711_ORACLE = f"""
     "Map-only.  Driver-visible since the r13 rotation (VERDICT r12 ask #1: never-driver-verified residual burn-down)."
     "  Evicted from the driver window in the r14 second wave (driver-green r13; the WAV family keeps multimodal_adpcm_decode + multimodal_wav_resample visible and the G.711 expansion stays golden-anchored in pytest) to seat multimodal_jpeg12_decode, NEW r14 and driver-visible from birth; still oracle-gated at sf0.01.",
     tags=("multimodal", "pandas-udf", "codec"),
-    driver_visible=False,
 )
 def multimodal_wav_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
+        _g711_plan,
         decode_wav,
-        encode_wav_g711,
     )
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
+    d = load_table(spark, sf_dir, "documents")
 
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                ch = 1 + did % 2
-                n = (30 + did % 7) * ch
-                i = np.arange(n, dtype=np.int64)
-                raw = ((did * 7 + i * 13) % 256).astype(np.uint8).tobytes()
-                law = "mulaw" if did % 2 == 0 else "alaw"
-                rate, ch2, s = decode_wav(encode_wav_g711(8000, ch, raw, law))
-                s = s.astype(np.int64)
-                out.append(
-                    {
-                        "doc_id": doc_id, "law": law, "n_channels": ch2,
-                        "sample_rate": rate, "n_samples": len(s),
-                        "rms": float(np.sqrt(int((s * s).sum()) / len(s))),
-                        "peak": int(np.abs(s).max()),
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
+    def features(doc_id):
+        law = "mulaw" if int(doc_id) % 2 == 0 else "alaw"
+        rate, ch, s = decode_wav(_g711_plan(doc_id)[1])
+        s = s.astype(np.int64)
+        yield {
+            "doc_id": doc_id, "law": law, "n_channels": ch,
+            "sample_rate": rate, "n_samples": len(s),
+            "rms": float(np.sqrt(int((s * s).sum()) / len(s))),
+            "peak": int(np.abs(s).max()),
+        }
 
-    feats = d.mapInPandas(
-        run,
-        schema="doc_id long, law string, n_channels long, sample_rate long, "
+    feats = map_rows(
+        d, ["doc_id"], features,
+        "doc_id long, law string, n_channels long, sample_rate long, "
         "n_samples long, rms double, peak long",
     )
     return feats.select(
@@ -685,12 +667,12 @@ _JB = f"GREATEST(0, LEAST(255, FLOOR({_JY} + 1.772*({_JCB} - 128) + 0.5)))"
 )
 def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
+        _jpeg_plan,
         extract_jpeg_features,
-        synthesize_jpeg_payloads,
     )
 
     d = load_table(spark, sf_dir, "documents", spread=True)
-    feats = extract_jpeg_features(synthesize_jpeg_payloads(d))
+    feats = extract_jpeg_features(synthesize_payloads(d, _jpeg_plan))
     return feats.select(
         "doc_id", "jpeg_type", "width", "height", "n_samples",
         quantize6(F.col("mean_c0")).alias("mean_c0"),
@@ -758,12 +740,12 @@ _J12B = f"GREATEST(0, LEAST(4095, FLOOR({_J12Y} + 1.772*({_J12CB} - 2048) + 0.5)
 )
 def multimodal_jpeg12_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
+        _jpeg12_plan,
         extract_jpeg_features,
-        synthesize_jpeg12_payloads,
     )
 
     d = load_table(spark, sf_dir, "documents", spread=True)
-    feats = extract_jpeg_features(synthesize_jpeg12_payloads(d))
+    feats = extract_jpeg_features(synthesize_payloads(d, _jpeg12_plan))
     return feats.select(
         "doc_id", "jpeg_type", "width", "height", "n_samples",
         quantize6(F.col("mean_c0")).alias("mean_c0"),
@@ -827,56 +809,48 @@ _JL_V = f"((doc_id + 7*(j // ch) + 1000*(j % ch)) % {_JL_M})"
 )
 def multimodal_jpeg_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
         decode_jpeg,
         encode_jpeg_lossless,
     )
 
-    d = load_table(spark, sf_dir, "documents", spread=True).select("doc_id")
+    d = load_table(spark, sf_dir, "documents", spread=True)
 
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 3 + did % 4, 2 + did % 3
-                ch = 1 + 2 * (did % 2)
-                pred = 1 + did % 7
-                prec = (8, 12, 16)[did % 3]
-                m = 1 << prec
-                i = np.arange(w * h, dtype=np.int64)
-                planes = [
-                    ((did + 7 * i + 1000 * c) % m).reshape(h, w)
-                    for c in range(ch)
-                ]
-                px = np.stack(planes, axis=-1).astype(
-                    np.uint8 if prec <= 8 else np.uint16
-                )
-                if ch == 1:
-                    px = px[:, :, 0]
-                dec = decode_jpeg(
-                    encode_jpeg_lossless(px, predictor=pred, precision=prec)
-                ).astype(np.int64)
-                flat = dec.reshape(-1)
-                out.append(
-                    {
-                        "doc_id": doc_id, "predictor": pred, "precision": prec,
-                        "width": w, "height": h, "n_channels": ch,
-                        "n_samples": int(flat.size),
-                        "sample_sum": int(flat.sum()),
-                        "weighted_sum": int(
-                            (flat * (1 + np.arange(flat.size))).sum()
-                        ),
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
+    def features(doc_id):
+        did = int(doc_id)
+        w, h = 3 + did % 4, 2 + did % 3
+        ch = 1 + 2 * (did % 2)
+        pred = 1 + did % 7
+        prec = (8, 12, 16)[did % 3]
+        m = 1 << prec
+        i = np.arange(w * h, dtype=np.int64)
+        planes = [
+            ((did + 7 * i + 1000 * c) % m).reshape(h, w)
+            for c in range(ch)
+        ]
+        px = np.stack(planes, axis=-1).astype(
+            np.uint8 if prec <= 8 else np.uint16
+        )
+        if ch == 1:
+            px = px[:, :, 0]
+        dec = decode_jpeg(
+            encode_jpeg_lossless(px, predictor=pred, precision=prec)
+        ).astype(np.int64)
+        flat = dec.reshape(-1)
+        yield {
+            "doc_id": doc_id, "predictor": pred, "precision": prec,
+            "width": w, "height": h, "n_channels": ch,
+            "n_samples": int(flat.size),
+            "sample_sum": int(flat.sum()),
+            "weighted_sum": int(
+                (flat * (1 + np.arange(flat.size))).sum()
+            ),
+        }
 
-    return d.mapInPandas(
-        run,
-        schema="doc_id long, predictor long, precision long, width long, "
+    return map_rows(
+        d, ["doc_id"], features,
+        "doc_id long, predictor long, precision long, width long, "
         "height long, n_channels long, n_samples long, sample_sum long, "
         "weighted_sum long",
     )
@@ -934,7 +908,7 @@ def multimodal_bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    resized = resize_bmp_payloads(synthesize_media_payloads(d), 4, 3)
+    resized = resize_bmp_payloads(synthesize_payloads(d, _media_plan), 4, 3)
     feats = extract_media_features(resized)
     return feats.select(
         "doc_id", "width", "height", "n_samples",
@@ -991,7 +965,7 @@ def multimodal_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    res = resample_wav_payloads(synthesize_media_payloads(d), out_rate=8000)
+    res = resample_wav_payloads(synthesize_payloads(d, _media_plan), out_rate=8000)
     feats = extract_media_features(res)
     return feats.select(
         "doc_id", "n_channels", "sample_rate", "n_samples",
@@ -1108,12 +1082,12 @@ _PV_B = "((doc_id + 31*i) % 256)"
 )
 def multimodal_png_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
+        _png_variant_plan,
         extract_png_features,
-        synthesize_png_variant_payloads,
     )
 
     d = load_table(spark, sf_dir, "documents", spread=True)
-    feats = extract_png_features(synthesize_png_variant_payloads(d))
+    feats = extract_png_features(synthesize_payloads(d, _png_variant_plan))
     return feats.select(
         "doc_id", "png_type", "width", "height", "n_channels", "n_samples",
         quantize6(F.col("mean_c0")).alias("mean_c0"),
@@ -1209,51 +1183,43 @@ _IMA_STEPS_SQL = (
 )
 def multimodal_adpcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
         decode_wav,
         encode_wav_adpcm,
     )
 
-    d = load_table(spark, sf_dir, "documents", spread=True).select("doc_id")
+    d = load_table(spark, sf_dir, "documents", spread=True)
 
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                data = bytearray()
-                for b, n_nib in ((0, 16), (1, 8)):
-                    pred0 = ((7 * did + 97 * b) % 4001) - 2000
-                    idx0 = (did + 3 * b) % 89
-                    data += int.to_bytes(pred0 & 0xFFFF, 2, "little")
-                    data += bytes([idx0, 0])
-                    nibs = [
-                        (3 * did + 5 * (16 * b + t)) % 16 for t in range(n_nib)
-                    ]
-                    data += bytes(
-                        lo | (hi << 4) for lo, hi in zip(nibs[0::2], nibs[1::2])
-                    )
-                rate, ch, s = decode_wav(
-                    encode_wav_adpcm(8000, 1, 12, bytes(data), n_samples=23)
-                )
-                s64 = s.astype(np.int64)
-                out.append(
-                    {
-                        "doc_id": doc_id, "n_channels": ch, "sample_rate": rate,
-                        "n_samples": len(s64),
-                        "first_s": int(s64[0]), "last_s": int(s64[-1]),
-                        "rms": float(np.sqrt(int((s64 * s64).sum()) / len(s64))),
-                        "peak": int(np.abs(s64).max()),
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
+    def features(doc_id):
+        did = int(doc_id)
+        data = bytearray()
+        for b, n_nib in ((0, 16), (1, 8)):
+            pred0 = ((7 * did + 97 * b) % 4001) - 2000
+            idx0 = (did + 3 * b) % 89
+            data += int.to_bytes(pred0 & 0xFFFF, 2, "little")
+            data += bytes([idx0, 0])
+            nibs = [
+                (3 * did + 5 * (16 * b + t)) % 16 for t in range(n_nib)
+            ]
+            data += bytes(
+                lo | (hi << 4) for lo, hi in zip(nibs[0::2], nibs[1::2])
+            )
+        rate, ch, s = decode_wav(
+            encode_wav_adpcm(8000, 1, 12, bytes(data), n_samples=23)
+        )
+        s64 = s.astype(np.int64)
+        yield {
+            "doc_id": doc_id, "n_channels": ch, "sample_rate": rate,
+            "n_samples": len(s64),
+            "first_s": int(s64[0]), "last_s": int(s64[-1]),
+            "rms": float(np.sqrt(int((s64 * s64).sum()) / len(s64))),
+            "peak": int(np.abs(s64).max()),
+        }
 
-    feats = d.mapInPandas(
-        run,
-        schema="doc_id long, n_channels long, sample_rate long, "
+    feats = map_rows(
+        d, ["doc_id"], features,
+        "doc_id long, n_channels long, sample_rate long, "
         "n_samples long, first_s long, last_s long, rms double, peak long",
     )
     return feats.select(
@@ -1332,56 +1298,47 @@ _MP3_BR2 = "[8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160]"
     tags=("multimodal", "pandas-udf", "codec"),
 )
 def multimodal_mp3_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
         _MP3_BITRATES,
         decode_mp3_headers,
         encode_mp3_frames,
     )
 
-    d = load_table(spark, sf_dir, "documents", spread=True).select("doc_id")
+    d = load_table(spark, sf_dir, "documents", spread=True)
 
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                version = ("MPEG1", "MPEG2", "MPEG2.5")[did % 3]
-                sidx = (7 * did) % 3
-                sr = {
-                    "MPEG1": (44100, 48000, 32000),
-                    "MPEG2": (22050, 24000, 16000),
-                    "MPEG2.5": (11025, 12000, 8000),
-                }[version][sidx]
-                table = _MP3_BITRATES[(1, 3) if version == "MPEG1" else (2, 2)]
-                k = 3 + did % 4
-                specs = [
-                    (table[(did + 2 * j) % 14], (did + j) % 2) for j in range(k)
-                ]
-                payload = encode_mp3_frames(
-                    version, 3, sr, specs,
-                    channels=1 + did % 2,
-                    id3v2_bytes=(did % 5) * 10,
-                )
-                m = decode_mp3_headers(payload)
-                out.append(
-                    {
-                        "doc_id": doc_id, "version": m["version"],
-                        "sample_rate": m["sample_rate"],
-                        "n_channels": m["n_channels"],
-                        "n_frames": m["n_frames"], "n_samples": m["n_samples"],
-                        "duration_s": m["duration_s"],
-                        "avg_bitrate_kbps": m["avg_bitrate_kbps"],
-                        "is_vbr": m["is_vbr"], "n_bytes": m["n_bytes"],
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
+    def features(doc_id):
+        did = int(doc_id)
+        version = ("MPEG1", "MPEG2", "MPEG2.5")[did % 3]
+        sidx = (7 * did) % 3
+        sr = {
+            "MPEG1": (44100, 48000, 32000),
+            "MPEG2": (22050, 24000, 16000),
+            "MPEG2.5": (11025, 12000, 8000),
+        }[version][sidx]
+        table = _MP3_BITRATES[(1, 3) if version == "MPEG1" else (2, 2)]
+        k = 3 + did % 4
+        specs = [
+            (table[(did + 2 * j) % 14], (did + j) % 2) for j in range(k)
+        ]
+        payload = encode_mp3_frames(
+            version, 3, sr, specs,
+            channels=1 + did % 2,
+            id3v2_bytes=(did % 5) * 10,
+        )
+        m = decode_mp3_headers(payload)
+        yield {
+            "doc_id": doc_id, "version": m["version"],
+            "sample_rate": m["sample_rate"],
+            "n_channels": m["n_channels"],
+            "n_frames": m["n_frames"], "n_samples": m["n_samples"],
+            "duration_s": m["duration_s"],
+            "avg_bitrate_kbps": m["avg_bitrate_kbps"],
+            "is_vbr": m["is_vbr"], "n_bytes": m["n_bytes"],
+        }
 
-    feats = d.mapInPandas(
-        run,
-        schema="doc_id long, version string, sample_rate long, "
+    feats = map_rows(
+        d, ["doc_id"], features,
+        "doc_id long, version string, sample_rate long, "
         "n_channels long, n_frames long, n_samples long, duration_s double, "
         "avg_bitrate_kbps double, is_vbr boolean, n_bytes long",
     )
@@ -1450,7 +1407,7 @@ def _decode_through_stream(payloads: DataFrame, n_docs: int, fmt: str) -> DataFr
 )
 def streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
-        synthesize_png_payloads,
+        _png_plan,
     )
 
     d = load_table(spark, sf_dir, "documents", spread=True)
@@ -1458,7 +1415,7 @@ def streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # writes — the filter cannot push below the opaque synthesize stage, so
     # every payload was encoded twice and half of each pass thrown away)
     feats = _decode_through_stream(
-        synthesize_png_payloads(d), table_rows(sf_dir, "documents"), "image/png"
+        synthesize_payloads(d, _png_plan), table_rows(sf_dir, "documents"), "image/png"
     )
     return feats.select(
         "doc_id", "png_type", "width", "height", "n_channels", "n_samples",
@@ -1492,13 +1449,13 @@ def streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
-        synthesize_g711_payloads,
+        _g711_plan,
     )
 
     d = load_table(spark, sf_dir, "documents")
     # same single write and doc-count-derived file pin as the PNG row
     feats = _decode_through_stream(
-        synthesize_g711_payloads(d), table_rows(sf_dir, "documents"), "audio/wav"
+        synthesize_payloads(d, _g711_plan), table_rows(sf_dir, "documents"), "audio/wav"
     )
     return feats.select(
         "doc_id",
@@ -1536,7 +1493,6 @@ def streaming_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "family keeps its hard row via multimodal_payload_features; this slot "
     "went to a novel operator family.",
     tags=("multimodal", "pandas-udf"),
-    driver_visible=False,
 )
 def multimodal_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1560,7 +1516,6 @@ def multimodal_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Structured Streaming rollup (readStream → complete-mode agg → availableNow)"
     "  Evicted from the driver window in the r12 rotation (driver-green r1-r11; streaming family keeps 4 visible rows); still oracle-gated at sf0.01.",
     tags=("streaming", "agg"),
-    driver_visible=False,
 )
 def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
@@ -1606,7 +1561,6 @@ def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with its own independent row; dedup_ngram_jaccard evicted)."
     "  Evicted from the driver window in the r13 rotation (driver-green r9-r12; streaming family keeps streaming_pair_events + streaming_ohlc_15min visible, as-of/SCD2 shape re-rowed by scd2_user_event_state (in)); still oracle-gated at sf0.01.",
     tags=("streaming", "asof", "scd2"),
-    driver_visible=False,
 )
 def streaming_asof_enrich_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.upsert import (
@@ -1651,7 +1605,6 @@ def streaming_asof_enrich_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rows ds_window_topn_median / ds_window_time_range); still "
     "oracle-gated at sf0.01.",
     tags=("window", "sessionization"),
-    driver_visible=False,
 )
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -1688,7 +1641,6 @@ def _funnel_oracle() -> str:
     "ask #1: the funnel family's first driver row)."
     "  Evicted from the driver window in the r14 rotation (driver-green r11-r13; sequence-agg shape covered by events_ohlc_15min/scd2 rows); still oracle-gated at sf0.01.",
     tags=("events", "funnel", "join"),
-    driver_visible=False,
 )
 def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.events import (
@@ -1761,7 +1713,6 @@ def events_ohlc_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
     "for novel streaming families)."
     "  Evicted from the driver window in the r14 rotation (driver-green r10-r13; streaming family keeps streaming_media_decode (NEW) visible; batch twin events_ohlc_15min stays); still oracle-gated at sf0.01.",
     tags=("streaming", "timeseries", "agg"),
-    driver_visible=False,
 )
 def streaming_ohlc_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.ohlc import (
@@ -1818,7 +1769,6 @@ def streaming_ohlc_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
     "from birth (the r9 standing rule for novel streaming families)."
     "  Evicted from the driver window in the r14 rotation (driver-green r11-r13; streaming family keeps streaming_media_decode (NEW) visible); still oracle-gated at sf0.01.",
     tags=("streaming", "join", "range"),
-    driver_visible=False,
 )
 def streaming_pair_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.join import (
@@ -1866,7 +1816,6 @@ def _retention_oracle() -> str:
     "ask #1: the retention family's first driver row)."
     "  Evicted from the driver window in the r14 rotation (driver-green r11-r13; cohort re-agg shape covered by ds_week_zip_replace (in)); still oracle-gated at sf0.01.",
     tags=("events", "retention", "agg"),
-    driver_visible=False,
 )
 def weekly_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.events import (
@@ -1940,7 +1889,6 @@ def scd2_user_event_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pandas-udf: the reader is a mapInPandas decode over an in-memory
     # splits frame (byte-range tasks), the documented codec-boundary shape
     tags=("source", "avro", "roundtrip", "pandas-udf"),
-    driver_visible=False,
 )
 def etl_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
@@ -1996,7 +1944,6 @@ def etl_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Driver-visible since r9 (VERDICT r8 ask #1 rotation)."
     "  Evicted from the driver window in the r13 rotation (driver-green r9-r12; SCD2 family re-rowed by scd2_user_event_state (in)); still oracle-gated at sf0.01.",
     tags=("upsert", "scd2", "window"),
-    driver_visible=False,
 )
 def scd2_incremental_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.upsert import (

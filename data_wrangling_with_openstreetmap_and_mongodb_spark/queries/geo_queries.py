@@ -89,7 +89,6 @@ _Q6 = "FLOOR(({e}) * 1e6 + 0.5) / 1e6"
     "join; the sort is a top-k (TakeOrderedAndProject) after the limit."
     "  Evicted from the driver window in the r12 rotation (driver-green r7-r11; geo family rows are geo_geohash_cells + radius/intersects); still oracle-gated at sf0.01.",
     tags=("geo", "docstore", "topk"),
-    driver_visible=False,
 )
 def geo_near_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.docstore.pipeline import aggregate
@@ -241,7 +240,6 @@ def geo_polygon_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "  Rotated INTO the driver window in r12 (VERDICT r11 ask #1: never-driver-verified residual burn-down; the gate-only note above is historical)."
     "  Evicted from the driver window in the r14 rotation (driver-green r12-r13; geo family gains geo_radius_join_pairs + geo_within_box_events (in)); still oracle-gated at sf0.01.",
     tags=("geo", "agg"),
-    driver_visible=False,
 )
 def geo_geohash_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import davg
@@ -307,7 +305,6 @@ _Q["geo_geohash_cells"].oracle = _geohash_oracle()
     "geo_radius_join_pairs."
     "  Evicted from the driver window in the r13 rotation (driver-green r9-r12; geo family keeps geo_geohash_cells visible + geo_polygon_customers (in)); still oracle-gated at sf0.01.",
     tags=("geo", "join"),
-    driver_visible=False,
 )
 def geo_radius_join_wrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import quantize6
@@ -363,7 +360,6 @@ _GI_HOLE = [[5.005, 10.005], [25.005, 10.005], [25.005, 35.005],
     "r8 ask #1 rotation)."
     "  Evicted from the driver window in the r13 rotation (driver-green r9-r12; even-odd ray-cast shape re-rowed by geo_polygon_customers (in)); still oracle-gated at sf0.01.",
     tags=("geo", "find", "agg"),
-    driver_visible=False,
 )
 def geo_intersects_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.docstore import DocumentCollection

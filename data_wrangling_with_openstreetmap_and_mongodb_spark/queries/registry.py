@@ -49,7 +49,6 @@ def register(
     oracle: str | None = None,
     doc: str = "",
     tags: tuple[str, ...] = (),
-    driver_visible: bool = True,
 ):
     """Decorator: add a query to the catalog."""
 
@@ -62,7 +61,6 @@ def register(
             oracle=oracle,
             doc=doc,
             tags=tags,
-            driver_visible=driver_visible,
         )
         return fn
 
@@ -158,8 +156,7 @@ def apply_rotation_policy(root: str | None = None) -> set[str]:
     the DRIVER_WINDOW oldest-provenance queries are visible, everything
     else is hidden (but stays in the local sf0.01 oracle-parity gate).
     Called at package import (queries/__init__.py), so the window follows
-    the artifacts with no per-query flag edits; the ``driver_visible``
-    argument to :func:`register` is only the pre-policy default."""
+    the artifacts with no per-query flag edits."""
     selected = set(rotation_order(root)[:DRIVER_WINDOW])
     for q in QUERIES.values():
         q.driver_visible = q.name in selected

@@ -52,7 +52,6 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.queries.registry import
     doc="$match+$group compound key w/ $sum/$avg (05/avg_population.py:35-42; README.md:1140-1144)"
     "  Evicted from the driver window in the r12 rotation (driver-green r1-r11; stays entry()'s flagship and in the pinned r2 bench subset); still oracle-gated at sf0.01.",
     tags=("agg", "flagship"),
-    driver_visible=False,
 )
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -87,7 +86,6 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="$group/$sum:1 + $sort:-1 + $limit (05/tweet_apps.py:33-35)",
     tags=("agg", "topk"),
-    driver_visible=False,
 )
 def top_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -111,7 +109,6 @@ def top_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="find({'manufacturer':'Porsche', ...}, projection) (04/find_porsche.py:17; 04/find_cars.py:34)",
     tags=("filter", "project"),
-    driver_visible=False,
 )
 def find_building_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -137,7 +134,6 @@ def find_building_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "covered by pricing_summary's date filter; slot given to "
     "events_gap_filled_locf); still in the local parity gate.",
     tags=("filter", "agg"),
-    driver_visible=False,
 )
 def orders_in_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -163,7 +159,6 @@ def orders_in_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="$in membership (04/find_cars.py:16)",
     tags=("filter",),
-    driver_visible=False,
 )
 def nations_in_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
@@ -190,7 +185,6 @@ def nations_in_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="$exists + dot-path predicate (05/most_common_city_name.py:39; 04/dot_find.py:18)"
     "  Evicted from the driver window in the r12 rotation (driver-green r1-r11); still oracle-gated at sf0.01.",
     tags=("filter", "json"),
-    driver_visible=False,
 )
 def events_with_large_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -217,7 +211,6 @@ def events_with_large_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="$project rename + computed field (05/most_followed_brasilians.py:43-45)",
     tags=("project",),
-    driver_visible=False,
 )
 def project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -244,7 +237,6 @@ def project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     "compound-key aggregate) to rotate in etl_avro_roundtrip; stays in "
     "the oracle-parity gate.",
     tags=("agg",),
-    driver_visible=False,
 )
 def avg_balance_by_nation_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -274,7 +266,6 @@ def avg_balance_by_nation_segment(spark: SparkSession, sf_dir: str) -> DataFrame
     "ds_value_stats_by_type carried it r1-r10); stays in the "
     "local sf0.01 parity gate.",
     tags=("agg",),
-    driver_visible=False,
 )
 def avg_of_avgs_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -296,7 +287,6 @@ def avg_of_avgs_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="global aggregate, _id: null (05/avg_city_pop_for_indian_regions.py:42-43)",
     tags=("agg",),
-    driver_visible=False,
 )
 def global_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -324,7 +314,6 @@ def global_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "  Driver r1-r9; evicted in the r10 rotation (group-count family keeps "
     "pricing_summary), still oracle-gated at sf0.01.",
     tags=("agg", "array"),
-    driver_visible=False,
 )
 def statuses_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -351,7 +340,6 @@ def statuses_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ds_value_stats_by_type carried a row r1-r10 before its own "
     "second-wave eviction); still oracle-gated at sf0.01.",
     tags=("agg",),
-    driver_visible=False,
 )
 def distinct_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -384,7 +372,6 @@ def distinct_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFram
     "since r9; the N-ary $topN family generalizes both); slot given to the new BPE "
     "training family (ask #8 hygiene); still in the local parity gate.",
     tags=("window", "topk"),
-    driver_visible=False,
 )
 def top_order_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -420,7 +407,6 @@ def top_order_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ds_unwind_token_counts (same shape through the docstore pipeline "
     "compiler); this slot went to a novel operator family.",
     tags=("explode", "topk"),
-    driver_visible=False,
 )
 def top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -451,7 +437,6 @@ def top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast shape already carries the upsert_supplier_acctbal hard row; "
     "the slot goes to the decontamination operator family.",
     tags=("join", "agg"),
-    driver_visible=False,
 )
 def customers_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -486,7 +471,6 @@ def customers_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="top-k agg then per-key find (README.md:911-920) as broadcast left-semi join"
     "  Evicted from the driver window in the r11 second wave (driver-green through r10; join+topk shapes covered by ds_lookup_group and bm25_keyword_topk); still oracle-gated at sf0.01.",
     tags=("join", "topk"),
-    driver_visible=False,
 )
 def orders_of_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -525,7 +509,6 @@ def orders_of_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "new chunk_training_windows family (ask #8 hygiene); still in the "
     "local parity gate.",
     tags=("datetime", "agg"),
-    driver_visible=False,
 )
 def orders_by_dayofweek(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -554,7 +537,6 @@ def orders_by_dayofweek(spark: SparkSession, sf_dir: str) -> DataFrame:
     "orders_by_dayofweek and the streaming/sessionize families; stays in "
     "the local sf0.01 parity gate.",
     tags=("datetime",),
-    driver_visible=False,
 )
 def order_age_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -581,7 +563,6 @@ def order_age_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="batch time-bucketed rollup (window(ts, '1 hour') analogue; SURVEY.md §2.8)",
     tags=("datetime", "agg", "streaming-analog"),
-    driver_visible=False,
 )
 def hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_with_time(spark, sf_dir)
@@ -609,7 +590,6 @@ def hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "flat-out hash can't observe the mid-plan nesting anyway; slot given to "
     "scd2_incremental_state); still in the local parity gate.",
     tags=("reshape",),
-    driver_visible=False,
 )
 def nest_unnest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 500)
@@ -644,7 +624,6 @@ def nest_unnest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "grouping-sets path ⊂ statuses_per_priority hash-agg family; slot given "
     "to geo_radius_join_wrap); still in the local parity gate.",
     tags=("agg", "cube"),
-    driver_visible=False,
 )
 def cube_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -665,7 +644,6 @@ def cube_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "plan is covered by cube_order_counts (cube ⊃ rollup); the slot goes to "
     "ann_ivf_kmeans_topk.",
     tags=("agg", "rollup"),
-    driver_visible=False,
 )
 def rollup_customer_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -698,7 +676,6 @@ _SEGMENTS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
     "lineitem_measure_stats; slot given to dsir_gumbel_resample); still in "
     "the local parity gate.",
     tags=("reshape", "agg"),
-    driver_visible=False,
 )
 def pivot_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -730,7 +707,6 @@ def pivot_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="exact percentile/median per group (R-7 interpolation, bit-matched)"
     "  Driver r1-r9; evicted in the r10 rotation (quantile family covered by ds_window_topn_median's new driver row + the ds_minmax_topn gate), still oracle-gated at sf0.01.",
     tags=("agg", "percentile"),
-    driver_visible=False,
 )
 def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no spread(): percentile buffers merge once either way; the extra
@@ -875,7 +851,6 @@ def shipping_priority_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     "nation_order_ranking; slot given to geo_intersects_events); still in "
     "the local parity gate.",
     tags=("sql", "join", "agg"),
-    driver_visible=False,
 )
 def sql_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_temp_views(spark, sf_dir)
@@ -898,7 +873,6 @@ def sql_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="full ranked listing $sort desc no limit (README.md:1056-1059,1101-1104)"
     "  Driver r1-r9; evicted in the r10 rotation (sort/rank family keeps events_with_large_k's driver row), still oracle-gated at sf0.01.",
     tags=("join", "sort"),
-    driver_visible=False,
 )
 def nation_order_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")

@@ -83,7 +83,6 @@ def _sql_stop_list(lang: str) -> str:
     "second wave the visible text rows are pii_redaction_audit and "
     "decontaminate_ngrams) — rotated out for ds_graph_reachable_orders.",
     tags=("text", "agg"),
-    driver_visible=False,
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no spread(): plain codegen'd regex counts off the scan beat the extra
@@ -124,7 +123,6 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="composite quality scoring (length/punct/stopword/word-length bands)"
     "  Evicted from the driver window in the r11 second wave (driver-green through r10; text/quality shapes covered by pii_redaction_audit and dsir_gumbel_resample); still oracle-gated at sf0.01.",
     tags=("text", "agg"),
-    driver_visible=False,
 )
 def text_quality_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -176,7 +174,6 @@ def text_quality_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "never-driver-verified residual burn-down)."
     "  Evicted from the driver window in the r14 rotation (driver-green r12-r13; rule-audit shape covered by text_repetition_metrics (visible)); still oracle-gated at sf0.01.",
     tags=("text", "curation", "agg"),
-    driver_visible=False,
 )
 def c4_rule_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.text import (
@@ -219,7 +216,6 @@ def _sql_lang_score(lang: str) -> str:
     "pii_redaction_audit the still-visible text row and classify covered "
     "by streaming_nb_score_confusion); still oracle-gated at sf0.01.",
     tags=("text", "agg"),
-    driver_visible=False,
 )
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -245,7 +241,6 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="exact dedup via normalized-content fingerprint hash-aggregate"
     "  Driver r1-r9; evicted in the r10 rotation (md5 hash-agg family keeps dedup_exact_substring's driver row), still oracle-gated at sf0.01.",
     tags=("dedup", "agg"),
-    driver_visible=False,
 )
 def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -291,7 +286,6 @@ def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parked r7: near-duplicate shape of dedup_exact_substring (both are
     # span-removal + reconstruction; the sliding-window form subsumes this
     # disjoint-chunk one) — still oracle-gated at sf0.01 every run
-    driver_visible=False,
 )
 def span_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import span_dedup
@@ -343,7 +337,6 @@ def span_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffles — md5 map-side, only (hash, id, pos) moves."
     "  Evicted from the driver window in the r12 rotation (driver-green r7-r11); still oracle-gated at sf0.01.",
     tags=("dedup", "curation"),
-    driver_visible=False,
 )
 def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import exact_substring_dedup
@@ -388,7 +381,6 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     "slot given to streaming_asof_enrich_status); still in the local "
     "parity gate.",
     tags=("dedup", "join"),
-    driver_visible=False,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -467,7 +459,6 @@ def _minhash_oracle_sql(
     "band buckets, candidate set) oracle-reproducible in SQL."
     "  Evicted from the driver window in the r12 rotation (driver-green r2-r11; lsh family row is now dedup_simhash_k2 + dedup_incremental_minhash); still oracle-gated at sf0.01.",
     tags=("dedup", "lsh"),
-    driver_visible=False,
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -510,7 +501,6 @@ def _simhash_oracle_sql(max_hamming: int) -> str:
     "combinatorial key_chunks mode is recall-1 property-tested in "
     "tests/test_dedup_properties.py); still oracle-gated at sf0.01.",
     tags=("dedup", "lsh"),
-    driver_visible=False,
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -557,7 +547,6 @@ def dedup_simhash_k2(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_near_clusters, cosine ranking via ds_vector_search); still "
     "oracle-gated at sf0.01.",
     tags=("dedup", "similarity"),
-    driver_visible=False,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
@@ -600,7 +589,6 @@ def _query_vector(spark: SparkSession, sf_dir: str) -> list[float]:
     doc="exact cosine top-k (brute force baseline; TakeOrderedAndProject plan)"
     "  Driver r1-r9; evicted in the r10 rotation (exact-cosine ranking shape-covered by ds_vector_search's driver row and the IVF family's ann_ivfpq_topk), still oracle-gated at sf0.01.",
     tags=("similarity", "topk"),
-    driver_visible=False,
 )
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
@@ -654,7 +642,6 @@ def _ann_lsh_oracle_sql(
     "covered by the trained-IVF family; slot given to lc_distinct_users); "
     "still in the local parity gate.",
     tags=("similarity", "topk", "lsh"),
-    driver_visible=False,
 )
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
@@ -694,7 +681,6 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "eval family's first driver row)."
     "  Evicted from the driver window in the r13 rotation (driver-green r11-r12; ANN family re-rowed by ann_ivf_topk + ann_pq_topk (in)); still oracle-gated at sf0.01.",
     tags=("similarity", "topk", "eval"),
-    driver_visible=False,
 )
 def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import quantize6
@@ -865,7 +851,6 @@ def _ann_ivf_kmeans_oracle_sql(
     # cluster-partitioned probe shape (bruteforce baseline + IVF-PQ stay
     # driver-visible for the ANN family) — rotated out for the geo family's
     # geo_near_customers; still oracle-gated at sf0.01 every run
-    driver_visible=False,
 )
 def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.similarity import (
@@ -1367,7 +1352,6 @@ _pipeline_split_bucket = _split_bucket_sql_fn("doc_id")
     "the r11 second wave (the pipeline family's first driver row)."
     "  Evicted from the driver window in the r14 rotation (driver-green r11-r13; pipeline shape covered by visible agg/window rows); still oracle-gated at sf0.01.",
     tags=("curation", "pipeline", "agg"),
-    driver_visible=False,
 )
 def corpus_pipeline_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (
@@ -1432,7 +1416,6 @@ def corpus_pipeline_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the r11 second wave (the diff family's first driver row)."
     "  Evicted from the driver window in the r14 rotation (driver-green r11-r13; diff shape covered by ds_merge_insert_pipeline (in)); still oracle-gated at sf0.01.",
     tags=("quality", "join", "diff"),
-    driver_visible=False,
 )
 def orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.upsert import table_diff
@@ -1504,7 +1487,6 @@ def events_trailing_avg_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     "  Rotated INTO the driver window in r12 (VERDICT r11 ask #1: never-driver-verified residual burn-down; the gate-only note above is historical)."
     "  Evicted from the driver window in the r14 rotation (driver-green r12-r13; search family keeps ds_atlas_search visible); still oracle-gated at sf0.01.",
     tags=("search", "text", "join"),
-    driver_visible=False,
 )
 def phrase_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.search import (
@@ -1648,7 +1630,6 @@ PAGERANK_BROADCAST_MAX_NODES = 10_000_000
     "sync-loop form's)."
     "  Evicted from the driver window in the r13 rotation (driver-green r10-r12; iterative-graph family covered by dedup_keep_best_docs (visible)); still oracle-gated at sf0.01.",
     tags=("graph", "iterative-unrolled", "agg"),
-    driver_visible=False,
 )
 def supplier_customer_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import pagerank
@@ -1681,7 +1662,6 @@ def supplier_customer_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "encode, probe selection, and the dsum ADC ranking bit-for-bit."
     "  Evicted from the driver window in the r12 rotation (driver-green r3-r11; ivf/pq/kmeans covered by ann_recall_at_k + semantic_dedup_embeddings); still oracle-gated at sf0.01.",
     tags=("similarity", "topk", "ivf", "pq", "kmeans"),
-    driver_visible=False,
 )
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.similarity import (
@@ -1724,7 +1704,6 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "from the driver window (r3): strict subset of dedup_exact_groups; the "
     "slot goes to a distinct operator family.",
     tags=("text",),
-    driver_visible=False,
 )
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1754,7 +1733,6 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shapes covered by dedup_exact_substring's sliding-window row); still "
     "oracle-gated at sf0.01.",
     tags=("text", "fingerprint"),
-    driver_visible=False,
 )
 def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1844,7 +1822,6 @@ def text_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     "never shuffles by shingle."
     "  Evicted from the driver window in the r12 rotation (driver-green r3-r11; replaced by decontaminate_bloom); still oracle-gated at sf0.01.",
     tags=("text", "curation", "join"),
-    driver_visible=False,
 )
 def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (
@@ -1877,7 +1854,6 @@ def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     "  Rotated INTO the driver window in r12 (VERDICT r11 ask #1: never-driver-verified residual burn-down; the gate-only note above is historical)."
     "  Evicted from the driver window in the r14 rotation (driver-green r12-r13; split/salt shape covered by stratified_sample_documents (visible) + dsir_importance_weights (in)); still oracle-gated at sf0.01.",
     tags=("curation", "agg"),
-    driver_visible=False,
 )
 def train_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (
@@ -1962,7 +1938,6 @@ def stratified_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     "loop is additionally pinned by planted-chain unit tests."
     "  Evicted from the driver window in the r12 rotation (driver-green r3-r11; graph/iterative row is now dedup_keep_best_docs); still oracle-gated at sf0.01.",
     tags=("dedup", "graph", "iterative"),
-    driver_visible=False,
 )
 def dedup_near_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import (
@@ -2007,7 +1982,6 @@ def dedup_near_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming_pair_events interval-join row); planted-interleaving unit "
     "tests pin the operator; still oracle-gated at sf0.01.",
     tags=("join", "asof", "window"),
-    driver_visible=False,
 )
 def events_asof_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import ts_micros
@@ -2059,7 +2033,6 @@ def events_asof_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(VERDICT r10 ask #1: the range family's first driver row)."
     "  Evicted from the driver window in the r14 rotation (driver-green r11-r13; banded self-join shape re-rowed by geo_radius_join_pairs (in)); still oracle-gated at sf0.01.",
     tags=("join", "range", "window"),
-    driver_visible=False,
 )
 def event_pairs_within_30min(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import ts_micros
@@ -2121,7 +2094,6 @@ def _pii_oracle() -> str:
     "rotation (novel privacy family)."
     "  Evicted from the driver window in the r12 rotation (driver-green r3-r11); still oracle-gated at sf0.01.",
     tags=("privacy", "text", "agg"),
-    driver_visible=False,
 )
 def pii_redaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.privacy import (
@@ -2159,7 +2131,6 @@ def _bm25_oracle() -> str:
     "rotation (novel search family)."
     "  Evicted from the driver window in the r12 rotation (driver-green r3-r11; search family rows are now hybrid_search_rrf + phrase_search_docs); still oracle-gated at sf0.01.",
     tags=("search", "text", "topk"),
-    driver_visible=False,
 )
 def bm25_keyword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.search import (
@@ -2233,7 +2204,6 @@ def _hybrid_rrf_oracle() -> str:
     "  Rotated INTO the driver window in r12 (VERDICT r11 ask #1: never-driver-verified residual burn-down; the gate-only note above is historical)."
     "  Evicted from the driver window in the r14 rotation (driver-green r12-r13; search family keeps ds_atlas_search visible); still oracle-gated at sf0.01.",
     tags=("search", "similarity", "topk"),
-    driver_visible=False,
 )
 def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.search import (
@@ -2328,7 +2298,6 @@ def _bigram_oracle() -> str:
     "  Rotated INTO the driver window in r12 (VERDICT r11 ask #1: never-driver-verified residual burn-down; the gate-only note above is historical)."
     "  Evicted from the driver window in the r14 rotation (driver-green r12-r13; LM family keeps doc_unigram_logprob visible); still oracle-gated at sf0.01.",
     tags=("text", "quality", "topk"),
-    driver_visible=False,
 )
 def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.search import (
@@ -2428,7 +2397,6 @@ def _int8_oracle() -> str:
     "r11 second wave (the quantization family's first driver row)."
     "  Evicted from the driver window in the r13 rotation (driver-green r11-r12; embedding-expression family covered by diversity_sampled_embeddings (in)); still oracle-gated at sf0.01.",
     tags=("similarity", "quantization"),
-    driver_visible=False,
 )
 def embedding_int8_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.similarity import (
@@ -2472,7 +2440,6 @@ def _pack_oracle() -> str:
     "rotation (novel packing family)."
     "  Evicted from the driver window in the r12 rotation (driver-green r3-r11; chunking row is now chunk_token_id_windows); still oracle-gated at sf0.01.",
     tags=("curation", "window"),
-    driver_visible=False,
 )
 def pack_training_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (
@@ -2511,7 +2478,6 @@ def _mixture_oracle() -> str:
     "sampling family's first driver row)."
     "  Evicted from the driver window in the r14 rotation (driver-green r11-r13; sampling family keeps stratified_sample_documents visible); still oracle-gated at sf0.01.",
     tags=("curation", "sampling"),
-    driver_visible=False,
 )
 def mixture_sampled_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (
@@ -2548,7 +2514,6 @@ def mixture_sampled_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "row — the one pandas-UDF-justified corpus op)."
     "  Evicted from the driver window in the r14 rotation (driver-green r11-r13; normalize shape covered by ds_text_find (in) + text rows); still oracle-gated at sf0.01.",
     tags=("text", "normalize", "pandas-udf"),
-    driver_visible=False,
 )
 def unicode_normalization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.normalize import (
@@ -2639,7 +2604,6 @@ def _minhash_incremental_oracle_sql(
     "first driver row)."
     "  Evicted from the driver window in the r14 rotation (driver-green r11-r13; minhash family keeps dedup_simhash_k2 + dedup_keep_best_docs visible); still oracle-gated at sf0.01.",
     tags=("dedup", "lsh", "incremental"),
-    driver_visible=False,
 )
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
@@ -2703,7 +2667,6 @@ def _cms_oracle_sql(depth: int, width: int, top_k: int, seed: int = 7) -> str:
     "evidence than one that cannot be."
     "  Evicted from the driver window in the r12 rotation (driver-green r3-r11; sketch family row is now decontaminate_bloom); still oracle-gated at sf0.01.",
     tags=("sketch", "agg", "approx"),
-    driver_visible=False,
 )
 def cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.sketch import (
@@ -2785,7 +2748,6 @@ def _bloom_decontam_oracle_sql(n_bits: int, n_hashes: int) -> str:
     "  Rotated INTO the driver window in r12 (VERDICT r11 ask #1: never-driver-verified residual burn-down; the gate-only note above is historical)."
     "  Evicted from the driver window in the r14 rotation (driver-green r12-r13; membership-sketch shape covered by approx_distinct_users (visible)); still oracle-gated at sf0.01.",
     tags=("sketch", "curation", "join"),
-    driver_visible=False,
 )
 def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (
@@ -2951,7 +2913,6 @@ def _chunk_id_windows_oracle_sql(vocab_size: int, chunk: int, overlap: int) -> s
     "  Rotated INTO the driver window in r12 (VERDICT r11 ask #1: never-driver-verified residual burn-down; the gate-only note above is historical)."
     "  Evicted from the driver window in the r14 rotation (driver-green r12-r13; chunking shape covered by vocab_encode_stats (visible)); still oracle-gated at sf0.01.",
     tags=("text", "curation", "chunking"),
-    driver_visible=False,
 )
 def chunk_token_id_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (
@@ -3002,7 +2963,6 @@ def _gap_fill_oracle_sql() -> str:
     "family; orders_in_range rotated out in exchange)."
     "  Evicted from the driver window in the r11 second wave (driver-green r4-r10; spine+fill family covered by ds_fill_linear's driver row); still oracle-gated at sf0.01.",
     tags=("events", "window", "resample"),
-    driver_visible=False,
 )
 def events_gap_filled_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import ts_micros
@@ -3048,7 +3008,6 @@ def _gap_interp_oracle_sql() -> str:
     "  Rotated INTO the driver window in r12 (VERDICT r11 ask #1: never-driver-verified residual burn-down; the gate-only note above is historical)."
     "  Evicted from the driver window in the r14 rotation (driver-green r12-r13; spine+fill shape re-rowed by ds_densify_hourly (in)); still oracle-gated at sf0.01.",
     tags=("events", "window", "resample"),
-    driver_visible=False,
 )
 def events_gap_interpolated(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import ts_micros
@@ -3091,7 +3050,6 @@ def _twa_oracle_sql() -> str:
     "for the TWAP family; ds_top_clickers rotated out in exchange)."
     "  Driver r1-r9; evicted in the r10 rotation (windowed-rate shape covered by ds_window_time_range's new driver row + the ds_window_integral gate), still oracle-gated at sf0.01.",
     tags=("events", "window", "agg"),
-    driver_visible=False,
 )
 def events_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import ts_micros
@@ -3134,7 +3092,6 @@ def _lc_oracle_sql(m: int) -> str:
     "linear-counting family; ann_lsh_topk rotated out in exchange)."
     "  Driver r1-r9; evicted in the r10 rotation (sketch family keeps cms_token_counts' driver row), still oracle-gated at sf0.01.",
     tags=("sketch", "agg", "approx"),
-    driver_visible=False,
 )
 def lc_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.sketch import (
@@ -3259,7 +3216,6 @@ def _chunk_oracle_sql(chunk_size: int, overlap: int) -> str:
     "out in exchange."
     "  Driver r1-r9; evicted in the r10 rotation (chunk/pack family keeps pack_training_sequences' driver row; chunk_token_id_windows gate unchanged), still oracle-gated at sf0.01.",
     tags=("curation", "chunking", "explode"),
-    driver_visible=False,
 )
 def chunk_training_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (
@@ -3314,7 +3270,6 @@ def chunk_training_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "merge-for-merge pytest vs the pure-Python reference); still "
     "oracle-gated at sf0.01.",
     tags=("curation", "bpe", "agg", "topk"),
-    driver_visible=False,
 )
 def bpe_first_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.bpe import (
@@ -3448,7 +3403,6 @@ def nb_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "independent row; extreme_value_events evicted)."
     "  Evicted from the driver window in the r13 rotation (driver-green r9-r12; shares its oracle bit-exactly with nb_lang_confusion (visible), streaming family keeps two rows visible); still oracle-gated at sf0.01.",
     tags=("streaming", "classify", "text"),
-    driver_visible=False,
 )
 def streaming_nb_score_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.classify import (
@@ -3513,7 +3467,6 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation impo
     "rotation)."
     "  Evicted from the driver window in the r12 rotation (driver-green r9-r11; sampling covered by stratified_sample_documents + train_split_assign); still oracle-gated at sf0.01.",
     tags=("trainingdata", "shuffle"),
-    driver_visible=False,
 )
 def shuffled_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (
@@ -3564,7 +3517,6 @@ def _gumbel_oracle() -> str:
     "rows).  Driver-visible r9-r11 (VERDICT r8 ask #1 rotation)."
     "  Evicted from the driver window in the r12 rotation (driver-green r9-r11; sampling family keeps mixture_sampled_counts + stratified_sample_documents + train_split_assign visible); still oracle-gated at sf0.01.",
     tags=("curation", "quality", "topk"),
-    driver_visible=False,
 )
 def dsir_gumbel_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (

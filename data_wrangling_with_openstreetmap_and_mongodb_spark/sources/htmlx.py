@@ -2,19 +2,21 @@
 
 The reference uses BeautifulSoup (02/process.py:41-76, 02/carriers.py:16-25);
 bs4 isn't a baked-in dependency here, so the extractors run on
-``html.parser.HTMLParser`` — no new deps, same semantics.  Parsing runs
-Arrow-batched per file; the file-key join (J3: courier/airport from the
+``html.parser.HTMLParser`` — no new deps, same semantics.  Parsing is one
+per-file function under
+:func:`~data_wrangling_with_openstreetmap_and_mongodb_spark.rowmap.map_rows`
+(Arrow-batched, map-only); the file-key join (J3: courier/airport from the
 filename) is pure Column algebra over ``path``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from data_wrangling_with_openstreetmap_and_mongodb_spark.rowmap import map_rows
 from data_wrangling_with_openstreetmap_and_mongodb_spark.sources.xmlx import (
     read_file_contents,
 )
@@ -89,46 +91,31 @@ def scrape_tables(
     Type casts / row filters (skip TOTAL, comma-int parse) stay in Column
     space downstream (02/process.py:41-76; C11).
     """
-    import pandas as pd
-
     files = read_file_contents(spark, path)
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for p, text in zip(pdf["path"], pdf["text"]):
-                tp = _TableParser(table_class)
-                tp.feed(text)
-                out.extend(
-                    {"path": p, "row_index": i, "cells": row}
-                    for i, row in enumerate(tp.rows)
-                )
-            if out:
-                yield pd.DataFrame(out)
+    def parse(p, text):
+        tp = _TableParser(table_class)
+        tp.feed(text)
+        return (
+            {"path": p, "row_index": i, "cells": row}
+            for i, row in enumerate(tp.rows)
+        )
 
-    return files.mapInPandas(
-        parse, schema="path string, row_index int, cells array<string>"
-    )
+    schema = "path string, row_index int, cells array<string>"
+    return map_rows(files, ["path", "text"], parse, schema)
 
 
 def scrape_options(spark: SparkSession, path: str, select_id: str) -> DataFrame:
     """S11: <option> values of a <select> → ``(path, value)``; prefix filters
     (exclude 'All…') compose downstream (02/carriers.py:23, P10)."""
-    import pandas as pd
-
     files = read_file_contents(spark, path)
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for p, text in zip(pdf["path"], pdf["text"]):
-                op = _OptionParser(select_id)
-                op.feed(text)
-                out.extend({"path": p, "value": v} for v in op.values)
-            if out:
-                yield pd.DataFrame(out)
+    def parse(p, text):
+        op = _OptionParser(select_id)
+        op.feed(text)
+        return ({"path": p, "value": v} for v in op.values)
 
-    return files.mapInPandas(parse, schema="path string, value string")
+    return map_rows(files, ["path", "text"], parse, "path string, value string")
 
 
 def file_key_columns(df: DataFrame, pattern: str, names: list[str]) -> DataFrame:

@@ -7,11 +7,12 @@ The reference loops offset-paged GETs on the driver (01/nytimes.py:51-96,
 - :func:`fetch_paged` — the faithful driver-side loop for small result sets
   (it is I/O against one API endpoint; distribution buys nothing below rate
   limits), returning a DataFrame.
-- :func:`fetch_pages_distributed` — page fan-out via ``mapInPandas`` over an
-  offsets DataFrame: each task fetches its page range, so ingest scales with
-  executors up to the API's rate limit.  The page fetcher is injected as a
-  plain callable, which also makes the operator testable without a network
-  (and this container has none).
+- :func:`fetch_pages_distributed` — page fan-out via
+  :func:`~data_wrangling_with_openstreetmap_and_mongodb_spark.rowmap.map_rows`
+  over an offsets DataFrame: each task fetches its page range, so ingest
+  scales with executors up to the API's rate limit.  The page fetcher is
+  injected as a plain callable, which also makes the operator testable
+  without a network.
 
 Both are transport-agnostic: the default HTTP fetcher is gated behind a
 ``requests`` import-try and never imported at module load.
@@ -23,6 +24,8 @@ from collections.abc import Callable, Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+from data_wrangling_with_openstreetmap_and_mongodb_spark.rowmap import map_rows
 
 PageFetcher = Callable[[int, int], list[dict[str, Any]]]
 """(offset, limit) → list of record dicts; empty list = past the end."""
@@ -76,19 +79,12 @@ def fetch_pages_distributed(
 
     ``fetcher`` must be picklable (top-level function or closure over plain
     values) — it runs on executors."""
-    import pandas as pd
-
     offsets = spark.range(n_pages).selectExpr(f"id * {page_size} AS offset")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[dict[str, Any]] = []
-            for off in pdf["offset"]:
-                out.extend(fetcher(int(off), page_size))
-            if out:
-                yield pd.DataFrame(out)
+    def page(off):
+        return fetcher(int(off), page_size)
 
-    return offsets.mapInPandas(run, schema=schema)
+    return map_rows(offsets, ["offset"], page, schema)
 
 
 ChunkStream = Callable[[str, int], Iterator[bytes]]

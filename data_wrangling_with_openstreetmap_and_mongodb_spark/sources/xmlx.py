@@ -5,19 +5,24 @@
   expression: split the file content on ``<?xml`` declaration boundaries and
   posexplode.  Distributed per file (binaryFile listing), no driver loops.
 - :func:`read_xml_rows` — tree scan + path extraction (02/authors.py:13-32):
-  parse each split document (or each file) with ElementTree inside an
-  Arrow-batched ``mapInPandas`` and emit rows per a caller-supplied extractor;
+  parse each split document (or each file) with ElementTree in a per-document
+  function under
+  :func:`~data_wrangling_with_openstreetmap_and_mongodb_spark.rowmap.map_rows`
+  (Arrow-batched, map-only) and emit rows per a caller-supplied extractor;
   the XPath-ish navigation happens in Python once per document, the resulting
   DataFrame is ordinary columns from there on.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+import xml.etree.ElementTree as ET
+from collections.abc import Callable
 from typing import Any
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from data_wrangling_with_openstreetmap_and_mongodb_spark.rowmap import map_rows
 
 
 def read_file_contents(spark: SparkSession, path: str) -> DataFrame:
@@ -57,17 +62,8 @@ def read_xml_rows(
     of plain dicts matching ``schema``.  Runs Arrow-batched; one parse per
     document, constant memory per task.
     """
-    import pandas as pd
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import xml.etree.ElementTree as ET
+    def parse(xml):
+        return extractor(ET.fromstring(xml))
 
-        for pdf in batches:
-            out: list[dict[str, Any]] = []
-            for xml in pdf[xml_col]:
-                root = ET.fromstring(xml)
-                out.extend(extractor(root))
-            if out:
-                yield pd.DataFrame(out)
-
-    return docs.mapInPandas(parse, schema=schema)
+    return map_rows(docs, [xml_col], parse, schema)

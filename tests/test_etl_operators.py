@@ -111,28 +111,6 @@ class TestMultimodal:
         with pytest.raises(ValueError, match="signature|truncated"):
             decode_payload(b"\x89PNG", "image/png")
 
-    def test_resize_stub_contract(self, spark):
-        import hashlib
-
-        from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
-            resize_payloads,
-        )
-
-        docs = spark.createDataFrame(
-            [(1, "x" * 300), (2, "short")], ["doc_id", "text"]
-        )
-        rows = {
-            r["doc_id"]: r
-            for r in resize_payloads(with_binary_payload(docs), target_bytes=64).collect()
-        }
-        # binary in → binary out, 1→1, metadata reflects post-transform size
-        for r in rows.values():
-            assert len(bytes(r["payload"])) == 64
-            assert r["meta"]["n_bytes"] == 64
-            assert r["resized_md5"] == hashlib.md5(bytes(r["payload"])).hexdigest()
-        assert bytes(rows[1]["payload"]) == b"x" * 64  # truncated
-        assert bytes(rows[2]["payload"]) == b"short" + b"\x00" * 59  # padded
-
 
 class TestStreamingRollup:
     def test_stream_matches_batch(self, spark, sf_dir):

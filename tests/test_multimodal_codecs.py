@@ -13,6 +13,8 @@ import numpy as np
 import pytest
 
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
+    _media_plan,
+    _png_plan,
     decode_bmp,
     decode_payload,
     decode_png,
@@ -22,8 +24,7 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal im
     encode_wav,
     extract_media_features,
     extract_png_features,
-    synthesize_media_payloads,
-    synthesize_png_payloads,
+    synthesize_payloads,
 )
 
 FIXTURES = Path(__file__).parent / "fixtures"
@@ -418,13 +419,12 @@ class TestResize:
             decode_bmp,
             resize_bmp,
             resize_bmp_payloads,
-            synthesize_media_payloads,
         )
 
         docs = spark.range(0, 10).withColumnRenamed("id", "doc_id")
         src = {r["doc_id"]: bytes(r["payload"])
-               for r in synthesize_media_payloads(docs).collect()}
-        out = resize_bmp_payloads(synthesize_media_payloads(docs), 4, 3).collect()
+               for r in synthesize_payloads(docs, _media_plan).collect()}
+        out = resize_bmp_payloads(synthesize_payloads(docs, _media_plan), 4, 3).collect()
         assert {r["doc_id"] for r in out} == {0, 2, 4, 6, 8}  # WAV rows dropped
         for r in out:
             expect = resize_bmp(decode_bmp(src[r["doc_id"]]), 4, 3)
@@ -460,13 +460,12 @@ class TestResample:
             decode_wav,
             resample_wav,
             resample_wav_payloads,
-            synthesize_media_payloads,
         )
 
         docs = spark.range(0, 10).withColumnRenamed("id", "doc_id")
         src = {r["doc_id"]: bytes(r["payload"])
-               for r in synthesize_media_payloads(docs).collect()}
-        out = resample_wav_payloads(synthesize_media_payloads(docs), 8000).collect()
+               for r in synthesize_payloads(docs, _media_plan).collect()}
+        out = resample_wav_payloads(synthesize_payloads(docs, _media_plan), 8000).collect()
         assert {r["doc_id"] for r in out} == {1, 3, 5, 7, 9}  # BMP rows dropped
         for r in out:
             rate0, ch, s0 = decode_wav(src[r["doc_id"]])
@@ -485,7 +484,7 @@ class TestMediaPipeline:
         docs = spark.range(0, 20).withColumnRenamed("id", "doc_id")
         rows = {
             r["doc_id"]: r
-            for r in extract_media_features(synthesize_media_payloads(docs)).collect()
+            for r in extract_media_features(synthesize_payloads(docs, _media_plan)).collect()
         }
         assert len(rows) == 20
         for d in range(20):
@@ -526,7 +525,7 @@ class TestPngPipeline:
         docs = spark.range(0, 24).withColumnRenamed("id", "doc_id")
         rows = {
             r["doc_id"]: r
-            for r in extract_png_features(synthesize_png_payloads(docs)).collect()
+            for r in extract_png_features(synthesize_payloads(docs, _png_plan)).collect()
         }
         assert len(rows) == 24
         for d in range(24):
@@ -1133,11 +1132,13 @@ class TestJpeg:
             decode_payload,
         )
 
-        d = decode_payload(_jpeg_plan(4), "image/jpeg")
+        fmt, payload = _jpeg_plan(4)
+        assert fmt == "image/jpeg"
+        d = decode_payload(payload, fmt)
         assert d["kind"] == "image" and (d["width"], d["height"]) == (8, 16)
         # closed-form gray: block k value (4+17k)%256, blocks stacked 1 wide
         assert (d["pixels"][:8] == 4).all() and (d["pixels"][8:] == 21).all()
-        d = decode_payload(_jpeg_plan(3), "image/jpeg")
+        d = decode_payload(_jpeg_plan(3)[1], "image/jpeg")
         assert d["pixels"].shape == (8, 16, 3)
 
 

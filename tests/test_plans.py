@@ -216,6 +216,16 @@ class TestRound3OperatorPlans:
         assert "CartesianProduct" not in plan
         assert has_top_k(QUERIES["ann_ivfpq_topk"].fn(spark, sf_dir))
 
+    def test_asof_join_is_union_merge_one_exchange(self, spark, sf_dir):
+        """As-of join: both sides union into ONE key exchange and one
+        window pass — no join at all, so never a non-equi nested loop."""
+        from data_wrangling_with_openstreetmap_and_mongodb_spark.plans import executed_plan
+
+        plan = executed_plan(q("events_asof_last_order", spark, sf_dir))
+        assert "Union" in plan and "Window" in plan, plan[:1500]
+        assert plan.count("Exchange hashpartitioning") == 1, plan[:1500]
+        assert "Join" not in plan, plan[:1500]
+
     def test_semantic_dedup_packs_cells_single_scan(self, spark, sf_dir):
         """The default (sub_blocks=1) SemDeDup plan packs each cell once and
         multiplies it in an Arrow batch: ONE scan of the embeddings table,

@@ -10,9 +10,10 @@ import pytest
 from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import load_table
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
     PAYLOAD_SCHEMA,
+    _gif_plan,
+    _jpeg_plan,
     extract_jpeg_features,
-    synthesize_gif_payloads,
-    synthesize_jpeg_payloads,
+    synthesize_payloads,
 )
 from data_wrangling_with_openstreetmap_and_mongodb_spark.streaming.drive import (
     run_available_now,
@@ -37,7 +38,7 @@ def _decode(spark, pdir, fmt, max_files_per_trigger=None):
 
 def test_streaming_jpeg_decode_equals_batch(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents").limit(60)
-    payloads = synthesize_jpeg_payloads(docs)
+    payloads = synthesize_payloads(docs, _jpeg_plan)
     # two separate writes -> at least two files, and maxFilesPerTrigger=1
     # forces multiple micro-batches so chunking-independence is real
     pdir = str(tmp_path / "payloads")
@@ -56,7 +57,7 @@ def test_streaming_gif_one_to_many_rows(spark, sf_dir, tmp_path):
     payload row yields one row per frame."""
     docs = load_table(spark, sf_dir, "documents").limit(20)
     pdir = str(tmp_path / "payloads")
-    synthesize_gif_payloads(docs).write.mode("overwrite").parquet(pdir)
+    synthesize_payloads(docs, _gif_plan).write.mode("overwrite").parquet(pdir)
     got = _decode(spark, pdir, "image/gif")
     # frames per doc = 1 + doc_id % 3 (the _gif_plan contract)
     per_doc = {r["doc_id"]: r["n"] for r in
@@ -67,7 +68,7 @@ def test_streaming_gif_one_to_many_rows(spark, sf_dir, tmp_path):
 
 def test_unknown_format_raises(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(1)
-    payloads = synthesize_jpeg_payloads(docs)
+    payloads = synthesize_payloads(docs, _jpeg_plan)
     with pytest.raises(NotImplementedError, match="no streaming extractor"):
         streaming_media_features(payloads, "audio/mp3")
 
@@ -77,12 +78,12 @@ def test_streaming_wav_decode_equals_batch(spark, sf_dir, tmp_path):
     (incl. G.711 and stereo) decode to the batch extractor's rows exactly,
     whatever the micro-batch chunking."""
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
+        _media_plan,
         extract_media_features,
-        synthesize_media_payloads,
     )
 
     docs = load_table(spark, sf_dir, "documents").limit(40)
-    payloads = synthesize_media_payloads(docs)
+    payloads = synthesize_payloads(docs, _media_plan)
     pdir = str(tmp_path / "payloads")
     payloads.filter("doc_id % 2 = 0").write.mode("append").parquet(pdir)
     payloads.filter("doc_id % 2 = 1").write.mode("append").parquet(pdir)
