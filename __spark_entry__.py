@@ -7,6 +7,15 @@ value-hash → CORRECTNESS_r{N}.json).
 
 All real logic lives in ``data_wrangling_with_openstreetmap_and_mongodb_spark``;
 this module only adapts the registry to the driver's calling convention.
+
+Python workers on a caller's own session: ``ensure_runtime_confs`` applies
+the runtime-settable confs to any session, but a session that
+``session.get_spark`` did not build keeps Spark's stock Python daemon, with
+only the calling process's cwd on the worker path.  So a query whose
+``mapInPandas`` or UDF code imports the engine needs the repo root as the
+cwd or on ``PYTHONPATH``, and each Python task pays the stock worker's
+re-read of the zip archives on its path.  ``spark.python.daemon.module``
+is a static conf, so no call on a running session can switch the daemon.
 """
 
 from __future__ import annotations

@@ -5,21 +5,21 @@ data model (SURVEY.md §1.1) with typed columns instead of dynamic BSON.
 
 Scale notes: all loads are plain parquet scans so Catalyst keeps predicate
 pushdown / column pruning / partition pruning, and no DataFrame or row is
-cached or collected here.  What is cached is per-path table METADATA (the
-Spark-inferred schema and the footer layout/row count, see "table metadata"
-below), validated against the files' stamp on every access, so a warm load
-starts no Spark job.  The ``events`` table's timestamps are exposed both raw
-(``ts``) and as derived, cheap-to-compute columns; :func:`ts_micros` is the
-one place that knows the physical encoding (the driver has shipped ``ts``
-both as parquet TIMESTAMP(NANOS)-as-long and as TIMESTAMP(MICROS)), so every
-consumer sees the same bigint epoch-microsecond timeline either way.
+cached or collected here.  What is cached is each path's Spark-inferred
+schema (see "table metadata" below), validated against the files' stamp on
+every access, so a warm load starts no Spark job.  Loads never
+repartition: a consumer with heavy per-row work rebalances with
+:func:`.operators.scale.spread`.  The ``events`` table's timestamps are
+exposed both raw (``ts``) and as derived, cheap-to-compute columns;
+:func:`ts_micros` is the one place that knows the physical encoding (the
+driver has shipped ``ts`` both as parquet TIMESTAMP(NANOS)-as-long and as
+TIMESTAMP(MICROS)), so every consumer sees the same bigint
+epoch-microsecond timeline either way.
 """
 
 from __future__ import annotations
 
 import os
-import warnings
-from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -44,59 +44,18 @@ NANOS_PER_HOUR = 3_600_000_000_000
 MICROS_PER_HOUR = 3_600_000_000
 MICROS_PER_DAY = 86_400_000_000
 
-# --- scan-parallelism floor (r15, guide §2.5 "input skew: one huge
-# unsplittable file") -------------------------------------------------------
-# A parquet SCAN cannot parallelize beyond its row groups: Spark's
-# size-based splits assign each row group wholly to the split containing its
-# midpoint, so a file with one row group yields ONE non-empty partition no
-# matter what maxPartitionBytes / minPartitionNum say.  The driver's testdata
-# is exactly that shape (every sf0.x table = one file, one row group), which
-# serialized every downstream stage — worst for the Arrow-batched Python
-# codec stages, which ran on 1 of N cores.
-#
-# Remedy (measured, OPTIMIZATION_r15.md): OPT-IN per call site.  When the
-# consumer's per-row cost is high (the Python codec/synthesize stages:
-# ~1-40 ms/row), ``load_table(..., spread=True)`` rebalances the scan with
-# a round-robin repartition once the footer gate agrees (row_groups <
-# cores, bytes above dimension-size).  Catalyst pushes filters and prunes
-# columns through the Repartition node, so the exchange carries only the
-# columns the Python stage needs (doc_id alone for the synthesize paths).
-# The A/B measurement that made this opt-in rather than blanket: for
-# JVM-cheap consumers (aggregations/joins, whole-stage codegen at ~10M
-# rows/s/core) shuffling the table costs MORE than the single-partition
-# scan it parallelizes — hourly_event_rollup 0.74→1.11 s, profile_orders
-# 0.62→1.25 s, approx_distinct_users 1.02→2.55 s with a blanket spread,
-# while the Python-bound codec family wins 2-4× (multimodal_jpeg_decode
-# 6.42→1.53 s).  Guide §8's rule in miniature: rebalance the lightweight
-# proxy ahead of expensive per-row work; never shuffle bytes that codegen
-# would chew through in place.
-#
-# At 100 TB the gate self-disables: real tables have thousands of row
-# groups (>= cores), so no shuffle is added — the rebalance fires precisely
-# on unsplittable inputs, where it is the documented fix.  The byte floor
-# below keeps dimension tables exchange-free.  The gate's row-group and
-# byte counts come from the table-metadata record below, so they follow
-# every rewrite of the path.
-
-# Dimension-size floor for the scan rebalance.  ``load_table`` reads it per
-# call, so the test suite can patch it to force the spread on at tiny SFs:
-# the parity gate must exercise the plan shape larger SFs produce.
-SPREAD_MIN_BYTES = 256 * 1024
-
-
 # --- table metadata ----------------------------------------------------------
 # ``spark.read.parquet(path)`` infers the schema with a one-task Spark job on
 # every call (85-115 ms on local[2], 4-core host); with the schema passed
 # in, the same load starts no job.  So each parquet path keeps one record:
-# the Spark-inferred schema plus the footer counts (row groups, bytes,
-# rows), each filled lazily on first use.  The record is valid while the path's file stamp — the sorted
-# (file, size, mtime_ns) of its parquet files — is unchanged; any rewrite
-# ($merge/$out targets, a probe swapping a table in place) changes the stamp
-# and replaces the record, so writers need not invalidate anything.  The
-# schema is additionally tied to the session confs that change what parquet
+# its Spark-inferred schema, with the file stamp and inference confs it was
+# inferred under.  The record is valid while the path's file stamp — the
+# sorted (file, size, mtime_ns) of its parquet files — is unchanged; any
+# rewrite ($merge/$out targets, a probe swapping a table in place) changes
+# the stamp and replaces the record, so writers need not invalidate
+# anything.  The confs are the session confs that change what parquet
 # inference returns for the same files.  Paths that cannot be stat'ed
-# (non-local filesystems) are never cached, and neither is the "huge"
-# fallback of an unreadable footer, so a later good read is seen.
+# (non-local filesystems) are never cached.
 _INFERENCE_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -107,16 +66,10 @@ _INFERENCE_CONFS = (
 )
 
 
-@dataclass
-class _TableMeta:
-    # Each slot is set by ONE assignment of an immutable value, so
-    # concurrent callers can at worst repeat a read, never mix two.
-    stamp: tuple[tuple[str, int, int], ...] | None
-    schema: tuple[tuple[str, ...], StructType] | None = None  # (inference confs, schema)
-    footer: tuple[int, int, int] | None = None  # (row groups, bytes, rows)
-
-
-_table_meta: dict[str, _TableMeta] = {}
+# path -> (file stamp, inference confs, schema).  Each record is replaced by
+# ONE assignment of an immutable tuple, so concurrent callers can at worst
+# repeat an inference, never mix two.
+_schemas: dict[str, tuple[tuple, tuple[str, ...], StructType]] = {}
 
 
 def _parquet_files(path: str) -> list[str]:
@@ -135,10 +88,11 @@ def _parquet_files(path: str) -> list[str]:
     return found
 
 
-def _meta(path: str) -> _TableMeta:
-    """The record for ``path``, replaced when its file stamp changed."""
+def _stamp(path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """Sorted (file, size, mtime_ns) of the path's parquet files; None when
+    they cannot be stat'ed."""
     try:
-        stamp = tuple(
+        return tuple(
             sorted(
                 (f, st.st_size, st.st_mtime_ns)
                 for f in _parquet_files(path)
@@ -146,87 +100,32 @@ def _meta(path: str) -> _TableMeta:
             )
         )
     except OSError:
-        stamp = None
-    meta = _table_meta.get(path)
-    if meta is None or meta.stamp != stamp:
-        meta = _TableMeta(stamp)
-        if stamp is not None:
-            _table_meta[path] = meta
-    return meta
+        return None
 
 
 def table_schema(spark: SparkSession, path: str) -> StructType:
     """The schema ``spark.read.parquet(path)`` infers under ``spark``'s
     current confs, inferred once per file stamp and inference-conf set."""
-    meta = _meta(path)
+    stamp = _stamp(path)
     confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
-    cached = meta.schema
-    if cached is None or cached[0] != confs:
-        cached = meta.schema = (confs, spark.read.parquet(path).schema)
-    return cached[1]
+    cached = _schemas.get(path)
+    if cached is None or cached[:2] != (stamp, confs):
+        cached = (stamp, confs, spark.read.parquet(path).schema)
+        if stamp is not None:
+            _schemas[path] = cached
+    return cached[2]
 
 
-def _footer(path: str) -> tuple[int, int, int]:
-    """(row groups, bytes, rows) summed over the path's parquet footers
-    (pyarrow reads, no Spark job).  An unreadable footer warns and yields
-    "huge" counts, which are not stored."""
-    meta = _meta(path)
-    if meta.footer is None:
-        import pyarrow.parquet as pq
-
-        groups = nbytes = rows = 0
-        for f in _parquet_files(path):
-            try:
-                md = pq.ParquetFile(f).metadata
-                nbytes += os.path.getsize(f)
-            except Exception as exc:  # non-local / unreadable: let Spark's scan decide
-                warnings.warn(
-                    f"unreadable parquet footer {f}: {exc}; assuming a huge table",
-                    RuntimeWarning,
-                    stacklevel=3,
-                )
-                return 1 << 30, 1 << 60, 1 << 60
-            groups += md.num_row_groups
-            rows += md.num_rows
-        meta.footer = (groups, nbytes, rows)
-    return meta.footer
-
-
-def _parquet_layout(path: str) -> tuple[int, int]:
-    """(total row groups, total bytes) for a parquet file or directory —
-    footer metadata only."""
-    return _footer(path)[:2]
-
-
-def table_rows(sf_dir: str, name: str) -> int:
-    """Row count of one table from parquet footer metadata only — for
-    scale-adaptive operator knobs (e.g. materialize-vs-rederive crossovers)
-    that must not run a Spark job to decide.  An unreadable footer means
-    "assume big" (the at-scale default)."""
-    return _footer(os.path.join(sf_dir, f"{name}.parquet"))[2]
-
-
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, *, spread: bool = False
-) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one named table from an ``sf*`` directory.
 
     A parquet scan with the path's recorded schema: no inference job once
     warm, and each call still gets fresh attribute IDs, so self-joins stay
-    safe.  With ``spread=True`` (opt-in for Python-heavy consumers — see
-    the scan-parallelism note above) an unsplittable (row_groups < cores),
-    non-dimension-sized table is round-robin rebalanced so the expensive
-    downstream stage uses the whole machine.
+    safe.
     """
     ensure_runtime_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.schema(table_schema(spark, path)).parquet(path)
-    if spread:
-        target = spark.sparkContext.defaultParallelism
-        groups, nbytes = _parquet_layout(path)
-        if groups < target and nbytes >= SPREAD_MIN_BYTES:
-            df = df.repartition(target)
-    return df
+    return spark.read.schema(table_schema(spark, path)).parquet(path)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -905,7 +905,6 @@ def _apply_graph_lookup(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     extra = set(spec) - {
         "from", "startWith", "connectFromField", "connectToField", "as",
         "depthField", "maxDepth", "method", "restrictSearchWithMatch",
-        "closureJoin",  # engine extension (doubling only) — see below
     }
     if extra:
         # silent-ignore class: an unknown option must not quietly change
@@ -1075,17 +1074,6 @@ def _apply_graph_lookup_doubling(df: DataFrame, spec: dict[str, Any]) -> DataFra
     conn_from, conn_to = spec["connectFromField"], spec["connectToField"]
     depth_field = spec.get("depthField")
     max_depth = spec.get("maxDepth")
-    # engine extension (r16, guide §3.1): "closureJoin": "broadcast" hints
-    # one side of each compose self-join.  The closure is checkpointed
-    # (no size statistics), so Catalyst otherwise always plans
-    # SortMergeJoins; a caller that KNOWS the closure is bounded (tiny
-    # filtered graphs) opts in.  Values identical — only the join
-    # strategy changes.  Default shuffle: the closure is O(reachable
-    # pairs) and can be huge at scale.
-    closure_join = spec.get("closureJoin", "shuffle")
-    if closure_join not in ("shuffle", "broadcast"):
-        raise ValueError(f"$graphLookup closureJoin must be shuffle/broadcast: {closure_join!r}")
-
     ldf = df.withColumn(
         "__gl_rowid", F.monotonically_increasing_id()
     ).localCheckpoint()
@@ -1117,10 +1105,9 @@ def _apply_graph_lookup_doubling(df: DataFrame, spec: dict[str, Any]) -> DataFra
     )
 
     def compose(c: DataFrame) -> DataFrame:
-        rhs = F.broadcast(c) if closure_join == "broadcast" else c
         comp = (
             c.alias("__a")
-            .join(rhs.alias("__b"), F.col("__a.__dst") == F.col("__b.__src"))
+            .join(c.alias("__b"), F.col("__a.__dst") == F.col("__b.__src"))
             .select(
                 F.col("__a.__src").alias("__src"),
                 F.col("__b.__dst").alias("__dst"),

@@ -140,10 +140,6 @@ def is_valid_year(col: Column, lo: int = 1886, hi: int = 2014) -> Column:
 # ---------------------------------------------------------------------------
 # C9 — numeric tests (03/audit.py:46-49; 04/autos.py:37-42)
 # ---------------------------------------------------------------------------
-def is_int_string(col: Column) -> Column:
-    return col.try_cast("long").isNotNull() & col.rlike("^-?[0-9]+$")
-
-
 def is_number(col: Column) -> Column:
     """float()-castable test, incl. '3.23e+07' scientific forms — cast returns
     null on failure, so the test is a null check."""
@@ -180,10 +176,6 @@ def parse_osm_timestamp(col: Column) -> Column:
 # ---------------------------------------------------------------------------
 # C14 — age in days from a pinned 'now' (README.md:1235-1242)
 # ---------------------------------------------------------------------------
-def age_in_days(ts: Column, now: Column) -> Column:
-    return (now.cast("double") - ts.cast("double")) / 86400.0
-
-
 # ---------------------------------------------------------------------------
 # C15 — Excel serial-date decode (01/excel_csv.py:39)
 # ---------------------------------------------------------------------------

@@ -38,6 +38,7 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import
     quantize6,
     quantize6_sql,
 )
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import spread
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.text import (
     md5_hash32,
     whitespace_tokens,
@@ -47,16 +48,11 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.text import (
 def _exploded_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, pos, tok) rows — lowercased whitespace tokens with position.
 
-    Pre-shuffled by id with an explicit partition count: a single-row-group
-    parquet scan is ONE task, which would serialize the downstream windows
-    and aggregations; AQE's coalescePartitions folds a plain few-MB
-    repartition back to one partition, hence the explicit count (same
-    regime note as dedup._shingle_rows).
+    Spread by id first (:func:`.scale.spread`), so the downstream windows
+    and aggregations do not run in a one-split scan's single task.
     """
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
     return (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-        .repartition(n_parts, "id")
+        spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")), "id")
         .select(
             "id",
             F.posexplode(whitespace_tokens(F.lower(F.col("__text")))).alias(

@@ -26,9 +26,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import spread
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.text import (
     fingerprint_md5,
-    shingles,
     whitespace_tokens,
 )
 
@@ -98,10 +98,7 @@ def span_dedup(
     tokenize/chunk pass runs once.  A 128-bit collision merging two
     distinct spans is ~2⁻⁶⁴-improbable; acceptable for corpus curation.
     """
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")).repartition(
-        n_parts, "id"
-    )
+    base = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")), "id")
     if sep is not None:
         parts = F.split(F.col("__text"), F.lit(sep), -1)
         join_sep = sep
@@ -188,12 +185,10 @@ def exact_substring_dedup(
     (reference analogue: none — beyond-reference training-data tier).
     """
     toks = whitespace_tokens(F.col(text_col))
-    # spread the HOF-heavy tokenize/shingle map work across the cluster
-    # BEFORE persisting — a single-file scan would otherwise pin the whole
-    # hash pass to one task (the span_dedup layout, dedup.py:101)
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
+    # spread BEFORE persisting, so the HOF-heavy tokenize/shingle hash pass
+    # is not pinned to a one-split scan's single task
     base = (
-        df.repartition(n_parts, id_col)
+        spread(df, id_col)
         .select(F.col(id_col).alias("id"), toks.alias("__toks"))
         .persist()
     )
@@ -258,17 +253,12 @@ def _shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
     Output shingle STRINGS are identical to operators/text.shingles (token
     n-grams joined by one space, distinct per document).
 
-    The pre-shuffle spreads documents across tasks even from a one-split
-    local scan; its partition count is explicit because AQE's
-    coalescePartitions would fold a few-MB plain repartition back into ONE
-    partition.  ``n_sh`` (distinct shingle count, the prefix-filter bound)
-    rides along via a window count, so downstream consumers need no extra
-    join.
+    Documents are spread by id first (:func:`.scale.spread`).  ``n_sh``
+    (distinct shingle count, the prefix-filter bound) rides along via a
+    window count, so downstream consumers need no extra join.
     """
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
     toks = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-        .repartition(n_parts, "id")
+        spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")), "id")
         .select(
             "id",
             F.posexplode(whitespace_tokens(F.lower(F.col("__text")))).alias(
@@ -443,21 +433,6 @@ def _perm_hash(a: int, b: int, h32: Column) -> Column:
     """(a·h + b) mod 2⁶¹−1 in plain bigint arithmetic (see
     :func:`minhash_perm_coeffs` for the no-overflow bounds)."""
     return F.pmod(F.lit(a) * h32 + F.lit(b), F.lit(MERSENNE61))
-
-
-def minhash_signature(text_col: Column, num_hashes: int = 64, n: int = 3, seed: int = 42) -> Column:
-    """MinHash signature as array<bigint>: for permutation i, min over
-    shingles of (aᵢ·md5₃₂(shingle) + bᵢ) mod 2⁶¹−1.  Entirely JVM-side and
-    engine-agnostic (see :func:`...text.md5_hash32`)."""
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.text import md5_hash32
-
-    sh = shingles(text_col, n)
-    hashed = F.transform(sh, md5_hash32)
-    sigs = [
-        F.array_min(F.transform(hashed, lambda h, a=a, b=b: _perm_hash(a, b, h)))
-        for a, b in minhash_perm_coeffs(num_hashes, seed)
-    ]
-    return F.array(*sigs)
 
 
 def _sig_and_bands(
@@ -697,13 +672,9 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = SIMHASH_BITS)
     """
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.text import md5_hash60
 
-    # Pre-shuffle on id so tokenize+hash parallelizes even from a one-split
-    # local source (same rationale and explicit-count AQE note as
-    # _shingle_rows).
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
+    # spread on id so tokenize+hash parallelizes off a one-split scan
     toks = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-        .repartition(n_parts, "id")
+        spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")), "id")
         .select("id", F.explode(whitespace_tokens(F.lower(F.col("__text")))).alias("tok"))
         .withColumn("h", md5_hash60(F.col("tok")))
     )
@@ -885,9 +856,8 @@ def embedding_near_pairs(
     ``max_exact_rows`` this fails over to the sub-quadratic banded sign-LSH
     plan (:func:`...similarity.lsh_near_pairs`) — the 100 TB path.
 
-    ``n_rows``: caller-supplied row count (e.g. from parquet footer stats or
-    a table catalog) so plan construction stays action-free; when omitted a
-    one-off ``df.count()`` runs — fine interactively, avoid in pipelines.
+    ``n_rows``: caller-supplied row count, so plan construction stays
+    action-free; when omitted a one-off ``df.count()`` decides.
     ``dim`` is forwarded to the LSH failover (which needs it to compile
     hyperplane literals).
     """

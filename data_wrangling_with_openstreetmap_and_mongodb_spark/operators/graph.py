@@ -273,7 +273,6 @@ def pagerank(
     checkpoint_every: int = 0,
     checkpoint_mode: str = "reliable",
     pre_materialized: bool = False,
-    rank_broadcast: bool = False,
 ) -> DataFrame:
     """Damped PageRank by a fixed number of power iterations — ``(id, pr)``.
 
@@ -361,29 +360,19 @@ def pagerank(
     # 0.15000000000000002 — injecting the IEEE value keeps both engines
     # bit-identical
     one_minus_d = F.lit(1.0 - damping)
-    # rank_broadcast (r16, guide §3.1): the rank, out-degree and
-    # contribution frames are all NODE-sized; without size statistics
-    # (checkpointed edges scan as an RDD with unknown stats) Catalyst
-    # plans every per-iteration join as a SortMergeJoin — measured 9 SMJs
-    # / 17 hash exchanges for 3 iterations at sf0.1.  Broadcasting the
-    # node-sized sides removes the per-iteration shuffles+sorts of the
-    # EDGE table entirely (edges are only ever map-side joined — the
-    # bucketed-edge layout's effect, without the rewrite).  Values are
-    # bit-identical: dsum is order-independent by construction, which is
-    # exactly what makes the partial-aggregation order change safe.  Only
-    # enable when the node set fits the broadcast budget (caller gates on
-    # footer row counts); default off — the at-scale-safe shuffle.
-    maybe_b = F.broadcast if rank_broadcast else (lambda df_: df_)
+    # No join hints: the rank, out-degree and contribution frames are
+    # node-sized, and AQE broadcasts them from runtime statistics (dsum is
+    # order-independent, so the join strategy never changes a value).
     for i in range(iters):
         contrib = (
-            e.join(maybe_b(r), e["src"] == r["id"])
-            .join(maybe_b(od), "src")
+            e.join(r, e["src"] == r["id"])
+            .join(od, "src")
             .groupBy("dst")
             .agg(dsum(F.col("pr") / F.col("deg")).alias("c"))
         )
         r = (
             nodes.crossJoin(F.broadcast(nn))
-            .join(maybe_b(contrib), nodes["id"] == contrib["dst"], "left")
+            .join(contrib, nodes["id"] == contrib["dst"], "left")
             .select(
                 "id",
                 (

@@ -21,17 +21,15 @@ SALT_COL = "__salt"
 
 
 def spread(df: DataFrame, *key_cols: str) -> DataFrame:
-    """Hash-repartition to the cluster's full parallelism before heavy
-    per-row compute (regex stacks, signature hashing, decode UDFs).
+    """Repartition to the scheduler's default parallelism before heavy
+    per-row work (tokenize/shingle passes, signature hashing, Python codec
+    stages): hash-partitioned on ``key_cols``, round-robin without them.
 
-    A small single-file parquet scan is ONE input split, so everything
-    downstream of it runs on one core unless a shuffle intervenes; and the
-    partition count must be explicit because AQE's coalescePartitions folds
-    a plain ``repartition(keys)`` of a few MB back into one partition.  The
-    shuffle moves only the raw input rows — cheap insurance that the
-    expensive projection above it actually spreads across executors.  At
-    real 100 TB scale inputs arrive in many splits and this becomes a no-op
-    choice; it exists for the many-cores-few-splits regime."""
+    This is the package's one rebalance: a one-row-group parquet scan is
+    ONE input split, so everything downstream of it would run on one core.
+    The count is explicit because AQE's coalescePartitions folds an
+    unpinned ``repartition`` of a few MB back into one partition.  Catalyst
+    still pushes filters and prunes columns below the exchange."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *key_cols) if key_cols else df.repartition(n)
 

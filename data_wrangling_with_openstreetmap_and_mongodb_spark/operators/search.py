@@ -38,6 +38,7 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (
     _exploded_tokens,
 )
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import spread
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.text import (
     token_count,
 )
@@ -73,9 +74,6 @@ def bm25_scores(
     # document) instead of every token — at corpus scale the full-token
     # explode, not the scoring, is the bottleneck.  The spread keeps the
     # tokenize+filter pass parallel off few-split scans.
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import (
-        spread,
-    )
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.text import (
         whitespace_tokens,
     )
@@ -397,10 +395,8 @@ def positional_index(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     phrase/proximity search.  At corpus scale this is written ONCE
     partitioned/bucketed by ``tok`` so phrase probes touch only their
     terms' postings; here it's the same rows produced on the fly."""
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
     return (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-        .repartition(n_parts, "id")
+        spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")), "id")
         .select(
             "id",
             F.posexplode(

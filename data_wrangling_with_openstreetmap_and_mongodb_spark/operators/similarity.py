@@ -44,6 +44,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import davg, dsum, quantize6
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import spread
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -647,7 +648,6 @@ def _subvector_rows(df: DataFrame, vec_col: str, id_col: str, dim: int, m: int) 
     """``(id, sub, sv)``: each vector split into ``m`` disjoint ``dim/m``-dim
     subvectors (one posexplode; pre-spread by id off one-split scans)."""
     dsub = dim // m
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
     v = F.col(vec_col).cast("array<double>")
     subs = F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
@@ -656,8 +656,7 @@ def _subvector_rows(df: DataFrame, vec_col: str, id_col: str, dim: int, m: int) 
         ),
     )
     return (
-        df.select(F.col(id_col).alias("id"), subs.alias("__subs"))
-        .repartition(n_parts, "id")
+        spread(df.select(F.col(id_col).alias("id"), subs.alias("__subs")), "id")
         .select("id", F.explode("__subs").alias("u"))
         .select("id", F.col("u.sub").alias("sub"), F.col("u.sv").alias("sv"))
     )

@@ -126,17 +126,6 @@ def cms_estimate(
     )
 
 
-def cms_hash_sql(key_expr: str, depth: int, width: int, seed: int = 7) -> str:
-    """DuckDB fragment: a list of the key's ``depth`` bucket indices,
-    bit-identical to :func:`_bucket_cols`."""
-    h = md5_hash32_sql(key_expr)
-    buckets = ", ".join(
-        f"(({a} * ({h}) + {b}) % {MERSENNE61}) % {width}"
-        for a, b in minhash_perm_coeffs(depth, seed)
-    )
-    return f"[{buckets}]"
-
-
 # ---------------------------------------------------------------------------
 # Bloom filter: O(1)-size membership pre-filter for small-side semi-joins.
 #

@@ -12,6 +12,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, Window
 
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import spread
+
 # A BPE-ish word/punctuation tokenizer: word pieces OR single non-space
 # punctuation — the classic pre-tokenization regex shape.
 TOKEN_RE = r"[A-Za-z0-9_]+|[^A-Za-z0-9_\s]"
@@ -36,11 +38,6 @@ def token_count(col: Column) -> Column:
     codegen'd regex pass (identical to ``size(whitespace_tokens(...))``, which
     materializes the array and falls out of whole-stage codegen)."""
     return F.regexp_count(col, F.lit(r"\S+"))
-
-
-def regex_tokens(col: Column) -> Column:
-    """BPE-ish pre-tokenization via regexp_extract_all (native, vectorized)."""
-    return F.regexp_extract_all(col, F.lit(TOKEN_RE), 0)
 
 
 def regex_token_count(col: Column) -> Column:
@@ -126,15 +123,6 @@ def rule_filter_audit(df, text_col: str, *group_cols: str):
     return df.groupBy(*group_cols).agg(*aggs)
 
 
-def lang_scores(col: Column) -> dict[str, Column]:
-    """Per-language stopword-hit counts (the language-ID signal)."""
-    toks = whitespace_tokens(F.lower(col))
-    return {
-        lang: F.size(F.filter(toks, lambda t: t.isin(*words)))
-        for lang, words in STOPWORDS.items()
-    }
-
-
 def detect_from_scores(scores: dict[str, Column], default: str = "unknown") -> Column:
     """Language decision from per-language hit-count columns: most hits wins,
     ties → lexicographic order of language code, deterministic."""
@@ -152,15 +140,6 @@ def detect_from_scores(scores: dict[str, Column], default: str = "unknown") -> C
     return out
 
 
-def detect_language(col: Column, default: str = "unknown") -> Column:
-    """Per-row language ID — convenient for single expressions, but every
-    score reference in the when-chain re-evaluates its interpreted
-    filter+split subtree (~#langs² passes/row).  In hot aggregation paths
-    prefer :func:`detect_language_agg`, which tokenizes once and keeps the
-    counting inside codegen'd aggregate buffers."""
-    return detect_from_scores(lang_scores(col), default)
-
-
 def detect_language_agg(
     df, text_col: str, keep: list[str], default: str = "unknown"
 ):
@@ -171,8 +150,6 @@ def detect_language_agg(
     attributes post-aggregation, so nothing re-evaluates.
 
     Returns ``df[keep] + detected`` with one row per input row."""
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import spread
-
     toks = spread(df, *keep[:1]).select(
         *keep, F.explode_outer(whitespace_tokens(F.lower(F.col(text_col)))).alias("__tok")
     )
@@ -239,12 +216,6 @@ def shingles(col: Column, n: int = 3) -> Column:
     )
 
 
-def shingle_fingerprint(col: Column, n: int = 3) -> Column:
-    """Order-insensitive near-dup fingerprint: md5 over the sorted distinct
-    shingle set."""
-    return F.md5(F.array_join(F.array_sort(shingles(col, n)), ""))
-
-
 def winnow_fingerprints(df, text_col: str, id_col: str, k: int = 8, window: int = 4):
     """Winnowing document fingerprints (the MOSS scheme) as ``(id, fp)``
     rows: hash every character k-gram, slide a window of ``window`` hashes,
@@ -263,15 +234,12 @@ def winnow_fingerprints(df, text_col: str, id_col: str, k: int = 8, window: int 
     higher-order ``transform`` evaluates interpreted and measured ~40×
     slower at ~300 grams/doc) → sliding-frame window ``min`` per document →
     distinct.  One shuffle on id (the window), one on the distinct; the
-    pre-shuffle spreads single-file local scans (explicit count — AQE folds
-    small plain repartitions back to one partition).
+    input is spread by id first (:func:`.scale.spread`).
     """
     from pyspark.sql import Window
 
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
     grams = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-        .repartition(n_parts, "id")
+        spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")), "id")
         .select(
             "id",
             F.length("__text").alias("__len"),

@@ -18,7 +18,6 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.plans.inspect import (
     has_top_k,
     pushed_filters,
     read_schema_columns,
-    wholestage_codegen_spans,
 )
 
 __all__ = [
@@ -30,5 +29,4 @@ __all__ = [
     "has_top_k",
     "pushed_filters",
     "read_schema_columns",
-    "wholestage_codegen_spans",
 ]

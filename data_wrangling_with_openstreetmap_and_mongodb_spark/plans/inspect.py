@@ -63,11 +63,6 @@ def has_partial_aggregation(df: DataFrame) -> bool:
     )
 
 
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans (wider = fewer interpreted gaps)."""
-    return len(re.findall(r"WholeStageCodegen", executed_plan(df)))
-
-
 def assert_plan(df: DataFrame, **checks: bool) -> None:
     """Assert named plan properties, e.g.::
 

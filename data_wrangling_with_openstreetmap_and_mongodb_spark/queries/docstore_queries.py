@@ -11,7 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import load_table, table_rows
+from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import load_table
 from data_wrangling_with_openstreetmap_and_mongodb_spark.docstore import DocumentCollection
 from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import davg_sql, dsum_sql
 from data_wrangling_with_openstreetmap_and_mongodb_spark.queries.registry import register
@@ -1270,11 +1270,6 @@ def ds_lookup_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ds_graph_reachable_orders broadcasts its $graphLookup closure while the
-# orders table has at most this many rows (footer count)
-GRAPHLOOKUP_BROADCAST_MAX_ROWS = 10_000_000
-
-
 @register(
     "ds_graph_reachable_orders",
     oracle="""
@@ -1337,12 +1332,6 @@ def ds_graph_reachable_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("b.rn") == F.col("a.rn") + 1),
     ).select(F.col("a.o_orderkey").alias("src"), F.col("b.o_orderkey").alias("dst"))
     local = edges.select(F.col("src").alias("o_orderkey")).distinct()
-    # the doubling closure over this 2%-of-customers chain graph is
-    # bounded (≤ chain-length² pairs per customer), so one side of each
-    # compose self-join broadcasts while the orders table is small enough
-    # (footer-gated; shuffle at 100 TB) — the checkpointed closure has no
-    # size statistics, so neither Catalyst nor AQE can pick this itself
-    small = table_rows(sf_dir, "orders") <= GRAPHLOOKUP_BROADCAST_MAX_ROWS
     out = DocumentCollection(local, "starts").aggregate(
         [
             {
@@ -1355,7 +1344,6 @@ def ds_graph_reachable_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "depthField": "lvl",
                     "maxDepth": 6,
                     "method": "doubling",
-                    "closureJoin": "broadcast" if small else "shuffle",
                 }
             }
         ]

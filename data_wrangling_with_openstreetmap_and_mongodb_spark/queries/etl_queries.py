@@ -9,7 +9,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import (
     load_table,
-    table_rows,
     ts_micros,
 )
 from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import (
@@ -28,6 +27,7 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal im
     synthesize_payloads,
     with_binary_payload,
 )
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import spread
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.upsert import merge_update
 from data_wrangling_with_openstreetmap_and_mongodb_spark.queries.registry import register
 from data_wrangling_with_openstreetmap_and_mongodb_spark.rowmap import map_rows
@@ -361,7 +361,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_png_features,
     )
 
-    d = load_table(spark, sf_dir, "documents", spread=True)
+    d = spread(load_table(spark, sf_dir, "documents"))
     feats = extract_png_features(synthesize_payloads(d, _png_plan))
     return feats.select(
         "doc_id", "png_type", "width", "height", "n_channels", "n_samples",
@@ -428,7 +428,7 @@ def multimodal_palette_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_png_features,
     )
 
-    d = load_table(spark, sf_dir, "documents", spread=True)
+    d = spread(load_table(spark, sf_dir, "documents"))
     feats = extract_png_features(synthesize_payloads(d, _palette_png_plan))
     return feats.select(
         "doc_id", "png_type", "width", "height", "n_channels", "n_samples",
@@ -494,7 +494,7 @@ def multimodal_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_gif_frames,
     )
 
-    d = load_table(spark, sf_dir, "documents", spread=True)
+    d = spread(load_table(spark, sf_dir, "documents"))
     frames = extract_gif_frames(synthesize_payloads(d, _gif_plan))
     return frames.select(
         "doc_id", "frame_id", "delay_cs", "width", "height", "n_samples",
@@ -671,7 +671,7 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_jpeg_features,
     )
 
-    d = load_table(spark, sf_dir, "documents", spread=True)
+    d = spread(load_table(spark, sf_dir, "documents"))
     feats = extract_jpeg_features(synthesize_payloads(d, _jpeg_plan))
     return feats.select(
         "doc_id", "jpeg_type", "width", "height", "n_samples",
@@ -744,7 +744,7 @@ def multimodal_jpeg12_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_jpeg_features,
     )
 
-    d = load_table(spark, sf_dir, "documents", spread=True)
+    d = spread(load_table(spark, sf_dir, "documents"))
     feats = extract_jpeg_features(synthesize_payloads(d, _jpeg12_plan))
     return feats.select(
         "doc_id", "jpeg_type", "width", "height", "n_samples",
@@ -815,7 +815,7 @@ def multimodal_jpeg_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFra
         encode_jpeg_lossless,
     )
 
-    d = load_table(spark, sf_dir, "documents", spread=True)
+    d = spread(load_table(spark, sf_dir, "documents"))
 
     def features(doc_id):
         did = int(doc_id)
@@ -1086,7 +1086,7 @@ def multimodal_png_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_png_features,
     )
 
-    d = load_table(spark, sf_dir, "documents", spread=True)
+    d = spread(load_table(spark, sf_dir, "documents"))
     feats = extract_png_features(synthesize_payloads(d, _png_variant_plan))
     return feats.select(
         "doc_id", "png_type", "width", "height", "n_channels", "n_samples",
@@ -1189,7 +1189,7 @@ def multimodal_adpcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_wav_adpcm,
     )
 
-    d = load_table(spark, sf_dir, "documents", spread=True)
+    d = spread(load_table(spark, sf_dir, "documents"))
 
     def features(doc_id):
         did = int(doc_id)
@@ -1304,7 +1304,7 @@ def multimodal_mp3_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_mp3_frames,
     )
 
-    d = load_table(spark, sf_dir, "documents", spread=True)
+    d = spread(load_table(spark, sf_dir, "documents"))
 
     def features(doc_id):
         did = int(doc_id)
@@ -1351,20 +1351,19 @@ def multimodal_mp3_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _decode_through_stream(payloads: DataFrame, n_docs: int, fmt: str) -> DataFrame:
-    """Write ``payloads`` once as a pinned number of parquet files and
-    decode them through a file stream of about four micro-batches.
+def _decode_through_stream(payloads: DataFrame, fmt: str) -> DataFrame:
+    """Write ``payloads`` once as up to 32 parquet files and decode them
+    through a file stream of about four micro-batches.
 
-    The file count is min(32, n_docs): an empty round-robin partition
-    writes NO parquet file, so a flat repartition(32) would silently yield
-    fewer files and micro-batches below 32 docs (ADVICE r15).  With
-    maxFilesPerTrigger = n_files // 4 there are ~4 micro-batches whenever
-    >= 4 files exist — constant across scale (the 10x-probe lesson) — and
-    each decodes its files in parallel (r15, guide §2.5: the decode stage
-    inherits the micro-batch's file-split parallelism; a real landing zone
-    sizes maxFilesPerTrigger for bytes, not 1).  The payload directory
-    lives only for the write and the drive: the drive returns
-    checkpointed frames."""
+    An empty round-robin partition writes NO parquet file, so below 32
+    docs the write yields fewer files; maxFilesPerTrigger is a quarter of
+    the files the write actually produced, which keeps ~4 micro-batches
+    whenever >= 4 files exist — constant across scale — and each decodes
+    its files in parallel (the decode stage inherits the micro-batch's
+    file-split parallelism; a real landing zone sizes maxFilesPerTrigger
+    for bytes, not 1).  The payload directory lives only for the write and
+    the drive: the drive returns checkpointed frames."""
+    import os
     import tempfile
 
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
@@ -1374,9 +1373,9 @@ def _decode_through_stream(payloads: DataFrame, n_docs: int, fmt: str) -> DataFr
         streaming_media_features,
     )
 
-    n_files = max(1, min(32, n_docs))
     with tempfile.TemporaryDirectory(prefix="stream_media_row_") as pdir:
-        payloads.repartition(n_files).write.mode("append").parquet(pdir)
+        payloads.repartition(32).write.mode("append").parquet(pdir)
+        n_files = sum(f.endswith(".parquet") for f in os.listdir(pdir))
         stream = (
             payloads.sparkSession.readStream.schema(PAYLOAD_SCHEMA)
             .option("maxFilesPerTrigger", max(1, n_files // 4))
@@ -1410,13 +1409,11 @@ def streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         _png_plan,
     )
 
-    d = load_table(spark, sf_dir, "documents", spread=True)
+    d = spread(load_table(spark, sf_dir, "documents"))
     # ONE write of the payloads (the pre-r15 shape was TWO doc_id%2-filtered
     # writes — the filter cannot push below the opaque synthesize stage, so
     # every payload was encoded twice and half of each pass thrown away)
-    feats = _decode_through_stream(
-        synthesize_payloads(d, _png_plan), table_rows(sf_dir, "documents"), "image/png"
-    )
+    feats = _decode_through_stream(synthesize_payloads(d, _png_plan), "image/png")
     return feats.select(
         "doc_id", "png_type", "width", "height", "n_channels", "n_samples",
         quantize6(F.col("mean_c0")).alias("mean_c0"),
@@ -1453,10 +1450,8 @@ def streaming_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    # same single write and doc-count-derived file pin as the PNG row
-    feats = _decode_through_stream(
-        synthesize_payloads(d, _g711_plan), table_rows(sf_dir, "documents"), "audio/wav"
-    )
+    # same single write and file-count-derived trigger size as the PNG row
+    feats = _decode_through_stream(synthesize_payloads(d, _g711_plan), "audio/wav")
     return feats.select(
         "doc_id",
         F.when(F.col("doc_id") % 2 == 0, F.lit("mulaw"))
@@ -1910,15 +1905,9 @@ def etl_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
     )
     # the sink writes one container per partition; spread the Python-side
-    # deflate encode across the scheduler's parallelism (r15: was a fixed
-    # .repartition(8) — the cap serialized 3/4 of the encode on local[32]
-    # and under-splits on a bigger cluster; the scheduler's default
-    # parallelism is the same core-count-adaptive target the codec spread
-    # uses)
-    write_avro(
-        orders.repartition(spark.sparkContext.defaultParallelism),
-        base, codec="deflate", block_rows=1024,
-    )
+    # deflate encode across the scheduler's parallelism (a fixed count
+    # serializes the encode on more cores and under-splits on a cluster)
+    write_avro(spread(orders), base, codec="deflate", block_rows=1024)
     back = read_avro(spark, base, split_bytes=64 << 10)
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),

@@ -13,7 +13,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import load_table, table_rows
+from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import load_table
 from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import (
     davg,
     davg_sql,
@@ -550,13 +550,7 @@ def dedup_simhash_k2(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    return embedding_near_pairs(
-        e,
-        "embedding",
-        "vec_id",
-        threshold=0.3,
-        n_rows=table_rows(sf_dir, "embeddings"),
-    )
+    return embedding_near_pairs(e, "embedding", "vec_id", threshold=0.3)
 
 
 # ---------------------------------------------------------------------------
@@ -1606,18 +1600,6 @@ def _pagerank_oracle_sql(iters: int, damping: float) -> str:
     """
 
 
-# supplier_customer_pagerank gates, decided from footer row counts:
-# - checkpoint the derived edge table once when re-deriving the
-#   lineitem⋈orders join 3× costs more than one barrier (PLANS.md
-#   §pagerank-edge-materialization: 1.44× at 600k edge rows, inverted at
-#   60k).  Edge rows == lineitem rows before the distinct.
-# - broadcast the node-sized rank/degree/contribution frames while the node
-#   set (suppliers + customers) fits the broadcast budget.  The checkpointed
-#   edges carry no size statistics, so AQE cannot make this call itself.
-PAGERANK_MATERIALIZE_MIN_EDGES = 300_000
-PAGERANK_BROADCAST_MAX_NODES = 10_000_000
-
-
 @register(
     "supplier_customer_pagerank",
     oracle=_pagerank_oracle_sql(iters=3, damping=0.85),
@@ -1640,12 +1622,13 @@ def supplier_customer_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(1000000) + F.col("l_suppkey")).alias("src"),
         F.col("o_custkey").alias("dst"),
     )
-    pre = table_rows(sf_dir, "lineitem") >= PAGERANK_MATERIALIZE_MIN_EDGES
-    n_nodes = table_rows(sf_dir, "supplier") + table_rows(sf_dir, "customer")
+    # one checkpoint of the derived edge table beats re-deriving the
+    # lineitem⋈orders join in each iteration at every measured scale
+    # (PLANS.md §pagerank-edge-materialization); AQE broadcasts the
+    # node-sized frames from the checkpoint's own size statistics
     return pagerank(
         edges, "src", "dst", iters=3, damping=0.85,
-        pre_materialized=pre, checkpoint_mode="local",
-        rank_broadcast=n_nodes <= PAGERANK_BROADCAST_MAX_NODES,
+        pre_materialized=True, checkpoint_mode="local",
     )
 
 
@@ -1908,14 +1891,14 @@ def stratified_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                                          for i in range(1, greatest(len(t) - 2, 1) + 1)])
                       ELSE [] END AS s
                FROM toks),
-        pairs AS (
+        pairs AS MATERIALIZED (
             SELECT a.doc_id AS id_a, b.doc_id AS id_b
             FROM sh a, sh b
             WHERE a.doc_id < b.doc_id
               AND len(list_intersect(a.s, b.s))::DOUBLE
                       / len(list_distinct(list_concat(a.s, b.s))) >= 0.8
         ),
-        e AS (SELECT id_a AS src, id_b AS dst FROM pairs
+        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
               UNION SELECT id_b, id_a FROM pairs),
         walk(id, label) AS (
             SELECT src, src FROM (SELECT DISTINCT src FROM e) v(src)
@@ -3116,14 +3099,14 @@ def lc_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
                                          for i in range(1, greatest(len(t) - 2, 1) + 1)])
                       ELSE [] END AS s
                FROM toks),
-        pairs AS (
+        pairs AS MATERIALIZED (
             SELECT a.doc_id AS id_a, b.doc_id AS id_b
             FROM sh a, sh b
             WHERE a.doc_id < b.doc_id
               AND len(list_intersect(a.s, b.s))::DOUBLE
                       / len(list_distinct(list_concat(a.s, b.s))) >= 0.8
         ),
-        e AS (SELECT id_a AS src, id_b AS dst FROM pairs
+        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
               UNION SELECT id_b, id_a FROM pairs),
         walk(id, label) AS (
             SELECT src, src FROM (SELECT DISTINCT src FROM e) v(src)

@@ -4,8 +4,6 @@ import os
 
 import pytest
 
-from data_wrangling_with_openstreetmap_and_mongodb_spark import catalog
-
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
 # Hypothesis example budget (r16 — VERDICT r15 ask #3: fit the default
@@ -21,16 +19,6 @@ def fuzz_examples(full: int) -> int:
     ``SPARK_GRAFT_FUZZ_BUDGET``, floored at 5 so shrunk tiers still
     explore."""
     return max(5, int(full * FUZZ_BUDGET))
-
-# Force the r15 scan-parallelism rebalance's byte gate OPEN for the whole
-# suite: at the driver's SFs the opted-in codec queries cross the
-# dimension-size floor and their plans carry the rebalance exchange, so the
-# oracle-parity gate must run the SAME shape (at sf0.001 the byte gate
-# would otherwise never fire and the spread would be unverified).  Which
-# call sites opt in stays the production choice (load_table(...,
-# spread=True)); gating itself (dimension exemption, splittable-input
-# no-op, opt-out default) is covered in tests/test_scan_spread.py.
-catalog.SPREAD_MIN_BYTES = 1
 
 
 @pytest.fixture(scope="session")

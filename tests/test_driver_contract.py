@@ -110,8 +110,10 @@ def test_oracle_sql_references_known_tables_only():
         ):
             name = m.group(1)
             # anything not a pre-registered view must be a CTE defined inline
+            # (``name AS (``, or ``name AS [NOT] MATERIALIZED (``)
             if name not in tables:
-                assert re.search(rf"\b{name}\s*(?:\([^)]*\))?\s+AS\s*\(", q.oracle, re.I), (
+                cte = rf"\b{name}\s*(?:\([^)]*\))?\s+AS\s*(?:(?:NOT\s+)?MATERIALIZED\s*)?\("
+                assert re.search(cte, q.oracle, re.I), (
                     f"{q.name}: oracle references unknown relation {name!r}"
                 )
 

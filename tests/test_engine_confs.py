@@ -1,4 +1,4 @@
-"""The engine's session confs, environment knobs and footer-read fallbacks."""
+"""The engine's session confs and environment knobs."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import re
 import pytest
 
 import data_wrangling_with_openstreetmap_and_mongodb_spark as pkg
-from data_wrangling_with_openstreetmap_and_mongodb_spark import catalog
 from data_wrangling_with_openstreetmap_and_mongodb_spark.session import (
     _RUNTIME_CONFS,
     ensure_runtime_confs,
@@ -88,12 +87,3 @@ def test_other_conf_failure_warns_and_applies_the_rest():
         ensure_runtime_confs(session)
     expected = {k: v for k, v in _RUNTIME_CONFS.items() if k != BROADCAST_KEY}
     assert session.conf.values == expected
-
-
-def test_unreadable_footer_warns_and_assumes_huge(tmp_path):
-    bad = tmp_path / "broken.parquet"
-    bad.write_bytes(b"not a parquet file")
-    with pytest.warns(RuntimeWarning, match=re.escape(str(bad))):
-        assert catalog.table_rows(str(tmp_path), "broken") == 1 << 60
-    with pytest.warns(RuntimeWarning, match=re.escape(str(bad))):
-        assert catalog._parquet_layout(str(bad)) == (1 << 30, 1 << 60)

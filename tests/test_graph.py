@@ -290,20 +290,26 @@ class TestCheckpointModes:
 
 
 class TestPagerankAdaptiveMaterialization:
-    def test_catalog_query_gate_is_value_neutral(self, spark, sf_dir, monkeypatch):
-        """The r15 scale-adaptive pre_materialized gate in
-        supplier_customer_pagerank (footer-row crossover, PLANS.md
-        §pagerank-edge-materialization) must not change a single value:
-        force BOTH branches on the same data and compare exactly."""
-        from data_wrangling_with_openstreetmap_and_mongodb_spark.queries import (
-            QUERIES,
-            trainingdata_queries,
-        )
+    def test_catalog_query_gate_is_value_neutral(self, spark, sf_dir):
+        """supplier_customer_pagerank checkpoints its derived edge table
+        at every scale (PLANS.md §pagerank-edge-materialization).  That
+        choice must not change a single value: the catalog query equals an
+        unmaterialized PageRank over the same edges, exactly."""
+        import pyspark.sql.functions as F
 
+        from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import load_table
+        from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import (
+            pagerank,
+        )
+        from data_wrangling_with_openstreetmap_and_mongodb_spark.queries import QUERIES
+
+        li = load_table(spark, sf_dir, "lineitem")
+        o = load_table(spark, sf_dir, "orders")
+        edges = li.join(o, li["l_orderkey"] == o["o_orderkey"]).select(
+            (F.lit(1000000) + F.col("l_suppkey")).alias("src"),
+            F.col("o_custkey").alias("dst"),
+        )
+        base = {(r["id"], r["pr"]) for r in pagerank(edges, iters=3, damping=0.85).collect()}
         fn = QUERIES["supplier_customer_pagerank"].fn
-        gate = "PAGERANK_MATERIALIZE_MIN_EDGES"
-        monkeypatch.setattr(trainingdata_queries, gate, 1 << 60)
-        base = {(r["id"], r["pr"]) for r in fn(spark, sf_dir).collect()}
-        monkeypatch.setattr(trainingdata_queries, gate, 0)
         mat = {(r["id"], r["pr"]) for r in fn(spark, sf_dir).collect()}
         assert mat == base

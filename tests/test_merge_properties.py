@@ -314,8 +314,8 @@ def test_merge_staged_mode_matches_local(spark, tmp_path_factory, monkeypatch):
     """r16 (ADVICE r15): the durability-aware materialization — staged
     sibling write vs localCheckpoint — must be value-identical; only the
     write path differs.  Also pins that the staged sibling dir is cleaned
-    up and that footer metadata read from the target before the merge does
-    not outlive the overwrite."""
+    up and that the catalog's schema record read from the target before the
+    merge does not outlive the overwrite."""
     import os as _os
 
     from data_wrangling_with_openstreetmap_and_mongodb_spark import catalog
@@ -330,9 +330,8 @@ def test_merge_staged_mode_matches_local(spark, tmp_path_factory, monkeypatch):
     spark.createDataFrame(
         [tuple(d[c] for c in TARGET_COLS) for d in TARGET], TARGET_SCHEMA
     ).write.parquet(path)
-    # a read of the target's metadata before the merge (what a gate such as
-    # load_table(spread=True) or a table_rows crossover would do)
-    assert catalog.table_rows(base, "t") == len(TARGET)
+    # a catalog load of the target before the merge records its schema
+    assert catalog.load_table(spark, base, "t").count() == len(TARGET)
     src = spark.createDataFrame(
         [tuple(d[c] for c in SOURCE_COLS) for d in SOURCE], SOURCE_SCHEMA
     )
@@ -342,13 +341,11 @@ def test_merge_staged_mode_matches_local(spark, tmp_path_factory, monkeypatch):
     assert cols_a == cols_b and got_a == got_b
     assert not _os.path.exists(path + "__merge_tmp")
 
-    # the metadata now describes the merged table, not the pre-merge one
-    assert len(got_b) != len(TARGET)  # else a stale count would go unseen
-    assert catalog.table_rows(base, "t") == len(got_b)
-    files = [
-        _os.path.join(path, f) for f in _os.listdir(path) if f.endswith(".parquet")
-    ]
-    assert catalog._parquet_layout(path)[1] == sum(_os.path.getsize(f) for f in files)
+    # a catalog load now reads the merged table, not the pre-merge one
+    assert len(got_b) != len(TARGET)  # else a stale read would go unseen
+    merged = catalog.load_table(spark, base, "t")
+    assert merged.schema == spark.read.parquet(path).schema
+    assert merged.count() == len(got_b)
 
 
 def test_merge_fail_modes_reference_agrees(spark, tmp_path_factory):

@@ -1,55 +1,41 @@
-"""The r15 scan-parallelism rebalance (catalog.load_table, OPT-IN via
-spread=True for Python-heavy consumers): an unsplittable
-(single-row-group), non-dimension-sized parquet table is round-robin
-repartitioned to the scheduler's parallelism; dimension-sized tables,
-already-splittable inputs, and every call site that does not opt in are
-left alone; predicate pushdown and column pruning still reach the scan
-below the rebalance exchange."""
+"""The package's one rebalance, operators.scale.spread: a one-row-group
+parquet scan is round-robin repartitioned to the scheduler's parallelism;
+predicate pushdown and column pruning still reach the scan below the
+exchange; a plain load_table adds no exchange.  The inventory keeps spread
+the only defaultParallelism repartition and keeps parquet footer reads out
+of the package."""
 
 from __future__ import annotations
 
+import ast
 import os
+import pathlib
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
-import pytest
 
-from data_wrangling_with_openstreetmap_and_mongodb_spark import catalog
+import data_wrangling_with_openstreetmap_and_mongodb_spark as pkg
 from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import load_table
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import spread
 
 
-@pytest.fixture()
-def prod_gate(monkeypatch):
-    """Run with the production byte floor (the suite-wide conftest forces
-    the spread on; gating behaviour needs the shipped default)."""
-    monkeypatch.setattr(catalog, "SPREAD_MIN_BYTES", 256 * 1024)
-
-
-def _write(tmp_path, name: str, n_rows: int, row_group_size: int | None = None):
-    # ~90 bytes/row of incompressible-ish payload so byte thresholds are easy
-    # to steer with n_rows
+def _write(tmp_path, name: str, n_rows: int) -> str:
     t = pa.table(
         {
             "id": pa.array(range(n_rows), pa.int64()),
-            "pad": pa.array(
-                [os.urandom(40).hex() for _ in range(n_rows)], pa.string()
-            ),
+            "pad": pa.array([os.urandom(40).hex() for _ in range(n_rows)], pa.string()),
         }
     )
     path = str(tmp_path / f"{name}.parquet")
-    pq.write_table(t, path, row_group_size=row_group_size or n_rows)
+    pq.write_table(t, path, row_group_size=n_rows)  # one row group: one split
     return path
 
 
-def _scan_partitions(df) -> int:
-    return df.rdd.getNumPartitions()
-
-
-def test_unsplittable_large_table_spreads(spark, tmp_path, prod_gate):
-    _write(tmp_path, "big", 5000)  # one row group, ~450 KB > 256 KiB floor
-    df = load_table(spark, str(tmp_path), "big", spread=True)
-    assert _scan_partitions(df) == spark.sparkContext.defaultParallelism
+def test_unsplittable_large_table_spreads(spark, tmp_path):
+    _write(tmp_path, "big", 5000)
+    df = spread(load_table(spark, str(tmp_path), "big"))
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange RoundRobinPartitioning" in plan
     # and the rebalance changes no rows
@@ -57,33 +43,13 @@ def test_unsplittable_large_table_spreads(spark, tmp_path, prod_gate):
     assert df.agg(F.sum("id")).first()[0] == 5000 * 4999 // 2
 
 
-def test_dimension_sized_table_is_left_alone(spark, tmp_path, prod_gate):
-    _write(tmp_path, "dim", 100)  # ~9 KB — under the floor
-    df = load_table(spark, str(tmp_path), "dim", spread=True)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_splittable_input_is_not_reshuffled(spark, tmp_path, prod_gate):
-    # >= defaultParallelism row groups: Spark can split it natively, the
-    # rebalance must not add an exchange (the 100 TB no-op path)
-    _write(tmp_path, "split", 5000, row_group_size=500)  # 10 row groups >= 4
-    df = load_table(spark, str(tmp_path), "split", spread=True)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_pushdown_and_pruning_survive_the_spread(spark, tmp_path, prod_gate):
+def test_pushdown_and_pruning_survive_the_spread(spark, tmp_path):
     from data_wrangling_with_openstreetmap_and_mongodb_spark.plans.inspect import (
         formatted_explain,
     )
 
     _write(tmp_path, "big2", 5000)
-    df = (
-        load_table(spark, str(tmp_path), "big2", spread=True)
-        .filter(F.col("id") > 4000)
-        .select("id")
-    )
+    df = spread(load_table(spark, str(tmp_path), "big2")).filter(F.col("id") > 4000).select("id")
     plan = formatted_explain(df)
     assert "PushedFilters: [IsNotNull(id), GreaterThan(id,4000)]" in plan
     # ReadSchema pruned to the one used column, below the exchange
@@ -91,15 +57,84 @@ def test_pushdown_and_pruning_survive_the_spread(spark, tmp_path, prod_gate):
     assert df.count() == 999
 
 
-def test_env_floor_override(spark, tmp_path, monkeypatch):
-    _write(tmp_path, "tiny", 50)
-    monkeypatch.setattr(catalog, "SPREAD_MIN_BYTES", 1)
-    df = load_table(spark, str(tmp_path), "tiny", spread=True)
-    assert _scan_partitions(df) == spark.sparkContext.defaultParallelism
-
-
-def test_default_is_no_spread(spark, tmp_path, prod_gate):
+def test_default_is_no_spread(spark, tmp_path):
     _write(tmp_path, "big3", 5000)
-    df = load_table(spark, str(tmp_path), "big3")  # no opt-in
+    df = load_table(spark, str(tmp_path), "big3")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+
+def _package_modules():
+    root = pathlib.Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        yield path.relative_to(root).as_posix(), ast.parse(path.read_text())
+
+
+def _parallelism_repartitions() -> list[tuple[str, str]]:
+    """(module, qualified function) of every ``.repartition(`` call whose
+    arguments name ``defaultParallelism``, directly or through a local
+    variable assigned from it in the same function."""
+    hits = []
+
+    def names_parallelism(node: ast.AST, tainted: set[str]) -> bool:
+        return any(
+            (isinstance(n, ast.Attribute) and n.attr == "defaultParallelism")
+            or (isinstance(n, ast.Name) and n.id in tainted)
+            for n in ast.walk(node)
+        )
+
+    def visit(node: ast.AST, module: str, stack: list[str]) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                qual = stack + [child.name]
+                tainted = {
+                    t.id
+                    for n in ast.walk(child)
+                    if isinstance(n, ast.Assign) and names_parallelism(n.value, set())
+                    for t in n.targets
+                    if isinstance(t, ast.Name)
+                }
+                hits.extend(
+                    (module, ".".join(qual))
+                    for n in ast.walk(child)
+                    if isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "repartition"
+                    and any(
+                        names_parallelism(a, tainted)
+                        for a in [*n.args, *(k.value for k in n.keywords)]
+                    )
+                )
+                visit(child, module, qual)
+            else:
+                visit(child, module, stack)
+
+    for module, tree in _package_modules():
+        visit(tree, module, [])
+    return sorted(set(hits))
+
+
+def test_spread_is_the_only_parallelism_repartition():
+    """A stage that needs the whole machine off a one-split scan calls
+    spread instead of pasting the repartition.  A new hit is a copy to
+    port."""
+    assert _parallelism_repartitions() == [("operators/scale.py", "spread")]
+
+
+def test_no_module_reads_parquet_footers():
+    """Physical choices come from the data or from Spark's own statistics,
+    not from pyarrow footer reads."""
+    readers = [
+        module
+        for module, tree in _package_modules()
+        for n in ast.walk(tree)
+        if (isinstance(n, ast.Import) and any(a.name == "pyarrow.parquet" for a in n.names))
+        or (
+            isinstance(n, ast.ImportFrom)
+            and (
+                n.module == "pyarrow.parquet"
+                or (n.module == "pyarrow" and any(a.name == "parquet" for a in n.names))
+            )
+        )
+    ]
+    assert readers == []

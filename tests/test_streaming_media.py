@@ -135,3 +135,23 @@ def test_streaming_mp3_headers_equals_batch(spark, sf_dir, tmp_path):
     cols = want.columns
     assert _rows(got, cols) == _rows(want, cols)
     assert got.count() == 30
+
+
+def test_decode_through_stream_below_32_docs(spark, sf_dir):
+    """Below 32 docs the payload write yields fewer than 32 files (an empty
+    round-robin partition writes none); the trigger size follows the files
+    actually written, so every doc still decodes exactly once."""
+    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
+        _png_plan,
+        extract_png_features,
+    )
+    from data_wrangling_with_openstreetmap_and_mongodb_spark.queries.etl_queries import (
+        _decode_through_stream,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").orderBy("doc_id").limit(6)
+    payloads = synthesize_payloads(docs, _png_plan)
+    got = _decode_through_stream(payloads, "image/png")
+    cols = ["doc_id", "png_type", "width", "height", "n_samples", "mean_c0"]
+    assert _rows(got, cols) == _rows(extract_png_features(payloads), cols)
+    assert got.count() == 6

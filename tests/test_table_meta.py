@@ -1,12 +1,11 @@
-"""The catalog's per-path table-metadata record: the inferred schema and the
-footer counts are read once per file stamp, so a warm table load starts no
-Spark job, and any rewrite of the path (or a flip of an inference conf) is
-seen without an explicit invalidation."""
+"""The catalog's per-path schema record: the inferred schema is read once per
+file stamp, so a warm table load starts no Spark job, and any rewrite of the
+path (or a flip of an inference conf) is seen without an explicit
+invalidation."""
 
 from __future__ import annotations
 
 import os
-import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -60,19 +59,13 @@ def test_rewrite_is_seen_without_invalidation(spark, tmp_path):
     path = str(tmp_path / "t.parquet")
     pq.write_table(pa.table({"a": pa.array([1, 2, 3], pa.int64())}), path)
     assert catalog.load_table(spark, str(tmp_path), "t").columns == ["a"]
-    assert catalog.table_rows(str(tmp_path), "t") == 3
-    assert catalog._parquet_layout(path) == (1, os.path.getsize(path))
 
     pq.write_table(
-        pa.table({"b": pa.array(list("vwxyz")), "c": pa.array([0.5] * 5)}),
-        path,
-        row_group_size=3,
+        pa.table({"b": pa.array(list("vwxyz")), "c": pa.array([0.5] * 5)}), path
     )
     df = catalog.load_table(spark, str(tmp_path), "t")
     assert df.columns == ["b", "c"]
     assert sorted(r["b"] for r in df.collect()) == list("vwxyz")
-    assert catalog.table_rows(str(tmp_path), "t") == 5
-    assert catalog._parquet_layout(path) == (2, os.path.getsize(path))
 
 
 def test_inference_conf_flip_reinfers_schema(spark, tmp_path):
@@ -84,13 +77,3 @@ def test_inference_conf_flip_reinfers_schema(spark, tmp_path):
     df = catalog.load_table(session, str(tmp_path), "b")
     assert df.schema["blob"].dataType == StringType()
     assert sorted(r["blob"] for r in df.collect()) == ["x", "yz"]
-
-
-def test_unreadable_footer_sentinel_is_not_cached(tmp_path):
-    bad = tmp_path / "t.parquet"
-    bad.write_bytes(b"not a parquet file")
-    for _ in range(2):  # warns every time: the fallback is never stored
-        with pytest.warns(RuntimeWarning, match=re.escape(str(bad))):
-            assert catalog.table_rows(str(tmp_path), "t") == 1 << 60
-    pq.write_table(pa.table({"a": pa.array(range(7), pa.int64())}), str(bad))
-    assert catalog.table_rows(str(tmp_path), "t") == 7
