@@ -16,6 +16,11 @@ only the calling process's cwd on the worker path.  So a query whose
 cwd or on ``PYTHONPATH``, and each Python task pays the stock worker's
 re-read of the zip archives on its path.  ``spark.python.daemon.module``
 is a static conf, so no call on a running session can switch the daemon.
+The same holds for ``spark.python.sql.dataFrameDebugging.enabled``, which
+``get_spark`` sets false: a caller's own session keeps PySpark's
+per-Column call-site capture, and with it the Python file and line in an
+error's DataFrame query context, at a few py4j round trips per Column
+function call while a plan is built.
 """
 
 from __future__ import annotations

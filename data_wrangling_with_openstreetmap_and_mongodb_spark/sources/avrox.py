@@ -15,10 +15,10 @@ into byte ranges, one task per range (the fan-out in ``ranges.py``, shared
 with the OSM reader), and each task seeks to its range and scans forward for
 the sync marker to find its first block boundary (a block is owned by the
 task whose range contains the block's *preceding* sync marker, so every
-block is decoded exactly once).  Decoding runs in ``mapInPandas`` —
-Arrow-batched, one Python pass per block, no driver collect.  A false sync
-match inside block data is possible with probability 2^-128 per position —
-the same trade Hadoop's splitter makes.
+block is decoded exactly once).  Decoding runs in ``mapInArrow``: one
+Python pass per block builds one Arrow record batch, no driver collect.  A
+false sync match inside block data is possible with probability 2^-128 per
+position — the same trade Hadoop's splitter makes.
 
 Writing mirrors it: each partition encodes itself into one container file
 under the target directory (``part-*.avro``), so the sink is as parallel
@@ -45,8 +45,10 @@ from glob import glob
 from typing import Any, Callable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from data_wrangling_with_openstreetmap_and_mongodb_spark.sources.ranges import (
     file_ranges,
@@ -447,7 +449,7 @@ def read_avro(
 ) -> DataFrame:
     """Scan one ``.avro`` container file or a directory of them into a
     DataFrame.  Driver work is header-only; blocks decode split-parallel
-    in ``mapInPandas`` (see module docstring for the sync-scan ownership
+    in ``mapInArrow`` (see module docstring for the sync-scan ownership
     rule).  All files must share one schema.
 
     ``general_unions``: multi-branch non-null unions have no native Spark
@@ -479,9 +481,9 @@ def read_avro(
     spark_schema = _avro_to_spark(json.loads(schema_json), {}, union_mode=general_unions)
     if not isinstance(spark_schema, T.StructType):
         raise ValueError("top-level Avro schema must be a record")
-    cols = [f.name for f in spark_schema.fields]
+    arrow_schema = to_arrow_schema(spark_schema)
 
-    def decode_range(fp: str, start: int, end: int, filesize: int) -> Iterator[pd.DataFrame]:
+    def decode_range(fp: str, start: int, end: int, filesize: int) -> Iterator[pa.RecordBatch]:
         decoder = _make_decoder(json.loads(schema_json), {}, union_mode=general_unions)
         with open(fp, "rb") as f:
             meta, sync, header_len = _parse_header(f)
@@ -506,7 +508,7 @@ def read_avro(
                     row, dp = decoder(dmv, dp)
                     rows.append(row)
                 if rows:
-                    yield pd.DataFrame.from_records(rows, columns=cols)
+                    yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
                 q = pos + p + size  # next sync sits right here
                 f.seek(q)
                 if f.read(16) != sync:

@@ -8,11 +8,16 @@ Here the same pipeline is Spark-native and two-phase:
    ``OSM_SPLIT_BYTES`` byte ranges, one task each (``ranges.py``, shared
    with the Avro reader).  A task re-aligns its range to element boundaries
    (``<node``/``<way``/``<relation`` open self-contained subtrees, the
-   contract osmosis/osmium split on) and runs a constant-memory
-   ``iterparse`` over the fragment, emitting one raw row per element:
-   ``(element_type, attrs map, tags map, node_refs array)``.  Python is
-   unavoidable here (there is no JVM OSM parser in-box), so the boundary is
-   Arrow-batched ``mapInPandas``, never row-at-a-time.
+   contract osmosis/osmium split on) and feeds the fragment to one expat
+   parser, the parser ElementTree's ``iterparse`` wraps, emitting one raw
+   row per element: ``(element_type, attrs map, tags map, node_refs
+   array)``.  The handlers keep only each element's attribute dict, tag
+   dict and ref list, which become ``pyarrow`` record batches handed to
+   Spark by ``mapInArrow``: no element tree, no pandas frame, no per-value
+   conversion.  The rows are the ones ``iterparse`` gives
+   (``tests/test_sources.py`` keeps it as the oracle).  Python stays here
+   because at the benchmark's input size a JVM ``xml`` read is slower
+   (ROADMAP item 3).
 
    Scale note: parallelism = bytes / ``OSM_SPLIT_BYTES`` (64 MiB), so a
    planet dump shipped as one huge file still spreads over many tasks,
@@ -44,11 +49,16 @@ import glob
 import os
 import re
 from collections.abc import Iterator
-from typing import Any
+from itertools import accumulate, chain
+from xml.parsers import expat
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import ArrayType, MapType, StringType, StructField, StructType
 
 from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.cleaning import (
     PROBLEMCHARS_RE,
@@ -63,34 +73,16 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.sources.ranges import (
 # data.py:93
 CREATED_ATTRS = ("version", "changeset", "timestamp", "user", "uid")
 
-RAW_ELEMENT_SCHEMA = (
-    "element_type string, attrs map<string,string>, "
-    "tags map<string,string>, node_refs array<string>"
+_STR_MAP = MapType(StringType(), StringType())
+RAW_ELEMENT_SCHEMA = StructType(
+    [
+        StructField("element_type", StringType()),
+        StructField("attrs", _STR_MAP),
+        StructField("tags", _STR_MAP),
+        StructField("node_refs", ArrayType(StringType())),
+    ]
 )
-
-
-def _iterparse_rows(content: bytes) -> Iterator[dict[str, Any]]:
-    import io
-    import xml.etree.ElementTree as ET
-
-    # iterparse + immediate clear: constant memory per task regardless of
-    # file size, exactly like the reference's streaming pass (data.py:143).
-    for _event, elem in ET.iterparse(io.BytesIO(content), events=("end",)):
-        tag = elem.tag
-        if tag in ("node", "way", "relation"):
-            yield {
-                "element_type": tag,
-                "attrs": dict(elem.attrib),
-                "tags": {
-                    t.attrib["k"]: t.attrib.get("v", "")
-                    for t in elem.findall("tag")
-                    if "k" in t.attrib
-                },
-                "node_refs": [
-                    nd.attrib["ref"] for nd in elem.findall("nd") if "ref" in nd.attrib
-                ],
-            }
-            elem.clear()
+_RAW_ARROW = to_arrow_schema(RAW_ELEMENT_SCHEMA)
 
 
 # Top-level OSM element-open tags.  `<nd` (way child) shares a prefix with
@@ -138,12 +130,111 @@ def _read_fragment(path: str, start: int, end: int) -> bytes:
     return frag
 
 
-def _parse_range(path: str, start: int, end: int, size: int) -> Iterator[pd.DataFrame]:
-    """The raw element rows of one byte range, as one pandas frame."""
+_ELEMENTS = frozenset(("node", "way", "relation"))
+# The parser is fed this many bytes at a time; a batch is cut after a feed
+# once this many rows are complete, so a 64 MiB range never holds all its
+# rows as Python strings at once.
+_FEED_BYTES = 1 << 20
+_BATCH_ROWS = 10_000
+
+
+def _parse_range(path: str, start: int, end: int, size: int) -> Iterator[pa.RecordBatch]:
+    """The raw element rows of one byte range, as Arrow batches of
+    ``RAW_ELEMENT_SCHEMA``.
+
+    One expat parser, created as ElementTree creates its own (namespace
+    separator ``}``), runs over the fragment.  Its handlers only collect
+    each element's attribute dict, tag dict and ref list; the batch then
+    flattens them into Arrow columns in C-level list passes.  A row is
+    emitted when a node, way or relation closes, at any depth, like
+    ``iterparse``'s end events: ``attrs`` is every attribute in document
+    order, ``tags`` maps the ``k`` of each direct ``<tag>`` child to its
+    ``v`` (``""`` if absent; no ``k``, no entry; the last duplicate key
+    wins), and ``node_refs`` lists the ``ref`` of each direct ``<nd>``
+    child that has one."""
     frag = _read_fragment(path, start, end)
-    rows = list(_iterparse_rows(b"<osm>" + frag + b"</osm>")) if frag else []
-    if rows:
-        yield pd.DataFrame(rows)
+    if not frag:
+        return
+    # One entry per open XML element: (name, attrs, tags, node_refs) for an
+    # OSM element, None for any other; the None below is the root's parent.
+    open_: list[tuple | None] = [None]
+    push, pop = open_.append, open_.pop
+    closed: list[tuple] = []
+    emit = closed.append
+
+    def start_element(name: str, attrs: dict[str, str]) -> None:
+        if name in _ELEMENTS:
+            push((name, attrs, {}, []))
+            return
+        parent = open_[-1]
+        if parent is not None:
+            if name == "tag":
+                k = attrs.get("k")
+                if k is not None:
+                    parent[2][k] = attrs.get("v", "")
+            elif name == "nd":
+                ref = attrs.get("ref")
+                if ref is not None:
+                    parent[3].append(ref)
+        push(None)
+
+    def end_element(_name: str) -> None:
+        element = pop()
+        if element is not None:
+            emit(element)
+
+    parser = expat.ParserCreate(namespace_separator="}")
+    parser.StartElementHandler = start_element
+    parser.EndElementHandler = end_element
+    view = memoryview(frag)
+    parser.Parse(b"<osm>")
+    for i in range(0, len(view), _FEED_BYTES):
+        parser.Parse(view[i : i + _FEED_BYTES])
+        if len(closed) >= _BATCH_ROWS:
+            yield _element_batch(closed)
+            closed.clear()
+    parser.Parse(b"</osm>", True)
+    if closed:
+        yield _element_batch(closed)
+
+
+def _element_batch(elements: list[tuple]) -> pa.RecordBatch:
+    """Closed ``(name, attrs, tags, node_refs)`` elements as one batch."""
+    refs = [e[3] for e in elements]
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([e[0] for e in elements], pa.string()),
+            _string_map([e[1] for e in elements], universal_keys=True),
+            _string_map([e[2] for e in elements]),
+            pa.ListArray.from_arrays(
+                _offsets(refs),
+                pa.array(list(chain.from_iterable(refs)), pa.string()),
+                type=_RAW_ARROW.field("node_refs").type,
+            ),
+        ],
+        schema=_RAW_ARROW,
+    )
+
+
+def _offsets(parts: list) -> pa.Array:
+    return pa.array(list(accumulate(map(len, parts), initial=0)), pa.int32())
+
+
+def _string_map(dicts: list[dict[str, str]], universal_keys: bool = False) -> pa.MapArray:
+    """``dicts`` as one map column.  With ``universal_keys``, keys are spelled
+    as ElementTree spells attribute names: expat reports a namespaced name as
+    ``uri}local`` and ElementTree prefixes it with ``{``.  ``}`` is not an
+    XML name character, so it marks exactly those names."""
+    names = list(chain.from_iterable(dicts))
+    keys = pa.array(names, pa.string())
+    if universal_keys and pc.any(pc.match_substring(keys, "}")).as_py():
+        keys = pa.array(["{" + n if "}" in n else n for n in names], pa.string())
+    return pa.MapArray.from_arrays(
+        _offsets(dicts),
+        keys,
+        pa.array(list(chain.from_iterable(map(dict.values, dicts))), pa.string()),
+        type=_RAW_ARROW.field("attrs").type,
+    )
 
 
 def read_osm_elements(spark: SparkSession, path: str) -> DataFrame:
@@ -175,16 +266,24 @@ def tag_key_class_counts(raw: DataFrame) -> DataFrame:
     )
 
 
-def shape_elements(raw: DataFrame, clean_streets: bool = True) -> DataFrame:
-    """Shape raw OSM elements into the reference's document form (§1.2).
+# The shaping filter and output Columns, per (SparkContext, clean_streets).
+# They are unresolved expressions over ``raw``'s column names only, so one
+# set serves every frame of a context; building them costs ~500 py4j round
+# trips (~1,000 with call-site capture on), most of them the street-cleaning
+# rules.
+_SHAPING: dict[tuple[SparkContext, bool], tuple[Column, list[Column]]] = {}
 
-    Output schema::
 
-        id string, type string, visible string,
-        created struct<version,changeset,timestamp:timestamp,user,uid>,
-        pos array<double>, address map<string,string>,
-        tags map<string,string>, node_refs array<string>
-    """
+def _shaping(clean_streets: bool) -> tuple[Column, list[Column]]:
+    key = (SparkContext._active_spark_context, clean_streets)
+    if key not in _SHAPING:
+        for stale in [k for k in _SHAPING if k[0] is not key[0]]:
+            del _SHAPING[stale]
+        _SHAPING[key] = _build_shaping(clean_streets)
+    return _SHAPING[key]
+
+
+def _build_shaping(clean_streets: bool) -> tuple[Column, list[Column]]:
     a = F.col("attrs")
     tags = F.col("tags")
 
@@ -222,7 +321,8 @@ def shape_elements(raw: DataFrame, clean_streets: bool = True) -> DataFrame:
 
     node_refs = F.when(F.col("element_type") == "way", F.col("node_refs"))
 
-    return raw.filter(F.col("element_type").isin("node", "way")).select(
+    keep = F.col("element_type").isin("node", "way")
+    return keep, [
         a["id"].alias("id"),
         F.col("element_type").alias("type"),
         a["visible"].alias("visible"),
@@ -231,7 +331,21 @@ def shape_elements(raw: DataFrame, clean_streets: bool = True) -> DataFrame:
         address.alias("address"),
         clean_tags.alias("tags"),
         node_refs.alias("node_refs"),
-    )
+    ]
+
+
+def shape_elements(raw: DataFrame, clean_streets: bool = True) -> DataFrame:
+    """Shape raw OSM elements into the reference's document form (§1.2).
+
+    Output schema::
+
+        id string, type string, visible string,
+        created struct<version,changeset,timestamp:timestamp,user,uid>,
+        pos array<double>, address map<string,string>,
+        tags map<string,string>, node_refs array<string>
+    """
+    keep, columns = _shaping(clean_streets)
+    return raw.filter(keep).select(*columns)
 
 
 def process_map(spark: SparkSession, path_in: str, path_out: str) -> DataFrame:

@@ -5,7 +5,9 @@ A reader cuts its files into ``(path, start, end, size)`` ranges and hands
 record boundaries (XML element opens, Avro sync markers).  Each range is
 one partition of ``spark.range(0, n, 1, n)``: no shuffle reaches the
 parse, and a single range is a ``SinglePartition`` plan, so a downstream
-aggregate needs no exchange either.
+aggregate needs no exchange either.  The parse yields ``pyarrow``
+record batches, which ``mapInArrow`` hands to the JVM as they are: no
+pandas frame and no per-value conversion sits between parse and plan.
 """
 
 from __future__ import annotations
@@ -13,7 +15,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -34,16 +36,17 @@ def file_ranges(files: list[str], split_bytes: int) -> list[ByteRange]:
 def map_ranges(
     spark: SparkSession,
     ranges: list[ByteRange],
-    parse: Callable[[str, int, int, int], Iterator[pd.DataFrame]],
-    schema: StructType | str,
+    parse: Callable[[str, int, int, int], Iterator[pa.RecordBatch]],
+    schema: StructType,
 ) -> DataFrame:
     """One task per range, running ``parse(path, start, end, size)`` under
-    ``mapInPandas``; it yields the range's rows as frames of ``schema``."""
+    ``mapInArrow``; it yields the range's rows as record batches whose
+    Arrow schema is ``to_arrow_schema(schema)``."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for i in pdf["id"]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for i in batch.column("id").to_pylist():
                 yield from parse(*ranges[i])
 
     n = len(ranges)
-    return spark.range(0, n, 1, n).mapInPandas(run, schema=schema)
+    return spark.range(0, n, 1, n).mapInArrow(run, schema=schema)

@@ -15,6 +15,7 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.session import (
 )
 
 BROADCAST_KEY = "spark.sql.autoBroadcastJoinThreshold"
+DEBUGGING_KEY = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 def test_plain_session_gets_broadcast_threshold_and_df_broadcast(spark, sf_dir):
@@ -87,3 +88,43 @@ def test_other_conf_failure_warns_and_applies_the_rest():
         ensure_runtime_confs(session)
     expected = {k: v for k, v in _RUNTIME_CONFS.items() if k != BROADCAST_KEY}
     assert session.conf.values == expected
+
+
+def test_engine_session_turns_call_site_capture_off(spark):
+    """get_spark sets the static call-site capture conf off.  It is not a
+    runtime conf: ensure_runtime_confs cannot set it on a plain session."""
+    assert spark.conf.get(DEBUGGING_KEY) == "false"
+    assert DEBUGGING_KEY not in _RUNTIME_CONFS
+    with pytest.raises(Exception, match="CANNOT_MODIFY_STATIC_CONFIG"):
+        spark.conf.set(DEBUGGING_KEY, "true")
+
+
+def test_shaping_plan_construction_round_trip_budget(spark, tmp_path, monkeypatch):
+    """On a warm session, building shape_elements' plan makes a handful of
+    py4j round trips: its filter and output Columns are built once per
+    SparkContext and reused.  Building them afresh makes ~500."""
+    from py4j.clientserver import ClientServerConnection
+
+    from data_wrangling_with_openstreetmap_and_mongodb_spark.sources import osm
+
+    p = tmp_path / "one.osm"
+    p.write_text('<osm><node id="1" lat="1" lon="2"/></osm>')
+    raw = osm.read_osm_elements(spark, str(p))
+    osm.shape_elements(raw)  # warm: builds the shared Columns
+
+    calls = 0
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        nonlocal calls
+        calls += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    shaped = osm.shape_elements(raw)
+    monkeypatch.undo()
+    assert calls <= 25, calls
+    assert all(key[0] is spark.sparkContext for key in osm._SHAPING)
+    assert shaped.columns == [
+        "id", "type", "visible", "created", "pos", "address", "tags", "node_refs"
+    ]

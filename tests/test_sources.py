@@ -120,23 +120,139 @@ def osm_shaped(osm_raw):
     return shape_elements(osm_raw).cache()
 
 
+def _iterparse_rows(content: bytes):
+    """The reference parse, kept here as the oracle for the engine's expat
+    kernel: ElementTree ``iterparse`` end events, as the reference's
+    ``data.py`` runs them, one row per node/way/relation."""
+    import io
+    import xml.etree.ElementTree as ET
+
+    for _event, elem in ET.iterparse(io.BytesIO(content), events=("end",)):
+        tag = elem.tag
+        if tag in ("node", "way", "relation"):
+            yield {
+                "element_type": tag,
+                "attrs": dict(elem.attrib),
+                "tags": {
+                    t.attrib["k"]: t.attrib.get("v", "")
+                    for t in elem.findall("tag")
+                    if "k" in t.attrib
+                },
+                "node_refs": [
+                    nd.attrib["ref"] for nd in elem.findall("nd") if "ref" in nd.attrib
+                ],
+            }
+            elem.clear()
+
+
+def _reference_rows(content: bytes) -> list[tuple]:
+    """The oracle's rows, with map entries in order, as ``_kernel_rows``."""
+    return [
+        (
+            r["element_type"],
+            tuple(r["attrs"].items()),
+            tuple(r["tags"].items()),
+            tuple(r["node_refs"]),
+        )
+        for r in _iterparse_rows(content)
+    ]
+
+
+def _kernel_rows(path, split_bytes: int) -> list[tuple]:
+    """The expat kernel's rows over every range, in range order.  Map
+    entries stay in Arrow order, so a duplicate key would show."""
+    return [
+        (r["element_type"], tuple(r["attrs"]), tuple(r["tags"]), tuple(r["node_refs"]))
+        for rng in file_ranges([str(path)], split_bytes)
+        for batch in osm._parse_range(*rng)
+        for r in batch.to_pylist()
+    ]
+
+
 def test_ranges_reassemble_whole_file_parse(tmp_path):
     """Spark-free: for any range size, the per-range rows concatenated in
-    range order are the whole-file parse, in order.  Small sizes cut
-    mid-tag and mid-element, and leave the last element to a range that
-    is not the last one but reads on to EOF and so meets the trailer."""
+    range order are the reference parse of the whole file, in order.  Small
+    sizes cut mid-tag and mid-element, and leave the last element to a
+    range that is not the last one but reads on to EOF and so meets the
+    trailer."""
     p = _big_osm(tmp_path, 12)
     size = p.stat().st_size
-    whole = [_element_key(r) for r in osm._iterparse_rows(p.read_bytes())]
+    whole = _reference_rows(p.read_bytes())
     assert len(whole) == 7 * 12
     for split_bytes in (17, 64, 100, 200, 257, 4096, size // 2, size, size + 1):
-        got = [
-            _element_key(r)
-            for rng in file_ranges([str(p)], split_bytes)
-            for pdf in osm._parse_range(*rng)
-            for r in pdf.to_dict("records")
-        ]
-        assert got == whole, split_bytes
+        assert _kernel_rows(p, split_bytes) == whole, split_bytes
+
+
+@pytest.mark.parametrize("seed", [11, 12, 13])
+def test_kernel_matches_reference_parse_on_generated_file(tmp_path, seed):
+    """The expat kernel gives the reference parse's rows on the benchmark's
+    generated files (scale 0.02), read as one range and as ~64 KiB ranges."""
+    from perfbench import osmgen
+
+    p = tmp_path / "map.osm"
+    osmgen.generate(str(p), seed, 0.02)
+    whole = _reference_rows(p.read_bytes())
+    assert len(whole) > 4000
+    assert _kernel_rows(p, 64 << 20) == whole
+    assert _kernel_rows(p, 1 << 16) == whole
+
+
+# Every case the kernel must spell as ElementTree does: a duplicate tag key
+# (the last wins), <tag> without v ("") and without k (skipped), <nd>
+# without ref (skipped), <member> children and their own children (not the
+# relation's), entity and character references, a non-OSM attribute and a
+# namespaced one (kept in attrs), and a node nested in a way (its own row,
+# emitted first; its children are not the way's).
+EDGE_OSM = """<?xml version="1.0" encoding="UTF-8"?>
+<osm version="0.6" generator="edge">
+  <bounds minlat="37.0" minlon="-122.1" maxlat="37.4" maxlon="-122.0"/>
+  <node id="1" lat="37.1" lon="-122.05" user="a&amp;b" xml:lang="en" extra="kept">
+    <tag k="name" v="first"/>
+    <tag k="amenity" v="cafe"/>
+    <tag k="name" v="second"/>
+    <tag k="novalue"/>
+    <tag v="nokey"/>
+    <!-- a comment -->
+    <tag k="ent" v="&quot;Tom&apos;s&quot; &#233;&#x263A; &lt;b&gt;"/>
+  </node>
+  <way id="2">
+    <nd ref="1"/>
+    <nd/>
+    <nd ref="3"/>
+    <tag k="highway" v="residential"/>
+    <node id="9"><tag k="inner" v="yes"/><nd ref="99"/></node>
+    <tag k="after" v="nested"/>
+  </way>
+  <relation id="4">
+    <member type="node" ref="1" role="stop"><tag k="member_tag" v="no"/></member>
+    <member type="way" ref="2" role=""/>
+    <tag k="type" v="route"/>
+  </relation>
+</osm>
+"""
+
+EDGE_ROWS = [
+    (
+        "node",
+        (
+            ("id", "1"), ("lat", "37.1"), ("lon", "-122.05"), ("user", "a&b"),
+            ("{http://www.w3.org/XML/1998/namespace}lang", "en"), ("extra", "kept"),
+        ),
+        (("name", "second"), ("amenity", "cafe"), ("novalue", ""),
+         ("ent", "\"Tom's\" \u00e9\u263a <b>")),
+        (),
+    ),
+    ("node", (("id", "9"),), (("inner", "yes"),), ("99",)),
+    ("way", (("id", "2"),), (("highway", "residential"), ("after", "nested")), ("1", "3")),
+    ("relation", (("id", "4"),), (("type", "route"),), ()),
+]
+
+
+def test_kernel_matches_reference_parse_on_edge_cases(tmp_path):
+    p = tmp_path / "edge.osm"
+    p.write_text(EDGE_OSM, encoding="utf-8")
+    assert _reference_rows(p.read_bytes()) == EDGE_ROWS
+    assert _kernel_rows(p, 64 << 20) == EDGE_ROWS
 
 
 class TestOsmSource:
@@ -154,6 +270,14 @@ class TestOsmSource:
                 _element_key(r) for r in read_osm_elements(spark, str(p)).collect()
             )
             assert split == whole
+
+    def test_edge_cases_reach_spark_as_parsed(self, spark, tmp_path):
+        # The Arrow batches cross into Spark unchanged: empty maps and
+        # arrays, a namespaced attribute key, non-ASCII values.
+        p = tmp_path / "edge.osm"
+        p.write_text(EDGE_OSM, encoding="utf-8")
+        got = [_element_key(r) for r in read_osm_elements(spark, str(p)).collect()]
+        assert got == [_element_key(r) for r in _iterparse_rows(p.read_bytes())]
 
     def test_glob_reads_every_matching_file(self, spark, tmp_path):
         (tmp_path / "a.osm").write_text(OSM_XML)
