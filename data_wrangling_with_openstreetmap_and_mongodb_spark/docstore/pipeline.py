@@ -878,15 +878,15 @@ def _apply_graph_lookup(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     Distributed shape: a bounded frontier loop, exactly the engine's
     connected-components idiom — per round ONE equi-join (frontier value →
     ``connectToField``) plus a left-anti join against the visited set for
-    cycle termination; lineage truncates per round via localCheckpoint,
-    and the only driver action is the frontier-empty check (the documented
+    cycle termination; lineage is cut per round (``cut_lineage``), and
+    the only driver action is the frontier-empty check (the documented
     iterative-algorithm exception).  Rounds are bounded by
     ``maxDepth + 1`` when given, else the reachable-set diameter (cycles
     terminate through the visited set, like Mongo).
 
     Like ``$lookup`` (r9), the local document's identity is an ephemeral
-    row key (``monotonically_increasing_id``, pinned by an eager
-    localCheckpoint so every lineage fork reads the same ids): duplicate
+    row key (``monotonically_increasing_id``, pinned by an eager lineage
+    cut so every lineage fork reads the same ids): duplicate
     local docs each keep their own traversal and output row (Mongo emits
     one per input doc), map-typed local columns work, and — the scale
     win — the frontier/visited state carries ``(row key, value)`` pairs
@@ -930,11 +930,13 @@ def _apply_graph_lookup(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     depth_field = spec.get("depthField")
     max_depth = spec.get("maxDepth")
 
+    # imported here: the operators package would add its import cost to
+    # every docstore import
+    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import cut_lineage
+
     # eager checkpoint pins the row ids: every lineage fork below (frontier
     # seed, visited set, final join-back) must read the SAME id per doc
-    ldf = df.withColumn(
-        "__gl_rowid", F.monotonically_increasing_id()
-    ).localCheckpoint()
+    ldf = cut_lineage(df.withColumn("__gl_rowid", F.monotonically_increasing_id()))
     ec = ExpressionCompiler(ldf)
     frontier = _graph_seed(ldf, ec, spec["startWith"])
     foreign = from_df.alias("__g__")
@@ -953,7 +955,8 @@ def _apply_graph_lookup(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
             F.struct(*[F.col(f"__g__.{c}") for c in from_df.columns]).alias("__doc"),
             F.col(f"__g__.{conn_from}").alias("__next"),
             F.lit(depth).alias("__depth"),
-        ).localCheckpoint(eager=False)
+        )
+        hits = cut_lineage(hits, eager=False)
         # eager=False: hits materializes INSIDE the frontier checkpoint's job
         # below and is reused by `reached` from the checkpoint — truncating
         # lineage without paying a dedicated per-round job (A/B at sf0.1 on
@@ -975,12 +978,10 @@ def _apply_graph_lookup(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
         anti_cond = (
             F.col("__c__.__gl_rowid") == F.col("__vis__.__gl_rowid")
         ) & F.col("__c__.__v").eqNullSafe(F.col("__vis__.__v"))
-        frontier = (
-            cand.alias("__c__")
-            .join(visited.alias("__vis__"), anti_cond, "left_anti")
-            .localCheckpoint()
+        frontier = cut_lineage(
+            cand.alias("__c__").join(visited.alias("__vis__"), anti_cond, "left_anti")
         )
-        visited = visited.unionByName(frontier).localCheckpoint(eager=False)
+        visited = cut_lineage(visited.unionByName(frontier), eager=False)
         depth += 1
         if frontier.isEmpty():
             break
@@ -1074,9 +1075,9 @@ def _apply_graph_lookup_doubling(df: DataFrame, spec: dict[str, Any]) -> DataFra
     conn_from, conn_to = spec["connectFromField"], spec["connectToField"]
     depth_field = spec.get("depthField")
     max_depth = spec.get("maxDepth")
-    ldf = df.withColumn(
-        "__gl_rowid", F.monotonically_increasing_id()
-    ).localCheckpoint()
+    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import cut_lineage
+
+    ldf = cut_lineage(df.withColumn("__gl_rowid", F.monotonically_increasing_id()))
     ec = ExpressionCompiler(ldf)
     starts = _graph_seed(ldf, ec, spec["startWith"])
 
@@ -1097,11 +1098,10 @@ def _apply_graph_lookup_doubling(df: DataFrame, spec: dict[str, Any]) -> DataFra
     ident = nodes.select(
         "__src", F.col("__src").alias("__dst"), F.lit(0).alias("__d")
     )
-    closure = (
+    closure = cut_lineage(
         ident.unionByName(edges.withColumn("__d", F.lit(1)))
         .groupBy("__src", "__dst")
         .agg(F.min("__d").alias("__d"))
-        .localCheckpoint()
     )
 
     def compose(c: DataFrame) -> DataFrame:
@@ -1114,10 +1114,7 @@ def _apply_graph_lookup_doubling(df: DataFrame, spec: dict[str, Any]) -> DataFra
                 (F.col("__a.__d") + F.col("__b.__d")).alias("__d"),
             )
         )
-        return (
-            comp.groupBy("__src", "__dst").agg(F.min("__d").alias("__d"))
-            .localCheckpoint()
-        )
+        return cut_lineage(comp.groupBy("__src", "__dst").agg(F.min("__d").alias("__d")))
 
     if max_depth is not None:
         md = int(max_depth)
@@ -2171,32 +2168,21 @@ def _compile_merge_pipeline(
     return overrides
 
 
-def _merge_materialize_mode(spark) -> str:
-    """How ``$merge`` materializes its result before overwriting the target,
-    by the durability available.  r15 (guide §6) replaced the staged-sibling
-    rewrite (a SECOND full parquet write + read of the whole table) with an
-    eager checkpoint; r16 (ADVICE r15) made the choice DURABILITY-AWARE,
-    because between checkpoint and overwrite the checkpoint blocks are the
-    ONLY copy of the merged table while mode('overwrite') truncates the
-    target:
+def _merge_staged(spark) -> bool:
+    """Whether ``$merge`` stages its result in a sibling parquet write
+    instead of a lineage cut before overwriting the target.
 
-    - a configured checkpoint dir → ``"reliable"`` ``checkpoint()``
-      (DFS-backed blocks survive executor loss — the cluster-safe fast
-      path);
-    - ``local[*]`` master → ``"local"`` ``localCheckpoint()``
-      (executor-local blocks; driver==executor here, so a "lost executor"
-      is a lost job anyway);
-    - otherwise (a real cluster without a checkpoint dir) → ``"staged"``,
-      the sibling write: slower (one extra full write+read) but the
-      sibling parquet is durable, so a failed overwrite cannot destroy the
-      only copy.
+    Between the cut and the overwrite the cut's blocks are the ONLY copy
+    of the merged table, while ``mode('overwrite')`` truncates the target.
+    A checkpoint dir makes them durable (reliable checkpoint), and on a
+    ``local[*]`` master driver and executor are one process, so a lost
+    executor is a lost job anyway: both cut.  A cluster without a
+    checkpoint dir would hold the only copy in executor-local blocks, so
+    it stages instead: one extra full write and read, but the sibling
+    parquet survives a failed overwrite.
     """
     sc = spark.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return "reliable"
-    if sc.master.startswith("local"):
-        return "local"
-    return "staged"
+    return sc.getCheckpointDir() is None and not sc.master.startswith("local")
 
 
 def _apply_merge(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
@@ -2228,11 +2214,12 @@ def _apply_merge(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     raises (the key comes from the join and cannot be modified).  Compiles
     to CASE expressions on the source-only side of the same join.
 
-    One full-outer join on the key, then an eager ``localCheckpoint`` and
-    a single overwrite of the target (parquet cannot be read and
-    overwritten in one job; the checkpoint truncates the lineage off the
+    One full-outer join on the key, then an eager lineage cut
+    (``cut_lineage``) and a single overwrite of the target (parquet cannot
+    be read and overwritten in one job; the cut takes the lineage off the
     target, which replaced the pre-r15 staged-sibling rewrite that wrote
-    and re-read the whole table twice).  Like ``$out`` this is the
+    and re-read the whole table twice; see ``_merge_staged`` for when that
+    rewrite still runs).  Like ``$out`` this is the
     action-bearing stage by definition; everything before it stays one
     lazy plan.
     """
@@ -2400,11 +2387,12 @@ def _apply_merge(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     ):
         raise ValueError(f"unsupported whenNotMatched: {when_not_matched!r}")
     # The merged result reads `into`, so it cannot overwrite `into` in one
-    # job: it is materialized first (see _merge_materialize_mode).  Any
-    # raise_error guard above fires during the materialization job, before
-    # the target is touched, in every mode.
-    mode = _merge_materialize_mode(spark)
-    if mode == "staged":
+    # job: it is materialized first (see _merge_staged).  Any raise_error
+    # guard above fires during the materialization job, before the target
+    # is touched, either way.
+    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import cut_lineage
+
+    if _merge_staged(spark):
         staged_path = into.rstrip("/") + "__merge_tmp"
         result.write.mode("overwrite").parquet(staged_path)
         spark.read.parquet(staged_path).write.mode("overwrite").parquet(into)
@@ -2412,10 +2400,7 @@ def _apply_merge(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
 
         shutil.rmtree(staged_path, ignore_errors=True)  # best-effort cleanup
     else:
-        if mode == "reliable":
-            materialized = result.checkpoint(eager=True)
-        else:
-            materialized = result.localCheckpoint(eager=True)
+        materialized = cut_lineage(result)
         try:
             materialized.write.mode("overwrite").parquet(into)
         finally:

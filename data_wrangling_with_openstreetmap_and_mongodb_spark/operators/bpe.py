@@ -22,9 +22,8 @@ Scale design — the whole reason to train BPE on the cluster:
   exact semantics reference BPE implementations use — so the symbol table
   never round-trips through Python.
 - Lineage: the symbol table re-derives from the word table through k merge
-  expressions; ``localCheckpoint`` every few iterations truncates the
-  growing fold-expression plan (flag-inherited from the caller via
-  ``checkpoint_every``).
+  expressions; a lineage cut every ``MERGES_PER_CUT`` iterations truncates
+  the growing fold-expression plan.
 
 Determinism: ties on pair count break lexicographically (pair asc) — the
 trained merge table is a pure function of the corpus, stable under retries
@@ -38,7 +37,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import cut_lineage
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.text import whitespace_tokens
+
+# Merges folded into the symbol-table expression between lineage cuts: a
+# cut costs a job, and each uncut merge nests one more fold in the plan.
+MERGES_PER_CUT = 4
 
 
 def word_frequencies(df: DataFrame, text_col: str) -> DataFrame:
@@ -116,7 +120,6 @@ def bpe_train(
     df: DataFrame,
     text_col: str,
     n_merges: int = 10,
-    checkpoint_every: int = 4,
 ) -> tuple[list[tuple[str, str, int]], DataFrame]:
     """Train ``n_merges`` BPE merges over the corpus.
 
@@ -129,9 +132,9 @@ def bpe_train(
     over the vocabulary-sized word table.
     """
     words = word_frequencies(df, text_col)
-    table = words.select(
-        "word", "freq", chars_col(F.col("word")).alias("symbols")
-    ).localCheckpoint()
+    table = cut_lineage(
+        words.select("word", "freq", chars_col(F.col("word")).alias("symbols"))
+    )
     merges: list[tuple[str, str, int]] = []
     for i in range(n_merges):
         best = (
@@ -145,9 +148,8 @@ def bpe_train(
         a, b, cnt = best[0]["a"], best[0]["b"], int(best[0]["cnt"])
         merges.append((a, b, cnt))
         table = table.withColumn("symbols", merge_pair_col(F.col("symbols"), a, b))
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            # truncate the growing fold-expression lineage
-            table = table.localCheckpoint()
+        if (i + 1) % MERGES_PER_CUT == 0:
+            table = cut_lineage(table)
     return merges, table
 
 

@@ -9,14 +9,16 @@ iterative min-label propagation in pure DataFrame algebra:
 
     label(v) ← min(label(v), min over neighbors u of label(u))
 
-repeated until fixpoint.  Each round is one shuffle (edge join + min
-aggregate); convergence takes at most the graph diameter rounds — for
+repeated until fixpoint, with a pointer-jumping pass
+(``label(v) ← label(label(v))``) after every sync's propagation rounds, so
+syncs grow with log2 of the component diameter.  Each round is one
+shuffle (edge join + min aggregate, or the jump's self-join); for
 near-duplicate clusters the diameter is tiny (duplicates of one source
-document link to each other), so a handful of rounds suffice.  The
-per-round ``count()`` convergence check is a driver action by design:
-iterative algorithms are the documented exception to the action-free-plan
-rule, and the loop bound caps total work.  ``localCheckpoint`` truncates
-lineage each round — without it the plan doubles per iteration and the
+document link to each other), so one or two syncs suffice.  The per-sync
+``count()`` convergence check is a driver action by design: iterative
+algorithms are the documented exception to the action-free-plan rule, and
+the loop bound caps total work.  :func:`...scale.cut_lineage` cuts
+lineage each sync — without it the plan doubles per iteration and the
 optimizer, not the data, becomes the bottleneck.
 
 At 100 TB the same loop runs with edges bucketed by vertex; production
@@ -30,6 +32,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import cut_lineage
+
 # Min-label propagation rounds composed per materialization + driver
 # convergence check.  A sync costs a checkpoint job and a barrier; an extra
 # round deepens lineage and may be wasted past the fixpoint.  On the 10×
@@ -38,93 +42,37 @@ from pyspark.sql import DataFrame
 ROUNDS_PER_SYNC = 2
 
 
-def _truncate(df: DataFrame, mode: str, eager: bool = True) -> DataFrame:
-    """Cut lineage per ``mode``:
-
-    - ``"local"`` — ``localCheckpoint``: blocks live on executor local
-      storage.  Fast (no DFS round-trip), but an executor loss mid-job
-      loses the blocks AND the lineage to rebuild them — fine on local[N]
-      and short-lived jobs, unsafe for long iterative jobs on a real
-      cluster.
-    - ``"reliable"`` — ``checkpoint``: blocks go to the configured
-      checkpoint directory (HDFS/DFS), surviving any executor loss.  Costs
-      a write barrier per call; requires ``sc.setCheckpointDir`` (raises
-      with guidance when unset rather than failing deep inside the job).
-    """
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "checkpoint_mode='reliable' needs "
-                "spark.sparkContext.setCheckpointDir(<DFS path>) first"
-            )
-        return df.checkpoint(eager=eager)
-    if mode != "local":
-        raise ValueError(f"unknown checkpoint_mode: {mode!r}")
-    return df.localCheckpoint(eager=eager)
-
-
 def connected_components(
     edges: DataFrame,
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iters: int = 20,
-    checkpoint_mode: str = "local",
-    method: str = "frontier",
-    stats: dict | None = None,
 ) -> DataFrame:
     """``(id, component)`` for every vertex in ``edges``; ``component`` is
     the minimum vertex id in the connected component (deterministic).
 
-    ``checkpoint_mode='reliable'`` swaps every lineage truncation for a
-    DFS-backed ``checkpoint()`` so a lost executor costs a task retry, not
-    the job (VERDICT r3 ask #4) — the cluster-safe setting for long runs;
-    ``'local'`` (default) keeps the faster executor-local blocks.  Measured
-    at sf0.1 (ngram-pairs cluster collapse): see PLANS.md §checkpoint-modes.
-
-    ``method`` (r9 — VERDICT r8 ask #6, the 30–100x diameter story):
-
-    - ``"frontier"`` (default): pure min-label propagation — sync rounds
-      grow LINEARLY with component diameter.  Right for near-dup clusters
-      (duplicates of one source link to each other; diameters of 2–5) and
-      fully oracle-checkable.
-    - ``"doubling"``: each sync adds a pointer-jumping pass
-      (``label(v) ← label(label(v))`` — labels are vertex ids, so the hop
-      is one more equi-join) that halves remaining chain distance: sync
-      rounds grow with **log2(diameter)**.  One extra shuffle per sync, so
-      it loses on tiny diameters and wins asymptotically — measured
-      crossover in PLANS.md §cc-diameter-scaling.
-
-    Non-convergence within ``max_iters`` now RAISES (was: silently returned
-    partial labels — a correctness hazard for high-diameter graphs).
-    ``stats`` (optional dict) receives ``rounds`` (sync count),
-    ``propagations`` (min-label passes: ``ROUNDS_PER_SYNC`` per sync), and
-    ``jumps`` (pointer jumps: 1/sync in doubling mode, else 0) for
-    measurement harnesses — per-sync shuffle work is ``propagations + jumps``.
+    Each sync runs ``ROUNDS_PER_SYNC`` min-label propagations and one
+    pointer jump, then cuts lineage and counts changed labels.  The jump
+    halves the remaining chain distance, so a depth-d chain converges in
+    about log2(d) syncs instead of d/2 (PLANS.md §cc-diameter-scaling).
+    Fails loudly when ``max_iters`` propagation rounds do not reach the
+    fixpoint, rather than returning partial labels.
     """
-    if method not in ("frontier", "doubling"):
-        raise ValueError(f"unknown method: {method!r} (frontier/doubling)")
     # Eager checkpoint of the RAW edges, before symmetrization: the edge
     # input is typically an expensive near-dup pipeline (candidate join +
     # verification), and building the symmetric view first would reference —
     # and execute — that pipeline twice in one job.  Materializing the edges
     # once up front makes both union branches cheap scans of in-memory
     # blocks (measured 2.5× on the sf0.1 ngram-pairs cluster query).
-    e = _truncate(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
-        checkpoint_mode,
-        eager=True,
+    e = cut_lineage(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     )
-    sym = _truncate(
+    sym = cut_lineage(
         e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct(),
-        checkpoint_mode,
         eager=False,
     )
-    labels = _truncate(
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id")),
-        checkpoint_mode,
+    labels = cut_lineage(
+        sym.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id")),
         eager=False,
     )
     def propagate(lbls):
@@ -157,41 +105,24 @@ def connected_components(
     # Near-dup clusters have tiny diameters, so composing rounds usually
     # converges in ONE sync.  Checking only the LAST composed round's change
     # flag is sound: propagation is deterministic and monotone, so a round
-    # with zero changes means fixpoint whatever the rounds before it did (in
-    # doubling mode the jump's change flag OR-folds in, so a jump-only
-    # improvement also keeps the loop alive).
+    # with zero changes means fixpoint whatever the rounds before it did (the
+    # jump's change flag OR-folds in, so a jump-only improvement also keeps
+    # the loop alive).
     per = ROUNDS_PER_SYNC
-    rounds = 0
-    converged = False
-    for _ in range((max_iters + per - 1) // per):
-        rounds += 1
+    syncs = (max_iters + per - 1) // per
+    for _ in range(syncs):
         step = propagate(labels)
         for _ in range(per - 1):
             step = propagate(step.drop("__chg"))
-        if method == "doubling":
-            step = jump(step)
-        updated = _truncate(step, checkpoint_mode, eager=False)
+        updated = cut_lineage(jump(step), eager=False)
         changed = updated.filter(F.col("__chg")).count()
         labels = updated.drop("__chg")
         if changed == 0:
-            converged = True
-            break
-    if stats is not None:
-        stats["rounds"] = rounds
-        # per-sync shuffle passes: ROUNDS_PER_SYNC min-label propagations,
-        # plus one pointer-jump join in doubling mode (r10, ADVICE r9 — the
-        # probe harness compares per-sync work across methods, so the jump
-        # pass must count)
-        stats["propagations"] = rounds * per
-        stats["jumps"] = rounds if method == "doubling" else 0
-        stats["converged"] = converged
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within max_iters="
-            f"{max_iters} ({rounds} syncs, method={method!r}); raise "
-            "max_iters or use method='doubling' for high-diameter graphs"
-        )
-    return labels.select("id", F.col("label").alias("component"))
+            return labels.select("id", F.col("label").alias("component"))
+    raise RuntimeError(
+        f"connected_components did not converge within max_iters="
+        f"{max_iters} ({syncs} syncs); raise max_iters"
+    )
 
 
 def dedup_clusters(
@@ -200,8 +131,6 @@ def dedup_clusters(
     id_col: str,
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    checkpoint_mode: str = "local",
-    method: str = "frontier",
     max_iters: int = 20,
 ) -> DataFrame:
     """Cluster assignment + canonical pick over a corpus and its near-dup
@@ -211,9 +140,7 @@ def dedup_clusters(
     canonical member is the cluster's minimum id (deterministic, stable
     across runs — the property retries and incremental reruns need).
     """
-    comp = connected_components(
-        pairs, src_col, dst_col, max_iters, checkpoint_mode, method
-    )
+    comp = connected_components(pairs, src_col, dst_col, max_iters)
     ids = df.select(F.col(id_col).alias("id"))
     joined = ids.join(comp, "id", "left").select(
         "id", F.coalesce("component", F.col("id")).alias("cluster")
@@ -228,8 +155,6 @@ def dedup_keep_best(
     quality_col: str,
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    checkpoint_mode: str = "local",
-    method: str = "frontier",
     max_iters: int = 20,
 ) -> DataFrame:
     """:func:`dedup_clusters` with a QUALITY-aware canonical pick:
@@ -244,9 +169,7 @@ def dedup_keep_best(
     cluster ids remain the min-id component labels so incremental reruns
     keep stable cluster identities even as better members arrive.
     """
-    comp = connected_components(
-        pairs, src_col, dst_col, max_iters, checkpoint_mode, method
-    )
+    comp = connected_components(pairs, src_col, dst_col, max_iters)
     ids = df.select(F.col(id_col).alias("id"), F.col(quality_col).alias("__q"))
     clustered = ids.join(comp, "id", "left").select(
         "id", "__q", F.coalesce("component", F.col("id")).alias("cluster")
@@ -270,9 +193,6 @@ def pagerank(
     dst_col: str = "dst",
     iters: int = 3,
     damping: float = 0.85,
-    checkpoint_every: int = 0,
-    checkpoint_mode: str = "reliable",
-    pre_materialized: bool = False,
 ) -> DataFrame:
     """Damped PageRank by a fixed number of power iterations — ``(id, pr)``.
 
@@ -296,55 +216,28 @@ def pagerank(
     left join back to the node set — all equi-joins on vertex ids, the same
     bucketing a 100 TB deployment would pre-partition edges by.  The plan
     grows linearly in ``iters`` (no lineage loop — iters is a literal
-    constant, so no checkpoint needed at single-digit depths).
+    constant, so no mid-run cut is needed at single-digit depths).
 
-    For DEEP runs on a real cluster set ``checkpoint_every=k``: the rank
-    frame is checkpointed every k iterations, bounding both plan size and
-    the recomputation window after an executor loss.  The default mode is
-    ``'reliable'`` (DFS-backed ``checkpoint()`` — survives executor loss;
-    requires ``sc.setCheckpointDir``) because a job deep enough to need
-    truncation is exactly the job that cannot afford executor-local blocks
-    (VERDICT r3 ask #4); pass ``checkpoint_mode='local'`` to trade that
-    durability for speed on local[N].  Values are unchanged either way —
-    truncation only cuts lineage, so the trajectory oracle holds in every
-    mode.  Barrier cost measured at sf0.1: see PLANS.md §checkpoint-modes.
-
-    ``pre_materialized=True`` checkpoints the DISTINCT EDGE SET once up
-    front (mode per ``checkpoint_mode``), so each unrolled iteration reads
-    materialized edges through id-keyed shuffles instead of re-deriving
-    the upstream edge pipeline (e.g. a lineitem⋈orders join) ``iters``
-    times.  Values are identical (trajectory oracle holds; asserted in the
-    probe before timing).  Measured, not asserted — PLANS.md
-    §pagerank-edge-materialization (commit 29f8e24): on the catalog
-    query's lineitem⋈orders derivation, 1.44× faster at sf0.1 (600k edge rows) and 1.30× at 10×
-    (6M rows) — unlike a ``.persist()`` of the tiny node/rank frames
-    (measured 2.4× SLOWER, see below), one lineage cut on the BULKY
-    derived table is a win at every tested scale, and the margin grows
-    with derivation cost.  The 100 TB recipe is pre_materialized=True (or
-    persist/write the edge table yourself); the default stays False only
-    because trivially-derived ad-hoc graphs don't need the barrier.
+    The DISTINCT EDGE SET is cut once up front (:func:`...scale.cut_lineage`),
+    so each unrolled iteration reads materialized edges through id-keyed
+    shuffles instead of re-deriving the upstream edge pipeline (e.g. a
+    lineitem⋈orders join) ``iters`` times: 1.44× faster at sf0.1 and 1.30×
+    at 10× on the catalog query's edge pipeline (PLANS.md
+    §pagerank-edge-materialization).  The tiny node and rank frames are not
+    cut: a barrier on them costs more than their re-derivation.  Values
+    are identical either way; a cut only changes the plan.
     """
     from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import dsum
 
-    # Deliberately NOT persisted by default: at tested scales Catalyst
-    # re-derives the edge/node sets cheaply inside each iteration's
-    # collapsed plan and AQE coalesces the tiny shuffles, while a cache
-    # boundary pins the pre-AQE partition layout and pays per-stage
-    # scheduling on every cached read (measured 2.4× slower at sf0.1).  On
-    # a REAL graph — where `edges` is an expensive multi-table join — pass
-    # pre_materialized=True (or persist/write the edge set yourself); the
-    # operator composes with either choice.
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    if pre_materialized:
-        e = _truncate(e, checkpoint_mode, eager=True)
+    e = cut_lineage(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
+    )
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
     )
-    # NOT truncated: materializing the node set too was built and measured
+    # NOT cut: materializing the node set too was built and measured
     # (r16) — it cuts the per-iteration exchanges 14 → 6 but adds a
     # checkpoint barrier that costs more than the tiny exchanges it saves
     # (3.3-3.9 s → 3.9-4.6 s at sf0.1); the unrolled re-derivation off the
@@ -363,7 +256,7 @@ def pagerank(
     # No join hints: the rank, out-degree and contribution frames are
     # node-sized, and AQE broadcasts them from runtime statistics (dsum is
     # order-independent, so the join strategy never changes a value).
-    for i in range(iters):
+    for _ in range(iters):
         contrib = (
             e.join(r, e["src"] == r["id"])
             .join(od, "src")
@@ -381,8 +274,4 @@ def pagerank(
                 ).alias("pr"),
             )
         )
-        # truncate mid-run only: the final frame returns to the caller's
-        # plan, where a trailing checkpoint would be a pure extra barrier
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            r = _truncate(r, checkpoint_mode, eager=True)
     return r

@@ -1,5 +1,5 @@
-"""Scale-out primitives: skew salting, bucketed co-located joins, and
-partitioned sinks with pruning.
+"""Scale-out primitives: the one rebalance and the one lineage cut, skew
+salting, bucketed co-located joins, and partitioned sinks with pruning.
 
 None of these change results — they change *plans*.  They are the knobs a
 100 TB deployment turns when the defaults (AQE skew handling, shuffle hash
@@ -32,6 +32,22 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     still pushes filters and prunes columns below the exchange."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *key_cols) if key_cols else df.repartition(n)
+
+
+def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Materialize ``df`` and return a frame that reads the materialized
+    blocks: the package's one lineage cut for iterative operators (graph
+    loops, ``$graphLookup``, BPE training) and ``$merge``.
+
+    The session decides where the blocks live.  With a checkpoint dir set
+    on the SparkContext they go there (reliable ``checkpoint``, which
+    survives executor loss); otherwise they stay in executor-local storage
+    (``localCheckpoint``).  A cut changes no value, only the plan.
+    ``eager=False`` defers the write to the first job that reads the frame.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)
 
 
 def salted_join(

@@ -1622,14 +1622,10 @@ def supplier_customer_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(1000000) + F.col("l_suppkey")).alias("src"),
         F.col("o_custkey").alias("dst"),
     )
-    # one checkpoint of the derived edge table beats re-deriving the
-    # lineitem⋈orders join in each iteration at every measured scale
-    # (PLANS.md §pagerank-edge-materialization); AQE broadcasts the
-    # node-sized frames from the checkpoint's own size statistics
-    return pagerank(
-        edges, "src", "dst", iters=3, damping=0.85,
-        pre_materialized=True, checkpoint_mode="local",
-    )
+    # pagerank cuts the derived edge table once, so the lineitem⋈orders
+    # join is not re-derived per iteration; AQE broadcasts the node-sized
+    # frames from the cut's own size statistics
+    return pagerank(edges, "src", "dst", iters=3, damping=0.85)
 
 
 @register(
@@ -3146,13 +3142,7 @@ def dedup_keep_best_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(d, "text", "doc_id", n=3, threshold=0.8)
-    # method="doubling": measured on THIS query's 10x edge replica (r13,
-    # PLANS.md §cc-knobs-10x) — doubling 3.3s vs frontier 6.6s median —
-    # and EXACTLY neutral at sf0.1 (r14 A/B, n=5 alternating: 4.554 vs
-    # 4.545s median, mins identical; PLANS.md §cc-method-ab) — identical
-    # components either way.  The r13 driver row's 9.87s was bench-chunk
-    # load contamination, not the pin.
-    return dedup_keep_best(d, pairs, "doc_id", "n_chars", method="doubling").select(
+    return dedup_keep_best(d, pairs, "doc_id", "n_chars").select(
         F.col("id").alias("doc_id"), "cluster", "is_canonical"
     )
 

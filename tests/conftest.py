@@ -29,7 +29,11 @@ def spark():
     spark = get_spark("tests", master="local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
+    # a checkpoint dir turns every later lineage cut reliable, so a test
+    # that sets one must unset it (tests/test_graph.py::checkpoint_dir)
+    leaked = spark.sparkContext.getCheckpointDir()
     spark.stop()
+    assert leaked is None, f"a test left checkpoint dir {leaked} set"
 
 
 @pytest.fixture(scope="session")

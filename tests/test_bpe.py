@@ -86,7 +86,7 @@ class TestMergeFold:
 class TestBpeTrain:
     def test_matches_reference_trainer(self, spark):
         df = spark.createDataFrame([(t,) for t in CORPUS], "text string")
-        merges, table = bpe_train(df, "text", n_merges=8, checkpoint_every=3)
+        merges, table = bpe_train(df, "text", n_merges=8)
         ref_merges, ref_table = _ref_bpe(CORPUS, 8)
         assert merges == ref_merges
         got = {r["word"]: list(r["symbols"]) for r in table.collect()}

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import (
     connected_components,
     dedup_clusters,
@@ -51,9 +53,27 @@ def test_long_path_converges_within_iteration_cap(spark):
     assert set(comp.values()) == {0}
 
 
-def test_doubling_equals_frontier(spark):
-    """Pointer-doubling CC (r9): identical labels to min-label propagation
-    on a mixed graph (chains, star, singles-by-absence, reversed edges)."""
+def _union_find_components(pairs):
+    """Reference labels: vertex -> minimum vertex id of its component."""
+    parent = {}
+
+    def find(v):
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
+
+
+def test_mixed_graph_matches_union_find(spark):
+    """Chains, a star, a random patch and reversed pairs all label like a
+    union-find over the same pairs."""
     import random
 
     rng = random.Random(11)
@@ -61,36 +81,24 @@ def test_doubling_equals_frontier(spark):
     pairs += [(100, 100 + j) for j in range(1, 8)]           # star
     pairs += [(rng.randint(200, 240), rng.randint(200, 240)) for _ in range(40)]
     pairs += [(301, 300), (303, 302)]                        # reversed pairs
-    e = _edges(spark, pairs)
-    want = {r["id"]: r["component"]
-            for r in connected_components(e, max_iters=40).collect()}
-    got = {r["id"]: r["component"]
-           for r in connected_components(e, method="doubling").collect()}
-    assert got == want
+    got = {
+        r["id"]: r["component"]
+        for r in connected_components(_edges(spark, pairs), max_iters=40).collect()
+    }
+    assert got == _union_find_components(pairs)
 
 
-def test_doubling_log_rounds_on_deep_chain(spark):
-    """A 64-vertex path: frontier moves the min label 2 hops per sync
-    (~diameter/2 syncs), doubling converges in O(log2 diameter) syncs —
-    and the stats hook reports both."""
-    import pytest
-
+def test_deep_path_converges_in_log_syncs(spark):
+    """A 64-vertex path converges within max_iters=16 (8 syncs): the
+    pointer jump halves the remaining chain distance each sync.  Min-label
+    propagation alone moves the label 2 hops per sync and would need ~32
+    syncs, so it would raise here."""
     e = _edges(spark, [(i, i + 1) for i in range(63)])
-    st_f, st_d = {}, {}
-    connected_components(e, max_iters=80, stats=st_f)
-    connected_components(e, method="doubling", max_iters=40, stats=st_d)
-    assert st_f["converged"] and st_d["converged"]
-    assert st_f["rounds"] >= 30  # linear in diameter
-    assert st_d["rounds"] < st_f["rounds"]
-    assert st_d["rounds"] <= 7  # log-ish, not linear
-    # per-sync shuffle accounting (r10, ADVICE r9): two min-label passes per
-    # sync in both methods, plus one pointer-jump join per sync in doubling
-    assert st_f["propagations"] == st_f["rounds"] * 2 and st_f["jumps"] == 0
-    assert st_d["propagations"] == st_d["rounds"] * 2
-    assert st_d["jumps"] == st_d["rounds"]
-    # non-convergence now raises loudly instead of returning partial labels
+    comp = {r["id"]: r["component"] for r in connected_components(e, max_iters=16).collect()}
+    assert comp == {i: 0 for i in range(64)}
+    # non-convergence raises loudly instead of returning partial labels
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(e, max_iters=8)
+        connected_components(e, max_iters=4)
 
 
 def test_dedup_clusters_singletons_and_canonicals(spark):
@@ -194,81 +202,43 @@ class TestDedupKeepBest:
         assert out == {a: True, b: False}
 
 
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """A path the test may set as the shared session's checkpoint dir; the
+    dir is unset afterwards (PySpark has no public call that unsets one)."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    try:
+        yield tmp_path / "ckpt"
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+
+
+def _cc_and_pagerank(spark):
+    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import pagerank
+
+    pairs = _edges(spark, [(1, 2), (2, 3), (10, 11), (5, 3)])
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (4, 1), (4, 3)], "src long, dst long"
+    )
+    comp = {(r["id"], r["component"]) for r in connected_components(pairs).collect()}
+    pr = {r["id"]: r["pr"] for r in pagerank(edges, iters=6).collect()}
+    return comp, pr
+
+
 class TestCheckpointModes:
-    # NOTE: the raises-upfront test must run FIRST in this class — the later
-    # tests set a checkpoint dir on the shared session (pytest runs methods
-    # in definition order).
-    def test_reliable_mode_without_dir_raises_upfront(self, spark):
-        import pytest
-        from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import (
-            connected_components,
-        )
-
-        if spark.sparkContext.getCheckpointDir() is not None:
-            pytest.skip("checkpoint dir already set by an earlier test")
-        pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-        with pytest.raises(ValueError, match="setCheckpointDir"):
-            connected_components(pairs, checkpoint_mode="reliable")
-
-    def test_reliable_mode_same_components(self, spark, tmp_path):
-        """checkpoint_mode='reliable' (DFS-backed, executor-loss-safe) must
-        produce identical components to the default local mode."""
-        from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import (
-            connected_components,
-        )
-
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3), (10, 11), (5, 3)], "id_a long, id_b long"
-        )
-        local = {
-            (r["id"], r["component"])
-            for r in connected_components(pairs).collect()
-        }
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-        reliable = {
-            (r["id"], r["component"])
-            for r in connected_components(
-                pairs, checkpoint_mode="reliable"
-            ).collect()
-        }
-        assert reliable == local
-        assert local == {(1, 1), (2, 1), (3, 1), (5, 1), (10, 10), (11, 10)}
-
-    def test_pagerank_checkpointed_trajectory_identical(self, spark, tmp_path):
-        """Lineage truncation must not change a single bit of the ranks."""
-        from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import pagerank
-
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 1), (4, 1), (4, 3)], "src long, dst long"
-        )
-        plain = {r["id"]: r["pr"] for r in pagerank(edges, iters=6).collect()}
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-        ckpt = {
-            r["id"]: r["pr"]
-            for r in pagerank(edges, iters=6, checkpoint_every=2).collect()
-        }
-        assert ckpt == plain  # exact float equality: same IEEE trajectory
-        lcl = {
-            r["id"]: r["pr"]
-            for r in pagerank(
-                edges, iters=6, checkpoint_every=3, checkpoint_mode="local"
-            ).collect()
-        }
-        assert lcl == plain
-        # pre-materializing the edge set (the 100 TB recipe, measured in
-        # PLANS.md §pagerank-edge-materialization) is also lineage-only
-        pre = {
-            r["id"]: r["pr"]
-            for r in pagerank(
-                edges, iters=6, pre_materialized=True, checkpoint_mode="local"
-            ).collect()
-        }
-        assert pre == plain
-        pre_rel = {
-            r["id"]: r["pr"]
-            for r in pagerank(edges, iters=6, pre_materialized=True).collect()
-        }
-        assert pre_rel == plain
+    def test_reliable_mode_same_components(self, spark, checkpoint_dir):
+        """With a checkpoint dir set, every lineage cut is a reliable
+        checkpoint written under it.  Components and the 6-iteration
+        PageRank trajectory stay bit-identical to the executor-local cuts
+        taken without one."""
+        local_comp, local_pr = _cc_and_pagerank(spark)
+        spark.sparkContext.setCheckpointDir(str(checkpoint_dir))
+        comp, pr = _cc_and_pagerank(spark)
+        assert any(p.name.startswith("rdd-") for p in checkpoint_dir.rglob("*"))
+        assert comp == local_comp == {(1, 1), (2, 1), (3, 1), (5, 1), (10, 10), (11, 10)}
+        assert pr == local_pr  # exact float equality: same IEEE trajectory
 
     def test_exactly_one_canonical_per_cluster(self, spark):
         from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import (
@@ -291,10 +261,9 @@ class TestCheckpointModes:
 
 class TestPagerankAdaptiveMaterialization:
     def test_catalog_query_gate_is_value_neutral(self, spark, sf_dir):
-        """supplier_customer_pagerank checkpoints its derived edge table
-        at every scale (PLANS.md §pagerank-edge-materialization).  That
-        choice must not change a single value: the catalog query equals an
-        unmaterialized PageRank over the same edges, exactly."""
+        """supplier_customer_pagerank is the operator over the
+        lineitem⋈orders edges, value for value: the catalog row adds no
+        option of its own."""
         import pyspark.sql.functions as F
 
         from data_wrangling_with_openstreetmap_and_mongodb_spark.catalog import load_table

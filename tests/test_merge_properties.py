@@ -312,7 +312,7 @@ def test_merge_null_on_key_matches_null_target(spark, tmp_path_factory):
 
 def test_merge_staged_mode_matches_local(spark, tmp_path_factory, monkeypatch):
     """r16 (ADVICE r15): the durability-aware materialization — staged
-    sibling write vs localCheckpoint — must be value-identical; only the
+    sibling write vs lineage cut — must be value-identical; only the
     write path differs.  Also pins that the staged sibling dir is cleaned
     up and that the catalog's schema record read from the target before the
     merge does not outlive the overwrite."""
@@ -321,9 +321,9 @@ def test_merge_staged_mode_matches_local(spark, tmp_path_factory, monkeypatch):
     from data_wrangling_with_openstreetmap_and_mongodb_spark import catalog
     from data_wrangling_with_openstreetmap_and_mongodb_spark.docstore import pipeline
 
-    monkeypatch.setattr(pipeline, "_merge_materialize_mode", lambda spark: "local")
+    monkeypatch.setattr(pipeline, "_merge_staged", lambda spark: False)
     _, cols_a, got_a = _run_merge(spark, tmp_path_factory, {"whenMatched": "replace"})
-    monkeypatch.setattr(pipeline, "_merge_materialize_mode", lambda spark: "staged")
+    monkeypatch.setattr(pipeline, "_merge_staged", lambda spark: True)
 
     base = str(tmp_path_factory.mktemp("merge_fuzz"))
     path = _os.path.join(base, "t.parquet")

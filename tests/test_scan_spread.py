@@ -2,8 +2,8 @@
 parquet scan is round-robin repartitioned to the scheduler's parallelism;
 predicate pushdown and column pruning still reach the scan below the
 exchange; a plain load_table adds no exchange.  The inventory keeps spread
-the only defaultParallelism repartition and keeps parquet footer reads out
-of the package."""
+the only defaultParallelism repartition, scale.cut_lineage the only
+iterative lineage cut, and parquet footer reads out of the package."""
 
 from __future__ import annotations
 
@@ -119,6 +119,40 @@ def test_spread_is_the_only_parallelism_repartition():
     spread instead of pasting the repartition.  A new hit is a copy to
     port."""
     assert _parallelism_repartitions() == [("operators/scale.py", "spread")]
+
+
+def _checkpoint_calls() -> list[tuple[str, str]]:
+    """(module, qualified function) of every ``.checkpoint(`` or
+    ``.localCheckpoint(`` call in the package."""
+    hits = []
+
+    def visit(node: ast.AST, module: str, stack: list[str]) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, module, stack + [child.name])
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("checkpoint", "localCheckpoint")
+            ):
+                hits.append((module, ".".join(stack)))
+            visit(child, module, stack)
+
+    for module, tree in _package_modules():
+        visit(tree, module, [])
+    return sorted(set(hits))
+
+
+def test_cut_lineage_is_the_only_checkpoint():
+    """Iterative operators and $merge cut lineage through cut_lineage, so
+    the session's checkpoint dir, not each call site, decides between a
+    reliable and a local checkpoint.  The streaming drive's per-batch
+    DISK_ONLY checkpoint is not an iterative cut."""
+    assert _checkpoint_calls() == [
+        ("operators/scale.py", "cut_lineage"),
+        ("streaming/drive.py", "run_available_now.materialize"),
+    ]
 
 
 def test_no_module_reads_parquet_footers():
