@@ -215,30 +215,40 @@ def checkpoint_dir(spark, tmp_path):
     assert sc.getCheckpointDir() is None
 
 
-def _cc_and_pagerank(spark):
+def _components(spark):
+    pairs = _edges(spark, [(1, 2), (2, 3), (10, 11), (5, 3)])
+    return {(r["id"], r["component"]) for r in connected_components(pairs).collect()}
+
+
+def _pagerank_ranks(spark):
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import pagerank
 
-    pairs = _edges(spark, [(1, 2), (2, 3), (10, 11), (5, 3)])
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (4, 1), (4, 3)], "src long, dst long"
     )
-    comp = {(r["id"], r["component"]) for r in connected_components(pairs).collect()}
-    pr = {r["id"]: r["pr"] for r in pagerank(edges, iters=6).collect()}
-    return comp, pr
+    return {r["id"]: r["pr"] for r in pagerank(edges, iters=6).collect()}
 
 
 class TestCheckpointModes:
     def test_reliable_mode_same_components(self, spark, checkpoint_dir):
         """With a checkpoint dir set, every lineage cut is a reliable
-        checkpoint written under it.  Components and the 6-iteration
-        PageRank trajectory stay bit-identical to the executor-local cuts
-        taken without one."""
-        local_comp, local_pr = _cc_and_pagerank(spark)
+        checkpoint written under it, and the components stay identical to
+        the executor-local cuts taken without one."""
+        local = _components(spark)
         spark.sparkContext.setCheckpointDir(str(checkpoint_dir))
-        comp, pr = _cc_and_pagerank(spark)
+        reliable = _components(spark)
         assert any(p.name.startswith("rdd-") for p in checkpoint_dir.rglob("*"))
-        assert comp == local_comp == {(1, 1), (2, 1), (3, 1), (5, 1), (10, 10), (11, 10)}
-        assert pr == local_pr  # exact float equality: same IEEE trajectory
+        assert reliable == local == {(1, 1), (2, 1), (3, 1), (5, 1), (10, 10), (11, 10)}
+
+    def test_pagerank_checkpointed_trajectory_identical(self, spark, checkpoint_dir):
+        """Lineage truncation must not change a single bit of the ranks:
+        the 6-iteration trajectory under reliable checkpoints equals the
+        one under executor-local cuts."""
+        plain = _pagerank_ranks(spark)
+        spark.sparkContext.setCheckpointDir(str(checkpoint_dir))
+        ckpt = _pagerank_ranks(spark)
+        assert any(p.name.startswith("rdd-") for p in checkpoint_dir.rglob("*"))
+        assert ckpt == plain  # exact float equality: same IEEE trajectory
 
     def test_exactly_one_canonical_per_cluster(self, spark):
         from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import (
