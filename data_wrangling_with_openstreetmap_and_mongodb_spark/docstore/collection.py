@@ -299,7 +299,6 @@ class DocumentCollection:
         updates: DataFrame,
         on: str,
         set_map: dict[str, str],
-        broadcast: bool = True,
     ) -> "DocumentCollection":
         """Enrichment update: for rows matching ``on``, set ``set_map`` target
         columns (dotted paths into structs supported) from the updates side.
@@ -308,9 +307,8 @@ class DocumentCollection:
         per-key find_one + save) as one broadcast left join — the scalable
         rendering of N point lookups.
         """
-        right = F.broadcast(updates) if broadcast else updates
         upd_cols = {c: f"__upd_{c}" for c in updates.columns if c != on}
-        renamed = right
+        renamed = F.broadcast(updates)
         for c, a in upd_cols.items():
             renamed = renamed.withColumnRenamed(c, a)
         joined = self.df.join(renamed, on=on, how="left")

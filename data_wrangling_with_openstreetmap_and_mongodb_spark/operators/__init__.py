@@ -7,264 +7,7 @@ search (BM25, phrase), data-quality expectations, upsert/SCD2/table-diff,
 Unicode normalization, multimodal binary plumbing, sketches (count-min,
 Bloom — both on the engine-agnostic md5 hash family, hence SQL-oracle-able),
 and scale-out primitives (salting, bucketing, partitioned sinks,
-compaction)."""
+compaction).
 
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.asof import (
-    asof_join,
-    interval_join,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.bpe import (
-    adjacent_pair_counts,
-    bpe_encode,
-    bpe_train,
-    merge_pair_col,
-    word_frequencies,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (
-    contaminated_docs,
-    contaminated_docs_bloom,
-    gumbel_topk_sample,
-    mixture_sample,
-    pack_sequences,
-    chunk_token_windows,
-    repetition_metrics,
-    shuffle_into_shards,
-    split_assign,
-    stratified_sample,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.geo import (
-    geo_near,
-    geo_radius_join,
-    geohash,
-    haversine_km,
-    point_in_polygon,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
-    dedup_exact,
-    embedding_near_pairs,
-    exact_duplicates,
-    minhash_band_index,
-    minhash_lsh_pairs,
-    minhash_probe_index,
-    ngram_jaccard_pairs,
-    simhash,
-    simhash_near_pairs,
-    span_dedup,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.events import (
-    funnel_stages,
-    gap_fill_interpolate,
-    gap_fill_locf,
-    ohlc_resample,
-    retention_cohorts,
-    rolling_avg,
-    time_weighted_avg,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.graph import (
-    connected_components,
-    dedup_clusters,
-    dedup_keep_best,
-    pagerank,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.multimodal import (
-    extract_features,
-    with_binary_payload,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.privacy import (
-    pii_profile,
-    redact_pii,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.quality import (
-    duplicate_keys,
-    expectations_report,
-    fk_orphans,
-    null_fractions,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import (
-    compact_parquet,
-    cut_lineage,
-    events_partitioned_by_day,
-    salted_count_distinct,
-    salted_join,
-    spread,
-    write_bucketed,
-    write_partitioned,
-    hilbert_index,
-    hilbert_index_n,
-    write_zordered,
-    zvalue,
-    zvalue_n,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.sketch import (
-    bloom_build,
-    bloom_might_contain,
-    cms_build,
-    cms_estimate,
-    cms_merge,
-    lc_bits,
-    lc_estimate,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.search import (
-    bm25_topk,
-    phrase_match_counts,
-    positional_index,
-    unigram_logprob,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.similarity import (
-    cosine_to_query,
-    cosine_topk,
-    diversity_sample,
-    ivfpq_residuals,
-    ivfpq_topk,
-    nonzero_vectors,
-    pq_adc_topk,
-    pq_encode,
-    pq_train_codebooks,
-    quantize_int8,
-    semantic_dedup_pairs,
-    ivf_flat_topk,
-    ivf_flat_topk_trained,
-    ivf_probe_partitioned,
-    ivf_write_index,
-    kmeans_centroids,
-    lsh_bucket_topk,
-    lsh_near_pairs,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.normalize import (
-    normalize_text,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.text import (
-    build_vocab,
-    c4_rule_flags,
-    encode_tokens,
-    detect_language_agg,
-    detect_from_scores,
-    fingerprint_md5,
-    quality_score,
-    regex_token_count,
-    rule_filter_audit,
-    shingles,
-    token_count,
-    winnow_fingerprints,
-)
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.upsert import (
-    merge_update,
-    merge_update_struct,
-    scd2_apply_changes,
-    scd2_from_changes,
-    table_diff,
-)
-
-__all__ = [
-    "asof_join",
-    "bloom_build",
-    "build_vocab",
-    "encode_tokens",
-    "gap_fill_interpolate",
-    "gap_fill_locf",
-    "bloom_might_contain",
-    "cms_build",
-    "cms_estimate",
-    "cms_merge",
-    "contaminated_docs_bloom",
-    "dedup_keep_best",
-    "lc_bits",
-    "lc_estimate",
-    "bm25_topk",
-    "c4_rule_flags",
-    "compact_parquet",
-    "connected_components",
-    "contaminated_docs",
-    "dedup_clusters",
-    "diversity_sample",
-    "duplicate_keys",
-    "expectations_report",
-    "fk_orphans",
-    "funnel_stages",
-    "interval_join",
-    "ivfpq_residuals",
-    "ivfpq_topk",
-    "minhash_band_index",
-    "minhash_probe_index",
-    "mixture_sample",
-    "nonzero_vectors",
-    "normalize_text",
-    "null_fractions",
-    "ohlc_resample",
-    "pack_sequences",
-    "pagerank",
-    "phrase_match_counts",
-    "pii_profile",
-    "positional_index",
-    "pq_adc_topk",
-    "pq_encode",
-    "pq_train_codebooks",
-    "quantize_int8",
-    "redact_pii",
-    "adjacent_pair_counts",
-    "bpe_encode",
-    "bpe_train",
-    "merge_pair_col",
-    "word_frequencies",
-    "chunk_token_windows",
-    "repetition_metrics",
-    "retention_cohorts",
-    "rolling_avg",
-    "rule_filter_audit",
-    "geo_near",
-    "geo_radius_join",
-    "gumbel_topk_sample",
-    "geohash",
-    "haversine_km",
-    "point_in_polygon",
-    "scd2_apply_changes",
-    "scd2_from_changes",
-    "shuffle_into_shards",
-    "semantic_dedup_pairs",
-    "span_dedup",
-    "split_assign",
-    "stratified_sample",
-    "table_diff",
-    "unigram_logprob",
-    "winnow_fingerprints",
-    "cosine_to_query",
-    "cosine_topk",
-    "dedup_exact",
-    "detect_from_scores",
-    "detect_language_agg",
-    "embedding_near_pairs",
-    "events_partitioned_by_day",
-    "exact_duplicates",
-    "extract_features",
-    "fingerprint_md5",
-    "ivf_flat_topk",
-    "ivf_flat_topk_trained",
-    "ivf_probe_partitioned",
-    "ivf_write_index",
-    "kmeans_centroids",
-    "lsh_bucket_topk",
-    "lsh_near_pairs",
-    "merge_update",
-    "merge_update_struct",
-    "minhash_lsh_pairs",
-    "ngram_jaccard_pairs",
-    "quality_score",
-    "regex_token_count",
-    "salted_count_distinct",
-    "salted_join",
-    "spread",
-    "cut_lineage",
-    "shingles",
-    "simhash",
-    "simhash_near_pairs",
-    "token_count",
-    "with_binary_payload",
-    "write_bucketed",
-    "time_weighted_avg",
-    "write_partitioned",
-    "hilbert_index",
-    "hilbert_index_n",
-    "write_zordered",
-    "zvalue",
-    "zvalue_n",
-]
+Import each operator from its submodule: the package re-exports nothing,
+so importing one submodule loads only that module and its own imports."""

@@ -17,8 +17,9 @@ Scale design (the 100 TB story):
   hash-aggregate (one shuffle), then Hamming-bucket candidate join.
 - **Embedding cosine**: exact all-pairs as a block-nested-loop matrix join
   (blocks meet pairwise on executors; nothing collects to the driver, no
-  whole-matrix broadcast), with an automatic failover to random-hyperplane
-  LSH bucketing above ``max_exact_rows`` (see similarity.py).
+  whole-matrix broadcast).  Above ``MAX_EXACT_ROWS`` it raises; the
+  sub-quadratic paths are similarity.py's ``lsh_near_pairs`` and
+  ``semantic_dedup_pairs``.
 """
 
 from __future__ import annotations
@@ -27,6 +28,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import spread
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.similarity import (
+    _cell_cosine_pairs,
+)
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.text import (
     fingerprint_md5,
     whitespace_tokens,
@@ -812,144 +816,58 @@ def simhash_near_pairs(
 # ---------------------------------------------------------------------------
 # Embedding-cosine near-dup (exact; LSH variant in similarity.py)
 # ---------------------------------------------------------------------------
+# Rows per block of the exact all-pairs plan.  Small blocks parallelize
+# (2048 → ONE task at n=2000; 256 → 36 block pairs, measured 1.88s → 0.81s
+# at sf0.1) while replication stays bounded by the 128-block cap: a vector
+# ships once per block pair it is in, at most 128× whatever the block size,
+# so this only governs the small-n regime where parallelism is scarce.
+BLOCK_ROWS = 256
+# Exact all-pairs is O(n²) compute by definition; above this many rows the
+# operator refuses instead of running for days.
+MAX_EXACT_ROWS = 1_000_000
+
+
 def embedding_near_pairs(
     df: DataFrame,
     vec_col: str,
     id_col: str,
     threshold: float = 0.95,
-    max_exact_rows: int = 1_000_000,
-    block_target: int = 256,
-    n_rows: int | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
-    """Pairs of near-identical embeddings by cosine ≥ threshold — exact.
+    """Pairs of near-identical embeddings by cosine ≥ threshold — exact:
+    ``(id_a, id_b, cosine)`` with ``id_a < id_b``.
 
     Block-nested-loop matrix plan, fully executor-side (no driver collect, no
-    broadcast of vector data): rows hash into ⌈n/block_target⌉ blocks, each
-    block packs its (id, vector) rows once via ``collect_list``, the
-    nb·(nb+1)/2 triangular block-index pairs are enumerated as a *tiny*
-    literal table and the heavy packed rows attach via two **equi-joins** on
-    the block id (Catalyst broadcasts only the index table; the packed rows
-    move through hash joins, never a nested-loop broadcast).  Each Arrow
-    batch multiplies one block against another in numpy.  Work and memory
-    distribute over block pairs; a block is ~``block_target``×d doubles (a
-    few MB), never the whole matrix.
+    broadcast of vector data): the whole input is one cell of
+    ``similarity._cell_cosine_pairs``, split into ⌈n/``BLOCK_ROWS``⌉ blocks
+    (at most 128).  Each block packs its (id, vector) rows once, diagonal
+    blocks multiply straight from the packed frame, and the nb·(nb−1)/2
+    off-diagonal block pairs attach through a tiny broadcast index table and
+    two equi-joins.  Each Arrow batch multiplies one block against another
+    in numpy; a block is ~``BLOCK_ROWS``×d doubles (a few MB), never the
+    whole matrix.
 
-    Pair completeness: blocks partition the ids, so an unordered pair {x, y}
-    lands in exactly one (blk_a ≤ blk_b) block pair.  On the diagonal
-    (blk_a == blk_b) the ``id_a < id_b`` mask drops self-pairs and mirror
-    duplicates; off the diagonal *every* above-threshold cell is kept and the
-    ids are canonicalized (min, max) — filtering off-diagonal cells by
-    ``id_a < id_b`` would silently drop the pairs whose smaller id hashed
-    into the b-side block.
+    Bit parity: ``similarity._seq_cosine`` accumulates dims-sequentially,
+    the operation order of Spark's ``aggregate`` and DuckDB's
+    ``list_dot_product``; quantization mirrors functions/detagg.py.
 
-    Bit parity: the dot/norm accumulation is vectorized over *pairs* but
-    sequential over *dims* — per-element operation order identical to a
-    scalar left fold, hence to Spark's ``aggregate`` and DuckDB's
-    ``list_dot_product`` (BLAS ``matmul`` is NOT: measured 64% of pairs
-    differ in the last ulp, enough to flip a 1e-6 quantization bucket).
-    Quantization mirrors functions/detagg.py: floor(x*1e6+0.5)/1e6 in IEEE
-    doubles.  Dot and norms commute under id canonicalization (a·b ≡ b·a
-    per element), so swapped blocks yield bit-identical cosines.
-
-    Scale guard: exact all-pairs is O(n²) compute by definition; above
-    ``max_exact_rows`` this fails over to the sub-quadratic banded sign-LSH
-    plan (:func:`...similarity.lsh_near_pairs`) — the 100 TB path.
-
-    ``n_rows``: caller-supplied row count, so plan construction stays
-    action-free; when omitted a one-off ``df.count()`` decides.
-    ``dim`` is forwarded to the LSH failover (which needs it to compile
-    hyperplane literals).
+    The one ``df.count()`` is this operator's driver action: it sizes the
+    block count, and above ``MAX_EXACT_ROWS`` rows the operator raises a
+    ``ValueError`` — use ``similarity.lsh_near_pairs`` (approximate,
+    sub-quadratic) or ``similarity.semantic_dedup_pairs`` (exact within
+    k-means cells) there.
     """
-    import numpy as np
-    import pandas as pd
-
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.similarity import (
-        lsh_near_pairs,
-    )
-
-    n = n_rows if n_rows is not None else df.count()
-    if n > max_exact_rows:
-        return lsh_near_pairs(
-            df, vec_col, id_col, threshold=threshold, dim=dim
-        ).select("id_a", "id_b", "cosine")
-    nblocks = max(1, min(128, -(-n // block_target)))
-    base = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    packed = (
-        base.withColumn("blk", F.pmod(F.xxhash64("id"), F.lit(nblocks)).cast("int"))
-        .groupBy("blk")
-        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
-    )
-    # Triangular block-pair index as a literal table: nb ≤ 128 → ≤ 8256 tiny
-    # rows.  Equi-joining the heavy packed rows onto it keeps Catalyst on
-    # hash joins (broadcast of the INDEX side only); the old non-equi
-    # blk_a <= blk_b self-join could only plan as BroadcastNestedLoopJoin,
-    # which ships the whole packed matrix to every task.
-    #
-    # block_target default: small blocks parallelize (2048 → ONE task at
-    # n=2000; 256 → 36 block pairs, measured 1.88s → 0.81s at sf0.1) while
-    # replication stays bounded by the 128-block cap — at the cap each
-    # vector ships ≤ 64× regardless of block_target, so the default only
-    # governs the small-n regime where parallelism is the scarce resource.
-    idx = df.sparkSession.createDataFrame(
-        [(a, b) for a in range(nblocks) for b in range(a, nblocks)],
-        "blk_a int, blk_b int",
-    )
-    pairs = (
-        F.broadcast(idx)
-        .join(
-            packed.select(F.col("blk").alias("blk_a"), F.col("rows").alias("rows_a")),
-            "blk_a",
+    n = df.count()
+    if n > MAX_EXACT_ROWS:
+        raise ValueError(
+            f"embedding_near_pairs: {n} rows exceed MAX_EXACT_ROWS="
+            f"{MAX_EXACT_ROWS} (exact all-pairs cosine is O(n²)); use "
+            "similarity.lsh_near_pairs (approximate) or "
+            "similarity.semantic_dedup_pairs (exact within k-means cells)"
         )
-        .join(
-            packed.select(
-                F.col("blk").alias("blk_b"), F.col("rows").alias("rows_b")
-            ).hint("shuffle_hash"),
-            "blk_b",
-        )
-        .repartition("blk_a", "blk_b")
+    rows = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+        F.lit(0).alias("cell"),
     )
-
-    def _unpack(rows):
-        ids = np.array([r["id"] for r in rows], dtype=np.int64)
-        mat = np.array([np.asarray(r["v"], dtype=np.float64) for r in rows])
-        return ids, mat
-
-    def _seq_norm(mat: "np.ndarray") -> "np.ndarray":
-        acc = np.zeros(mat.shape[0])
-        for d in range(mat.shape[1]):
-            acc = acc + mat[:, d] * mat[:, d]
-        return np.sqrt(acc)
-
-    def cross_blocks(batches):
-        for pdf in batches:
-            for blk_a, blk_b, rows_a, rows_b in zip(
-                pdf["blk_a"], pdf["blk_b"], pdf["rows_a"], pdf["rows_b"]
-            ):
-                ids_a, mat_a = _unpack(rows_a)
-                ids_b, mat_b = _unpack(rows_b)
-                # dims-sequential accumulation == scalar left fold per pair
-                acc = np.zeros((len(ids_a), len(ids_b)))
-                for d in range(mat_a.shape[1]):
-                    acc = acc + np.multiply.outer(mat_a[:, d], mat_b[:, d])
-                cos = acc / np.multiply.outer(_seq_norm(mat_a), _seq_norm(mat_b))
-                cos = np.floor(cos * 1e6 + 0.5) / 1e6
-                hit = cos >= threshold
-                if blk_a == blk_b:
-                    # same id set on both axes: keep one orientation, no self
-                    ai, bi = np.nonzero(hit & (ids_a[:, None] < ids_b[None, :]))
-                    lo, hi = ids_a[ai], ids_b[bi]
-                else:
-                    # disjoint id sets: every hit is a distinct unordered
-                    # pair — canonicalize instead of filtering
-                    ai, bi = np.nonzero(hit)
-                    lo = np.minimum(ids_a[ai], ids_b[bi])
-                    hi = np.maximum(ids_a[ai], ids_b[bi])
-                if len(ai):
-                    yield pd.DataFrame(
-                        {"id_a": lo, "id_b": hi, "cosine": cos[ai, bi]}
-                    )
-
-    return pairs.mapInPandas(cross_blocks, schema="id_a long, id_b long, cosine double")
+    n_sub = max(1, min(128, -(-n // BLOCK_ROWS)))
+    return _cell_cosine_pairs(rows, threshold, n_sub)

@@ -22,8 +22,9 @@ The ANN ladder, cheapest index to production layout:
 
 Embedding curation on the same machinery: ``diversity_sample``
 (cluster-balanced exactly-k-per-cell) and ``semantic_dedup_pairs``
-(SemDeDup within-cell exact cosine, optional triangular sub-blocking for
-hot cells).  ``nonzero_vectors`` enforces the zero-norm input contract.
+(SemDeDup within-cell exact cosine through ``_cell_cosine_pairs``, the
+packed pair kernel ``dedup.embedding_near_pairs`` shares).
+``nonzero_vectors`` enforces the zero-norm input contract.
 
 Everything is deterministic end-to-end (quantized scores, id tiebreaks,
 davg/dsum accumulation), so every path — including full training
@@ -207,6 +208,32 @@ def _assign_to_centroids(
 _ASSIGN_PACKED_MIN_K = 16
 
 
+def _seq_cosine(
+    mat_a: "np.ndarray", mat_b: "np.ndarray"
+) -> tuple["np.ndarray", "np.ndarray", "np.ndarray"]:
+    """Unquantized cosine matrix of every (row of ``mat_a``, row of
+    ``mat_b``) plus both sides' squared norms — the package's one numpy
+    cosine.
+
+    The dot and norm accumulation is vectorized over pairs but sequential
+    over dims, so every element sees the operation order of a scalar left
+    fold: Spark's ``aggregate`` HOF and DuckDB's ``list_dot_product`` give
+    the same IEEE doubles.  BLAS ``matmul`` does not (measured: 64% of pairs
+    differed in the last ulp, enough to flip a 1e-6 quantization bucket).
+    The products commute, so swapping the sides transposes the result bit
+    for bit.  A zero norm yields NaN/inf cosines without a warning; callers
+    that must reject it check the returned norms."""
+    acc = np.zeros((mat_a.shape[0], mat_b.shape[0]))
+    na = np.zeros(mat_a.shape[0])
+    nb = np.zeros(mat_b.shape[0])
+    for d in range(mat_a.shape[1]):
+        acc = acc + np.multiply.outer(mat_a[:, d], mat_b[:, d])
+        na = na + mat_a[:, d] * mat_a[:, d]
+        nb = nb + mat_b[:, d] * mat_b[:, d]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return acc / np.multiply.outer(np.sqrt(na), np.sqrt(nb)), na, nb
+
+
 def _nearest_cosine_pick(
     mat: "np.ndarray",
     ids: "np.ndarray",
@@ -216,15 +243,9 @@ def _nearest_cosine_pick(
     """Per-row nearest-centroid ids by quantized cosine, lowest ``c_id`` on
     ties — the shared numpy core of :func:`_assign_packed` and
     :func:`_residuals_packed`.  Bit contract documented in
-    :func:`_assign_packed` (dims-sequential accumulation, integer quantize
-    compare, NaN-as-+inf, zero-norm raises like the expression path)."""
-    acc = np.zeros((mat.shape[0], cmat.shape[0]))
-    na = np.zeros(mat.shape[0])
-    nc = np.zeros(cmat.shape[0])
-    for d_ in range(mat.shape[1]):
-        acc = acc + np.multiply.outer(mat[:, d_], cmat[:, d_])
-        na = na + mat[:, d_] * mat[:, d_]
-        nc = nc + cmat[:, d_] * cmat[:, d_]
+    :func:`_assign_packed` (:func:`_seq_cosine`, integer quantize compare,
+    NaN-as-+inf, zero-norm raises like the expression path)."""
+    cos, na, nc = _seq_cosine(mat, cmat)
     if (na == 0).any():
         bad = ids[na == 0][:3].tolist()
         raise ValueError(
@@ -237,7 +258,6 @@ def _nearest_cosine_pick(
             "assign_to_centroids: zero-norm centroid "
             f"c_id={c_ids[nc == 0][:3].tolist()} (cosine undefined)"
         )
-    cos = acc / np.multiply.outer(np.sqrt(na), np.sqrt(nc))
     qi = np.floor(cos * 1e6 + 0.5)  # int compare == quantize6 compare
     qcmp = np.where(np.isnan(qi), np.inf, qi)
     best = qcmp.max(axis=1, keepdims=True)
@@ -941,14 +961,114 @@ def auto_n_centroids(n_rows: int, target_cell: int = 250) -> int:
     return max(8, int(n_rows) // max(1, int(target_cell)))
 
 
+def _cell_cosine_pairs(rows: DataFrame, threshold: float, n_sub: int) -> DataFrame:
+    """Exact within-cell cosine pairs over ``(id, v, cell)`` rows:
+    ``(id_a, id_b, cosine)`` with ``id_a < id_b`` for every pair of rows in
+    the same cell whose quantized cosine is ≥ ``threshold`` — the one
+    packed-matrix kernel of :func:`semantic_dedup_pairs` and
+    ``dedup.embedding_near_pairs``.
+
+    Each cell splits into ``n_sub`` sub-blocks by ``pmod(xxhash64(id),
+    n_sub)``, and each sub-block packs its (id, v) rows once via
+    ``collect_list``; an Arrow batch multiplies packed sub-blocks in numpy
+    (:func:`_seq_cosine`), so vectors move once and the quadratic work
+    never enters the plan.  Diagonal sub-blocks multiply straight from the
+    packed frame.  Off-diagonal sub-block pairs (``n_sub > 1`` only) are
+    enumerated as a tiny broadcast literal table (sa < sb, at most
+    n_sub·(n_sub−1)/2 rows) and the heavy packed rows attach via two
+    equi-joins on (cell, sub): hash joins, never a nested-loop broadcast of
+    packed matrices.
+
+    Pair completeness: sub-blocks partition each cell's ids, so an
+    unordered pair lands in exactly one (sa ≤ sb) sub-block pair.  The
+    diagonal masks ``id_a < id_b`` (drops self-pairs and mirrors); off the
+    diagonal every hit is a distinct pair and the ids are canonicalized
+    (min, max) — masking there would drop the pairs whose smaller id hashed
+    into the b-side sub-block.  Quantization mirrors functions/detagg.py:
+    floor(x*1e6+0.5)/1e6 in IEEE doubles.
+    """
+    import pandas as pd
+
+    # ``sub`` is declared non-null: a nullable key would get an inferred
+    # isnotnull filter on the join sides only, and the diagonal's packing
+    # could then not reuse their exchange (one more scan of the input).
+    sub = F.coalesce(F.pmod(F.xxhash64("id"), F.lit(n_sub)).cast("int"), F.lit(0))
+    packed = (
+        rows.withColumn("sub", sub)
+        .groupBy("cell", "sub")
+        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
+    )
+
+    def unpack(packed_rows):
+        ids = np.array([r["id"] for r in packed_rows], dtype=np.int64)
+        mat = np.array([np.asarray(r["v"], dtype=np.float64) for r in packed_rows])
+        return ids, mat
+
+    def quantized(mat_a, mat_b):
+        return np.floor(_seq_cosine(mat_a, mat_b)[0] * 1e6 + 0.5) / 1e6
+
+    def diagonal(batches):
+        for pdf in batches:
+            for packed_rows in pdf["rows"]:
+                ids, mat = unpack(packed_rows)
+                cos = quantized(mat, mat)
+                ai, bi = np.nonzero((cos >= threshold) & (ids[:, None] < ids[None, :]))
+                if len(ai):
+                    yield pd.DataFrame(
+                        {"id_a": ids[ai], "id_b": ids[bi], "cosine": cos[ai, bi]}
+                    )
+
+    def off_diagonal(batches):
+        for pdf in batches:
+            for rows_a, rows_b in zip(pdf["rows_a"], pdf["rows_b"]):
+                ids_a, mat_a = unpack(rows_a)
+                ids_b, mat_b = unpack(rows_b)
+                cos = quantized(mat_a, mat_b)
+                ai, bi = np.nonzero(cos >= threshold)
+                if len(ai):
+                    yield pd.DataFrame(
+                        {
+                            "id_a": np.minimum(ids_a[ai], ids_b[bi]),
+                            "id_b": np.maximum(ids_a[ai], ids_b[bi]),
+                            "cosine": cos[ai, bi],
+                        }
+                    )
+
+    schema = "id_a long, id_b long, cosine double"
+    pairs = packed.repartition("cell", "sub").mapInPandas(diagonal, schema=schema)
+    if n_sub == 1:
+        return pairs
+    idx = rows.sparkSession.createDataFrame(
+        [(a, b) for a in range(n_sub) for b in range(a + 1, n_sub)], "sa int, sb int"
+    )
+    cross = (
+        F.broadcast(idx)
+        .join(
+            packed.select(
+                "cell", F.col("sub").alias("sa"), F.col("rows").alias("rows_a")
+            ),
+            "sa",
+        )
+        .join(
+            packed.select(
+                F.col("cell").alias("cell_b"),
+                F.col("sub").alias("sb_r"),
+                F.col("rows").alias("rows_b"),
+            ).hint("shuffle_hash"),
+            (F.col("cell") == F.col("cell_b")) & (F.col("sb") == F.col("sb_r")),
+        )
+        .select("cell", "sa", "sb", "rows_a", "rows_b")
+        .repartition("cell", "sa", "sb")
+    )
+    return pairs.unionByName(cross.mapInPandas(off_diagonal, schema=schema))
+
+
 def semantic_dedup_pairs(
     df: DataFrame,
     vec_col: str,
     id_col: str,
     centroids: list[tuple[int, list[float]]],
     threshold: float = 0.95,
-    dim: int | None = None,
-    sub_blocks: int = 1,
 ) -> DataFrame:
     """SemDeDup-style near-duplicate pairs: cluster by nearest centroid,
     compare pairs ONLY within a cluster, keep quantized cosine ≥ threshold —
@@ -961,135 +1081,25 @@ def semantic_dedup_pairs(
     DEFINITION, not an approximation bug — cross-cell near-dups are
     intentionally out of contract, which is what makes the SQL oracle exact.
 
-    Plan shape (same packed-matrix scheme as ``dedup.embedding_near_pairs``):
-    one broadcast-assign aggregation, then each (cluster, sub-block) packs
-    its (id, v) rows once via ``collect_list`` and an Arrow batch multiplies
-    the packed cells in numpy.  Packing beats the earlier per-pair equi-join
-    4× measured at sf0.1: a pair join materializes BOTH vectors per pair
-    (2·dim doubles × |cell|² rows through the shuffle), while packing moves
-    each vector once and the quadratic work never leaves the task.
-
-    ``sub_blocks`` (default 1 — one packed cell per cluster) is the hot-cell
-    skew/memory knob: ids hash into that many sub-cells, the triangular
-    (sa ≤ sb) sub-pair index joins in as a broadcast literal table, and the
-    packed sub-cells meet on ``(cluster, sa/sb)`` equi-keys — a packed cell
-    is then ~(cell/sub_blocks)·dim doubles and the cell's quadratic work
-    spreads over sub_blocks·(sub_blocks+1)/2 tasks.  Output is identical at
-    any setting (equivalence-tested): sub-cells partition each cell's ids so
-    an unordered pair lands in exactly one (sa ≤ sb) sub-pair; the diagonal
-    masks ``id_a < id_b``, off-diagonal cells keep every hit and
-    canonicalize (min, max).
-
-    Bit parity: dims-sequential accumulation (per-element order identical to
-    a scalar left fold, hence to the DuckDB oracle — see
-    ``dedup.embedding_near_pairs``), quantize-to-1e-6 before the threshold;
-    dot and norms commute under id canonicalization.
+    Plan shape: one broadcast-assign aggregation, then
+    :func:`_cell_cosine_pairs` with cell = cluster and one sub-block per
+    cell — each cluster packs its (id, v) rows once and an Arrow batch
+    multiplies the packed cell, with no join.  Packing beats the earlier
+    per-pair equi-join 4× measured at sf0.1: a pair join materializes BOTH
+    vectors per pair (2·dim doubles × |cell|² rows through the shuffle),
+    while packing moves each vector once and the quadratic work never
+    leaves the task.
 
     Scale rule: ``n_centroids`` must grow ∝ corpus so cells stay
     constant-size (:func:`auto_n_centroids`); the catalog row pins 8 cells
     only for oracle reproducibility.  Measured (r13, PLANS.md
     §semdedup-cell-scaling, commit 64b4863, 2k → 20k vectors): pinned 8 cells → 6.6×
-    wall at 10× data; scaled 80 cells → 0.95× (flat).  ``sub_blocks`` is the
-    orthogonal knob for a single hot cell the centroid layout can't split.
+    wall at 10× data; scaled 80 cells → 0.95× (flat).
     """
-    import pandas as pd
-
-    assigned = assign_to_centroids(df, vec_col, id_col, centroids)
-    nb = max(1, sub_blocks)
-    packed = (
-        assigned.withColumn(
-            "sub", F.pmod(F.xxhash64("id"), F.lit(nb)).cast("int")
-        )
-        .groupBy("cluster", "sub")
-        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
+    rows = assign_to_centroids(df, vec_col, id_col, centroids).select(
+        "id", "v", F.col("cluster").alias("cell")
     )
-
-    def _unpack(rows):
-        ids = np.array([r["id"] for r in rows], dtype=np.int64)
-        mat = np.array([np.asarray(r["v"], dtype=np.float64) for r in rows])
-        return ids, mat
-
-    def _seq_cos(mat_a, mat_b):
-        # dims-sequential: per-element order == scalar left fold == oracle
-        acc = np.zeros((mat_a.shape[0], mat_b.shape[0]))
-        for d_ in range(mat_a.shape[1]):
-            acc = acc + np.multiply.outer(mat_a[:, d_], mat_b[:, d_])
-        na = np.zeros(mat_a.shape[0])
-        nb_ = np.zeros(mat_b.shape[0])
-        for d_ in range(mat_a.shape[1]):
-            na = na + mat_a[:, d_] * mat_a[:, d_]
-            nb_ = nb_ + mat_b[:, d_] * mat_b[:, d_]
-        cos = acc / np.multiply.outer(np.sqrt(na), np.sqrt(nb_))
-        return np.floor(cos * 1e6 + 0.5) / 1e6
-
-    if nb == 1:
-        def diag_cells(batches):
-            for pdf in batches:
-                for rows in pdf["rows"]:
-                    ids, mat = _unpack(rows)
-                    cos = _seq_cos(mat, mat)
-                    ai, bi = np.nonzero(
-                        (cos >= threshold) & (ids[:, None] < ids[None, :])
-                    )
-                    if len(ai):
-                        yield pd.DataFrame(
-                            {"id_a": ids[ai], "id_b": ids[bi], "cosine": cos[ai, bi]}
-                        )
-
-        return packed.repartition("cluster").mapInPandas(
-            diag_cells, schema="id_a long, id_b long, cosine double"
-        )
-
-    idx = df.sparkSession.createDataFrame(
-        [(a, b) for a in range(nb) for b in range(a, nb)], "sa int, sb int"
-    )
-    # packed feeds both join sides → persist so the assign+pack aggregation
-    # runs once (the sides' projections differ, so exchange reuse can't)
-    packed = packed.persist()
-    pairs = (
-        F.broadcast(idx)
-        .join(
-            packed.select(
-                "cluster", F.col("sub").alias("sa"), F.col("rows").alias("rows_a")
-            ),
-            "sa",
-        )
-        .join(
-            packed.select(
-                F.col("cluster").alias("cluster_b"),
-                F.col("sub").alias("sb_r"),
-                F.col("rows").alias("rows_b"),
-            ),
-            (F.col("cluster") == F.col("cluster_b")) & (F.col("sb") == F.col("sb_r")),
-        )
-        .select("cluster", "sa", "sb", "rows_a", "rows_b")
-        .repartition("cluster", "sa", "sb")
-    )
-
-    def cross_cells(batches):
-        for pdf in batches:
-            for sa, sb, rows_a, rows_b in zip(
-                pdf["sa"], pdf["sb"], pdf["rows_a"], pdf["rows_b"]
-            ):
-                ids_a, mat_a = _unpack(rows_a)
-                ids_b, mat_b = _unpack(rows_b)
-                cos = _seq_cos(mat_a, mat_b)
-                hit = cos >= threshold
-                if sa == sb:
-                    ai, bi = np.nonzero(hit & (ids_a[:, None] < ids_b[None, :]))
-                    lo, hi = ids_a[ai], ids_b[bi]
-                else:
-                    ai, bi = np.nonzero(hit)
-                    lo = np.minimum(ids_a[ai], ids_b[bi])
-                    hi = np.maximum(ids_a[ai], ids_b[bi])
-                if len(ai):
-                    yield pd.DataFrame(
-                        {"id_a": lo, "id_b": hi, "cosine": cos[ai, bi]}
-                    )
-
-    return pairs.mapInPandas(
-        cross_cells, schema="id_a long, id_b long, cosine double"
-    )
+    return _cell_cosine_pairs(rows, threshold, n_sub=1)
 
 
 # ---------------------------------------------------------------------------

@@ -23,7 +23,6 @@ def merge_update(
     updates: DataFrame,
     key: str,
     set_map: dict[str, Column | str],
-    broadcast: bool = True,
 ) -> DataFrame:
     """Left-join ``updates`` on ``key`` and apply ``set_map``.
 
@@ -31,8 +30,7 @@ def merge_update(
     Column); matched rows take the update value, unmatched rows keep the
     original (coalesce).  Mirrors update.py:72-76's set-then-save.
     """
-    upd = F.broadcast(updates) if broadcast else updates
-    joined = target.join(upd, on=key, how="left")
+    joined = target.join(F.broadcast(updates), on=key, how="left")
     out = joined
     for tgt_col, src in set_map.items():
         src_col = F.col(src) if isinstance(src, str) else src
@@ -49,13 +47,11 @@ def merge_update_struct(
     struct_col: str,
     field: str,
     src: str,
-    broadcast: bool = True,
 ) -> DataFrame:
     """Struct-field variant: set ``struct_col.field`` from the update side,
     keeping all other struct fields — the exact ``classification.
     binomialAuthority`` shape of update.py:72-74."""
-    upd = F.broadcast(updates) if broadcast else updates
-    joined = target.join(upd, on=key, how="left")
+    joined = target.join(F.broadcast(updates), on=key, how="left")
     merged = F.col(struct_col).withField(field, F.coalesce(F.col(src), F.col(struct_col)[field]))
     keep = set(target.columns)
     return joined.withColumn(struct_col, merged).select(

@@ -1232,7 +1232,7 @@ def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     return semantic_dedup_pairs(
-        e, "embedding", "vec_id", _trained_centroids(spark, sf_dir), threshold=0.5, dim=64
+        e, "embedding", "vec_id", _trained_centroids(spark, sf_dir), threshold=0.5
     )
 
 

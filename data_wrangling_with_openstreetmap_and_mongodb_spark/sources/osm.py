@@ -64,14 +64,12 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.cleaning impo
     PROBLEMCHARS_RE,
     classify_key,
     clean_street_name,
+    parse_osm_timestamp,
 )
 from data_wrangling_with_openstreetmap_and_mongodb_spark.sources.ranges import (
     file_ranges,
     map_ranges,
 )
-
-# data.py:93
-CREATED_ATTRS = ("version", "changeset", "timestamp", "user", "uid")
 
 _STR_MAP = MapType(StringType(), StringType())
 RAW_ELEMENT_SCHEMA = StructType(
@@ -266,31 +264,30 @@ def tag_key_class_counts(raw: DataFrame) -> DataFrame:
     )
 
 
-# The shaping filter and output Columns, per (SparkContext, clean_streets).
-# They are unresolved expressions over ``raw``'s column names only, so one
-# set serves every frame of a context; building them costs ~500 py4j round
+# The shaping filter and output Columns for the active SparkContext.  They
+# are unresolved expressions over ``raw``'s column names only, so one set
+# serves every frame of a context; building them costs ~500 py4j round
 # trips (~1,000 with call-site capture on), most of them the street-cleaning
 # rules.
-_SHAPING: dict[tuple[SparkContext, bool], tuple[Column, list[Column]]] = {}
+_SHAPING: tuple[SparkContext, Column, list[Column]] | None = None
 
 
-def _shaping(clean_streets: bool) -> tuple[Column, list[Column]]:
-    key = (SparkContext._active_spark_context, clean_streets)
-    if key not in _SHAPING:
-        for stale in [k for k in _SHAPING if k[0] is not key[0]]:
-            del _SHAPING[stale]
-        _SHAPING[key] = _build_shaping(clean_streets)
-    return _SHAPING[key]
+def _shaping() -> tuple[Column, list[Column]]:
+    global _SHAPING
+    sc = SparkContext._active_spark_context
+    if _SHAPING is None or _SHAPING[0] is not sc:
+        _SHAPING = (sc, *_build_shaping())
+    return _SHAPING[1], _SHAPING[2]
 
 
-def _build_shaping(clean_streets: bool) -> tuple[Column, list[Column]]:
+def _build_shaping() -> tuple[Column, list[Column]]:
     a = F.col("attrs")
     tags = F.col("tags")
 
     created = F.struct(
         a["version"].alias("version"),
         a["changeset"].alias("changeset"),
-        F.to_timestamp(a["timestamp"], "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("timestamp"),
+        parse_osm_timestamp(a["timestamp"]).alias("timestamp"),
         a["user"].alias("user"),
         a["uid"].alias("uid"),
     )
@@ -311,12 +308,10 @@ def _build_shaping(clean_streets: bool) -> tuple[Column, list[Column]]:
         & ~k.rlike(PROBLEMCHARS_RE)
         & (F.size(F.split(k, ":")) == 2),
     )
-    address = F.transform_keys(addr_entries, lambda k, v: F.substring(k, 6, 2147483647))
-    if clean_streets:
-        address = F.transform_values(
-            address,
-            lambda k, v: F.when(k == "street", clean_street_name(v)).otherwise(v),
-        )
+    address = F.transform_values(
+        F.transform_keys(addr_entries, lambda k, v: F.substring(k, 6, 2147483647)),
+        lambda k, v: F.when(k == "street", clean_street_name(v)).otherwise(v),
+    )
     address = F.when(F.size(F.map_keys(address)) > 0, address)
 
     node_refs = F.when(F.col("element_type") == "way", F.col("node_refs"))
@@ -334,7 +329,7 @@ def _build_shaping(clean_streets: bool) -> tuple[Column, list[Column]]:
     ]
 
 
-def shape_elements(raw: DataFrame, clean_streets: bool = True) -> DataFrame:
+def shape_elements(raw: DataFrame) -> DataFrame:
     """Shape raw OSM elements into the reference's document form (§1.2).
 
     Output schema::
@@ -344,7 +339,7 @@ def shape_elements(raw: DataFrame, clean_streets: bool = True) -> DataFrame:
         pos array<double>, address map<string,string>,
         tags map<string,string>, node_refs array<string>
     """
-    keep, columns = _shaping(clean_streets)
+    keep, columns = _shaping()
     return raw.filter(keep).select(*columns)
 
 

@@ -126,23 +126,14 @@ def test_ann_lsh_agrees_with_bruteforce(emb):
     assert len(set(exact) & set(approx)) >= 3
 
 
-def test_embedding_near_pairs_guard_fails_over_to_lsh(emb):
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
-        embedding_near_pairs,
-    )
+def test_embedding_near_pairs_refuses_above_max_exact_rows(emb, monkeypatch):
+    """Above MAX_EXACT_ROWS the exact operator raises and names the
+    sub-quadratic operators; it never returns approximate pairs."""
+    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators import dedup
 
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_pairs(emb, "embedding", "vec_id", threshold=0.3).collect()
-    }
-    # above the guard the plan must switch to the sub-quadratic LSH path,
-    # whose verified output is a subset of the exact pair set
-    guarded = embedding_near_pairs(
-        emb, "embedding", "vec_id", threshold=0.3, max_exact_rows=1
-    )
-    got = {(r["id_a"], r["id_b"]) for r in guarded.collect()}
-    assert got <= exact
-    assert len(got) > 0
+    monkeypatch.setattr(dedup, "MAX_EXACT_ROWS", 1)
+    with pytest.raises(ValueError, match="lsh_near_pairs.*semantic_dedup_pairs"):
+        dedup.embedding_near_pairs(emb, "embedding", "vec_id", threshold=0.3)
 
 
 def test_lsh_near_pairs_subset_of_exact(emb):
@@ -155,25 +146,24 @@ def test_lsh_near_pairs_subset_of_exact(emb):
     assert all(r["cosine"] >= 0.3 for r in rows)
 
 
-def test_embedding_near_pairs_multiblock_equals_singleblock(spark):
+def test_embedding_near_pairs_multiblock_equals_singleblock(spark, monkeypatch):
     """Cross-block completeness: with many blocks, every unordered pair must
     still surface exactly once (regression for the off-diagonal mask that
     dropped pairs whose smaller id hashed into the b-side block)."""
     import itertools
 
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
-        embedding_near_pairs,
-    )
+    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators import dedup
 
     n = 40
     clones = spark.createDataFrame(
         [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(n)],
         "vec_id long, embedding array<double>",
     )
+    monkeypatch.setattr(dedup, "BLOCK_ROWS", 10)
     got = {
         (r["id_a"], r["id_b"])
-        for r in embedding_near_pairs(
-            clones, "embedding", "vec_id", threshold=0.99, block_target=10, n_rows=n
+        for r in dedup.embedding_near_pairs(
+            clones, "embedding", "vec_id", threshold=0.99
         ).collect()
     }
     want = set(itertools.combinations(range(n), 2))
@@ -184,31 +174,30 @@ def test_embedding_near_pairs_multiblock_equals_singleblock(spark):
         (i, [float((i * 7 + d * 13) % 11 - 5) for d in range(8)]) for i in range(60)
     ]
     df = spark.createDataFrame(rng_rows, "vec_id long, embedding array<double>")
-    multi = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in embedding_near_pairs(
-            df, "embedding", "vec_id", threshold=0.5, block_target=7, n_rows=60
-        ).collect()
-    }
-    single = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in embedding_near_pairs(
-            df, "embedding", "vec_id", threshold=0.5, block_target=4096, n_rows=60
-        ).collect()
-    }
+
+    def pairs(block_rows):
+        monkeypatch.setattr(dedup, "BLOCK_ROWS", block_rows)
+        return {
+            (r["id_a"], r["id_b"], r["cosine"])
+            for r in dedup.embedding_near_pairs(
+                df, "embedding", "vec_id", threshold=0.5
+            ).collect()
+        }
+
+    multi, single = pairs(7), pairs(4096)
     assert multi == single and len(single) > 0
 
 
-def test_embedding_near_pairs_plans_no_nested_loop_join(emb):
+def test_embedding_near_pairs_plans_no_nested_loop_join(emb, monkeypatch):
     """The block-pair attach must be hash joins (index side broadcast), never
     a BroadcastNestedLoopJoin/CartesianProduct shipping packed matrices."""
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
-        embedding_near_pairs,
-    )
+    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators import dedup
 
-    plan = embedding_near_pairs(
-        emb, "embedding", "vec_id", threshold=0.3, block_target=100, n_rows=500
+    monkeypatch.setattr(dedup, "BLOCK_ROWS", 100)
+    plan = dedup.embedding_near_pairs(
+        emb, "embedding", "vec_id", threshold=0.3
     )._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan  # the block-pair index attaches
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
@@ -765,7 +754,7 @@ class TestEmbeddingCuration:
         got = {
             (r.id_a, r.id_b): r.cosine
             for r in semantic_dedup_pairs(
-                df, "embedding", "vec_id", cents, threshold=0.99, dim=4
+                df, "embedding", "vec_id", cents, threshold=0.99
             ).collect()
         }
         assert (10, 11) in got and got[(10, 11)] == 1.0
@@ -873,35 +862,6 @@ class TestZeroVectorContract:
         clean = nonzero_vectors(df, "embedding")
         got = [r.id for r in cosine_topk(clean, "embedding", "vec_id", [1.0, 0.0], k=3).collect()]
         assert got == [0, 1]
-
-
-def test_semantic_dedup_sub_blocking_output_invariant(spark):
-    """The sub_blocks skew knob must not change results — every unordered
-    within-cell pair surfaces exactly once at any setting."""
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.similarity import (
-        kmeans_centroids,
-        semantic_dedup_pairs,
-    )
-
-    rows = [
-        (i, [1.0 + (i % 7) * 0.01, 0.5 - (i % 5) * 0.01, 0.1, 0.2])
-        for i in range(60)
-    ] + [(100, [-1.0, 0.1, 0.0, 0.0]), (101, [-1.0, 0.1, 0.0, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = kmeans_centroids(df, "embedding", "vec_id", n_centroids=2, iters=1)
-    outs = [
-        sorted(
-            map(
-                tuple,
-                semantic_dedup_pairs(
-                    df, "embedding", "vec_id", cents, threshold=0.9, dim=4, sub_blocks=nb
-                ).collect(),
-            )
-        )
-        for nb in (1, 3, 5)
-    ]
-    assert outs[0] == outs[1] == outs[2]
-    assert len(outs[0]) > 50  # the tight cluster produces many pairs
 
 
 def test_packed_assignment_matches_expression_path(spark, sf_dir):

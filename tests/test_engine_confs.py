@@ -124,7 +124,7 @@ def test_shaping_plan_construction_round_trip_budget(spark, tmp_path, monkeypatc
     shaped = osm.shape_elements(raw)
     monkeypatch.undo()
     assert calls <= 25, calls
-    assert all(key[0] is spark.sparkContext for key in osm._SHAPING)
+    assert osm._SHAPING[0] is spark.sparkContext
     assert shaped.columns == [
         "id", "type", "visible", "created", "pos", "address", "tags", "node_refs"
     ]

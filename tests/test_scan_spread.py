@@ -3,7 +3,8 @@ parquet scan is round-robin repartitioned to the scheduler's parallelism;
 predicate pushdown and column pruning still reach the scan below the
 exchange; a plain load_table adds no exchange.  The inventory keeps spread
 the only defaultParallelism repartition, scale.cut_lineage the only
-iterative lineage cut, and parquet footer reads out of the package."""
+iterative lineage cut, similarity._seq_cosine the only numpy cosine, and
+parquet footer reads out of the package."""
 
 from __future__ import annotations
 
@@ -121,9 +122,9 @@ def test_spread_is_the_only_parallelism_repartition():
     assert _parallelism_repartitions() == [("operators/scale.py", "spread")]
 
 
-def _checkpoint_calls() -> list[tuple[str, str]]:
-    """(module, qualified function) of every ``.checkpoint(`` or
-    ``.localCheckpoint(`` call in the package."""
+def _calls(match) -> list[tuple[str, str]]:
+    """(module, qualified function) of every call in the package whose
+    callee node satisfies ``match``."""
     hits = []
 
     def visit(node: ast.AST, module: str, stack: list[str]) -> None:
@@ -131,11 +132,7 @@ def _checkpoint_calls() -> list[tuple[str, str]]:
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 visit(child, module, stack + [child.name])
                 continue
-            if (
-                isinstance(child, ast.Call)
-                and isinstance(child.func, ast.Attribute)
-                and child.func.attr in ("checkpoint", "localCheckpoint")
-            ):
+            if isinstance(child, ast.Call) and match(child.func):
                 hits.append((module, ".".join(stack)))
             visit(child, module, stack)
 
@@ -149,10 +146,27 @@ def test_cut_lineage_is_the_only_checkpoint():
     the session's checkpoint dir, not each call site, decides between a
     reliable and a local checkpoint.  The streaming drive's per-batch
     DISK_ONLY checkpoint is not an iterative cut."""
-    assert _checkpoint_calls() == [
+    assert _calls(
+        lambda f: isinstance(f, ast.Attribute)
+        and f.attr in ("checkpoint", "localCheckpoint")
+    ) == [
         ("operators/scale.py", "cut_lineage"),
         ("streaming/drive.py", "run_available_now.materialize"),
     ]
+
+
+def test_seq_cosine_is_the_only_numpy_cosine():
+    """Every packed cosine (the pair kernel behind embedding_near_pairs and
+    semantic_dedup_pairs, and nearest-centroid assignment) goes through
+    similarity._seq_cosine, whose dims-sequential order keeps the cosines
+    bit-identical to the SQL oracles.  A new np.multiply.outer call is a
+    pasted copy to port."""
+    assert _calls(
+        lambda f: isinstance(f, ast.Attribute)
+        and f.attr == "outer"
+        and isinstance(f.value, ast.Attribute)
+        and f.value.attr == "multiply"
+    ) == [("operators/similarity.py", "_seq_cosine")]
 
 
 def test_no_module_reads_parquet_footers():
