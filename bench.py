@@ -115,10 +115,7 @@ queries = one JVM accumulating heap/GC/codegen-cache pressure over a
   BENCH_DETAIL (``r2_retry`` for chunk 0, ``chunk_retries`` for the rest);
 - execution is forced through the noop sink (format("noop")), which computes
   every output column — ``count()`` lets Catalyst prune projection-only work
-  (e.g. a fingerprint column) and under-measures;
-- per-query ``clearCache()`` so operators that persist shared front-ends
-  (dedup shingle/signature tables) don't leak executor memory into later
-  measurements.
+  (e.g. a fingerprint column) and under-measures.
 """
 
 from __future__ import annotations
@@ -453,15 +450,6 @@ def _run_chunk(names: list[str], conf: dict) -> dict[str, dict]:
         except Exception as exc:  # keep benching even if one query regresses
             print(f"bench: {name} failed: {exc}", file=sys.stderr)
             rec["err"] = str(exc)[:300]
-        finally:
-            # per-query isolation: operators that persist shared front-ends
-            # (dedup shingle/signature tables) register a NEW cache entry per
-            # call; dropping them between queries keeps later measurements
-            # free of accumulated executor-memory pressure
-            try:
-                spark.catalog.clearCache()
-            except Exception:
-                pass
         out[name] = rec
 
     spark.stop()

@@ -2389,7 +2389,8 @@ def _apply_merge(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     # The merged result reads `into`, so it cannot overwrite `into` in one
     # job: it is materialized first (see _merge_staged).  Any raise_error
     # guard above fires during the materialization job, before the target
-    # is touched, either way.
+    # is touched, either way.  The cut's blocks go with the frame: a cut is
+    # not a cache entry, so there is nothing to unpersist.
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import cut_lineage
 
     if _merge_staged(spark):
@@ -2400,11 +2401,7 @@ def _apply_merge(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
 
         shutil.rmtree(staged_path, ignore_errors=True)  # best-effort cleanup
     else:
-        materialized = cut_lineage(result)
-        try:
-            materialized.write.mode("overwrite").parquet(into)
-        finally:
-            materialized.unpersist()
+        cut_lineage(result).write.mode("overwrite").parquet(into)
     return spark.read.parquet(into)
 
 

@@ -38,7 +38,11 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import
     quantize6,
     quantize6_sql,
 )
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import spread
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import _ngram_rows
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import (
+    cut_lineage,
+    spread,
+)
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.text import (
     md5_hash32,
     whitespace_tokens,
@@ -271,16 +275,6 @@ def stratified_sample(
     return df.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
 
 
-def _ngram_rows(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """Distinct (id, shingle, n_sh) word-n-gram rows (delegates to the dedup
-    family's shared JVM-native builder)."""
-    from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
-        _shingle_rows,
-    )
-
-    return _shingle_rows(df, text_col, id_col, n)
-
-
 def contaminated_docs(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -498,8 +492,12 @@ def dsir_weights(
             F.pmod(md5_hash32(F.col("tok")), F.lit(n_buckets)).alias("b"),
         )
 
-    tok_r = _buckets(corpus).persist()
-    c_r = tok_r.groupBy("b").agg(F.count(F.lit(1)).alias("c_r")).persist()
+    # cut: the corpus buckets feed their histogram and the scoring join; the
+    # histogram feeds its total and the ratio table
+    tok_r = cut_lineage(_buckets(corpus), eager=False)
+    c_r = cut_lineage(
+        tok_r.groupBy("b").agg(F.count(F.lit(1)).alias("c_r")), eager=False
+    )
     c_t = _buckets(target).groupBy("b").agg(F.count(F.lit(1)).alias("c_t"))
     n_r = c_r.agg(F.sum("c_r").cast("double").alias("n_r"))
     n_t = c_t.agg(F.coalesce(F.sum("c_t"), F.lit(0)).cast("double").alias("n_t"))

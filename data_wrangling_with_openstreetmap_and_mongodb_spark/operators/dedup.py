@@ -27,7 +27,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import spread
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import (
+    cut_lineage,
+    spread,
+)
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.similarity import (
     _cell_cosine_pairs,
 )
@@ -97,9 +100,9 @@ def span_dedup(
     window ``row_number`` would shuffle and sort every span row instead);
     the surviving ``(id, pos)`` pairs equi-join back against the span
     table, which is already partitioned by id, and reassembly is one
-    ordered ``collect_list`` per document.  The span table persists across
-    its three consumers (dedup rank, survivor join, per-doc totals) so the
-    tokenize/chunk pass runs once.  A 128-bit collision merging two
+    ordered ``collect_list`` per document.  The span table is cut
+    (:func:`.scale.cut_lineage`) for its three consumers (dedup rank,
+    survivor join, per-doc totals), so the tokenize/chunk pass runs once.  A 128-bit collision merging two
     distinct spans is ~2⁻⁶⁴-improbable; acceptable for corpus curation.
     """
     base = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")), "id")
@@ -121,10 +124,11 @@ def span_dedup(
             ),
         )
         join_sep = " "
-    spans = (
-        base.select("id", F.posexplode(parts).alias("pos", "span"))
-        .filter(F.col("span") != "")
-        .persist()
+    spans = cut_lineage(
+        base.select("id", F.posexplode(parts).alias("pos", "span")).filter(
+            F.col("span") != ""
+        ),
+        eager=False,
     )
     winners = (
         spans.select(F.md5(F.col("span")).alias("h"), "id", "pos")
@@ -189,12 +193,12 @@ def exact_substring_dedup(
     (reference analogue: none — beyond-reference training-data tier).
     """
     toks = whitespace_tokens(F.col(text_col))
-    # spread BEFORE persisting, so the HOF-heavy tokenize/shingle hash pass
-    # is not pinned to a one-split scan's single task
-    base = (
-        spread(df, id_col)
-        .select(F.col(id_col).alias("id"), toks.alias("__toks"))
-        .persist()
+    # spread BEFORE the cut, so the HOF-heavy tokenize/shingle hash pass is
+    # not pinned to a one-split scan's single task; the cut token table is
+    # read by the shingle branch and the rebuild branch
+    base = cut_lineage(
+        spread(df, id_col).select(F.col(id_col).alias("id"), toks.alias("__toks")),
+        eager=False,
     )
 
     def _window_hash(i: Column) -> Column:
@@ -245,9 +249,9 @@ def exact_substring_dedup(
 # ---------------------------------------------------------------------------
 # N-gram Jaccard (blocked self-join — exact similarity, scalable blocking)
 # ---------------------------------------------------------------------------
-def _shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """Distinct word-n-gram rows ``(id, n_sh, shingle)`` — the shared front
-    end of the shingle-based dedup family.
+def _ngram_rows(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """Distinct word-n-gram rows ``(id, n_sh, shingle)`` — the front end of
+    the shingle-based dedup and decontamination families.
 
     Construction is all JVM-native relational algebra: posexplode tokens →
     window ``lead`` to stitch each n-gram → dropDuplicates.  The equivalent
@@ -285,6 +289,15 @@ def _shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
     return distinct_rows.withColumn(
         "n_sh", F.count(F.lit(1)).over(Window.partitionBy("id"))
     )
+
+
+def _shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """:func:`_ngram_rows`, cut (:func:`.scale.cut_lineage`): the shared
+    front end of the dedup family.  Every caller reads the rows more than
+    once (signature aggregate and verification arrays; df ranking, prefix
+    rows and verification arrays), so the explode/window front end runs
+    once per call."""
+    return cut_lineage(_ngram_rows(df, text_col, id_col, n), eager=False)
 
 
 def _shingle_arrays(rows: DataFrame) -> DataFrame:
@@ -381,16 +394,16 @@ def ngram_jaccard_pairs(
     Candidates are then verified with exact set Jaccard.  Returns
     ``(id_a, id_b, jaccard)``.
 
-    The shingle table is persisted (memory-and-disk): three consumers read
-    it — the global df ranking, the prefix rows, and the verification
-    arrays — and recomputing the tokenize/explode/window front-end per
-    consumer dominated runtime on low-vocabulary corpora where the prefix
-    filter passes many candidates.  The 100 TB analogue is materializing
-    the inverted index once (a bucketed table keyed on shingle) and running
-    candidate generation + verification against that, exactly as PPJoin
-    implementations do.
+    Three consumers read the shingle table — the global df ranking, the
+    prefix rows, and the verification arrays — and recomputing the
+    tokenize/explode/window front-end per consumer dominated runtime on
+    low-vocabulary corpora where the prefix filter passes many candidates,
+    so :func:`_shingle_rows` returns it cut.  The 100 TB analogue is
+    materializing the inverted index once (a bucketed table keyed on
+    shingle) and running candidate generation + verification against that,
+    exactly as PPJoin implementations do.
     """
-    ex = _shingle_rows(df, text_col, id_col, n).persist()
+    ex = _shingle_rows(df, text_col, id_col, n)
     cand = prefix_candidates(ex, threshold)
     arrays = _shingle_arrays(ex)
     sha = arrays.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
@@ -412,6 +425,13 @@ def ngram_jaccard_pairs(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 MERSENNE61 = (1 << 61) - 1
+# The one MinHash family: 64 permutations in 16 bands of 4 rows over
+# distinct word 3-grams.  Every pair pass, band index, probe and SQL oracle
+# reads these, so an index and its probe cannot disagree on the family.
+MINHASH_HASHES = 64
+MINHASH_BANDS = 16
+MINHASH_SHINGLE_N = 3
+MINHASH_SEED = 42
 
 
 def minhash_perm_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -439,24 +459,22 @@ def _perm_hash(a: int, b: int, h32: Column) -> Column:
     return F.pmod(F.lit(a) * h32 + F.lit(b), F.lit(MERSENNE61))
 
 
-def _sig_and_bands(
-    shingle_rows: DataFrame, num_hashes: int, bands: int, seed: int
-) -> tuple[DataFrame, DataFrame]:
+def _sig_and_bands(shingle_rows: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Shared MinHash machinery: ``(with_sig, band_rows)`` from (id, shingle)
     rows — ``with_sig`` = (id, sig array), ``band_rows`` = (id, band, bucket).
 
-    Signature as hash-aggregate with ``num_hashes`` min() buffers: a single
+    Signature as hash-aggregate with 64 min() buffers: a single
     giant array<transform<...>> projection exceeds what whole-stage codegen
     will compile (interpreted fallback, ~10×), while min-aggregate buffers
     codegen fine at any width.  The groupBy shuffles only (id, 64×8 bytes)
     partial states thanks to map-side combine; the base md5 hash computes
-    once per shingle row and feeds all permutations.  ``with_sig`` is
-    persisted — it feeds band construction plus every downstream consumer
-    (self-join sides, verification, index storage) and the 64-buffer
-    aggregation is the pipeline's most expensive stage.
+    once per shingle row and feeds all permutations.  ``with_sig`` is cut
+    (:func:`.scale.cut_lineage`) — it feeds band construction plus every
+    downstream consumer (self-join sides, verification, index storage) and
+    the 64-buffer aggregation is the pipeline's most expensive stage.
 
     Band rows carry ONLY (id, band, bucket): exploding the signature arrays
-    ``bands``× and shuffling them through joins costs far more than
+    16× and shuffling them through joins costs far more than
     re-attaching arrays to the (small) candidate set by id afterwards.  The
     bucket key is an 8-byte md5-based hash of the row-slice's joined-string
     form — engine-agnostic, so SQL oracles reproduce the same buckets.
@@ -466,8 +484,8 @@ def _sig_and_bands(
         md5_hash60,
     )
 
-    coeffs = minhash_perm_coeffs(num_hashes, seed)
-    rows_per_band = num_hashes // bands
+    coeffs = minhash_perm_coeffs(MINHASH_HASHES, MINHASH_SEED)
+    rows_per_band = MINHASH_HASHES // MINHASH_BANDS
     ex = shingle_rows.select("id", md5_hash32(F.col("shingle")).alias("h32"))
     sig_agg = ex.groupBy("id").agg(
         *[
@@ -475,9 +493,12 @@ def _sig_and_bands(
             for i, (a, b) in enumerate(coeffs)
         ]
     )
-    with_sig = sig_agg.select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
-    ).persist()
+    with_sig = cut_lineage(
+        sig_agg.select(
+            "id", F.array(*[F.col(f"h{i}") for i in range(MINHASH_HASHES)]).alias("sig")
+        ),
+        eager=False,
+    )
     band_rows = with_sig.select(
         "id",
         F.explode(
@@ -495,7 +516,7 @@ def _sig_and_bands(
                             )
                         ).alias("bucket"),
                     )
-                    for b in range(bands)
+                    for b in range(MINHASH_BANDS)
                 ]
             )
         ).alias("bb"),
@@ -504,33 +525,23 @@ def _sig_and_bands(
 
 
 def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    n: int = 3,
-    threshold: float = 0.8,
-    seed: int = 42,
+    df: DataFrame, text_col: str, id_col: str, threshold: float = 0.8
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash LSH, verified with exact
     shingle Jaccard.  ``(id_a, id_b, est_jaccard, jaccard)``.
 
-    bands×rows = num_hashes; a pair is a candidate if any band's row-slice
-    hashes equal.  The bucket join shuffles only (band, bucket) keys.
+    16 bands × 4 rows = 64 hashes; a pair is a candidate if any band's
+    row-slice hashes equal.  The bucket join shuffles only (band, bucket) keys.
     Signatures use the md5-based engine-agnostic hash family, so the whole
     pipeline — including which candidate pairs the bands surface — is
     reproducible by the DuckDB oracle.
     """
     # Shared JVM-native shingle rows (see _shingle_rows), consumed by the
-    # signature aggregation and (as arrays) both verification sides —
-    # persisted so neither consumer recomputes the explode/window front-end
-    # (AQE exchange reuse covered this on some data shapes but is a
-    # heuristic; the cache makes the reuse structural).
-    shingle_rows = _shingle_rows(df, text_col, id_col, n).persist()
-    with_sig, band_rows = _sig_and_bands(
-        shingle_rows, num_hashes, bands, seed
-    )
+    # signature aggregation and (as arrays) both verification sides; the
+    # cut makes the reuse structural (AQE exchange reuse covered it on some
+    # data shapes but is a heuristic).
+    shingle_rows = _shingle_rows(df, text_col, id_col, MINHASH_SHINGLE_N)
+    with_sig, band_rows = _sig_and_bands(shingle_rows)
 
     a = band_rows.alias("a")
     b = band_rows.alias("b")
@@ -562,7 +573,7 @@ def minhash_lsh_pairs(
                     lambda v: v == 1,
                 )
             )
-            / F.lit(float(num_hashes)),
+            / F.lit(float(MINHASH_HASHES)),
         )
         .withColumn(
             "jaccard",
@@ -574,27 +585,19 @@ def minhash_lsh_pairs(
     )
 
 
-def minhash_band_index(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    n: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """The PERSISTED incremental-dedup index: ``(id, band, bucket, sig)``
-    rows — what a production pipeline writes once per corpus so that daily
-    increments dedup against it WITHOUT rescanning corpus text.
+def minhash_band_index(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """The incremental-dedup index: ``(id, band, bucket, sig)`` rows — what a
+    production pipeline writes once per corpus so that daily increments
+    dedup against it WITHOUT rescanning corpus text.
 
-    ``bands`` rows per document, each carrying the full signature
-    (``num_hashes``×8 bytes): the band/bucket columns drive the probe's
+    16 rows per document (one per band), each carrying the full 64-hash
+    signature (64×8 bytes): the band/bucket columns drive the probe's
     equi-join, the signature column lets the probe estimate Jaccard without
     touching corpus text.  Write it partitioned/bucketed by ``(band,
     bucket)`` (operators/scale.py) and probes become co-located joins.
     """
-    shingle_rows = _shingle_rows(df, text_col, id_col, n).persist()
-    with_sig, band_rows = _sig_and_bands(shingle_rows, num_hashes, bands, seed)
+    shingle_rows = _shingle_rows(df, text_col, id_col, MINHASH_SHINGLE_N)
+    with_sig, band_rows = _sig_and_bands(shingle_rows)
     return band_rows.join(with_sig, "id").select("id", "band", "bucket", "sig")
 
 
@@ -603,11 +606,7 @@ def minhash_probe_index(
     index: DataFrame,
     text_col: str,
     id_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    n: int = 3,
     threshold: float = 0.8,
-    seed: int = 42,
 ) -> DataFrame:
     """Incremental near-dup detection: new documents probed against a
     prebuilt :func:`minhash_band_index` — ``(new_id, corpus_id,
@@ -625,8 +624,8 @@ def minhash_probe_index(
     Same engine-agnostic hash family as :func:`minhash_lsh_pairs`, so the
     whole probe — candidates and estimates — SQL-oracles exactly.
     """
-    shingle_rows = _shingle_rows(new_df, text_col, id_col, n).persist()
-    with_sig, band_rows = _sig_and_bands(shingle_rows, num_hashes, bands, seed)
+    shingle_rows = _shingle_rows(new_df, text_col, id_col, MINHASH_SHINGLE_N)
+    with_sig, band_rows = _sig_and_bands(shingle_rows)
     cand = (
         band_rows.alias("p")
         .join(
@@ -652,7 +651,7 @@ def minhash_probe_index(
             F.zip_with("sig_new", "sig_corpus", lambda x, y: (x == y).cast("int")),
             lambda v: v == 1,
         )
-    ) / F.lit(float(num_hashes))
+    ) / F.lit(float(MINHASH_HASHES))
     return (
         probed.withColumn("est_jaccard", est)
         .filter(F.col("est_jaccard") >= threshold)
@@ -666,7 +665,7 @@ def minhash_probe_index(
 SIMHASH_BITS = 60  # width of the md5-based engine-agnostic token hash
 
 
-def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """SimHash per document: per-bit majority vote over 60-bit token hashes.
 
     Plan: explode tokens → md5_hash60 → one hash-aggregate computing all bit
@@ -686,11 +685,11 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = SIMHASH_BITS)
         F.sum(
             F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"b{b}")
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     ]
     agg = toks.groupBy("id").agg(*votes)
     sig = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         sig = sig + F.when(F.col(f"b{b}") > 0, F.lit(1).cast("long") * (2**b)).otherwise(0)
     return agg.select("id", sig.alias("simhash"))
 
@@ -709,9 +708,7 @@ def _simhash_chunk_layout(bits: int, n_chunks: int) -> list[tuple[int, int]]:
     return out
 
 
-def simhash_block_keys(
-    sig: F.Column, max_hamming: int, key_chunks: int = 1, bits: int = SIMHASH_BITS
-) -> F.Column:
+def simhash_block_keys(sig: F.Column, max_hamming: int, key_chunks: int = 1) -> F.Column:
     """Array of ``struct(block, key)`` LSH keys for a simhash signature.
 
     Combinatorial multi-chunk blocking (the collision-bound fix, VERDICT
@@ -724,7 +721,7 @@ def simhash_block_keys(
     scan).  ``key_chunks=1`` is the classic (max_hamming+1)-chunk scheme.
 
     Why widen: random-collision candidates scale as
-    C(m, k)·n²/2^(k·bits/m).  At bits=60, max_hamming=3: k=1 gives 4 keys
+    C(m, k)·n²/2^(k·60/m).  At max_hamming=3: k=1 gives 4 keys
     of 15 bits (~n²/2^13 effective); k=2 gives 10 keys of 24 bits
     (~n²/2^20.7) — ~200× fewer random candidates for 2.5× the key rows,
     which is what keeps the self-join output-bound as n approaches and
@@ -735,7 +732,7 @@ def simhash_block_keys(
     if key_chunks < 1:
         raise ValueError(f"key_chunks must be >= 1, got {key_chunks}")
     m = max_hamming + key_chunks
-    layout = _simhash_chunk_layout(bits, m)
+    layout = _simhash_chunk_layout(SIMHASH_BITS, m)
 
     def chunk_val(c: int) -> F.Column:
         off, w = layout[c]
@@ -783,10 +780,10 @@ def simhash_near_pairs(
     :func:`minhash_lsh_pairs` or the incremental
     :func:`minhash_band_index` probe path.
     """
-    # persisted: one (id, simhash) row per document, read by both sides of
-    # the chunk self-join — without it the 60-buffer vote aggregation runs
-    # twice (same structural-reuse rationale as minhash_lsh_pairs)
-    sh = simhash(df, text_col, id_col).persist()
+    # cut: one (id, simhash) row per document, read by both sides of the
+    # chunk self-join — without it the 60-buffer vote aggregation runs twice
+    # (same structural-reuse rationale as minhash_lsh_pairs)
+    sh = cut_lineage(simhash(df, text_col, id_col), eager=False)
     with_chunks = sh.select(
         "id",
         "simhash",

@@ -1284,13 +1284,27 @@ def resample_wav_payloads(with_payload: DataFrame, out_rate: int = 8000) -> Data
     )
 
 
+def _channel_means(px: np.ndarray) -> tuple[list[float], float]:
+    """``(means, luma)`` of a decoded ``(h, w)`` or ``(h, w, c)`` pixel
+    array: one mean per channel, each an exact integer channel sum divided
+    once by the pixel count — ONE float division over an exactly-represented
+    integer, so any engine recomputing the same formula lands on the
+    bit-identical double (no summation-order drift).  ``luma`` mixes the
+    first three means, ``0.299·r̄ + 0.587·ḡ + 0.114·b̄``; a grey image (one
+    channel, or grey + alpha) is its own luma."""
+    px = px.astype(np.int64).reshape(px.shape[0], px.shape[1], -1)
+    n = px.shape[0] * px.shape[1]
+    means = [int(px[:, :, c].sum()) / n for c in range(px.shape[2])]
+    if len(means) < 3:
+        return means, means[0]
+    return means, 0.299 * means[0] + 0.587 * means[1] + 0.114 * means[2]
+
+
 def extract_media_features(with_payload: DataFrame) -> DataFrame:
     """Decode real BMP/WAV payloads and emit typed features, computed as
-    exact integer sums divided once — ``mean = int_sum / n`` and
-    ``rms = sqrt(int_sumsq / n)`` are each ONE float division/sqrt over
-    exactly-represented integers, so any engine recomputing the same
-    formula lands on the bit-identical double (no summation-order drift).
-    Luma mixes the channel means: ``0.299·r̄ + 0.587·ḡ + 0.114·b̄``."""
+    exact integer sums divided once (:func:`_channel_means`;
+    ``rms = sqrt(int_sumsq / n)`` likewise), so any engine recomputing the
+    same formula lands on the bit-identical double."""
 
     def features(doc_id, payload, meta):
         d = decode_payload(bytes(payload), meta["format"])
@@ -1302,16 +1316,15 @@ def extract_media_features(with_payload: DataFrame) -> DataFrame:
             "rms": None, "peak": None,
         }
         if d["kind"] == "image":
-            px = d["pixels"].astype(np.int64)
+            px = d["pixels"]
             h, w, _ = px.shape
-            n = w * h
-            sr, sg, sb = (int(px[:, :, c].sum()) for c in range(3))
-            r0, g0, b0 = (int(v) for v in px[0, 0])
+            means, luma = _channel_means(px)
             row.update(
-                width=w, height=h, n_channels=3, n_samples=n,
-                mean_luma=0.299 * (sr / n) + 0.587 * (sg / n) + 0.114 * (sb / n),
-                first_luma=0.299 * r0 + 0.587 * g0 + 0.114 * b0,
-                mean_r=sr / n,
+                width=w, height=h, n_channels=3, n_samples=w * h,
+                mean_luma=luma,
+                # the first pixel's luma is its 1×1 crop's mean luma
+                first_luma=_channel_means(px[:1, :1])[1],
+                mean_r=means[0],
             )
         else:
             s = d["samples"].astype(np.int64)
@@ -1413,41 +1426,24 @@ def _png_variant_plan(doc_id: int) -> tuple[str, bytes]:
 
 def extract_png_features(with_payload: DataFrame) -> DataFrame:
     """Decode real PNG payloads (any supported channel count) and emit typed
-    features as exact integer sums divided once — the same bit-reproducible
-    contract as :func:`extract_media_features`.  ``mean_luma`` is the
-    0.299/0.587/0.114 mix for RGB(A) and the grey mean for greyscale (a grey
-    pixel's luma is itself); ``mean_alpha`` is NULL unless RGBA."""
+    features as exact integer sums divided once (:func:`_channel_means`).
+    ``mean_luma`` is the 0.299/0.587/0.114 mix for RGB(A) and the grey mean
+    for greyscale (a grey pixel's luma is itself); ``mean_alpha`` is NULL
+    unless the image has an alpha channel (grey + alpha, or RGBA)."""
 
     def features(doc_id, payload, meta):
         d = decode_payload(bytes(payload), meta["format"])
-        px = d["pixels"].astype(np.int64)
+        px = d["pixels"]
         ch = 1 if px.ndim == 2 else px.shape[-1]
         h, w = d["height"], d["width"]
-        n = w * h
-        row = {
+        means, luma = _channel_means(px)
+        yield {
             "doc_id": doc_id,
             "png_type": _PNG_KIND[{1: 0, 2: 3, 3: 1, 4: 2}[ch]],
-            "width": w, "height": h, "n_channels": ch, "n_samples": n,
-            "mean_c0": None, "mean_luma": None, "mean_alpha": None,
+            "width": w, "height": h, "n_channels": ch, "n_samples": w * h,
+            "mean_c0": means[0], "mean_luma": luma,
+            "mean_alpha": means[-1] if ch in (2, 4) else None,
         }
-        if ch == 1:
-            s0 = int(px.sum())
-            row.update(mean_c0=s0 / n, mean_luma=s0 / n)
-        elif ch == 2:  # grey + alpha (color type 4, r13)
-            s0 = int(px[:, :, 0].sum())
-            row.update(
-                mean_c0=s0 / n, mean_luma=s0 / n,
-                mean_alpha=int(px[:, :, 1].sum()) / n,
-            )
-        else:
-            sr, sg, sb = (int(px[:, :, c].sum()) for c in range(3))
-            row.update(
-                mean_c0=sr / n,
-                mean_luma=0.299 * (sr / n) + 0.587 * (sg / n) + 0.114 * (sb / n),
-            )
-            if ch == 4:
-                row.update(mean_alpha=int(px[:, :, 3].sum()) / n)
-        yield row
 
     return map_rows(
         with_payload, ["doc_id", "payload", "meta"], features, PNG_FEATURE_SCHEMA
@@ -1838,17 +1834,14 @@ def extract_gif_frames(with_payload: DataFrame) -> DataFrame:
             return
         frames, delays = decode_gif(bytes(payload))
         for fi, (px, delay) in enumerate(zip(frames, delays)):
-            px = px.astype(np.int64)
             h, w, _ = px.shape
-            n = w * h
-            sr, sg, sb = (int(px[:, :, c].sum()) for c in range(3))
+            means, luma = _channel_means(px)
             yield {
                 "doc_id": doc_id, "frame_id": fi,
                 "delay_cs": delay, "width": w, "height": h,
-                "n_samples": n,
-                "mean_c0": sr / n,
-                "mean_luma": 0.299 * (sr / n) + 0.587 * (sg / n)
-                + 0.114 * (sb / n),
+                "n_samples": w * h,
+                "mean_c0": means[0],
+                "mean_luma": luma,
             }
 
     return map_rows(
@@ -3137,24 +3130,14 @@ def extract_jpeg_features(with_payload: DataFrame) -> DataFrame:
     def features(doc_id, payload, meta):
         if meta["format"] != "image/jpeg":
             return
-        px = decode_jpeg(bytes(payload)).astype(np.int64)
-        gray = px.ndim == 2
+        px = decode_jpeg(bytes(payload))
         h, w = px.shape[:2]
-        n = w * h
-        if gray:
-            s0 = int(px.sum())
-            mean_c0 = mean_luma = s0 / n
-        else:
-            sr, sg, sb = (int(px[:, :, c].sum()) for c in range(3))
-            mean_c0 = sr / n
-            mean_luma = (
-                0.299 * (sr / n) + 0.587 * (sg / n) + 0.114 * (sb / n)
-            )
+        means, luma = _channel_means(px)
         yield {
             "doc_id": doc_id,
-            "jpeg_type": "gray" if gray else "ycbcr",
-            "width": w, "height": h, "n_samples": n,
-            "mean_c0": mean_c0, "mean_luma": mean_luma,
+            "jpeg_type": "gray" if px.ndim == 2 else "ycbcr",
+            "width": w, "height": h, "n_samples": w * h,
+            "mean_c0": means[0], "mean_luma": luma,
         }
 
     return map_rows(

@@ -36,14 +36,19 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
 
 def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize ``df`` and return a frame that reads the materialized
-    blocks: the package's one lineage cut for iterative operators (graph
-    loops, ``$graphLookup``, BPE training) and ``$merge``.
+    blocks: the package's one materialization, for iterative operators
+    (graph loops, ``$graphLookup``, BPE training), ``$merge``, and
+    multi-consumer frames (a shingle, token or signature table that
+    several branches of one plan read, so its front end runs once).
 
     The session decides where the blocks live.  With a checkpoint dir set
     on the SparkContext they go there (reliable ``checkpoint``, which
     survives executor loss); otherwise they stay in executor-local storage
-    (``localCheckpoint``).  A cut changes no value, only the plan.
-    ``eager=False`` defers the write to the first job that reads the frame.
+    (``localCheckpoint``).  A cut changes no value, only the plan.  It is
+    not a cache entry: a later call with the same plan cannot read it, and
+    its blocks go when the frame is garbage-collected.  ``eager=False``
+    defers the write to the first job that reads the frame (shuffle stages
+    below the cut still run when the cut is made).
     """
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager)

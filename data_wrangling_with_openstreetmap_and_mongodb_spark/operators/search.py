@@ -38,6 +38,7 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (
     _exploded_tokens,
 )
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import cut_lineage
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import spread
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.text import (
     token_count,
@@ -207,12 +208,14 @@ def unigram_logprob(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     Documents with zero tokens are absent from the output (no tokens — no
     distribution to score under).
     """
-    # persisted: the token stream feeds the vocab aggregate AND the scoring
-    # join (and the vocab feeds the total) — without it the explode runs
+    # cut: the token stream feeds the vocab aggregate AND the scoring join
+    # (and the vocab feeds the total) — without the cuts the explode runs
     # three times in one job (same structural-reuse rationale as the dedup
     # shingle front-ends)
-    toks = _exploded_tokens(df, text_col, id_col).persist()
-    vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c_t")).persist()
+    toks = cut_lineage(_exploded_tokens(df, text_col, id_col), eager=False)
+    vocab = cut_lineage(
+        toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c_t")), eager=False
+    )
     total = vocab.agg(F.sum("c_t").cast("double").alias("t_total"))
     scored = (
         toks.join(vocab, "tok")
@@ -283,9 +286,15 @@ def bigram_logprob(
     arr = F.filter(
         F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
     )
-    docs = df.select(F.col(id_col).alias("id"), arr.alias("toks")).persist()
+    # cut: the token arrays feed the vocabulary, the bigram pairs and the
+    # first-token scores; the vocabulary feeds the total and both scores
+    docs = cut_lineage(
+        df.select(F.col(id_col).alias("id"), arr.alias("toks")), eager=False
+    )
     toks = docs.select("id", F.explode("toks").alias("tok"))
-    vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c_t")).persist()
+    vocab = cut_lineage(
+        toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c_t")), eager=False
+    )
     total = vocab.agg(F.sum("c_t").cast("double").alias("t_total"))
     n = F.size("toks")
     pairs = docs.select(

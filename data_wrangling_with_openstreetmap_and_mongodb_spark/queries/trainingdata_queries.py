@@ -22,6 +22,9 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.functions.detagg import
 )
 from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
     MERSENNE61,
+    MINHASH_BANDS,
+    MINHASH_HASHES,
+    MINHASH_SEED,
     SIMHASH_BITS,
     embedding_near_pairs,
     exact_duplicates,
@@ -50,7 +53,10 @@ from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.text import (
     token_count,
     winnow_fingerprints,
 )
-from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import spread
+from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.scale import (
+    cut_lineage,
+    spread,
+)
 from data_wrangling_with_openstreetmap_and_mongodb_spark.queries.registry import register
 
 _SQL_TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
@@ -282,7 +288,7 @@ def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus has no paragraph breaks): spans kept only at their first global "
     "(id, pos) occurrence, survivors rejoined in order.  Rank runs over "
     "md5(span) — full text never shuffles by content.",
-    tags=("dedup", "curation", "window"),
+    tags=("dedup", "curation", "window", "materialized"),
     # parked r7: near-duplicate shape of dedup_exact_substring (both are
     # span-removal + reconstruction; the sliding-window form subsumes this
     # disjoint-chunk one) — still oracle-gated at sf0.01 every run
@@ -336,7 +342,7 @@ def span_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     "disjoint chunks) plus internal repetition.  Shingle text never "
     "shuffles — md5 map-side, only (hash, id, pos) moves."
     "  Evicted from the driver window in the r12 rotation (driver-green r7-r11); still oracle-gated at sf0.01.",
-    tags=("dedup", "curation"),
+    tags=("dedup", "curation", "materialized"),
 )
 def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import exact_substring_dedup
@@ -380,7 +386,7 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     "front-end is a strict subset of dedup_near_clusters' compiler path; "
     "slot given to streaming_asof_enrich_status); still in the local "
     "parity gate.",
-    tags=("dedup", "join"),
+    tags=("dedup", "join", "materialized"),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -402,14 +408,12 @@ _SQL_SHINGLES = """
         )"""
 
 
-def _minhash_oracle_sql(
-    num_hashes: int, bands: int, threshold: float, seed: int = 42
-) -> str:
+def _minhash_oracle_sql(threshold: float) -> str:
     """DuckDB replica of the FULL banded-MinHash pipeline: same md5-based
     permutation hashes, same band buckets, same candidate pairs, same
     verification — bit-for-bit against operators/dedup.minhash_lsh_pairs."""
-    coeffs = minhash_perm_coeffs(num_hashes, seed)
-    rpb = num_hashes // bands
+    coeffs = minhash_perm_coeffs(MINHASH_HASHES, MINHASH_SEED)
+    rpb = MINHASH_HASHES // MINHASH_BANDS
     perm_values = ",\n                   ".join(
         f"({i}, {a}::BIGINT, {b}::BIGINT)" for i, (a, b) in enumerate(coeffs)
     )
@@ -437,7 +441,7 @@ def _minhash_oracle_sql(
         ),
         est AS (
             SELECT c.id_a, c.id_b,
-                   COUNT(*) FILTER (WHERE sa.mh = sb.mh) / {float(num_hashes)} AS est_jaccard
+                   COUNT(*) FILTER (WHERE sa.mh = sb.mh) / {float(MINHASH_HASHES)} AS est_jaccard
             FROM cand c
             JOIN sig sa ON sa.doc_id = c.id_a
             JOIN sig sb ON sb.doc_id = c.id_b AND sb.i = sa.i
@@ -453,7 +457,7 @@ def _minhash_oracle_sql(
 
 @register(
     "dedup_minhash_lsh",
-    oracle=_minhash_oracle_sql(num_hashes=64, bands=16, threshold=0.8),
+    oracle=_minhash_oracle_sql(threshold=0.8),
     doc="MinHash+LSH banded near-dup candidates, Jaccard-verified.  The "
     "md5-based permutation family makes the whole pipeline (signatures, "
     "band buckets, candidate set) oracle-reproducible in SQL."
@@ -462,7 +466,7 @@ def _minhash_oracle_sql(
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(d, "text", "doc_id", num_hashes=64, bands=16, n=3, threshold=0.8)
+    return minhash_lsh_pairs(d, "text", "doc_id", threshold=0.8)
 
 
 def _simhash_oracle_sql(max_hamming: int) -> str:
@@ -1654,10 +1658,11 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the timed query, every invocation — no cross-run memo keyed on the
     # testdata
     coarse = _trained_centroids(spark, sf_dir)
-    resid = ivfpq_residuals(e, "embedding", "vec_id", coarse)
-    # persisted: training scans it (iters x assignment passes) and the
-    # encode/rank tail re-reads it — one residual derivation total (r16)
-    resid = resid.persist()
+    # cut: training scans the residuals (iters x assignment passes) and the
+    # encode/rank tail re-reads them — one residual derivation per call
+    resid = cut_lineage(
+        ivfpq_residuals(e, "embedding", "vec_id", coarse), eager=False
+    )
     books = pq_train_codebooks(resid, "rv", "id", dim=64, m=8, n_codes=16, iters=2)
     return ivfpq_topk(
         e,
@@ -2226,7 +2231,7 @@ def _unigram_oracle() -> str:
     "Two hash-aggregates + one token join (AQE broadcasts the vocab); both "
     "averaging levels use the quantized deterministic davg and ln is "
     "bit-identical across engines, so the oracle hash-matches.  Driver-visible since the r13 rotation (VERDICT r12 ask #1: never-driver-verified residual burn-down).",
-    tags=("text", "quality", "agg"),
+    tags=("text", "quality", "agg", "materialized"),
 )
 def doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.search import (
@@ -2276,7 +2281,7 @@ def _bigram_oracle() -> str:
     "is dsir_gumbel_resample since the r11 second wave)."
     "  Rotated INTO the driver window in r12 (VERDICT r11 ask #1: never-driver-verified residual burn-down; the gate-only note above is historical)."
     "  Evicted from the driver window in the r14 rotation (driver-green r12-r13; LM family keeps doc_unigram_logprob visible); still oracle-gated at sf0.01.",
-    tags=("text", "quality", "topk"),
+    tags=("text", "quality", "topk", "materialized"),
 )
 def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.search import (
@@ -2326,7 +2331,7 @@ def _dsir_oracle() -> str:
     "feature scoring composition (hash family ⊂ split_assign, broadcast "
     "scoring join ⊂ doc_unigram_logprob, thinning ⊂ mixture_sample)."
     "  Driver-visible since the r14 rotation (VERDICT r13 ask #4: never-driver-verified residual burn-down — the FINAL wave: residual hits 0).",
-    tags=("curation", "quality", "topk"),
+    tags=("curation", "quality", "topk", "materialized"),
 )
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (
@@ -2522,16 +2527,14 @@ def unicode_normalization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_incremental_oracle_sql(
-    num_hashes: int, bands: int, threshold: float, seed: int = 42
-) -> str:
+def _minhash_incremental_oracle_sql(threshold: float) -> str:
     """DuckDB replica of the index-probe pipeline: signatures and band
     buckets for the whole table (same md5 permutation family), candidates
     restricted to increment×corpus collisions, Jaccard estimated from
     signature agreement only — bit-for-bit against
     operators/dedup.minhash_band_index + minhash_probe_index."""
-    coeffs = minhash_perm_coeffs(num_hashes, seed)
-    rpb = num_hashes // bands
+    coeffs = minhash_perm_coeffs(MINHASH_HASHES, MINHASH_SEED)
+    rpb = MINHASH_HASHES // MINHASH_BANDS
     perm_values = ",\n                   ".join(
         f"({i}, {a}::BIGINT, {b}::BIGINT)" for i, (a, b) in enumerate(coeffs)
     )
@@ -2558,7 +2561,7 @@ def _minhash_incremental_oracle_sql(
             WHERE p.doc_id % 5 = 0 AND x.doc_id % 5 <> 0
         )
         SELECT c.new_id, c.corpus_id,
-               COUNT(*) FILTER (WHERE sp.mh = sx.mh) / {float(num_hashes)}
+               COUNT(*) FILTER (WHERE sp.mh = sx.mh) / {float(MINHASH_HASHES)}
                    AS est_jaccard
         FROM cand c
         JOIN sig sp ON sp.doc_id = c.new_id
@@ -2570,7 +2573,7 @@ def _minhash_incremental_oracle_sql(
 
 @register(
     "dedup_incremental_minhash",
-    oracle=_minhash_incremental_oracle_sql(num_hashes=64, bands=16, threshold=0.8),
+    oracle=_minhash_incremental_oracle_sql(threshold=0.8),
     doc="incremental dedup against a persisted index "
     "(operators/dedup.py::minhash_band_index + minhash_probe_index): the "
     "corpus (doc_id % 5 != 0) is indexed once as (id, band, bucket, sig); "
@@ -2733,7 +2736,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         contaminated_docs_bloom,
     )
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.dedup import (
-        _shingle_rows,
+        _ngram_rows,
     )
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.sketch import (
         bloom_build,
@@ -2747,7 +2750,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # timed query, every invocation — no cross-run memo keyed on the
     # testdata
     bench_sh = (
-        _shingle_rows(bench, "text", "doc_id", 3).select("shingle").distinct()
+        _ngram_rows(bench, "text", "doc_id", 3).select("shingle").distinct()
     )
     bloom_words = bloom_build(bench_sh, "shingle", N_BITS)
     return contaminated_docs_bloom(
@@ -3489,7 +3492,7 @@ def _gumbel_oracle() -> str:
     "TakeOrderedAndProject (per-partition top-k merge, driver holds 20 "
     "rows).  Driver-visible r9-r11 (VERDICT r8 ask #1 rotation)."
     "  Evicted from the driver window in the r12 rotation (driver-green r9-r11; sampling family keeps mixture_sampled_counts + stratified_sample_documents + train_split_assign visible); still oracle-gated at sf0.01.",
-    tags=("curation", "quality", "topk"),
+    tags=("curation", "quality", "topk", "materialized"),
 )
 def dsir_gumbel_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_with_openstreetmap_and_mongodb_spark.operators.curation import (

@@ -80,9 +80,7 @@ def test_testdata_has_planted_near_dups(exact_pairs):
 def test_minhash_lsh_recall(docs, exact_pairs):
     got = {
         (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(
-            docs, "text", "doc_id", num_hashes=64, bands=16, n=3, threshold=0.8
-        ).collect()
+        for r in minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.8).collect()
     }
     # 16 bands × 4 rows: P(candidate | j=0.8) ≈ 0.9998 — expect near-total recall
     recall = len(got & set(exact_pairs)) / len(exact_pairs)

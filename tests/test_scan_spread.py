@@ -3,8 +3,8 @@ parquet scan is round-robin repartitioned to the scheduler's parallelism;
 predicate pushdown and column pruning still reach the scan below the
 exchange; a plain load_table adds no exchange.  The inventory keeps spread
 the only defaultParallelism repartition, scale.cut_lineage the only
-iterative lineage cut, similarity._seq_cosine the only numpy cosine, and
-parquet footer reads out of the package."""
+materialization (no persist or cache calls), similarity._seq_cosine the
+only numpy cosine, and parquet footer reads out of the package."""
 
 from __future__ import annotations
 
@@ -142,9 +142,9 @@ def _calls(match) -> list[tuple[str, str]]:
 
 
 def test_cut_lineage_is_the_only_checkpoint():
-    """Iterative operators and $merge cut lineage through cut_lineage, so
-    the session's checkpoint dir, not each call site, decides between a
-    reliable and a local checkpoint.  The streaming drive's per-batch
+    """Iterative operators, $merge and multi-consumer frames cut lineage
+    through cut_lineage, so the session's checkpoint dir, not each call
+    site, decides between a reliable and a local checkpoint.  The streaming drive's per-batch
     DISK_ONLY checkpoint is not an iterative cut."""
     assert _calls(
         lambda f: isinstance(f, ast.Attribute)
@@ -153,6 +153,15 @@ def test_cut_lineage_is_the_only_checkpoint():
         ("operators/scale.py", "cut_lineage"),
         ("streaming/drive.py", "run_available_now.materialize"),
     ]
+
+
+def test_no_module_persists():
+    """Multi-consumer frames are cut with cut_lineage, not cached: a cache
+    entry outlives the call that made it, and a later call with the same
+    plan reads it."""
+    assert _calls(
+        lambda f: isinstance(f, ast.Attribute) and f.attr in ("persist", "cache")
+    ) == []
 
 
 def test_seq_cosine_is_the_only_numpy_cosine():

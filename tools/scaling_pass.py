@@ -70,11 +70,6 @@ def main() -> None:
             except Exception as exc:
                 print(f"{name}@{label} failed: {exc}", file=sys.stderr)
                 rec[label] = None
-            finally:
-                try:
-                    spark.catalog.clearCache()
-                except Exception:
-                    pass
         if rec.get("sf0.1") and rec.get(ten_label):
             rec["ratio"] = round(rec[ten_label] / rec["sf0.1"], 2)
         out[name] = rec
